@@ -114,8 +114,7 @@ def leaf_to_sql(leaf: Leaf, schema: dict[str, str], dialect: str = "spark") -> s
     if is_array:
         inner = "string"
         lit = _sql_literal(leaf.value, inner)
-        fn = "array_contains" if dialect == "spark" else "list_contains"
-        member = f"{fn}({leaf.key}, {lit})"
+        member = f"array_contains({leaf.key}, {lit})"
         if leaf.op == "=":
             return member
         if leaf.op == "!=":

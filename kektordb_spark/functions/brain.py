@@ -33,6 +33,8 @@ exist here so a real brain overrides ONE class, not five operators.
 
 from __future__ import annotations
 
+from kektordb_spark.dialect import str_arr
+
 # Antonym axes of the deterministic contradiction heuristic, in fixed
 # priority order (first match wins → deterministic reason strings).
 # The fixture part-name vocabulary (hot/cold gizmo, small/large ring,
@@ -145,23 +147,16 @@ def contradiction_sql_pred(dialect: str, a: str, b: str) -> tuple[str, str]:
     predicate, reason expression) over two content-string columns —
     the oracle twin of contradiction_judge_udf, and the Spark engine's
     own fast path when the default brain is active."""
-    contains = "array_contains" if dialect == "spark" else "list_contains"
-    split = (lambda c: f"split({c}, ' ')") if dialect == "spark" \
-        else (lambda c: f"string_split({c}, ' ')")
-    fil = "filter" if dialect == "spark" else "list_filter"
-    anton = ", ".join(f"'{w}'" for w in sorted(_ANTONYM_WORDS))
-    arr = ("array(" + anton + ")") if dialect == "spark" else f"[{anton}]"
-    ta, tb = split(a), split(b)
-    topic_a = f"{fil}({ta}, t -> NOT {contains}({arr}, t) AND t <> '')"
-    if dialect == "spark":
-        topic = f"arrays_overlap({topic_a}, {tb})"
-    else:
-        topic = f"len(list_intersect({topic_a}, {tb})) > 0"
+    arr = str_arr(dialect, sorted(_ANTONYM_WORDS))
+    ta, tb = f"split({a}, ' ')", f"split({b}, ' ')"
+    topic_a = f"filter({ta}, t -> NOT array_contains({arr}, t) AND t <> '')"
+    topic = (f"arrays_overlap({topic_a}, {tb})" if dialect == "spark"
+             else f"len(list_intersect({topic_a}, {tb})) > 0")
     axes = []
     inner = "CASE "
     for x, y in ANTONYM_PAIRS:
         for w1, w2 in ((x, y), (y, x)):
-            hit = f"({contains}({ta}, '{w1}') AND {contains}({tb}, '{w2}'))"
+            hit = f"(array_contains({ta}, '{w1}') AND array_contains({tb}, '{w2}'))"
             axes.append(hit)
             inner += f"WHEN {hit} THEN 'antonym conflict: {w1} vs {w2}' "
     inner += "ELSE '' END"

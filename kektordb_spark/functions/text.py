@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kektordb_spark.dialect import explode, size, str_arr, unnest
 from kektordb_spark.tables import ENGLISH_STOPWORDS
 
 BM25_K1 = 1.2
@@ -191,22 +192,14 @@ def bm25_oracle_sql(
 
     Query tokens keep their multiplicity (core.go:2024-2031 iterates
     the analyzed query INCLUDING duplicates): qn weights each term."""
-    arr = ", ".join(f"'{t}'" for t in query_tokens)
-    if dialect == "spark":
-        qt = (f"SELECT token, CAST(count(*) AS DOUBLE) AS qn FROM "
-              f"(SELECT explode(array({arr})) AS token) GROUP BY token")
-    else:
-        qt = (f"SELECT token, CAST(count(*) AS DOUBLE) AS qn FROM "
-              f"(SELECT unnest([{arr}]) AS token) GROUP BY token")
-    explode = (
-        f"SELECT doc_id AS doc, size(toks) AS dl, t.token AS token FROM {source} "
-        "LATERAL VIEW explode(toks) t AS token"
-        if dialect == "spark"
-        else f"SELECT doc_id AS doc, len(toks) AS dl, unnest(toks) AS token FROM {source}"
-    )
-    dl_expr = "size(toks)" if dialect == "spark" else "len(toks)"
+    qt = (f"SELECT token, CAST(count(*) AS DOUBLE) AS qn FROM "
+          f"(SELECT {explode(dialect, str_arr(dialect, query_tokens))} AS token) "
+          "GROUP BY token")
+    dl_expr = size(dialect, "toks")
+    tok = (f"SELECT doc_id AS doc, {dl_expr} AS dl, t.token AS token FROM {source} "
+           f"{unnest(dialect, 'toks', 'token', 't')}")
     return f"""
-WITH tok AS ({explode}),
+WITH tok AS ({tok}),
 lengths AS (SELECT doc_id AS doc, {dl_expr} AS dl FROM {source}),
 stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(CAST(dl AS DOUBLE)) AS avgdl FROM lengths),
 qt AS ({qt}),

@@ -11,6 +11,9 @@ at scale these run inside the parquet scan's whole-stage-codegen span.
 
 from __future__ import annotations
 
+from kektordb_spark.dialect import (
+    array_join, fold, hex_to_int, regex_all, size, str_arr, transform, unnest,
+)
 from kektordb_spark.tables import ENGLISH_STOPWORDS
 
 # Tiny per-language stopword profiles (n-gram/stopword-hit heuristic —
@@ -29,36 +32,8 @@ _WS_SPLIT_RE = r"\s+"
 BPE_ISH_RE = "[a-z]+|[0-9]+|[^a-z0-9\\s]"
 
 
-def _len(dialect: str, arr: str) -> str:
-    return f"{'size' if dialect == 'spark' else 'len'}({arr})"
-
-
-def _filter_arr(dialect: str, arr: str, lam: str) -> str:
-    fn = "filter" if dialect == "spark" else "list_filter"
-    return f"{fn}({arr}, {lam})"
-
-
-def _contains(dialect: str, arr: str, x: str) -> str:
-    fn = "array_contains" if dialect == "spark" else "list_contains"
-    return f"{fn}({arr}, {x})"
-
-
-def _arr_lit(dialect: str, words: list[str]) -> str:
-    inner = ", ".join(f"'{w}'" for w in words)
-    return f"array({inner})" if dialect == "spark" else f"[{inner}]"
-
-
-def _regex_all(dialect: str, col: str, pattern: str) -> str:
-    # Spark SQL string literals process backslash escapes (default
-    # spark.sql.parser.escapedStringLiterals=false); DuckDB's are raw.
-    # Double the backslashes for Spark so both engines see the same regex.
-    if dialect == "spark":
-        return f"regexp_extract_all({col}, '{pattern.replace(chr(92), chr(92) * 2)}', 0)"
-    return f"regexp_extract_all({col}, '{pattern}')"
-
-
 def _raw_tokens(dialect: str, col: str) -> str:
-    return _regex_all(dialect, f"lower({col})", "[a-z0-9_]+")
+    return regex_all(dialect, f"lower({col})", "[a-z0-9_]+")
 
 
 def _grid6(expr: str) -> str:
@@ -81,13 +56,8 @@ def lang_id_sql(dialect: str) -> str:
     langs = sorted(LANG_PROFILES)
     score_cols = ",\n       ".join(
         "{n} AS s_{l}".format(
-            n=_len(
-                dialect,
-                _filter_arr(
-                    dialect, "toks",
-                    f"t -> {_contains(dialect, _arr_lit(dialect, LANG_PROFILES[l]), 't')}",
-                ),
-            ),
+            n=size(dialect, f"filter(toks, t -> array_contains("
+                            f"{str_arr(dialect, LANG_PROFILES[l])}, t))"),
             l=l,
         )
         for l in langs
@@ -122,11 +92,11 @@ def quality_score_sql(dialect: str) -> str:
     punctuation density. The weights are fixed, documented constants —
     the point is the *shape* (pure columnar scoring at scan time)."""
     toks = _raw_tokens(dialect, "text")
-    stops = _arr_lit(dialect, ENGLISH_STOPWORDS)
-    n_toks = _len(dialect, "toks")
-    n_stop = _len(dialect, _filter_arr(dialect, "toks", f"t -> {_contains(dialect, stops, 't')}"))
-    n_punct = _len(dialect, _regex_all(dialect, "text", "[^a-zA-Z0-9\\s]"))
-    joined = "array_join(toks, '')" if dialect == "spark" else "array_to_string(toks, '')"
+    stops = str_arr(dialect, ENGLISH_STOPWORDS)
+    n_toks = size(dialect, "toks")
+    n_stop = size(dialect, f"filter(toks, t -> array_contains({stops}, t))")
+    n_punct = size(dialect, regex_all(dialect, "text", "[^a-zA-Z0-9\\s]"))
+    joined = array_join(dialect, "toks", "")
     mean_len = f"CASE WHEN {n_toks} = 0 THEN 0.0 ELSE CAST(length({joined}) AS DOUBLE) / {n_toks} END"
     return f"""
 WITH t AS (SELECT doc_id, text, n_chars, {toks} AS toks FROM documents),
@@ -156,8 +126,8 @@ def token_count_sql(dialect: str) -> str:
     """Whitespace token count + BPE-ish piece count + chars-per-token
     estimate (the CharsPerToken budgeting idea from the reference's
     adaptive retrieval, pkg/rag/adaptive_retriever.go:300-411)."""
-    ws = _len(dialect, _regex_all(dialect, "text", "\\S+"))
-    bpe = _len(dialect, _regex_all(dialect, "lower(text)", BPE_ISH_RE))
+    ws = size(dialect, regex_all(dialect, "text", "\\S+"))
+    bpe = size(dialect, regex_all(dialect, "lower(text)", BPE_ISH_RE))
     return f"""
 SELECT doc_id,
        CAST({ws} AS INT)  AS ws_tokens,
@@ -225,28 +195,26 @@ def compress_context_sql(dialect: str) -> str:
     Language dispatch like the Go: 'it'/'italian' uses the Italian
     set, everything else falls back to English. Pure projection —
     tokenize/filter/join runs inside the scan's codegen span."""
-    en = _arr_lit(dialect, ENGLISH_REMOVABLE)
-    it = _arr_lit(dialect, ITALIAN_REMOVABLE)
-    words = _regex_all(dialect, "text", _SMART_TOKEN_RE)
+    en = str_arr(dialect, ENGLISH_REMOVABLE)
+    it = str_arr(dialect, ITALIAN_REMOVABLE)
+    words = regex_all(dialect, "text", _SMART_TOKEN_RE)
     removable = f"CASE WHEN lang IN ('it', 'italian') THEN {it} ELSE {en} END"
-    # DuckDB array_to_string([]) is NULL while Spark array_join([]) is
-    # '' — coalesce so both match the Go (Compress("") == "").
-    joined = "array_join(kept, ' ')" if dialect == "spark" \
-        else "coalesce(array_to_string(kept, ' '), '')"
-    kept = _filter_arr(dialect, "words", f"w -> NOT {_contains(dialect, 'rem', 'lower(w)')}")
+    # an empty result joins to '', matching the Go (Compress("") == "")
+    joined = array_join(dialect, "kept", " ")
+    kept = "filter(words, w -> NOT array_contains(rem, lower(w)))"
     return f"""
 WITH c0 AS (
   SELECT doc_id, {words} AS words, {removable} AS rem FROM documents
 ),
 c AS (
-  SELECT doc_id, {kept} AS kept, {_len(dialect, 'words')} AS n_orig FROM c0
+  SELECT doc_id, {kept} AS kept, {size(dialect, 'words')} AS n_orig FROM c0
 )
 SELECT doc_id,
        {joined} AS compressed,
        CAST(n_orig AS INT) AS n_orig,
-       CAST({_len(dialect, 'kept')} AS INT) AS n_kept,
+       CAST({size(dialect, 'kept')} AS INT) AS n_kept,
        round(CASE WHEN n_orig = 0 THEN 0.0
-             ELSE 1.0 - CAST({_len(dialect, 'kept')} AS DOUBLE) / n_orig END,
+             ELSE 1.0 - CAST({size(dialect, 'kept')} AS DOUBLE) / n_orig END,
              6) AS reduction
 FROM c
 """.strip()
@@ -256,22 +224,13 @@ def fingerprint_sql(dialect: str) -> str:
     """Deterministic document fingerprint: polynomial rolling hash over
     the token hash sequence, mod 2^31-1 (order-sensitive, unlike the
     SimHash set fingerprint in operators/dedup.py)."""
-    from kektordb_spark.operators.dedup import _hex_to_int
-
     toks = _raw_tokens(dialect, "text")
-    h = _hex_to_int(dialect, "md5(t)")
-    if dialect == "spark":
-        hashes = f"transform(toks, t -> {h})"
-        fold = f"aggregate({hashes}, CAST(0 AS BIGINT), (s, x) -> (s * 31 + x) % 2147483647)"
-    else:
-        hashes = f"list_transform(toks, t -> {h})"
-        fold = (
-            f"list_reduce(list_prepend(CAST(0 AS BIGINT), {hashes}), "
-            f"(s, x) -> (s * 31 + x) % 2147483647)"
-        )
+    hashes = transform(dialect, "toks", f"t -> {hex_to_int(dialect, 'md5(t)')}")
+    fp = fold(dialect, hashes, "CAST(0 AS BIGINT)",
+              "(s, x) -> (s * 31 + x) % 2147483647")
     return f"""
 WITH t AS (SELECT doc_id, {toks} AS toks FROM documents)
-SELECT doc_id, {fold} AS fingerprint
+SELECT doc_id, {fp} AS fingerprint
 FROM t
 """.strip()
 
@@ -279,10 +238,7 @@ FROM t
 def info_density_sql(dialect: str) -> str:
     """T6 information density (pkg/rag/adaptive_retriever.go:478-499):
     unique tokens / total tokens per document."""
-    if dialect == "spark":
-        uniq, tot = "size(array_distinct(toks))", "size(toks)"
-    else:
-        uniq, tot = "len(list_distinct(toks))", "len(toks)"
+    uniq, tot = size(dialect, "array_distinct(toks)"), size(dialect, "toks")
     return f"""
 SELECT doc_id, CAST({tot} AS INT) AS n_toks,
        round(CAST({uniq} AS DOUBLE) / {tot}, 6) AS density
@@ -314,13 +270,8 @@ def unigram_logprob_sql(dialect: str, source: str = "docs_tok") -> str:
     term quantized to 1e-12 per row, summed as BIGINT — exactly
     associative, so the doc-keyed shuffle order can never flip a
     rounding boundary; same fix class as hyde/PQ/IVFPQ)."""
-    if dialect == "spark":
-        tok_rel = f"""SELECT doc_id, tok FROM {source}
-  LATERAL VIEW explode(toks) _t AS tok"""
-        log = "ln"
-    else:
-        tok_rel = f"SELECT doc_id, unnest(toks) AS tok FROM {source}"
-        log = "ln"
+    tok_rel = f"""SELECT doc_id, tok FROM {source}
+  {unnest(dialect, 'toks', 'tok')}"""
     return f"""
 WITH tok AS (
   {tok_rel}
@@ -337,7 +288,7 @@ SELECT doc_id,
        round(exp(-round(sum(lp_q) / 1e12 / count(*), 5)), 3) AS ppl_proxy
 FROM (
   SELECT t.doc_id,
-         CAST(round({log}(CAST(lm.c AS DOUBLE) / tot.n) * 1e12) AS BIGINT)
+         CAST(round(ln(CAST(lm.c AS DOUBLE) / tot.n) * 1e12) AS BIGINT)
            AS lp_q
   FROM tok t
   JOIN lm ON lm.tok = t.tok
@@ -369,15 +320,13 @@ def repetition_signals_sql(dialect: str, source: str = "docs_tok") -> str:
   FROM (SELECT doc_id, toks,
                explode(sequence(0, size(toks) - 2)) AS i
         FROM {source} WHERE size(toks) >= 2) e"""
-        n_toks = "size(toks)"
-        n_uniq = "size(array_distinct(toks))"
     else:
         bi = f"""
   SELECT doc_id, toks[i] || ' ' || toks[i + 1] AS bg
   FROM {source}, unnest(generate_series(1, len(toks) - 1)) AS _g(i)
   WHERE len(toks) >= 2"""
-        n_toks = "len(toks)"
-        n_uniq = "len(list_distinct(toks))"
+    n_toks = size(dialect, "toks")
+    n_uniq = size(dialect, "array_distinct(toks)")
     return f"""
 WITH sizes AS (
   SELECT doc_id, {n_toks} AS n_toks, {n_uniq} AS n_uniq

@@ -24,7 +24,7 @@ The whole thing has a DuckDB oracle (dialect-parameterized SQL below).
 
 from __future__ import annotations
 
-from kektordb_spark.tables import dot_sql
+from kektordb_spark.dialect import dot_sql, size
 
 W_SEM, W_GRAPH, W_DENS = 0.6, 0.25, 0.15
 EDGE_WEIGHT = 0.3          # default edge-type weight (retriever default)
@@ -49,8 +49,8 @@ def adaptive_retrieve_sql(
     the same plan with one extra pushed-down predicate."""
     dot_q = dot_sql(dialect, "q.v", "c.v")
     dot_s = dot_sql(dialect, "s.v", "c.v")
-    size = "size" if dialect == "spark" else "len"
-    dist = "array_distinct" if dialect == "spark" else "list_distinct"
+    n_toks = size(dialect, "d.toks")
+    n_distinct = size(dialect, "array_distinct(d.toks)")
     return f"""
 WITH q AS (SELECT * FROM emb WHERE vec_id = {query_id}),
 seed_d AS (
@@ -90,15 +90,15 @@ best AS (
 ),
 densed AS (
   SELECT b.vec_id, b.score, b.depth, d.source, d.toks,
-         CASE WHEN {size}(d.toks) = 0 THEN 0.0
-              ELSE CAST({size}({dist}(d.toks)) AS DOUBLE) / {size}(d.toks) END
+         CASE WHEN {n_toks} = 0 THEN 0.0
+              ELSE CAST({n_distinct} AS DOUBLE) / {n_toks} END
            AS dens
   FROM best b JOIN docs_tok d ON d.doc_id = b.vec_id
-  {f"WHERE (CASE WHEN {size}(d.toks) = 0 THEN 0.0 ELSE CAST({size}({dist}(d.toks)) AS DOUBLE) / {size}(d.toks) END) >= {density_min}" if density_min is not None else ""}
+  {f"WHERE (CASE WHEN {n_toks} = 0 THEN 0.0 ELSE CAST({n_distinct} AS DOUBLE) / {n_toks} END) >= {density_min}" if density_min is not None else ""}
 ),
 scored AS (
   SELECT vec_id AS doc_id, source,
-         CAST({size}(toks) AS INT) AS n_toks,
+         CAST({size(dialect, 'toks')} AS INT) AS n_toks,
          {W_SEM} * score
        + {W_GRAPH} * greatest(0.3, 1.0 - {DEPTH_PENALTY} * depth)
        + {W_DENS} * least(1.0, greatest(0.0, (dens - 0.3) / 0.6))
@@ -146,7 +146,6 @@ def graph_seeds_sql(dialect: str, query_id: int = 0) -> str:
     union, and Catalyst inlines it into each (measured ~6 copies of
     the seed cross join in the physical plan without this)."""
     dot_q = dot_sql(dialect, "q.v", "c.v")
-    s = "STRING" if dialect == "spark" else "VARCHAR"
     return f"""
 WITH q AS (SELECT * FROM emb WHERE vec_id = {query_id}),
 seed_d AS (
@@ -154,7 +153,7 @@ seed_d AS (
          1.0 / (1.0 + (1.0 - ({dot_q}) / (q.norm * c.norm))) AS score
   FROM q CROSS JOIN emb c WHERE c.vec_id <> {query_id}
 )
-SELECT concat('p_', CAST(vec_id AS {s})) AS node, score, 0 AS depth
+SELECT concat('p_', CAST(vec_id AS STRING)) AS node, score, 0 AS depth
 FROM (SELECT vec_id, score FROM seed_d
       ORDER BY score DESC, vec_id ASC LIMIT {SEED_K}) t
 """.strip()
@@ -197,14 +196,13 @@ def adaptive_graph_sql(
 {e_cte}"""]
     parts.append("vis0 AS (SELECT node FROM v0)")
     prev_frontier = "v0"
-    # Spark dialect: broadcast the visited-set side of the per-hop
+    # Spark: broadcast the visited-set side of the per-hop
     # anti check (r8) — the vis unions are expansion-bounded but
     # stats-less, so the check planned as a LeftOuter SortMergeJoin.
-    # DuckDB takes no hint.
-    hint_v = "/*+ BROADCAST(vis) */ " if dialect == "spark" else ""
+    # DuckDB reads the hint as a comment.
     for d in range(1, GRAPH_DEPTH + 1):
         parts.append(f"""f{d} AS (
-  SELECT {hint_v}x.node, max(x.score) AS score, {d} AS depth FROM (
+  SELECT /*+ BROADCAST(vis) */ x.node, max(x.score) AS score, {d} AS depth FROM (
     SELECT e.dst AS node, p.score * e.wt AS score
     FROM {prev_frontier} p JOIN e ON e.src = p.node
   ) x

@@ -42,7 +42,7 @@ byte-for-byte across engines.
 
 from __future__ import annotations
 
-from kektordb_spark.operators.dedup import _hex_to_int, _unnest
+from kektordb_spark.dialect import docs_tok, hex_to_int, l2sq_sql, unnest
 
 # ---------------------------------------------------------------------------
 # KMV distinct-count sketch
@@ -53,13 +53,6 @@ KMV_K = 64
 # far inside signed int64 (max 4.6e18 < 9.2e18).
 _KMV_HEX = 14
 _KMV_SCALE = 16 ** _KMV_HEX
-
-
-def _hex_slice_int(dialect: str, hexpr: str, pos: int, n_hex: int) -> str:
-    """Hex chars [pos, pos+n_hex) of a hex string -> BIGINT."""
-    if dialect == "spark":
-        return f"CAST(conv(substr({hexpr}, {pos}, {n_hex}), 16, 10) AS BIGINT)"
-    return f"CAST(concat('0x', substr({hexpr}, {pos}, {n_hex})) AS BIGINT)"
 
 
 def kmv_distinct_sql(dialect: str, source: str = "events") -> str:
@@ -132,9 +125,8 @@ def kmv_est_sql(dialect: str, source: str = "events") -> str:
     STREAMING sketch's oracle (streaming/events.py
     distinct_sketch_stream: the keyed state carries the same 64 minima,
     so its final emission equals this relation exactly)."""
-    uid = "CAST(user_id AS STRING)" if dialect == "spark" else "CAST(user_id AS VARCHAR)"
     digests = ",\n         ".join(
-        f"md5(concat({uid}, ':', '{s}')) AS d{s}"
+        f"md5(concat(CAST(user_id AS STRING), ':', '{s}')) AS d{s}"
         for s in range(1, KMV_K // 2 + 1)
     )
     mins = []
@@ -143,7 +135,7 @@ def kmv_est_sql(dialect: str, source: str = "events") -> str:
             mins.append(f"min(substr(d{s}, {1 + _KMV_HEX * j}, {_KMV_HEX})) AS m{len(mins)}")
     min_cols = ",\n         ".join(mins)
     sum_mins = " + ".join(
-        _hex_slice_int(dialect, f"m{i}", 1, _KMV_HEX) for i in range(KMV_K)
+        hex_to_int(dialect, f"m{i}", _KMV_HEX) for i in range(KMV_K)
     )
     return f"""
 SELECT event_type,
@@ -222,7 +214,7 @@ def tfidf_keywords_sql(dialect: str, source: str | None = None) -> str:
     ties broken on token) and the per-doc window sorts only that doc's
     vocabulary."""
     if source is None:
-        source = "docs_tok_par" if dialect == "spark" else "docs_tok"
+        source = docs_tok(dialect)
     # The final stage opens its own WITH; splice its CTE list into ours.
     final = tfidf_final_sql("tfr", source)
     assert final.startswith("WITH ")
@@ -241,8 +233,8 @@ def tfidf_tf_sql(dialect: str, source: str | None = None) -> str:
     (Spark inlines CTEs: the r4 single-text registration re-ran this
     corpus-sized explode+agg for each consumer)."""
     if source is None:
-        source = "docs_tok_par" if dialect == "spark" else "docs_tok"
-    un = _unnest(dialect, "toks", "tok")
+        source = docs_tok(dialect)
+    un = unnest(dialect, "toks", "tok")
     return f"""
 SELECT doc_id, tok, count(*) AS tf
 FROM (SELECT doc_id, toks FROM {source}) t
@@ -340,14 +332,16 @@ def triangle_pn_sql(dialect: str, o: str = "o", lanes: int = 64) -> str:
     grouped collect of each node's out-neighbors, then per base edge
     (u, v) every w in N+(u) ∩ N+(v) closes a triangle — the same
     O(sum of wedges) element comparisons as the join form, but WITHOUT
-    materializing the 49M-wedge join output through two broadcast-hash
-    probes, and with the per-edge work spread round-robin over
-    ``lanes`` tasks instead of following the scan's row order (the
-    hot-u wedge skew made the join form's 32-task stage straggle:
-    interleaved A/B at sf0.1, 7 rounds — join 5.10 s median / 3.96 min
-    vs intersect 3.88 / 3.36, and the variance collapses). Counts are
-    identical integers (full pn relation parity-checked); the corners
-    of each triangle still explode in one pass."""
+    materializing the 49M-wedge join output. ``array_intersect`` runs
+    where the two broadcast-hash probes of ``adj`` run, in the stage
+    that scans the base edges (plans/r08/graph_triangle_count_after.txt;
+    the optimizer also copies the expression into the join condition).
+    The REPARTITION hint lands above that projection, so only the
+    corner explode and the count are spread round-robin over ``lanes``
+    tasks (interleaved A/B at sf0.1, 7 rounds — join 5.10 s median /
+    3.96 min vs intersect 3.88 / 3.36). Counts are identical integers
+    (full pn relation parity-checked); the corners of each triangle
+    still explode in one pass."""
     if dialect != "spark":
         return f"""
 WITH tri AS (
@@ -457,7 +451,6 @@ def embedding_outliers_sql(
     on the tie-free 1e-6 floor grid (SCALE.md rule 7b)."""
     from kektordb_spark.functions.textquality import _grid6
     from kektordb_spark.operators.ivf import _mean_cte
-    from kektordb_spark.tables import l2sq_sql
 
     if cent_source is None:
         cent = _mean_cte(dialect, "emb", "cent", cid="label")

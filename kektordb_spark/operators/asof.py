@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kektordb_spark.dialect import epoch
+
 
 def asof_join(
     left: DataFrame,
@@ -138,12 +140,8 @@ def artifact_version_asof_sql(
     ``probe_every``-th event. Each probe resolves to the version
     number in effect at its timestamp (0 = before the first version).
     """
-    if dialect == "spark":
-        ep = "CAST(unix_timestamp(ts) AS BIGINT)"
-        last_ver = "last(ver, true)"
-    else:
-        ep = "CAST(floor(epoch(ts)) AS BIGINT)"
-        last_ver = "last_value(ver IGNORE NULLS)"
+    ep = epoch(dialect, "ts")
+    last_ver = "last(ver, true)" if dialect == "spark" else "last_value(ver IGNORE NULLS)"
     return f"""
 WITH v AS (
   SELECT user_id AS artifact, {ep} AS t, event_id,

@@ -23,7 +23,7 @@ Emission is threshold- or local-top-k-filtered INSIDE the kernel, so
 the shuffle after the GEMM carries only surviving pairs, never the
 N^2 similarity matrix.
 
-Float parity with the fold-left SQL oracle (tables.dot_sql): GEMM
+Float parity with the fold-left SQL oracle (dialect.dot_sql): GEMM
 accumulates in float64; reassociation error is ~1e-15 relative, six
 orders below the round(…, 6) comparison grid and the 1e-2-scale
 thresholds used by callers.

@@ -59,7 +59,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from kektordb_spark.tables import dot_sql
+from kektordb_spark.dialect import dot_sql
 
 CC_TAU = 0.35
 CC_MAX_LEVELS = 12

@@ -23,7 +23,7 @@ Label propagation shuffles only (node, label) pairs per round.
 
 from __future__ import annotations
 
-from kektordb_spark.tables import dot_sql
+from kektordb_spark.dialect import dot_sql, sorted_csv
 
 
 def _pairs_cte(dialect: str, threshold: float) -> str:
@@ -65,10 +65,7 @@ def consolidation_sql(
     parts, prev = _label_ctes(dialect, threshold, iters)
     body = ",\n".join(parts)
     # members sorted numerically then joined
-    if dialect == "spark":
-        members = "array_join(transform(array_sort(collect_list(node)), x -> CAST(x AS STRING)), ',')"
-    else:
-        members = "array_to_string(list_transform(list_sort(list(node)), x -> CAST(x AS VARCHAR)), ',')"
+    members = sorted_csv(dialect, "node")
     return f"""
 WITH {body}
 SELECT label AS cluster_master, CAST(count(*) AS INT) AS size,
@@ -286,7 +283,6 @@ def merge_body_ctes(
     group-by keyed on label/node — co-partitioned at scale; members
     per cluster are bounded (similarity clusters), so the per-label
     windows never skew."""
-    s = "STRING" if dialect == "spark" else "VARCHAR"
     skips = ", ".join(f"'{r}'" for r in SKIP_RELS)
     if ecur_rel is None:
         ecur_cte = f"ecur AS (\n  {ecur_sql(dialect, at_time)}\n),\n"
@@ -305,21 +301,11 @@ def merge_body_ctes(
     # sides are member- or cluster-grained (cluster-membership-
     # bounded, the scale argument above); the probe sides stay the
     # edge stream / labels relation.
-    hint = "/*+ BROADCAST(n), BROADCAST(t2), BROADCAST(s2) */ " \
-        if dialect == "spark" else ""
-    hint_n = "/*+ BROADCAST(n) */ " if dialect == "spark" else ""
-    hint_z = "/*+ BROADCAST(z) */ " if dialect == "spark" else ""
-    hint_d = "/*+ BROADCAST(d) */ " if dialect == "spark" else ""
-    hint_c = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
-    hint_fin = ("/*+ BROADCAST(c), BROADCAST(a), BROADCAST(o), "
-                "BROADCAST(i) */ "
-                if dialect == "spark" else "")
+    members = sorted_csv(dialect, "node")
     if dialect == "spark":
-        posex = (f"SELECT {hint_c}c.label, t.pos, t.x FROM cl_nodes c "
+        posex = ("SELECT /*+ BROADCAST(c) */ c.label, t.pos, t.x FROM cl_nodes c "
                  "JOIN emb e ON e.vec_id = c.node "
                  "LATERAL VIEW posexplode(e.v) t AS pos, x")
-        members = ("array_join(transform(array_sort(collect_list(node)), "
-                   "x -> CAST(x AS STRING)), ',')")
         # Pick-one-per-group windows become max_by aggregates on the
         # Spark side (map-side combinable, no partition sort — the
         # ecur_sql precedent; guide "aggregate before you shuffle").
@@ -335,7 +321,7 @@ def merge_body_ctes(
          ) AS content
   FROM deg d LEFT JOIN part p ON p.p_partkey = d.node
   GROUP BY d.label"""
-        rew_out_body = f"""SELECT {hint}n.label, e.rel, e.dst,
+        rew_out_body = f"""SELECT /*+ BROADCAST(n), BROADCAST(t2), BROADCAST(s2) */ n.label, e.rel, e.dst,
          max_by(e.weight, n.node) AS weight
   FROM cl_nodes n
   JOIN {ecur} e ON e.src = n.nid
@@ -345,8 +331,6 @@ def merge_body_ctes(
     else:
         posex = ("SELECT c.label, generate_subscripts(e.v, 1) - 1 AS pos, "
                  "unnest(e.v) AS x FROM cl_nodes c JOIN emb e ON e.vec_id = c.node")
-        members = ("array_to_string(list_transform(list_sort(list(node)), "
-                   "x -> CAST(x AS VARCHAR)), ',')")
         central_body = """SELECT label, content FROM (
     SELECT d.label, coalesce(p.p_name, '') AS content,
            row_number() OVER (PARTITION BY d.label
@@ -375,7 +359,7 @@ def merge_body_ctes(
   SELECT label, count(*) AS size FROM {labels_rel} GROUP BY label
 ),
 cl_nodes AS (
-  SELECT {hint_z}m.label, m.node, concat('p_', CAST(m.node AS {s})) AS nid
+  SELECT /*+ BROADCAST(z) */ m.label, m.node, concat('p_', CAST(m.node AS STRING)) AS nid
   FROM {labels_rel} m JOIN sizes z ON z.label = m.label
   WHERE z.size >= {min_size}
 ),"""
@@ -389,14 +373,14 @@ cl_nodes AS (
   -- checkpointed temp views report no stats; a left-outer from the
   -- member side could not broadcast-hash), so the 2x edge stream
   -- probes a hash table and only member-touching rows aggregate.
-  SELECT {hint_n}n.label, n.node, count(*) AS degree
+  SELECT /*+ BROADCAST(n) */ n.label, n.node, count(*) AS degree
   FROM cl_nodes n
   JOIN (SELECT src AS a FROM {ecur}
         UNION ALL SELECT dst AS a FROM {ecur}) e ON e.a = n.nid
   GROUP BY n.label, n.node
 ),
 deg AS (
-  SELECT {hint_d}n.label, n.node, coalesce(d.degree, 0) AS degree
+  SELECT /*+ BROADCAST(d) */ n.label, n.node, coalesce(d.degree, 0) AS degree
   FROM cl_nodes n
   LEFT JOIN degm d ON d.label = n.label AND d.node = n.node
 ),
@@ -416,7 +400,7 @@ out_stats AS (
   FROM rew_out GROUP BY label
 ),
 rew_in AS (
-  SELECT {hint}n.label, e.rel, e.src
+  SELECT /*+ BROADCAST(n), BROADCAST(t2), BROADCAST(s2) */ n.label, e.rel, e.src
   FROM cl_nodes n
   JOIN {ecur} e ON e.dst = n.nid
   LEFT JOIN cl_nodes s2 ON s2.label = n.label AND s2.nid = e.src
@@ -430,7 +414,7 @@ szm AS (
   SELECT label, count(*) AS size, {members} AS members
   FROM cl_nodes GROUP BY label
 )
-SELECT {hint_fin}concat('consolidation_', CAST(z.label AS {s})) AS master_id,
+SELECT /*+ BROADCAST(c), BROADCAST(a), BROADCAST(o), BROADCAST(i) */ concat('consolidation_', CAST(z.label AS STRING)) AS master_id,
        CAST(z.size AS INT) AS derived_from_count,
        c.content,
        a.avg_vec_norm,

@@ -32,7 +32,7 @@ anchor does not) — mirrored from the reference's skip lists.
 from __future__ import annotations
 
 from kektordb_spark.functions.brain import contradiction_sql_pred
-from kektordb_spark.tables import dot_sql, fold_sum
+from kektordb_spark.dialect import dot_sql, fold_sum, zip_with
 
 SIM_LO, SIM_HI = 0.30, 0.95
 TOP_NEIGHBORS = 8
@@ -84,11 +84,8 @@ cand AS (
 
 
 def _avg_norm(dialect: str, va: str, vb: str) -> str:
-    if dialect == "spark":
-        sq = f"zip_with({va}, {vb}, (x, y) -> ((x + y) / 2) * ((x + y) / 2))"
-    else:
-        sq = (f"list_transform(list_zip({va}, {vb}), "
-              f"p -> ((p[1] + p[2]) / 2) * ((p[1] + p[2]) / 2))")
+    """L2 norm of the element-wise mean of two vectors."""
+    sq = zip_with(dialect, va, vb, lambda x, y: f"(({x} + {y}) / 2) * (({x} + {y}) / 2)")
     return f"sqrt({fold_sum(dialect, sq)})"
 
 

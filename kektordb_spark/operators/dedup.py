@@ -30,75 +30,10 @@ DuckDB) with the first 8 hex chars parsed to BIGINT — Spark
 
 from __future__ import annotations
 
-# ---------------------------------------------------------------------------
-# Dialect helpers
-# ---------------------------------------------------------------------------
-
-
-def _hex_to_int(dialect: str, hexpr: str, n_hex: int = 8) -> str:
-    """First ``n_hex`` hex chars of a hex string -> BIGINT in
-    [0, 16^n_hex). n_hex <= 15 keeps the value inside signed int64."""
-    if dialect == "spark":
-        return f"CAST(conv(substr({hexpr}, 1, {n_hex}), 16, 10) AS BIGINT)"
-    return f"CAST(concat('0x', substr({hexpr}, 1, {n_hex})) AS BIGINT)"
-
-
-def _unnest(dialect: str, arr: str, alias: str) -> str:
-    if dialect == "spark":
-        return f"LATERAL VIEW explode({arr}) _t AS {alias}"
-    return f", unnest({arr}) AS _t({alias})"
-
-
-def _distinct_arr(dialect: str, arr: str) -> str:
-    fn = "array_distinct" if dialect == "spark" else "list_distinct"
-    return f"{fn}({arr})"
-
-
-def _len(dialect: str, arr: str) -> str:
-    fn = "size" if dialect == "spark" else "len"
-    return f"{fn}({arr})"
-
-
-def _intersect(dialect: str, a: str, b: str) -> str:
-    fn = "array_intersect" if dialect == "spark" else "list_intersect"
-    return f"{fn}({a}, {b})"
-
-
-def _concat_arr(dialect: str, a: str, b: str) -> str:
-    fn = "concat" if dialect == "spark" else "list_concat"
-    return f"{fn}({a}, {b})"
-
-
-def _xor(dialect: str, a: str, b: str) -> str:
-    if dialect == "spark":
-        return f"CAST(({a}) ^ ({b}) AS BIGINT)"
-    return f"xor({a}, {b})"
-
-
-def _seq1(dialect: str, n: str) -> str:
-    """[1..n] as an array; n clamped to >= 1 (Spark sequence would count
-    DOWN for n<1, DuckDB range would be empty — clamp keeps them equal)."""
-    if dialect == "spark":
-        return f"sequence(1, greatest({n}, 1))"
-    return f"range(1, greatest({n}, 1) + 1)"
-
-
-def _empty_str_arr(dialect: str) -> str:
-    if dialect == "spark":
-        return "CAST(array() AS ARRAY<STRING>)"
-    return "CAST([] AS VARCHAR[])"
-
-
-def _elem(dialect: str, arr: str, i: str) -> str:
-    """1-based array element access."""
-    if dialect == "spark":
-        return f"element_at({arr}, {i})"
-    return f"{arr}[{i}]"
-
-
-def _transform(dialect: str, arr: str, lam: str) -> str:
-    fn = "transform" if dialect == "spark" else "list_transform"
-    return f"{fn}({arr}, {lam})"
+from kektordb_spark.dialect import (
+    concat_arr, docs_tok, dot_sql, elem, empty_str_arr, hex_to_int, int_div,
+    seq1, size, sorted_csv, transform, unnest, xor,
+)
 
 
 def word_shingles(dialect: str, toks: str, n: int = 3) -> str:
@@ -109,13 +44,13 @@ def word_shingles(dialect: str, toks: str, n: int = 3) -> str:
     and (b) creates a worst-case skew key joining every short doc into
     one candidate bucket (caught by tests/test_ppjoin_property.py on
     the char-gram twin)."""
-    cnt = f"{_len(dialect, toks)} - {n - 1}"
-    parts = ", ".join(_elem(dialect, toks, f"i + {j}") for j in range(n))
-    grams = _transform(
-        dialect, _seq1(dialect, cnt), f"i -> concat_ws(' ', {parts})"
+    cnt = f"{size(dialect, toks)} - {n - 1}"
+    parts = ", ".join(elem(dialect, toks, f"i + {j}") for j in range(n))
+    grams = transform(
+        dialect, seq1(dialect, cnt), f"i -> concat_ws(' ', {parts})"
     )
-    return (f"CASE WHEN {cnt} >= 1 THEN {_distinct_arr(dialect, grams)} "
-            f"ELSE {_empty_str_arr(dialect)} END")
+    return (f"CASE WHEN {cnt} >= 1 THEN array_distinct({grams}) "
+            f"ELSE {empty_str_arr(dialect)} END")
 
 
 def char_ngrams(dialect: str, txt: str, n: int = 4) -> str:
@@ -123,17 +58,17 @@ def char_ngrams(dialect: str, txt: str, n: int = 4) -> str:
     than ``n`` have NO grams (see word_shingles — same phantom-gram /
     skew-key hazard)."""
     cnt = f"length({txt}) - {n - 1}"
-    grams = _transform(
-        dialect, _seq1(dialect, cnt), f"i -> substr({txt}, i, {n})"
+    grams = transform(
+        dialect, seq1(dialect, cnt), f"i -> substr({txt}, i, {n})"
     )
-    return (f"CASE WHEN {cnt} >= 1 THEN {_distinct_arr(dialect, grams)} "
-            f"ELSE {_empty_str_arr(dialect)} END")
+    return (f"CASE WHEN {cnt} >= 1 THEN array_distinct({grams}) "
+            f"ELSE {empty_str_arr(dialect)} END")
 
 
 def jaccard(dialect: str, a: str, b: str) -> str:
     """Jaccard similarity of two set-like (pre-deduplicated) arrays."""
-    inter = _len(dialect, _intersect(dialect, a, b))
-    union = _len(dialect, _distinct_arr(dialect, _concat_arr(dialect, a, b)))
+    inter = size(dialect, f"array_intersect({a}, {b})")
+    union = size(dialect, f"array_distinct({concat_arr(dialect, a, b)})")
     return f"CAST({inter} AS DOUBLE) / CAST({union} AS DOUBLE)"
 
 
@@ -152,11 +87,7 @@ def dedup_exact_sql(dialect: str) -> str:
     computed in the scan projection. No row ever carries the full text
     past the shuffle (hash + id only).
     """
-    sort_ids = (
-        "array_join(transform(array_sort(collect_list(doc_id)), x -> CAST(x AS STRING)), ',')"
-        if dialect == "spark"
-        else "array_to_string(list_transform(list_sort(list(doc_id)), x -> CAST(x AS VARCHAR)), ',')"
-    )
+    sort_ids = sorted_csv(dialect, "doc_id")
     return f"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents
@@ -210,7 +141,7 @@ FROM {source}
 def minhash_ex_from_arr_sql(dialect: str, source: str = "_mh_arr") -> str:
     """Shingle postings exploded from a pre-materialized array column."""
     return f"""
-SELECT doc_id, s FROM {source} {_unnest(dialect, 'sh', 's')}
+SELECT doc_id, s FROM {source} {unnest(dialect, 'sh', 's')}
 """.strip()
 
 
@@ -224,7 +155,7 @@ def minhash_ex_sql(dialect: str, shingle_n: int = 3, source: str = "docs_tok") -
 SELECT doc_id, s FROM (
   SELECT doc_id, {word_shingles(dialect, 'toks', shingle_n)} AS shingles
   FROM {source}
-) sh {_unnest(dialect, 'shingles', 's')}
+) sh {unnest(dialect, 'shingles', 's')}
 """.strip()
 
 
@@ -241,7 +172,7 @@ def minhash_sig_sql(
     return f"""
 SELECT doc_id,
     {hash_aggs}
-FROM (SELECT doc_id, {_hex_to_int(dialect, 'md5(s)')} AS h FROM {ex_source}) hx
+FROM (SELECT doc_id, {hex_to_int(dialect, 'md5(s)')} AS h FROM {ex_source}) hx
 GROUP BY doc_id
 """.strip()
 
@@ -337,11 +268,11 @@ def _simhash_fp_cte(dialect: str, n_bits: int = 48, docs_source: str = "docs_tok
     )
     return f"""tok AS (
   SELECT doc_id, t, CAST(count(*) AS DOUBLE) AS tf
-  FROM {docs_source} {_unnest(dialect, 'toks', 't')}
+  FROM {docs_source} {unnest(dialect, 'toks', 't')}
   GROUP BY doc_id, t
 ),
 hashed AS (
-  SELECT doc_id, tf, {_hex_to_int(dialect, 'md5(t)', n_bits // 4)} AS h FROM tok
+  SELECT doc_id, tf, {hex_to_int(dialect, 'md5(t)', n_bits // 4)} AS h FROM tok
 ),
 votes AS (
   SELECT doc_id,
@@ -386,7 +317,7 @@ def simhash_pairs_sql(
         f"% {1 << chunk_bits} AS chunk_val FROM fp"
         for c in range(chunks)
     )
-    ham = f"bit_count({_xor(dialect, 'fp_a', 'fp_b')})"
+    ham = f"bit_count({xor(dialect, 'fp_a', 'fp_b')})"
     fp_cte = (
         _simhash_fp_cte(dialect, docs_source=docs_source)
         if fp_source is None
@@ -418,12 +349,12 @@ def ngram_ex_sql(dialect: str, n: int = 4, source: str = "documents") -> str:
     n-grams exploded, with the length-bucket block. Materialized once by
     the Spark runner (registry) — Spark inlines multiply-referenced
     CTEs, so without materialization this subplan runs 5x."""
-    div = "DIV" if dialect == "spark" else "//"
+    div = int_div(dialect)
     return f"""
 SELECT doc_id, blk, gram FROM (
   SELECT doc_id, n_chars {div} 32 AS blk, {char_ngrams(dialect, 'ltext', n)} AS grams
   FROM (SELECT doc_id, n_chars, lower(text) AS ltext FROM {source})
-) g {_unnest(dialect, 'grams', 'gram')}
+) g {unnest(dialect, 'grams', 'gram')}
 """.strip()
 
 
@@ -434,7 +365,7 @@ def ngram_arr_sql(dialect: str, n: int = 4, source: str = "documents") -> str:
     broadcasts. The Spark runner materializes this FIRST and derives the
     postings by exploding the concrete column (see minhash_arr_sql for
     why exploding unevaluated expressions is pathological)."""
-    div = "DIV" if dialect == "spark" else "//"
+    div = int_div(dialect)
     # lower(text) is hoisted out of the per-gram lambda: an inlined
     # lower() inside transform() re-lowercases the whole string once
     # PER GRAM (len(text) evaluations instead of 1).
@@ -448,7 +379,7 @@ FROM (SELECT doc_id, n_chars, lower(text) AS ltext FROM {source})
 def ngram_ex_from_arr_sql(dialect: str, source: str = "_ng_arr") -> str:
     """Gram postings exploded from a pre-materialized array column."""
     return f"""
-SELECT doc_id, blk, gram FROM {source} {_unnest(dialect, 'grams', 'gram')}
+SELECT doc_id, blk, gram FROM {source} {unnest(dialect, 'grams', 'gram')}
 """.strip()
 
 
@@ -469,11 +400,10 @@ def ngram_pref_sql(
     given, per-doc sizes come from the array length — a broadcastable
     |docs|-row relation — instead of re-aggregating the postings; the
     grams are DISTINCT per doc so the two are identical."""
-    size_fn = "size" if dialect == "spark" else "len"
     sizes = (
         f"SELECT doc_id, count(*) AS n_g FROM {ex_source} GROUP BY doc_id"
         if arr_source is None
-        else f"SELECT doc_id, {size_fn}(grams) AS n_g FROM {arr_source}"
+        else f"SELECT doc_id, {size(dialect, 'grams')} AS n_g FROM {arr_source}"
     )
     # df inline as a window count (one shuffle keyed on gram) instead
     # of a groupBy + re-join of the same postings — the rank window
@@ -576,7 +506,7 @@ pref AS (
         pref_ctes = (
             f"pref AS (SELECT doc_id, blk, gram, n_g, rnk FROM {pref_source}),"
         )
-    inter = _len(dialect, _intersect(dialect, "ga.grams", "gb.grams"))
+    inter = size(dialect, "array_intersect(ga.grams, gb.grams)")
     return f"""
 WITH {pref_ctes}
 {arr_cte},
@@ -601,8 +531,8 @@ cand AS (
 ver AS (
   SELECT c.id_a, c.id_b,
          CAST({inter} AS DOUBLE) AS c,
-         {_len(dialect, 'ga.grams')} AS na,
-         {_len(dialect, 'gb.grams')} AS nb
+         {size(dialect, 'ga.grams')} AS na,
+         {size(dialect, 'gb.grams')} AS nb
   FROM cand c
   JOIN arr ga ON ga.doc_id = c.id_a
   JOIN arr gb ON gb.doc_id = c.id_b
@@ -642,29 +572,22 @@ def minhash_clusters_sql(
   UNION ALL SELECT id_b AS u, id_a AS w FROM pairs0
 )""", "l0 AS (SELECT DISTINCT u AS node, u AS label FROM und)"]
     prev = "l0"
-    # Spark dialect (r8): broadcast the dup-pair edge list (e) and the
+    # Spark (r8): broadcast the dup-pair edge list (e) and the
     # neighbor-label probe side (p) of each propagation round — both
     # are duplicate-rate-bounded (e = verified dup pairs x2, p =
     # node-grained labels) but stats-less, so the un-hinted rounds
     # planned as LeftOuter SortMergeJoins (26 -> 21 jobs, SMJ -> 0,
-    # identical rows). DuckDB materializes CTEs itself, takes no hint.
-    hint_p = "/*+ BROADCAST(e), BROADCAST(p) */ " if dialect == "spark" else ""
-    hint_c = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
+    # identical rows). DuckDB reads the hints as comments.
     for i in range(1, iters + 1):
         parts.append(f"""l{i} AS (
-  SELECT {hint_p}n.node, least(n.label, coalesce(min(p.label), n.label)) AS label
+  SELECT /*+ BROADCAST(e), BROADCAST(p) */ n.node, least(n.label, coalesce(min(p.label), n.label)) AS label
   FROM {prev} n
   LEFT JOIN und e ON e.u = n.node
   LEFT JOIN {prev} p ON p.node = e.w
   GROUP BY n.node, n.label
 )""")
         prev = f"l{i}"
-    if dialect == "spark":
-        members = ("array_join(transform(array_sort(collect_list(node)), "
-                   "x -> CAST(x AS STRING)), ',')")
-    else:
-        members = ("array_to_string(list_transform(list_sort(list(node)), "
-                   "x -> CAST(x AS VARCHAR)), ',')")
+    members = sorted_csv(dialect, "node")
     parts.append(f"""grp AS (
   SELECT label, CAST(count(*) AS INT) AS size, {members} AS members
   FROM {prev} GROUP BY label
@@ -680,7 +603,7 @@ def minhash_clusters_sql(
     body = ",\n".join(parts)
     return f"""
 WITH {body}
-SELECT {hint_c}c.canonical_doc, g.size, CAST(g.size - 1 AS INT) AS dropped, g.members
+SELECT /*+ BROADCAST(c) */ c.canonical_doc, g.size, CAST(g.size - 1 AS INT) AS dropped, g.members
 FROM grp g JOIN canon c ON c.label = g.label
 """.strip()
 
@@ -695,8 +618,6 @@ def embedding_topk_pairs_sql(dialect: str, k: int = 20) -> str:
     100 TB the candidate step swaps to the LSH bucket join
     (operators/knn.py lsh_bucketed_knn) with identical scoring/top-k.
     TakeOrderedAndProject keeps the shuffle at k rows per partition."""
-    from kektordb_spark.tables import dot_sql
-
     sim = f"({dot_sql(dialect, 'a.v', 'b.v')}) / (a.norm * b.norm)"
     return f"""
 WITH p AS (
@@ -833,7 +754,7 @@ def paragraph_dedup_sql(dialect: str, source: str | None = None) -> str:
     """
     w = PARA_W
     if source is None:
-        source = "docs_tok_par" if dialect == "spark" else "docs_tok"
+        source = docs_tok(dialect)
     if dialect == "spark":
         corpus = f"""
   SELECT doc_id, toks FROM {source}
@@ -928,7 +849,7 @@ def substring_windows_sql(dialect: str, source: str | None = None) -> str:
     filter (the _adj_pairs lesson)."""
     w = SUBSTR_W
     if source is None:
-        source = "docs_tok_par" if dialect == "spark" else "docs_tok"
+        source = docs_tok(dialect)
     if dialect == "spark":
         wins = f"""
   SELECT doc_id, pr.pos AS pos, pr.h AS h

@@ -29,7 +29,7 @@ construction, so every post-kNN stage is broadcast-sized.
 
 from __future__ import annotations
 
-from kektordb_spark.tables import dot_sql
+from kektordb_spark.dialect import dot_sql, fold, list_by, posexplode, transform
 
 QUERY_TIME = 1705276800  # 2024-01-15 UTC (same anchor as the registry)
 STABILITY_HL_SECONDS = 30 * 24 * 3600.0  # 30-day half-life (A2)
@@ -56,21 +56,11 @@ cand AS (
 
 def _centroid_cte(dialect: str) -> str:
     """Per-query centroid of candidate vectors + its L2 norm.
-    Spark: posexplode; DuckDB: parallel unnest (zips equal-length
-    lists). The explode is k*dim rows per query — trivial for k<=50."""
-    if dialect == "spark":
-        ex = ("SELECT query_id, pos, x FROM cand "
-              "LATERAL VIEW posexplode(v) t AS pos, x")
-        collect = "transform(array_sort(collect_list(struct(pos, m))), s -> s.m)"
-    else:
-        ex = ("SELECT query_id, unnest(range(0, len(v))) AS pos, unnest(v) AS x "
-              "FROM cand")
-        collect = "list(m ORDER BY pos)"
-    agg = "aggregate" if dialect == "spark" else "list_reduce"
-    if dialect == "spark":
-        normsq = "aggregate(transform(cv, y -> y * y), CAST(0.0 AS DOUBLE), (s, p) -> s + p)"
-    else:
-        normsq = "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(cv, y -> y * y)), (s, p) -> s + p)"
+    The explode is k*dim rows per query — trivial for k<=50."""
+    ex = posexplode(dialect, "query_id", "cand")
+    collect = list_by(dialect, "m", "pos")
+    normsq = fold(dialect, transform(dialect, "cv", "y -> y * y"),
+                  "CAST(0.0 AS DOUBLE)", "(s, p) -> s + p")
     return f"""ex AS ({ex}),
 cm AS (
   SELECT query_id, pos, avg(x) AS m FROM ex GROUP BY query_id, pos
@@ -88,31 +78,28 @@ def _consensus_ctes(dialect: str, n_queries: int, k: int) -> str:
     max_pairwise, consensus)``."""
     dot_c = dot_sql(dialect, "c.v", "n.cv")
     dot_p = dot_sql(dialect, "a.v", "b.v")
-    # Spark dialect (r8): every relation here is query-bounded (cand =
+    # Spark (r8): every relation here is query-bounded (cand =
     # n_queries x k rows; the aggregates are one row per query), but
     # all are stats-less behind the CTE chain, so the query_id joins
     # planned as SortMergeJoins — broadcast the smaller/right sides.
-    # DuckDB materializes CTEs, takes no hint.
-    h_n = "/*+ BROADCAST(n) */ " if dialect == "spark" else ""
-    h_b = "/*+ BROADCAST(b) */ " if dialect == "spark" else ""
-    h_p = "/*+ BROADCAST(p) */ " if dialect == "spark" else ""
+    # DuckDB reads the hints as comments.
     return f"""{_cand_cte(dialect, n_queries, k)},
 {_centroid_cte(dialect)},
 var_ AS (
-  SELECT {h_n}c.query_id,
+  SELECT /*+ BROADCAST(n) */ c.query_id,
          count(*) AS n_cands,
          avg(power(1.0 - ({dot_c}) / (c.norm * n.cnorm), 2)) AS variance
   FROM cand c JOIN centroid_n n ON c.query_id = n.query_id
   GROUP BY c.query_id
 ),
 pw AS (
-  SELECT {h_b}a.query_id, max(1.0 - ({dot_p}) / (a.norm * b.norm)) AS max_pairwise
+  SELECT /*+ BROADCAST(b) */ a.query_id, max(1.0 - ({dot_p}) / (a.norm * b.norm)) AS max_pairwise
   FROM cand a JOIN cand b
     ON a.query_id = b.query_id AND a.cand_id < b.cand_id
   GROUP BY a.query_id
 ),
 consensus AS (
-  SELECT {h_p}v.query_id, v.n_cands, v.variance, p.max_pairwise,
+  SELECT /*+ BROADCAST(p) */ v.query_id, v.n_cands, v.variance, p.max_pairwise,
          CASE WHEN p.max_pairwise < 1e-10 THEN 1.0
               ELSE 1.0 - least(v.variance / (p.max_pairwise * p.max_pairwise), 1.0)
          END AS consensus
@@ -194,15 +181,11 @@ def belief_state_sql(dialect: str, n_queries: int = 5, k: int = 20) -> str:
 
     tt = time_travel_pred_sql(QUERY_TIME)
     decay = _decay30_expr("m.created_at", "m.last_accessed")
-    concat = "concat('ev_', CAST(c.cand_id AS STRING))" if dialect == "spark" \
-        else "concat('ev_', CAST(c.cand_id AS VARCHAR))"
-    node = "concat('o_', CAST(c.cand_id AS STRING))" if dialect == "spark" \
-        else "concat('o_', CAST(c.cand_id AS VARCHAR))"
     return f"""
 WITH {_consensus_ctes(dialect, n_queries, k)},
 stab AS (
   SELECT c.query_id, avg(coalesce({decay}, 1.0)) AS stability
-  FROM cand c LEFT JOIN mem m ON m.id = {concat}
+  FROM cand c LEFT JOIN mem m ON m.id = concat('ev_', CAST(c.cand_id AS STRING))
   GROUP BY c.query_id
 ),
 fric_edges AS (
@@ -218,11 +201,11 @@ fric AS (
                       1.0 - ({W_CONTRA} * CAST(coalesce(f.n_contra, 0) AS DOUBLE)
                            + {W_INVAL} * CAST(coalesce(f.n_inval, 0) AS DOUBLE)))) AS friction,
          sum(coalesce(f.n_contra, 0) + coalesce(f.n_inval, 0)) AS friction_edges
-  FROM cand c LEFT JOIN fric_edges f ON f.node = {node}
+  FROM cand c LEFT JOIN fric_edges f ON f.node = concat('o_', CAST(c.cand_id AS STRING))
   GROUP BY c.query_id
 ),
 belief AS (
-  SELECT {"/*+ BROADCAST(s), BROADCAST(fr) */ " if dialect == "spark" else ""}co.query_id,
+  SELECT /*+ BROADCAST(s), BROADCAST(fr) */ co.query_id,
          co.consensus, s.stability, fr.friction, fr.friction_edges,
          0.40 * co.consensus + 0.30 * s.stability + 0.30 * fr.friction AS belief
   FROM consensus co

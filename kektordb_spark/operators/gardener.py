@@ -28,6 +28,7 @@ All dialect-parameterized SQL with DuckDB oracles.
 
 from __future__ import annotations
 
+from kektordb_spark.dialect import epoch, size, str_arr
 from kektordb_spark.operators.graph import time_travel_pred_sql
 
 DAY = 86400
@@ -69,20 +70,10 @@ def sentiment_shifts_sql(
     (functions/text.py T7)."""
     from kektordb_spark.functions.text import NEGATIVE_WORDS, POSITIVE_WORDS
 
-    pos = ", ".join(f"'{w}'" for w in POSITIVE_WORDS)
-    neg = ", ".join(f"'{w}'" for w in NEGATIVE_WORDS)
-    if dialect == "spark":
-        senti = (
-            f"size(filter(toks, t -> array_contains(array({pos}), t))) - "
-            f"size(filter(toks, t -> array_contains(array({neg}), t)))"
-        )
-        epoch = "CAST(unix_timestamp(e.ts) AS BIGINT)"
-    else:
-        senti = (
-            f"len(list_filter(toks, t -> list_contains([{pos}], t))) - "
-            f"len(list_filter(toks, t -> list_contains([{neg}], t)))"
-        )
-        epoch = "CAST(floor(epoch(e.ts)) AS BIGINT)"
+    senti = " - ".join(
+        size(dialect, f"filter(toks, t -> array_contains({str_arr(dialect, words)}, t))")
+        for words in (POSITIVE_WORDS, NEGATIVE_WORDS)
+    )
     return f"""
 WITH ds AS (
   -- sentiment is DOC-level: evaluate the lexicon filters once per doc
@@ -91,7 +82,7 @@ WITH ds AS (
   SELECT doc_id, CAST({senti} AS DOUBLE) AS senti FROM docs_tok
 ),
 s AS (
-  SELECT e.user_id, {epoch} AS ets, d.senti
+  SELECT e.user_id, {epoch(dialect, 'e.ts')} AS ets, d.senti
   FROM events e JOIN ds d ON d.doc_id = e.event_id % 500
 ),
 w AS (
@@ -148,7 +139,7 @@ WHERE total >= {min_mentions} AND last_mention < {now - quiet}
 
 def repeated_failures_sql(dialect: str, min_failures: int = 3) -> str:
     """A11: >= N failure events per user per UTC day."""
-    day = "date_trunc('DAY', ts)" if dialect == "spark" else "date_trunc('day', ts)"
+    day = "date_trunc('DAY', ts)"
     daystr = (
         f"date_format({day}, 'yyyy-MM-dd')" if dialect == "spark"
         else f"strftime({day}, '%Y-%m-%d')"
@@ -168,23 +159,19 @@ def computed_fields_sql(dialect: str, top_n: int = 3) -> str:
     orders (counts, time span) + one over lineitem x orders for the
     top-N entities; both keyed on the customer, broadcast-joined at the
     end."""
-    epoch = (
-        "CAST(unix_timestamp(o_orderdate) AS BIGINT)" if dialect == "spark"
-        else "CAST(floor(epoch(o_orderdate)) AS BIGINT)"
-    )
-    strcast = "STRING" if dialect == "spark" else "VARCHAR"
+    ep = epoch(dialect, "o_orderdate")
     # top-N as N conditional-max columns (portable; avoids engine-specific
     # struct-sort semantics), then concat_ws which skips NULLs identically.
     rank_cols = ", ".join(
-        f"CAST(max(CASE WHEN rk = {i} THEN pk END) AS {strcast})" for i in range(1, top_n + 1)
+        f"CAST(max(CASE WHEN rk = {i} THEN pk END) AS STRING)" for i in range(1, top_n + 1)
     )
     joinstr = f"concat_ws(',', {rank_cols})"
     return f"""
 WITH base AS (
   SELECT o_custkey AS cust,
          count(*) AS interaction_count,
-         max({epoch}) AS last_activity,
-         round((max({epoch}) - min({epoch})) / CAST(60.0 AS DOUBLE), 2) AS duration_minutes
+         max({ep}) AS last_activity,
+         round((max({ep}) - min({ep})) / CAST(60.0 AS DOUBLE), 2) AS duration_minutes
   FROM orders
   GROUP BY o_custkey
 ),

@@ -27,20 +27,14 @@ recall the same way — clients/python/stress_test_recall.py).
 
 from __future__ import annotations
 
-from kektordb_spark.tables import dot_sql, l2sq_sql
+from kektordb_spark.dialect import dot_sql, l2sq_sql, list_by, posexplode
 
 
 def _mean_cte(dialect: str, src: str, out: str, cid: str = "cid") -> str:
     """Elementwise mean of vector column v in ``src`` grouped by
     ``cid`` -> CTEs producing ``out(cid, v)``."""
-    if dialect == "spark":
-        ex = (f"SELECT {cid}, pos, x FROM {src} "
-              "LATERAL VIEW posexplode(v) t AS pos, x")
-        collect = "transform(array_sort(collect_list(struct(pos, m))), s -> s.m)"
-    else:
-        ex = (f"SELECT {cid}, unnest(range(0, len(v))) AS pos, unnest(v) AS x "
-              f"FROM {src}")
-        collect = "list(m ORDER BY pos)"
+    ex = posexplode(dialect, cid, src)
+    collect = list_by(dialect, "m", "pos")
     # round(avg, 12): avg() reduction order is engine/partitioning
     # dependent at the last ulp; 12-dp rounding re-synchronizes the
     # centroids so assignments stay deterministic everywhere.
@@ -67,10 +61,6 @@ def _assign_cte(dialect: str, cents: str, out: str) -> str:
 
 def _train_parts(dialect: str, nlist: int, iters: int) -> tuple[list[str], str]:
     """CTE chain for k-means training; returns (parts, final_cents_name)."""
-    md5key = (
-        "md5(CAST(vec_id AS STRING))" if dialect == "spark"
-        else "md5(CAST(vec_id AS VARCHAR))"
-    )
     # r7: pick the nlist seed rows FIRST (ORDER BY..LIMIT plans as
     # TakeOrderedAndProject — a parallel partial top-k, never a global
     # sort), then number the nlist-row result. The r6 form ranked the
@@ -79,7 +69,7 @@ def _train_parts(dialect: str, nlist: int, iters: int) -> tuple[list[str], str]:
     # (the r6 judge's one structural 100x-scale finding, ivf.py:75).
     parts = [f"""init AS (
   SELECT row_number() OVER (ORDER BY mk) - 1 AS cid, v
-  FROM (SELECT {md5key} AS mk, v FROM emb ORDER BY mk LIMIT {nlist}) s
+  FROM (SELECT md5(CAST(vec_id AS STRING)) AS mk, v FROM emb ORDER BY mk LIMIT {nlist}) s
 )"""]
     cents = "init"
     for i in range(iters):
@@ -138,11 +128,10 @@ def ivf_knn_sql(
         )
     qd = l2sq_sql(dialect, "q.v", "c.v")
     dot = dot_sql(dialect, "q.v", "e.v")
-    # Spark dialect: the probe relation is n_queries x nprobe rows but
+    # Spark: the probe relation is n_queries x nprobe rows but
     # stats-less behind the persisted-assign join, so the cand join
     # planned as SortMergeJoin shuffling the inverted file (r8 plan
-    # audit) — broadcast the probe side. DuckDB takes no hint.
-    hint_p = "/*+ BROADCAST(p) */ " if dialect == "spark" else ""
+    # audit) — broadcast the probe side. DuckDB reads it as a comment.
     parts.append(f"""probe AS (
   SELECT query_id, cid FROM (
     SELECT q.vec_id AS query_id, c.cid, {qd} AS d2,
@@ -152,7 +141,7 @@ def ivf_knn_sql(
   ) t WHERE rk <= {nprobe}
 ),
 cand AS (
-  SELECT {hint_p}p.query_id, i.vec_id, i.v, i.norm
+  SELECT /*+ BROADCAST(p) */ p.query_id, i.vec_id, i.v, i.norm
   FROM probe p JOIN inv i ON i.cid = p.cid
 ),
 scored AS (

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kektordb_spark.dialect import dot_sql, double_arr, l2sq_sql
 from kektordb_spark.functions import vector as V
 
 
@@ -111,8 +112,6 @@ def knn_exact_oracle_sql(
     correctness gate: queries = emb rows matching ``query_pred``,
     candidates = emb rows matching ``cand_pred``. Bit-identical distance
     folds in both dialects."""
-    from kektordb_spark.tables import dot_sql, l2sq_sql
-
     if metric == "cosine":
         dist = f"1.0 - ({dot_sql(dialect, 'q.v', 'c.v')}) / (q.norm * c.norm)"
     elif metric == "euclidean":
@@ -157,6 +156,16 @@ def _lsh_planes(seed: int, n_planes: int, n_tables: int, dim: int):
         [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
         for _ in range(n_tables)
     ]
+
+
+def lsh_sig_sql(dialect: str, planes: list[list[float]], vcol: str = "v") -> str:
+    """One table's bucket signature of ``vcol`` in SQL: bit i is the
+    sign of the dot fold with hyperplane i."""
+    bits = []
+    for p_i, plane in enumerate(planes):
+        d = dot_sql(dialect, vcol, double_arr(dialect, plane))
+        bits.append(f"CASE WHEN {d} >= 0.0 THEN {1 << p_i} ELSE 0 END")
+    return " + ".join(bits)
 
 
 def _lsh_sig_expr(planes, vcol: str, table_idx: int) -> Column:
@@ -306,29 +315,10 @@ def lsh_bucketed_knn_oracle_sql(
     identical association order on both engines, so the approximate
     result is bit-reproducible — the oracle replays the same buckets,
     candidate join, and ranking in pure SQL."""
-    import random
-
-    from kektordb_spark.tables import dot_sql
-
-    rng = random.Random(seed)
-    planes = [
-        [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
-        for _ in range(n_tables)
-    ]
-
-    def arr_lit(plane: list[float]) -> str:
-        inner = ", ".join(f"CAST({x!r} AS DOUBLE)" for x in plane)
-        return f"array({inner})" if dialect == "spark" else f"[{inner}]"
-
-    def sig(t: int) -> str:
-        bits = []
-        for p_i, plane in enumerate(planes[t]):
-            d = dot_sql(dialect, "v", arr_lit(plane))
-            bits.append(f"CASE WHEN {d} >= 0.0 THEN {1 << p_i} ELSE 0 END")
-        return " + ".join(bits)
-
+    planes = _lsh_planes(seed, n_planes, n_tables, dim)
     bucket_selects = "\n  UNION ALL\n".join(
-        f"  SELECT vec_id, v, norm, {t} AS tbl, {sig(t)} AS sig FROM emb"
+        f"  SELECT vec_id, v, norm, {t} AS tbl, "
+        f"{lsh_sig_sql(dialect, planes[t])} AS sig FROM emb"
         for t in range(n_tables)
     )
     dist = dot_sql(dialect, "q.v", "c.v")

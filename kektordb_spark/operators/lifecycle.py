@@ -34,19 +34,10 @@ All dialect-parameterized SQL with DuckDB oracles.
 
 from __future__ import annotations
 
+from kektordb_spark.dialect import array_join, collect_sorted, epoch
 from kektordb_spark.operators import gardener as GD
 
 DAY = 86400
-
-
-def _str_t(dialect: str) -> str:
-    return "STRING" if dialect == "spark" else "VARCHAR"
-
-
-def _epoch_ts(dialect: str, col: str = "ts") -> str:
-    if dialect == "spark":
-        return f"CAST(unix_timestamp({col}) AS BIGINT)"
-    return f"CAST(floor(epoch({col})) AS BIGINT)"
 
 
 def knowledge_evolution_sql(
@@ -95,11 +86,7 @@ def cross_validator_sql(dialect: str, now: int, past: int) -> str:
     """A13: entities flagged by >= 2 of {importance, centrality,
     forgetting} in the same cycle. The detector CTEs are the registered
     A7/A9/A10 queries verbatim — one source of truth."""
-    agg = (
-        "array_join(array_sort(collect_list(detector)), ',')"
-        if dialect == "spark"
-        else "array_to_string(list_sort(list(detector)), ',')"
-    )
+    agg = array_join(dialect, collect_sorted(dialect, "detector"), ",")
     return f"""
 WITH imp AS ({GD.importance_shifts_sql(dialect, now=now)}),
 cen AS ({GD.centrality_shifts_sql(dialect, now=now, past=past)}),
@@ -129,7 +116,7 @@ def session_summary_sql(dialect: str) -> str:
     (functions/brain.py) — a real-model deployment summarizes the
     per-session ``collect_list`` through one Arrow batch there, and
     this SQL remains the oracle-checked fallback."""
-    ep = _epoch_ts(dialect)
+    ep = epoch(dialect, "ts")
     return f"""
 WITH r AS (
   SELECT user_id, event_type, {ep} AS ets,
@@ -153,9 +140,8 @@ def user_profile_sql(
     """A15 deterministic profile rebuild: users past the interaction
     threshold get a profile = top-N event types by frequency (count
     desc, type asc tie-break), as the reference's keyword tally."""
-    s = _str_t(dialect)
     rank_cols = ", ".join(
-        f"CAST(max(CASE WHEN rk = {i} THEN event_type END) AS {s})"
+        f"CAST(max(CASE WHEN rk = {i} THEN event_type END) AS STRING)"
         for i in range(1, top_n + 1)
     )
     return f"""
@@ -188,7 +174,6 @@ def artifact_diff_sql(
     offset 1: b-side-only rows are removals (guarded to <= the
     artifact's max version), a-side-only are additions (v=1 rows are the
     initial 'added' set), value mismatches are modifications."""
-    s = _str_t(dialect)
     return f"""
 WITH v AS (
   SELECT user_id AS artifact, event_type, value,
@@ -203,7 +188,7 @@ fields AS (
   SELECT artifact, version, 'type' AS field, event_type AS val FROM v
   UNION ALL
   SELECT artifact, version, 'value_bucket' AS field,
-         CAST(CAST(floor(value / 50) AS INT) AS {s}) AS val FROM v
+         CAST(CAST(floor(value / 50) AS INT) AS STRING) AS val FROM v
   UNION ALL
   SELECT artifact, version, 'hot' AS field, 'true' AS val
   FROM v WHERE value >= {hot_threshold}
@@ -249,7 +234,7 @@ def artifact_staleness_sql(
     injected epoch so the operator is deterministic (never now()
     inside operators). One pass over events, one groupBy per artifact
     — a single shuffle keyed on the artifact at scale."""
-    ep = _epoch_ts(dialect)
+    ep = epoch(dialect, "ts")
     return f"""
 WITH v AS (
   SELECT user_id AS artifact, event_type, value, {ep} AS ep,
@@ -337,7 +322,6 @@ def evolution_chain_oracle_sql(
     (each event evolves from the previous one), so walking backward from
     the head is reverse-rank arithmetic — depth d ancestor = the event
     with descending rank d+1."""
-    s = _str_t(dialect)
     return f"""
 WITH r AS (
   SELECT user_id, event_id,
@@ -345,8 +329,8 @@ WITH r AS (
   FROM events
 )
 SELECT s.user_id,
-       concat('ev_', CAST(s.event_id AS {s})) AS seed,
-       concat('ev_', CAST(r.event_id AS {s})) AS ancestor,
+       concat('ev_', CAST(s.event_id AS STRING)) AS seed,
+       concat('ev_', CAST(r.event_id AS STRING)) AS ancestor,
        CAST(r.rd - 1 AS INT) AS depth
 FROM (SELECT user_id, event_id FROM r WHERE rd = 1 AND user_id % {user_mod} = 0) s
 JOIN r ON r.user_id = s.user_id AND r.rd BETWEEN 2 AND {max_depth + 1}

@@ -57,7 +57,7 @@ IVF/PQ/LSH — and the same measured quality the exact GEMM-built
 graph gave in r1-r5).
 
 Determinism / oracle: every hop ranks on the RAW distance fold
-(bit-identical across engines — index-order aggregate, tables.dot_sql)
+(bit-identical across engines — index-order aggregate, dialect.dot_sql)
 with vec_id tie-break; EXCEPT is set-exact on integer ids. The DuckDB
 oracle unrolls the hop chain with MATERIALIZED CTEs (visited and
 scored each have 2 consumers per hop — naive inlining compounds
@@ -77,7 +77,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kektordb_spark.tables import dot_sql
+from kektordb_spark.dialect import dot_sql, materialized
 
 NSW_M = 8        # out-degree of the persisted k-NN graph
 NSW_BEAM = 16    # per-query frontier width
@@ -137,24 +137,12 @@ def nng_sig_sql(dialect: str) -> str:
     descent's own NNG_LSH lattice. Every bit is a sign test on the
     index-order dot fold, so the relation is bit-identical across
     engines."""
-    from kektordb_spark.operators.knn import _lsh_planes
+    from kektordb_spark.operators.knn import _lsh_planes, lsh_sig_sql
 
     n_planes, n_tables, seed, dim = NNG_LSH
     planes = _lsh_planes(seed, n_planes, n_tables, dim)
-
-    def arr_lit(plane: list[float]) -> str:
-        inner = ", ".join(f"CAST({x!r} AS DOUBLE)" for x in plane)
-        return f"array({inner})" if dialect == "spark" else f"[{inner}]"
-
-    def sig(t: int) -> str:
-        bits = []
-        for p_i, plane in enumerate(planes[t]):
-            d = dot_sql(dialect, "v", arr_lit(plane))
-            bits.append(f"CASE WHEN {d} >= 0.0 THEN {1 << p_i} ELSE 0 END")
-        return " + ".join(bits)
-
     return "\nUNION ALL\n".join(
-        f"SELECT vec_id, {t} AS tbl, {sig(t)} AS sig FROM emb"
+        f"SELECT vec_id, {t} AS tbl, {lsh_sig_sql(dialect, planes[t])} AS sig FROM emb"
         for t in range(n_tables)
     )
 
@@ -249,7 +237,7 @@ def nng_descent_parts(
     read the persisted seed-signature view while the oracle derives the
     signatures inline. Multi-consumer CTEs are MATERIALIZED on DuckDB
     (naive inlining compounds per round — the kcore/NSW oracle rule)."""
-    mat = " MATERIALIZED" if dialect == "duckdb" else ""
+    mat = materialized(dialect)
     sig = (f"sg AS{mat} (\n{nng_sig_sql(dialect)}\n)"
            if sig_source is None
            else f"sg AS (SELECT vec_id, tbl, sig FROM {sig_source})")
@@ -457,8 +445,6 @@ def nsw_cell_init_sql(
             "nsw_cell_init_sql: init='cell' requires an explicit "
             "query_pred (e.g. \"q.vec_id >= 2000\")")
     d = _dist(dialect)
-    md5key = ("md5(CAST(vec_id AS STRING))" if dialect == "spark"
-              else "md5(CAST(vec_id AS VARCHAR))")
     return f"""
 SELECT q.vec_id AS query_id, c.vec_id AS node, {d} AS dist
 FROM emb q
@@ -466,7 +452,7 @@ JOIN {assign_source} aq ON aq.vec_id = q.vec_id
 JOIN (
   SELECT vec_id, cid FROM (
     SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY cid ORDER BY {md5key}) AS crk
+           row_number() OVER (PARTITION BY cid ORDER BY md5(CAST(vec_id AS STRING))) AS crk
     FROM {assign_source} x
   ) r WHERE crk <= {seed_cap}
 ) ac ON ac.cid = aq.cid
@@ -551,7 +537,7 @@ def nsw_oracle_sql(
     insert path); the oracle then derives the IVF train+assign chain
     inline too, and hop-0's frontier is the per-query top-``beam`` of
     the cell scores instead of the single entry row."""
-    mat = " MATERIALIZED" if dialect == "duckdb" else ""
+    mat = materialized(dialect)
     if adj_source is None:
         dparts, fin = nng_descent_parts(dialect, m)
         adj = dparts + [f"nng AS{mat} (SELECT src, dst FROM {fin})"]
@@ -680,7 +666,7 @@ def nsw_recall_sweep_sql(
     is one exact scan + one multi-width serve pass over the persisted
     graph — the measurement a pipeline runs before picking its
     serve-time beam."""
-    mat = " MATERIALIZED" if dialect == "duckdb" else ""
+    mat = materialized(dialect)
     if adj_source is None:
         dparts, fin = nng_descent_parts(dialect, m)
         parts = dparts + [f"nngx AS{mat} (SELECT src, dst FROM {fin})"]

@@ -25,8 +25,10 @@ from __future__ import annotations
 
 import pandas as pd
 
-from kektordb_spark.functions.textquality import BPE_ISH_RE, _regex_all
-from kektordb_spark.operators.dedup import _hex_to_int, _unnest
+from kektordb_spark.dialect import (
+    docs_tok, hex_to_int, regex_all, regexp_replace_all, seq, size, str_arr, unnest,
+)
+from kektordb_spark.functions.textquality import BPE_ISH_RE
 
 # ---------------------------------------------------------------------------
 # Shared hash helpers
@@ -36,13 +38,17 @@ SAMPLE_SEED = "mix42"
 N_BUCKETS = 10_000
 
 
+def _seeded_hash(dialect: str, seed: str) -> str:
+    """md5 of the seed-salted doc_id -> BIGINT in [0, 16^8). Keys on
+    doc_id only, so every decision made from it is stable under
+    re-partitioning and corpus growth."""
+    return hex_to_int(dialect, f"md5(concat('{seed}', CAST(doc_id AS STRING)))")
+
+
 def _doc_bucket(dialect: str, seed: str = SAMPLE_SEED) -> str:
     """Deterministic per-doc bucket in [0, N_BUCKETS): md5 of the
-    seeded id. Salting the seed re-draws the sample; the hash keys on
-    doc_id only, so the bucket is stable under re-partitioning."""
-    s = "STRING" if dialect == "spark" else "VARCHAR"
-    h = _hex_to_int(dialect, f"md5(concat('{seed}', CAST(doc_id AS {s})))")
-    return f"({h}) % {N_BUCKETS}"
+    seeded id. Salting the seed re-draws the sample."""
+    return f"({_seeded_hash(dialect, seed)}) % {N_BUCKETS}"
 
 
 # Target mixture: per-language keep rates (fixture languages; unlisted
@@ -113,9 +119,7 @@ PACK_CAPACITY = 256  # BPE-ish tokens per packed training sequence
 
 
 def _shard(dialect: str) -> str:
-    s = "STRING" if dialect == "spark" else "VARCHAR"
-    h = _hex_to_int(dialect, f"md5(concat('shard', CAST(doc_id AS {s})))")
-    return f"({h}) % {N_SHARDS}"
+    return f"({_seeded_hash(dialect, 'shard')}) % {N_SHARDS}"
 
 
 def shard_assign_sql(dialect: str) -> str:
@@ -127,11 +131,7 @@ def shard_assign_sql(dialect: str) -> str:
     mid-epoch without coordination. One window keyed on shard; shard
     count scales with data so the per-shard sort stays bounded."""
     sh = _shard(dialect)
-    h = _hex_to_int(
-        dialect,
-        f"md5(concat('pos', CAST(doc_id AS "
-        f"{'STRING' if dialect == 'spark' else 'VARCHAR'})))",
-    )
+    h = _seeded_hash(dialect, "pos")
     return f"""
 WITH s AS (
   SELECT doc_id, CAST({sh} AS INT) AS shard, {h} AS h FROM documents
@@ -162,11 +162,10 @@ def epoch_shuffle_sql(dialect: str, epochs: int = N_EPOCHS) -> str:
     shuffle keyed (epoch, shard); shard count scales with data so the
     per-shard sort stays bounded — at 100 TB this is exactly the
     per-epoch file-manifest a dataloader materializes ahead of time."""
-    s = "STRING" if dialect == "spark" else "VARCHAR"
     branches = []
     for e in range(epochs):
-        key = f"md5(concat('ep{e}:', CAST(doc_id AS {s})))"
-        shard = f"({_hex_to_int(dialect, key)}) % {N_SHARDS}"
+        key = f"md5(concat('ep{e}:', CAST(doc_id AS STRING)))"
+        shard = f"({hex_to_int(dialect, key)}) % {N_SHARDS}"
         branches.append(
             f"SELECT doc_id, {e} AS epoch, CAST({shard} AS INT) AS shard,"
             f" {key} AS k FROM documents"
@@ -194,9 +193,7 @@ def pack_sequences_sql(dialect: str) -> str:
     reuses the shard shuffle. Emits the doc -> (pack, offset) map a
     dataloader materializes."""
     sh = _shard(dialect)
-    bpe = f"len({_regex_all(dialect, 'lower(text)', BPE_ISH_RE)})" \
-        if dialect != "spark" else \
-        f"size({_regex_all(dialect, 'lower(text)', BPE_ISH_RE)})"
+    bpe = size(dialect, regex_all(dialect, "lower(text)", BPE_ISH_RE))
     return f"""
 WITH t AS (
   SELECT doc_id, CAST({sh} AS INT) AS shard,
@@ -252,7 +249,7 @@ def decontaminate_sql(dialect: str) -> str:
     pipeline is tiny (benchmarks), i.e. broadcast. Reports per
     contaminated training doc the distinct shared grams and distinct
     eval docs hit — the audit trail for dropping or masking."""
-    toks = _regex_all(dialect, "lower(text)", "[a-z0-9_]+")
+    toks = regex_all(dialect, "lower(text)", "[a-z0-9_]+")
     grams = _grams(dialect, "toks")
     if dialect == "spark":
         ex = "LATERAL VIEW explode(grams) _g AS gram"
@@ -291,21 +288,15 @@ def quality_gate_sql(dialect: str) -> str:
     operators/dedup.py exact semantics). The reason column is what
     separates a *pipeline* filter from a WHERE clause: every dropped
     row is accounted for downstream."""
-    from kektordb_spark.functions.textquality import _arr_lit
     from kektordb_spark.tables import ENGLISH_STOPWORDS
 
-    toks = _regex_all(dialect, "lower(text)", "[a-z0-9_]+")
-    stops = _arr_lit(dialect, ENGLISH_STOPWORDS)
+    toks = regex_all(dialect, "lower(text)", "[a-z0-9_]+")
+    stops = str_arr(dialect, ENGLISH_STOPWORDS)
     punct_re = "[^a-zA-Z0-9" + chr(92) + "s]"
-    punct_arr = _regex_all(dialect, "text", punct_re)
-    if dialect == "spark":
-        n_toks = "size(toks)"
-        n_stop = f"size(filter(toks, t -> array_contains({stops}, t)))"
-        n_punct = f"size({punct_arr})"
-    else:
-        n_toks = "len(toks)"
-        n_stop = f"len(list_filter(toks, t -> list_contains({stops}, t)))"
-        n_punct = f"len({punct_arr})"
+    punct_arr = regex_all(dialect, "text", punct_re)
+    n_toks = size(dialect, "toks")
+    n_stop = size(dialect, f"filter(toks, t -> array_contains({stops}, t))")
+    n_punct = size(dialect, punct_arr)
     return f"""
 WITH t AS (
   SELECT doc_id, text, n_chars, {toks} AS toks,
@@ -451,7 +442,7 @@ def _bpe_best_sql(dialect: str, pairs_rel: str) -> str:
     tokenization. The merge expression/kernel treats a null pair as
     identity, so a dry round now passes tokens through unchanged; the
     trainer filters sentinel rows out of the merge table."""
-    null_s = "CAST(NULL AS STRING)" if dialect == "spark" else "CAST(NULL AS VARCHAR)"
+    null_s = "CAST(NULL AS STRING)"
     return f"""
 SELECT w1, w2, cnt FROM (
   SELECT w1, w2, cnt FROM (
@@ -618,7 +609,7 @@ def dsir_bg_sql(source: str = "docs_tok_par") -> str:
     vs 0.3 s at sf0.1."""
     pairs = ("transform(sequence(0, size(toks) - 2), "
              "i -> struct(toks[i] AS w1, toks[i + 1] AS w2))")
-    bucket = _hex_to_int("spark", "md5(concat(pr.w1, ' ', pr.w2))")
+    bucket = hex_to_int("spark", "md5(concat(pr.w1, ' ', pr.w2))")
     return f"""
 SELECT doc_id, lang, ({bucket}) % {DSIR_BUCKETS} AS bucket
 FROM (SELECT doc_id, lang, {pairs} AS prs
@@ -652,7 +643,6 @@ def dsir_select_sql(dialect: str, bg_source: str | None = None) -> str:
     doc-keyed aggregate; selection is TakeOrderedAndProject. Two
     data-sized shuffles total, both partially aggregated map-side."""
     B = DSIR_BUCKETS
-    s = "STRING" if dialect == "spark" else "VARCHAR"
     if bg_source is not None:
         # Pre-materialized (doc_id, lang, bucket) relation: bg is
         # referenced by THREE consumers (target LM, raw LM, scoring
@@ -676,14 +666,12 @@ def dsir_select_sql(dialect: str, bg_source: str | None = None) -> str:
   FROM docs_tok, unnest(generate_series(1, len(toks) - 1)) AS _g(i)
   WHERE len(toks) >= 2"""
             cat = "w1 || ' ' || w2"
-        bucket = _hex_to_int(dialect, f"md5({cat})")
+        bucket = hex_to_int(dialect, f"md5({cat})")
         head = f"""WITH bgr AS ({bg_rel}),
 bg AS (
   SELECT doc_id, lang, ({bucket}) % {B} AS bucket FROM bgr
 ),"""
-    gu = _hex_to_int(
-        dialect, f"md5(concat('{DSIR_SEED}', CAST(doc_id AS {s})))"
-    )
+    gu = _seeded_hash(dialect, DSIR_SEED)
     return f"""
 {head}
 tgt AS (
@@ -757,16 +745,11 @@ def curriculum_sql(dialect: str) -> str:
     executor-bounded at any scale; a dataloader replays
     step ASC, shard, position.  One bounded window is the only
     shuffle."""
-    s = "STRING" if dialect == "spark" else "VARCHAR"
-    toks = _regex_all(dialect, "lower(text)", "[a-z0-9_]+")
-    if dialect == "spark":
-        n_toks = "size(toks)"
-        n_uniq = "size(array_distinct(toks))"
-    else:
-        n_toks = "len(toks)"
-        n_uniq = "len(list_distinct(toks))"
+    toks = regex_all(dialect, "lower(text)", "[a-z0-9_]+")
+    n_toks = size(dialect, "toks")
+    n_uniq = size(dialect, "array_distinct(toks)")
     sh = _shard(dialect)
-    h = _hex_to_int(dialect, f"md5(concat('curr', CAST(doc_id AS {s})))")
+    h = _seeded_hash(dialect, "curr")
     cuts = sorted(CURRICULUM_STEPS, key=lambda t: -t[1])
     step_case = "CASE " + " ".join(
         f"WHEN score >= {lo} THEN '{name}'" for name, lo in cuts
@@ -815,22 +798,19 @@ def curriculum_adaptive_sql(dialect: str) -> str:
     length + lexical diversity, position = seeded-hash rank within
     (step, shard), one bounded window as the only data-sized shuffle.
     """
-    s = "STRING" if dialect == "spark" else "VARCHAR"
-    toks = _regex_all(dialect, "lower(text)", "[a-z0-9_]+")
+    toks = regex_all(dialect, "lower(text)", "[a-z0-9_]+")
+    n_toks = size(dialect, "toks")
+    n_uniq = size(dialect, "array_distinct(toks)")
     if dialect == "spark":
-        n_toks = "size(toks)"
-        n_uniq = "size(array_distinct(toks))"
         qagg = ("percentile(score, array("
                 + ", ".join(str(q) for q in ADAPTIVE_QS) + "))")
         elem = lambda i: f"q[{i}]"  # noqa: E731 — 0-based
     else:
-        n_toks = "len(toks)"
-        n_uniq = "len(list_distinct(toks))"
         qagg = ("quantile_cont(score, ["
                 + ", ".join(str(q) for q in ADAPTIVE_QS) + "])")
         elem = lambda i: f"q[{i + 1}]"  # noqa: E731 — 1-based
     sh = _shard(dialect)
-    h = _hex_to_int(dialect, f"md5(concat('curr', CAST(doc_id AS {s})))")
+    h = _seeded_hash(dialect, "curr")
     step_case = ("CASE "
                  + " ".join(
                      f"WHEN m.score >= c.c{i} THEN '{name}'"
@@ -880,10 +860,7 @@ def split_stratified_sql(dialect: str) -> str:
     stratum counts and observed fractions (one hash-agg pass), which is
     how a pipeline checks the uniform hash kept each stratum's split
     near 90/5/5 without a stratified sampler's global sort."""
-    s = "STRING" if dialect == "spark" else "VARCHAR"
-    h = _hex_to_int(
-        dialect, f"md5(concat('{SPLIT_SEED}', CAST(doc_id AS {s})))"
-    )
+    h = _seeded_hash(dialect, SPLIT_SEED)
     cases = []
     for name, hi in SPLIT_CUTS:
         cases.append(f"WHEN bucket < {hi} THEN '{name}'")
@@ -917,14 +894,6 @@ PII_IP_RE = "[0-9]{1,3}([.][0-9]{1,3}){3}"
 PII_PHONE_RE = "555-[0-9]{4}"
 
 
-def _rre(dialect: str, col: str, pattern: str, repl: str) -> str:
-    """Replace-ALL regexp across dialects (Spark replaces all by
-    default; DuckDB needs the 'g' flag)."""
-    if dialect == "spark":
-        return f"regexp_replace({col}, '{pattern}', '{repl}')"
-    return f"regexp_replace({col}, '{pattern}', '{repl}', 'g')"
-
-
 def pii_scrub_sql(dialect: str) -> str:
     """PII detection + redaction (the C4/Dolma scrub pass): count and
     mask emails, IPv4 addresses, and phone numbers per document,
@@ -944,10 +913,9 @@ def pii_scrub_sql(dialect: str) -> str:
     writes back partition-preserving). Masking order is fixed
     (email -> ip -> phone) so overlapping matches resolve
     deterministically."""
-    s = "STRING" if dialect == "spark" else "VARCHAR"
 
     def c(e: str) -> str:
-        return f"CAST({e} AS {s})"
+        return f"CAST({e} AS STRING)"
 
     dirty = (
         f"text || ' contact user' || {c('doc_id')} || '@mail' || "
@@ -958,18 +926,17 @@ def pii_scrub_sql(dialect: str) -> str:
         f" || CASE WHEN doc_id % 5 = 0 THEN ' call 555-' || "
         f"{c('1000 + doc_id % 9000')} ELSE '' END"
     )
-    red = _rre(dialect, "dirty", PII_EMAIL_RE, "<EMAIL>")
-    red = _rre(dialect, red, PII_IP_RE, "<IP>")
-    red = _rre(dialect, red, PII_PHONE_RE, "<PHONE>")
-    ln = "size" if dialect == "spark" else "len"
+    red = regexp_replace_all(dialect, "dirty", PII_EMAIL_RE, "<EMAIL>")
+    red = regexp_replace_all(dialect, red, PII_IP_RE, "<IP>")
+    red = regexp_replace_all(dialect, red, PII_PHONE_RE, "<PHONE>")
     return f"""
 WITH dirty_docs AS (
   SELECT doc_id, {dirty} AS dirty FROM documents
 )
 SELECT doc_id,
-       CAST({ln}({_regex_all(dialect, 'dirty', PII_EMAIL_RE)}) AS INT) AS n_emails,
-       CAST({ln}({_regex_all(dialect, 'dirty', PII_IP_RE)}) AS INT)    AS n_ips,
-       CAST({ln}({_regex_all(dialect, 'dirty', PII_PHONE_RE)}) AS INT) AS n_phones,
+       CAST({size(dialect, regex_all(dialect, 'dirty', PII_EMAIL_RE))} AS INT) AS n_emails,
+       CAST({size(dialect, regex_all(dialect, 'dirty', PII_IP_RE))} AS INT)    AS n_ips,
+       CAST({size(dialect, regex_all(dialect, 'dirty', PII_PHONE_RE))} AS INT) AS n_phones,
        CAST(length({red}) AS INT) AS redacted_len,
        md5({red})                 AS redacted_hash
 FROM dirty_docs
@@ -1014,14 +981,8 @@ def lang_balance_sql(dialect: str) -> str:
     keyed on lang (the same bounded-sort budget as curriculum
     position assignment) plus a metadata-only epoch explode."""
     e = UNIMAX_EPOCHS
-    s = "STRING" if dialect == "spark" else "VARCHAR"
-    h = _hex_to_int(
-        dialect, f"md5(concat('{UNIMAX_SEED}', CAST(doc_id AS {s})))"
-    )
-    if dialect == "spark":
-        copies = "LATERAL VIEW explode(sequence(1, n_copies)) _e AS epoch"
-    else:
-        copies = ", unnest(generate_series(1, n_copies)) AS _e(epoch)"
+    h = _seeded_hash(dialect, UNIMAX_SEED)
+    copies = unnest(dialect, seq(dialect, "1", "n_copies"), "epoch", "_e")
     return f"""
 WITH sizes AS (
   SELECT lang, count(*) AS sz FROM documents GROUP BY lang
@@ -1090,7 +1051,7 @@ ranked AS (
   FROM rloc l JOIN roff o ON o.lang = l.lang AND o.bkt = l.bkt
 ),
 plan AS (
-  SELECT {'/*+ BROADCAST(a) */' if dialect == 'spark' else ''}
+  SELECT /*+ BROADCAST(a) */
          r.doc_id, r.lang, r.r, a.sz, a.alloc,
          CAST(floor(CAST(a.alloc AS DOUBLE) / a.sz) AS BIGINT)
            + CASE WHEN r.r <= a.alloc % a.sz THEN 1 ELSE 0 END AS n_copies
@@ -1132,7 +1093,6 @@ def bpe_apply_sql(dialect: str, rounds: int = BPE_ROUNDS,
     one final doc-keyed projection. The Spark runner (``bpe_apply``)
     reuses the Arrow merge kernel and per-round checkpoints."""
     merge = _bpe_merge_expr(dialect)
-    ln = "size" if dialect == "spark" else "len"
     joined = ("concat_ws(' ', toks)" if dialect == "spark"
               else "array_to_string(toks, ' ')")
     parts = [f"t0 AS (SELECT doc_id, toks FROM {source})"]
@@ -1147,8 +1107,8 @@ def bpe_apply_sql(dialect: str, rounds: int = BPE_ROUNDS,
     return f"""
 WITH {body}
 SELECT a.doc_id,
-       CAST({ln}(b.toks) AS INT) AS n_toks_before,
-       CAST({ln}(a.toks) AS INT) AS n_toks_after,
+       CAST({size(dialect, 'b.toks')} AS INT) AS n_toks_before,
+       CAST({size(dialect, 'a.toks')} AS INT) AS n_toks_after,
        md5({joined.replace('toks', 'a.toks')}) AS tok_hash
 FROM t{rounds} a JOIN t0 b ON b.doc_id = a.doc_id
 ORDER BY a.doc_id
@@ -1218,7 +1178,7 @@ def corpus_stats_sql(dialect: str, source: str | None = None) -> str:
     regression runs inside the 64-row head. Same two-phase-count
     budget as vocab_pairs."""
     if source is None:
-        source = "docs_tok_par" if dialect == "spark" else "docs_tok"
+        source = docs_tok(dialect)
     # The final stage opens its own WITH; splice its CTE list into ours.
     final = corpus_stats_final_sql("tf", "topk")
     assert final.startswith("WITH ")
@@ -1237,8 +1197,8 @@ def corpus_tf_sql(dialect: str, source: str | None = None) -> str:
     """Corpus-stats stage 1: the token-frequency relation — ONE hash
     aggregate keyed on the token (shuffle carries the vocabulary)."""
     if source is None:
-        source = "docs_tok_par" if dialect == "spark" else "docs_tok"
-    un = _unnest(dialect, "toks", "tok")
+        source = docs_tok(dialect)
+    un = unnest(dialect, "toks", "tok")
     return f"""
 SELECT tok, count(*) AS c
 FROM (SELECT toks FROM {source}) t
@@ -1321,8 +1281,8 @@ def length_histogram_sql(dialect: str, source: str | None = None) -> str:
     one window over the bucket relation. The scan reads only the
     pre-tokenized array's length."""
     if source is None:
-        source = "docs_tok_par" if dialect == "spark" else "docs_tok"
-    ln = "size" if dialect == "spark" else "len"
+        source = docs_tok(dialect)
+    n_toks = size(dialect, "toks")
     # bin() renders BIGINT as its binary digits in both dialects; for
     # DuckDB the argument must be BIGINT (bin(VARCHAR) would parse).
     g6 = "CAST(floor(({x}) * 1e6) AS BIGINT) / 1e6"
@@ -1331,8 +1291,8 @@ def length_histogram_sql(dialect: str, source: str | None = None) -> str:
         x="CAST(sum(toks_in_bucket) OVER (ORDER BY bucket) AS DOUBLE) / tot")
     return f"""
 WITH b AS (
-  SELECT length(bin(CAST({ln}(toks) + 1 AS BIGINT))) - 1 AS bucket,
-         {ln}(toks) AS n
+  SELECT length(bin(CAST({n_toks} + 1 AS BIGINT))) - 1 AS bucket,
+         {n_toks} AS n
   FROM {source}
 ),
 agg AS (

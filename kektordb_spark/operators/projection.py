@@ -33,7 +33,7 @@ adds no rounding discipline of its own.
 
 from __future__ import annotations
 
-from kektordb_spark.tables import dot_sql, l2sq_sql
+from kektordb_spark.dialect import arr_lit, dot_sql, double_arr, l2sq_sql
 
 JL_DIM = 16    # projected width (64 -> 16: 4x cheaper folds/GEMM)
 JL_SEED = 7    # seeded Gaussian directions (independent of LSH seeds)
@@ -53,16 +53,11 @@ def jl_proj_sql(dialect: str, vcol: str, k: int = JL_DIM) -> str:
     folds scaled by 1/sqrt(k) (exact for k=16). Index-order folds both
     sides — bit-identical across engines."""
     assert k == 16, "scale below is exact only for k=16 (1/sqrt(16))"
-    dirs = _directions(k)
-
-    def arr_lit(d: list[float]) -> str:
-        inner = ", ".join(f"CAST({x!r} AS DOUBLE)" for x in d)
-        return f"array({inner})" if dialect == "spark" else f"[{inner}]"
-
     comps = ", ".join(
-        f"0.25e0 * ({dot_sql(dialect, vcol, arr_lit(d))})" for d in dirs
+        f"0.25e0 * ({dot_sql(dialect, vcol, double_arr(dialect, d))})"
+        for d in _directions(k)
     )
-    return (f"array({comps})" if dialect == "spark" else f"[{comps}]")
+    return arr_lit(dialect, comps)
 
 
 def projection_audit_sql(dialect: str, k: int = JL_DIM) -> str:

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kektordb_spark.dialect import epoch_us
+
 BUCKET_US = 3_600 * 1_000_000  # 1 h in micros — sized to the interval
                                # scale (30-min-gap sessions): fan-out
                                # ~1-2 buckets/session, tight post-filter
@@ -124,8 +126,7 @@ def session_concurrency_sql(dialect: str, bucket_us: int = BUCKET_US) -> str:
     """One text per dialect, same relational answer: DuckDB runs the
     direct range predicate (IEJoin); Spark runs the bucketized
     equi-join + exact post-filter (see module docstring)."""
-    us = ("unix_micros(CAST(ts AS TIMESTAMP))" if dialect == "spark"
-          else "epoch_us(ts)")
+    us = epoch_us(dialect, "ts")
     sess = _sessions(dialect)
     if dialect == "duckdb":
         return f"""

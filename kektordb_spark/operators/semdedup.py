@@ -48,7 +48,7 @@ round, so set ``iters`` >= the largest expected component diameter
 from __future__ import annotations
 
 from kektordb_spark.operators.ivf import _assign_cte, _train_parts
-from kektordb_spark.tables import dot_sql
+from kektordb_spark.dialect import dot_sql, sorted_csv
 
 # Cosine-similarity floor for "semantic duplicate". The driver's
 # synthetic embeddings are near-orthogonal random points (max pairwise
@@ -119,16 +119,14 @@ def semantic_dedup_sql(
 )""")
     parts.append("l0 AS (SELECT DISTINCT u AS node, u AS label FROM und)")
     prev = "l0"
-    # Spark dialect (r8): broadcast the dup-pair edge list (e) and the
+    # Spark (r8): broadcast the dup-pair edge list (e) and the
     # neighbor-label probe side (p) of each propagation round (the
     # minhash_clusters_sql hints — both duplicate-rate-bounded;
     # un-hinted rounds planned as LeftOuter SortMergeJoins). DuckDB
-    # materializes CTEs, takes no hint.
-    hint_p = "/*+ BROADCAST(e), BROADCAST(p) */ " if dialect == "spark" else ""
-    hint_k = "/*+ BROADCAST(k) */ " if dialect == "spark" else ""
+    # reads the hints as comments.
     for i in range(1, iters + 1):
         parts.append(f"""l{i} AS (
-  SELECT {hint_p}n.node, least(n.label, coalesce(min(p.label), n.label)) AS label
+  SELECT /*+ BROADCAST(e), BROADCAST(p) */ n.node, least(n.label, coalesce(min(p.label), n.label)) AS label
   FROM {prev} n
   LEFT JOIN und e ON e.u = n.node
   LEFT JOIN {prev} p ON p.node = e.w
@@ -147,12 +145,7 @@ def semantic_dedup_sql(
   JOIN inv e ON e.vec_id = m.node
   JOIN {cents} c ON c.cid = e.cid
 )""")
-    if dialect == "spark":
-        members = ("array_join(transform(array_sort(collect_list(node)), "
-                   "x -> CAST(x AS STRING)), ',')")
-    else:
-        members = ("array_to_string(list_transform(list_sort(list(node)), "
-                   "x -> CAST(x AS VARCHAR)), ',')")
+    members = sorted_csv(dialect, "node")
     parts.append(f"""grp AS (
   SELECT label, CAST(count(*) AS INT) AS size, {members} AS members
   FROM {prev} GROUP BY label
@@ -168,7 +161,7 @@ def semantic_dedup_sql(
     body = ",\n".join(parts)
     return f"""
 WITH {body}
-SELECT {hint_k}k.kept_id, CAST(k.cid AS INT) AS cid, g.size,
+SELECT /*+ BROADCAST(k) */ k.kept_id, CAST(k.cid AS INT) AS cid, g.size,
        CAST(g.size - 1 AS INT) AS dropped, g.members
 FROM grp g JOIN keep k ON k.label = g.label
 """.strip()
@@ -267,8 +260,6 @@ def semantic_decontaminate_oracle_sql(dialect: str,
     """Self-contained oracle: exact eval x train cosine join (the
     fold-left dot, bit-stable) — the ground truth the Spark side's
     index-served answer must reproduce value-for-value."""
-    from kektordb_spark.tables import dot_sql
-
     dot = dot_sql(dialect, "a.v", "b.v")
     return f"""
 WITH hits AS (

@@ -31,7 +31,10 @@ from kektordb_spark.operators import graph as G
 from kektordb_spark.operators import ivf as IVF
 from kektordb_spark.operators import knn as KNN
 from kektordb_spark.operators import lifecycle as LC
-from kektordb_spark.tables import dot_sql, load_tables, with_oracle_ctes
+from kektordb_spark.dialect import (
+    docs_tok, dot_sql, l2sq_sql, posexplode, regex_all, rlike, size, str_arr, transform,
+)
+from kektordb_spark.tables import load_tables, with_oracle_ctes
 
 # --------------------------------------------------------------------------
 # Fixed deterministic constants (FIXTURES.md: operators take query_time as a
@@ -435,9 +438,8 @@ def _knn_int8_sql(dialect: str, k: int = 10, n_queries: int = 5) -> str:
     symmetric scalar quantization (scale=127/absmax, round, clamp),
     integer dot product, cosine via stored quantized norms — the
     compressed-index search path, 4x less scan bandwidth at 100 TB."""
-    tr = "transform" if dialect == "spark" else "list_transform"
-    q = (f"{tr}(v, x -> CAST(greatest(-127.0, least(127.0, "
-         f"round(x * 127.0 / {_INT8_ABSMAX}, 0))) AS INT))")
+    q = transform(dialect, "v", "x -> CAST(greatest(-127.0, least(127.0, "
+                  f"round(x * 127.0 / {_INT8_ABSMAX}, 0))) AS INT)")
     if dialect == "spark":
         dot_i = ("aggregate(zip_with(a.q, b.q, (x, y) -> x * y), 0L, (s, p) -> s + CAST(p AS BIGINT))")
         nsq = "aggregate(transform(q, x -> x * x), 0L, (s, p) -> s + CAST(p AS BIGINT))"
@@ -479,8 +481,6 @@ def _knn_pq_oracle(m: int = 8, kcb: int = 16, dim: int = 64,
     and the argmin/LUT distances reproduce exactly). Lloyd-trained
     codebooks stay pinned against numpy in tests/test_pq.py (iterative
     means are not one SQL statement)."""
-    from kektordb_spark.tables import l2sq_sql
-
     w = dim // m
     d_enc = l2sq_sql("duckdb", "s.sv", "c.cv")
     d_lut = l2sq_sql("duckdb", "q.sv", "c.cv")
@@ -570,8 +570,6 @@ def _ivfpq_oracle(nlist: int = 8, iters: int = 2, nprobe: int = 3,
     (deterministic init codebook, as in _knn_pq_oracle) — ADC scoring
     restricted to the probed cells' candidates."""
     from kektordb_spark.operators import ivf as IVF
-    from kektordb_spark.tables import l2sq_sql
-
     w = dim // m
     parts, cents = IVF._train_parts("duckdb", nlist, iters)
     parts.append(IVF._assign_cte("duckdb", cents, "inv"))
@@ -661,8 +659,6 @@ def ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from kektordb_spark.operators import pq as PQ
-    from kektordb_spark.tables import l2sq_sql
-
     load_tables(spark, sf_dir)
     emb = spark.table("emb")
     inv = spark.table("ivf_assign")
@@ -715,7 +711,7 @@ def _knn_f16_oracle(k: int = 10, n_q: int = 5) -> str:
     Spark side. Quantized values are bit-identical across engines, and
     the 64-term distance fold is sequential in both, so raw-dist
     ranking is stable (same convention as the other knn oracles)."""
-    from kektordb_spark.tables import f16_sql, l2sq_sql
+    from kektordb_spark.tables import f16_sql
 
     d = l2sq_sql("duckdb", "q.v", "c.v")
     return f"""
@@ -831,7 +827,6 @@ def _search_graph_oracle(dialect: str = "duckdb", k: int = 5) -> str:
     """G6 VSearchGraph (ops.go:541-589): k-NN seeds, then per-result
     relation expansion + hydration of the connected rows."""
     dot = dot_sql(dialect, "q.v", "c.v")
-    s = "STRING" if dialect == "spark" else "VARCHAR"
     tt = G.time_travel_pred_sql(T_MID)
     return f"""
 WITH d AS (
@@ -852,8 +847,8 @@ SELECT t.query_id, t.neighbor_id, CAST(t.rank AS INT) AS rank,
        round(o.o_totalprice, 2) AS dst_totalprice
 FROM topk t
 LEFT JOIN edges e
-  ON e.src = concat('p_', CAST(t.neighbor_id AS {s})) AND {tt}
-LEFT JOIN orders o ON e.dst = concat('o_', CAST(o.o_orderkey AS {s}))
+  ON e.src = concat('p_', CAST(t.neighbor_id AS STRING)) AND {tt}
+LEFT JOIN orders o ON e.dst = concat('o_', CAST(o.o_orderkey AS STRING))
 """.strip()
 
 
@@ -965,7 +960,6 @@ def _knn_decay_sql(dialect: str, k: int = 10, n_queries: int = 5) -> str:
     1/(1+dist) → multiply by the decay factor of the matching memory row
     ('ev_<id>') → re-rank. The decay join is a broadcast (k*Q rows)."""
     dot = dot_sql(dialect, "q.v", "c.v")
-    cast = "STRING" if dialect == "spark" else "VARCHAR"
     decay = decay_sql(QUERY_TIME, created="m.created_at",
                       last_accessed="m.last_accessed",
                       access_count="m.access_count", layer="m.memory_layer",
@@ -986,7 +980,7 @@ topk AS (
 SELECT t.query_id, t.neighbor_id,
        round((1.0 / (1.0 + t.dist)) * coalesce({decay}, 1.0), 6) AS score
 FROM topk t
-LEFT JOIN mem m ON m.id = concat('ev_', CAST(t.neighbor_id AS {cast}))
+LEFT JOIN mem m ON m.id = concat('ev_', CAST(t.neighbor_id AS STRING))
 """.strip()
 
 
@@ -1105,23 +1099,21 @@ def bm25_italian_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _text_stats_sql(dialect: str, source: str | None = None) -> str:
-    source = source or ("docs_tok_par" if dialect == "spark" else "docs_tok")
-    size = "size" if dialect == "spark" else "len"
-    dist = "array_distinct" if dialect == "spark" else "list_distinct"
-    filt = "filter" if dialect == "spark" else "list_filter"
-    cont = "array_contains" if dialect == "spark" else "list_contains"
-    pos = ("array(" if dialect == "spark" else "[") + \
-        ", ".join(f"'{w}'" for w in TX.POSITIVE_WORDS) + (")" if dialect == "spark" else "]")
-    neg = ("array(" if dialect == "spark" else "[") + \
-        ", ".join(f"'{w}'" for w in TX.NEGATIVE_WORDS) + (")" if dialect == "spark" else "]")
+    source = source or docs_tok(dialect)
+    n_toks = size(dialect, "toks")
+    n_uniq = size(dialect, "array_distinct(toks)")
+
+    def hits(words: list[str]) -> str:
+        return size(dialect, f"filter(toks, t -> array_contains({str_arr(dialect, words)}, t))")
+
     return f"""
 SELECT doc_id,
-       CAST({size}(toks) AS INT) AS n_toks,
-       CAST({size}({dist}(toks)) AS INT) AS n_uniq,
-       round(CASE WHEN {size}(toks) = 0 THEN 0.0
-             ELSE CAST({size}({dist}(toks)) AS DOUBLE) / CAST({size}(toks) AS DOUBLE) END, 6) AS density,
-       CAST({size}({filt}(toks, t -> {cont}({pos}, t)))
-          - {size}({filt}(toks, t -> {cont}({neg}, t))) AS INT) AS sentiment
+       CAST({n_toks} AS INT) AS n_toks,
+       CAST({n_uniq} AS INT) AS n_uniq,
+       round(CASE WHEN {n_toks} = 0 THEN 0.0
+             ELSE CAST({n_uniq} AS DOUBLE) / CAST({n_toks} AS DOUBLE) END, 6) AS density,
+       CAST({hits(TX.POSITIVE_WORDS)}
+          - {hits(TX.NEGATIVE_WORDS)} AS INT) AS sentiment
 FROM {source}
 """.strip()
 
@@ -1213,7 +1205,7 @@ def _rrf_sql(dialect: str, k0: int = 60, k: int = 15) -> str:
     definition in Cormack et al. and what every production fusion
     does; a doc outside a branch's top-N contributes no term from
     that branch. Then one full-outer equi-join on id."""
-    src = "docs_tok_par" if dialect == "spark" else "docs_tok"
+    src = docs_tok(dialect)
     knn = f"""SELECT c.vec_id AS id,
          round(1.0 - ({dot_sql(dialect, 'q.v', 'c.v')}) / (q.norm * c.norm), 6) AS dist
   FROM emb q CROSS JOIN emb c
@@ -1969,13 +1961,12 @@ def _connections_sql(dialect: str) -> str:
     given nodes + hydration of the target rows (here: order totals);
     dangling links surface as NULL hydrations (the reference repairs
     them in background — the anti-join is the same predicate)."""
-    s = "STRING" if dialect == "spark" else "VARCHAR"
     tt = G.time_travel_pred_sql(T_MID)
     return f"""
 SELECT e.src AS node, e.rel, e.dst, round(e.weight, 2) AS weight,
        round(o.o_totalprice, 2) AS dst_totalprice
 FROM edges e
-LEFT JOIN orders o ON e.dst = concat('o_', CAST(o.o_orderkey AS {s}))
+LEFT JOIN orders o ON e.dst = concat('o_', CAST(o.o_orderkey AS STRING))
 WHERE e.src IN ('p_1', 'p_7', 'p_13') AND {tt}
 """.strip()
 
@@ -2024,13 +2015,8 @@ def _firewall_sql(dialect: str, thr: float = _FW_THRESHOLD, k_q: int = 25) -> st
     first k_q docs joined to their embeddings by id."""
     dot = dot_sql(dialect, "q.v", "r.v")
 
-    def rx(pat: str) -> str:
-        if dialect == "spark":
-            return f"q.text RLIKE '{pat}'"
-        return f"regexp_matches(q.text, '{pat}')"
-
     matched = " ".join(
-        f"WHEN {rx(p)} THEN '{name}'" for name, p in _FW_PATTERNS
+        f"WHEN {rlike(dialect, 'q.text', p)} THEN '{name}'" for name, p in _FW_PATTERNS
     )
     return f"""
 WITH rules AS (
@@ -2099,22 +2085,8 @@ def _hyde_dual_rag_sql(
     engines; the ≤1e-10 quantization error is invisible at round-6.
     """
     dot = dot_sql(dialect, "q.v", "c.v")
-    if dialect == "spark":
-        pos_explode = "LATERAL VIEW posexplode(v) t AS pos, x"
-        pos_col, x_col = "pos", "x"
-    else:
-        pos_explode = ""
-        pos_col, x_col = "generate_subscripts(v, 1) - 1", "unnest(v)"
-    hit_ex = (
-        f"SELECT query_id, {pos_col} AS pos, {x_col} AS x FROM hits_v"
-        if dialect == "duckdb"
-        else "SELECT query_id, pos, x FROM hits_v " + pos_explode
-    )
-    cand_ex = (
-        f"SELECT vec_id, {pos_col} AS pos, {x_col} AS x FROM cands"
-        if dialect == "duckdb"
-        else "SELECT vec_id, pos, x FROM cands " + pos_explode
-    )
+    hit_ex = posexplode(dialect, "query_id", "hits_v")
+    cand_ex = posexplode(dialect, "vec_id", "cands")
     return f"""
 WITH qs AS (
   SELECT vec_id AS query_id, v, norm FROM emb WHERE vec_id < {n_q}
@@ -2509,13 +2481,12 @@ def _meta_question_sql(dialect: str, k: int = 5, n_queries: int = 3) -> str:
     filter runs BEFORE the distance computation, V2 pre-filter
     semantics) — then 1/(1+d) scoring (H1). Meta types anchored on the
     fixture as event_type IN (error, signup); non-deleted only (F7)."""
-    cast = "STRING" if dialect == "spark" else "VARCHAR"
     dot = dot_sql(dialect, "q.v", "c.v")
     return f"""
 WITH cand AS (
   SELECT e.vec_id, e.v, e.norm
   FROM emb e
-  JOIN mem m ON m.id = concat('ev_', CAST(e.vec_id AS {cast}))
+  JOIN mem m ON m.id = concat('ev_', CAST(e.vec_id AS STRING))
   WHERE (m.event_type = 'error' OR m.event_type = 'signup')
     AND NOT m.deleted
 ),
@@ -2548,7 +2519,6 @@ def _scoped_recall_layers_sql(
     defaults; rows with no memory row default to episodic, unknown
     layers floor at 0.1), then stable re-sort (weight DESC, original
     rank ASC) and truncate. The layer join is broadcast (k*Q rows)."""
-    cast = "STRING" if dialect == "spark" else "VARCHAR"
     dot = dot_sql(dialect, "q.v", "c.v")
     return f"""
 WITH d AS (
@@ -2572,7 +2542,7 @@ w AS (
                    WHEN 'procedural' THEN 0.1
                    ELSE 0.1 END AS DOUBLE) AS layer_weight
   FROM topk t
-  LEFT JOIN mem m ON m.id = concat('ev_', CAST(t.hit_id AS {cast}))
+  LEFT JOIN mem m ON m.id = concat('ev_', CAST(t.hit_id AS STRING))
 )
 SELECT query_id, hit_id, layer_weight, CAST(rk AS INT) AS rank
 FROM (
@@ -2837,10 +2807,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy: the census's two consumers are ordered (the total-sum
     # broadcast builds first and materializes pn; the report side then
     # probes the blocks) — the census itself never runs twice.
-    # lanes: the per-edge intersection work (r8 pn form) is spread
-    # round-robin over a multiple of the data-sized shuffle lane count
-    # — wedge fan-out is skewed by out-degree, so more, smaller tasks
-    # keep the stage straggler-free at any scale.
+    # lanes: the corner explode and count of the r8 pn form run
+    # round-robin over a multiple of the data-sized shuffle lane count.
+    # The per-edge array_intersect itself stays in the broadcast-join
+    # stage below the repartition (see AN.triangle_pn_sql).
     lanes = max(64, 4 * int(spark.conf.get("spark.sql.shuffle.partitions", "16")))
     spark.sql(AN.triangle_pn_sql("spark", "copurch_o", lanes=lanes)).localCheckpoint(
         eager=False).createOrReplaceTempView("_tri_pn")
@@ -2872,9 +2842,7 @@ def pipeline_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw transform() expression re-runs the md5 chain per output row);
     the join itself is the dialect SQL's gram equi-join."""
     load_tables(spark, sf_dir)
-    from kektordb_spark.functions.textquality import _regex_all
-
-    toks = _regex_all("spark", "lower(text)", "[a-z0-9_]+")
+    toks = regex_all("spark", "lower(text)", "[a-z0-9_]+")
     g = (
         spark.table("documents")
         .selectExpr("doc_id", f"({toks}) AS toks")

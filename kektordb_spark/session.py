@@ -22,24 +22,9 @@ def get_spark(app_name: str = "kektordb-spark", cpus: int | None = None) -> Spar
     # python daemon → workers) plus executorEnv for cluster mode.
     for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
-    # glibc malloc: by default every allocation over the (dynamic, max
-    # 32 MiB) mmap threshold is a fresh mmap and every free a munmap.
-    # The JVM's large transient buffers (broadcast hash relations,
-    # direct I/O buffers) then serialize all task threads on the
-    # kernel's mmap_lock and fault-storm newly mapped pages — measured
-    # here as multi-second, randomly-placed per-query stalls at
-    # local[32] (76% of 32 CPUs in SYSTEM time mid-burst; kernel stacks
-    # full of vm_mmap_pgoff/__vm_munmap/exc_page_fault), previously
-    # mis-read as co-tenant noise. Raising the threshold makes glibc
-    # serve and RETAIN those buffers from arena heaps (trim disabled, a
-    # bounded arena count); a 25-rep A/B went from bursts of 3-15 s to
-    # zero bursts with a ~5% better steady state. Set before the JVM
-    # launches (inherited by the gateway and Python workers); deployment
-    # overrides win via setdefault. On a cluster the same knobs belong
-    # in the executor launch env (spark.executorEnv.* / yarn env).
-    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 30))
-    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
-    os.environ.setdefault("MALLOC_ARENA_MAX", "4")
+    # The glibc malloc tunables are exported at package import
+    # (kektordb_spark/__init__.py), so a JVM launched by any caller
+    # after that import inherits them.
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kektordb_spark.dialect import hex_to_int
+
 MEDIA_SCHEMA = (
     "media_id string, kind string, content binary, width int, height int, "
     "duration_s double, mime string"
@@ -165,18 +167,10 @@ def media_features_oracle_sql(dialect: str, mod: int = 5) -> str:
     the stub decode is derivable from the sha256 hex digest, so the
     whole binary->feature path is checkable without Python. feat_i =
     digest_byte_i / 255."""
-    if dialect == "spark":
-        h = "sha2(CAST(text AS BINARY), 256)"
+    h = "sha2(CAST(text AS BINARY), 256)" if dialect == "spark" else "sha256(text)"
 
-        def byte(i: int) -> str:
-            return f"CAST(conv(substr(h, {2 * i + 1}, 2), 16, 10) AS DOUBLE)"
-    else:
-        h = "sha256(text)"
-
-        def byte(i: int) -> str:
-            return f"CAST(CAST(concat('0x', substr(h, {2 * i + 1}, 2)) AS INT) AS DOUBLE)"
-
-    s = "STRING" if dialect == "spark" else "VARCHAR"
+    def byte(i: int) -> str:
+        return hex_to_int(dialect, "h", 2, 2 * i + 1, ty="DOUBLE")
 
     def feat(i: int) -> str:
         # through float32 like the kernel's array<float> column, then
@@ -191,7 +185,7 @@ WITH m AS (
          CASE WHEN doc_id % 3 <> 0 THEN n_chars / 100.0 END AS duration_s
   FROM documents WHERE doc_id % {mod} = 0
 )
-SELECT concat('m_', CAST(doc_id AS {s})) AS media_id, kind,
+SELECT concat('m_', CAST(doc_id AS STRING)) AS media_id, kind,
        CAST(n_bytes AS INT) AS n_bytes, h AS sha256,
        {feat(0)} AS feat_0,
        {feat(15)} AS feat_15,

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kektordb_spark.dialect import hex_to_int, seq, transform, unnest
+
 DEFAULT_SEPARATORS = ["\n\n", "\n", " ", ""]
 
 # Named strategy presets — the reference's NewSplitterFactory separator
@@ -213,17 +215,10 @@ def embed_sql(dialect: str, txt: str) -> str:
     (http_handlers.go:641-658: query_text -> embedder -> VSearch) is
     fully oracle-checkable. Swapping in a real encoder replaces this
     AND embed_stub together."""
-    if dialect == "spark":
-        byte = f"CAST(conv(substr(sha2({txt}, 256), i * 2 + 1, 2), 16, 10) AS DOUBLE)"
-        return (
-            f"transform(sequence(0, {EMBED_DIM - 1}), "
-            f"i -> {byte} / 255.0 - 0.5)"
-        )
-    byte = f"CAST(concat('0x', substr(sha256({txt}), i * 2 + 1, 2)) AS BIGINT)"
-    return (
-        f"list_transform(range(0, {EMBED_DIM}), "
-        f"i -> CAST({byte} AS DOUBLE) / 255.0 - 0.5)"
-    )
+    digest = f"sha2({txt}, 256)" if dialect == "spark" else f"sha256({txt})"
+    byte = hex_to_int(dialect, digest, 2, "i * 2 + 1", ty="DOUBLE")
+    return transform(dialect, seq(dialect, "0", str(EMBED_DIM - 1)),
+                     f"i -> {byte} / 255.0 - 0.5")
 
 
 def ingest(docs: DataFrame, now: int = 0, chunk_size: int = 60, overlap: int = 10):
@@ -296,10 +291,7 @@ def chunk_fixed_sql(
     in codegen, no Python), bit-identical to split_fixed()."""
     step = max(1, chunk_size - overlap)
     nchunks = f"CAST(ceil(length(text) / {step}.0) AS BIGINT)"
-    if dialect == "spark":
-        lat = f"LATERAL VIEW explode(sequence(1, {nchunks})) _t AS i"
-    else:
-        lat = f", unnest(range(1, {nchunks} + 1)) AS _t(i)"
+    lat = unnest(dialect, seq(dialect, "1", nchunks), "i")
     return f"""
 SELECT doc_id, CAST(i - 1 AS INT) AS chunk_index,
        substr(text, CAST((i - 1) * {step} + 1 AS INT), {chunk_size}) AS chunk_text

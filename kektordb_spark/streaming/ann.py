@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kektordb_spark.tables import l2sq_sql
+from kektordb_spark.dialect import l2sq_sql
 
 #: arrival wave: vec_id % 10 = 7 (the repo's standard derived batch,
 #: same predicate as ann_index_merge / ann_graph_merge)

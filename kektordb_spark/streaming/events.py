@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kektordb_spark.dialect import epoch, epoch_us, hex_to_int, int_div
+
 EVENTS_SCHEMA = (
     "event_id bigint, ts bigint, user_id bigint, event_type string, "
     "value double, props string"
@@ -314,7 +316,7 @@ def distinct_sketch_stream(events: DataFrame) -> DataFrame:
     from pyspark.sql import functions as F
 
     from kektordb_spark.operators.analytics import (
-        KMV_K, _KMV_HEX, _KMV_SCALE, _hex_slice_int)
+        KMV_K, _KMV_HEX, _KMV_SCALE)
 
     uid = "CAST(user_id AS STRING)"
     cols = []
@@ -337,7 +339,7 @@ def distinct_sketch_stream(events: DataFrame) -> DataFrame:
     mins = hashed.groupBy("event_type").agg(
         *[F.expr(f"min(s{i})").alias(f"m{i}") for i in range(KMV_K)])
     sum_mins = " + ".join(
-        _hex_slice_int("spark", f"m{i}", 1, _KMV_HEX)
+        hex_to_int("spark", f"m{i}", _KMV_HEX)
         for i in range(KMV_K))
     return mins.selectExpr(
         "event_type",
@@ -395,11 +397,8 @@ WHERE c.n > {min_recent} AND c.n > {ratio} * coalesce(p.n, 0)
 
 def importance_spikes_oracle_sql(dialect: str, window_s: int = 259200,
                                  min_recent: int = 5, ratio: float = 2.0) -> str:
-    div = "DIV" if dialect == "spark" else "//"
-    ep = (
-        "CAST(unix_timestamp(ts) AS BIGINT)" if dialect == "spark"
-        else "CAST(floor(epoch(ts)) AS BIGINT)"
-    )
+    div = int_div(dialect)
+    ep = epoch(dialect, "ts")
     return f"""
 WITH wc AS (
   SELECT ({ep} {div} {window_s}) * {window_s} AS w_epoch,
@@ -507,11 +506,8 @@ FROM events GROUP BY user_id
 
 def windowed_counts_oracle_sql(dialect: str, window_s: int = 21600) -> str:
     """Tumbling-window oracle: epoch-aligned bucket arithmetic."""
-    div = "DIV" if dialect == "spark" else "//"
-    ep = (
-        "CAST(unix_timestamp(ts) AS BIGINT)" if dialect == "spark"
-        else "CAST(floor(epoch(ts)) AS BIGINT)"
-    )
+    div = int_div(dialect)
+    ep = epoch(dialect, "ts")
     return f"""
 SELECT ({ep} {div} {window_s}) * {window_s} AS w_start_epoch,
        event_type,
@@ -526,18 +522,14 @@ def dedup_first_oracle_sql(dialect: str, window_s: int = 21600) -> str:
     """Batch oracle for the windowed streaming dedup: epoch-bucket
     grouping + lexicographic-min survivor pick (min_by over the
     (ts, event_id) pair — order-independent on both engines)."""
-    div = "DIV" if dialect == "spark" else "//"
-    if dialect == "spark":
-        ep = "CAST(unix_timestamp(ts) AS BIGINT)"
-        # lexicographic (ts, event_id) as a padded string scalar —
-        # DuckDB min_by has no struct sort key, and the string key is
-        # order-isomorphic to the pair for non-negative values.
-        key = ("concat(lpad(CAST(unix_micros(ts) AS STRING), 20, '0'), "
-               "lpad(CAST(event_id AS STRING), 12, '0'))")
-    else:
-        ep = "CAST(floor(epoch(ts)) AS BIGINT)"
-        key = ("lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0') || "
-               "lpad(CAST(event_id AS VARCHAR), 12, '0')")
+    div = int_div(dialect)
+    ep = epoch(dialect, "ts")
+    # lexicographic (ts, event_id) as a padded string scalar — DuckDB
+    # min_by has no struct sort key, and the string key is
+    # order-isomorphic to the pair for non-negative values.
+    us = "unix_micros(ts)" if dialect == "spark" else "epoch_us(ts)"
+    key = (f"concat(lpad(CAST({us} AS STRING), 20, '0'), "
+           "lpad(CAST(event_id AS STRING), 12, '0'))")
     return f"""
 SELECT ({ep} {div} {window_s}) * {window_s} AS w_start_epoch,
        user_id, event_type,
@@ -554,10 +546,7 @@ def session_windows_oracle_sql(dialect: str, gap_us: int = 1800000000) -> str:
     # CAST(ts AS TIMESTAMP): the base parquet loads as TIMESTAMP_NTZ,
     # which unix_micros rejects; under the UTC session the cast is an
     # exact reinterpretation (and the identity on TIMESTAMP inputs).
-    if dialect == "spark":
-        us = "unix_micros(CAST(ts AS TIMESTAMP))"
-    else:
-        us = "epoch_us(ts)"
+    us = epoch_us(dialect, "ts")
     return f"""
 WITH e AS (SELECT user_id, event_id, ts, value, {us} AS us FROM events),
 m AS (
@@ -766,7 +755,7 @@ WHERE rn = 1
 def rollup_daily_from_hourly_sql(dialect: str, rel: str = "_hourly") -> str:
     """Daily rollup computed FROM the hourly rollup (counts and sums
     re-aggregate losslessly; only the FINAL emission rounds)."""
-    div = "DIV" if dialect == "spark" else "//"
+    div = int_div(dialect)
     return f"""
 SELECT (h_epoch {div} 86400) * 86400 AS day_epoch, event_type,
        CAST(sum(n) AS BIGINT) AS n, round(sum(sv), 2) AS total_value
@@ -779,11 +768,8 @@ def rollup_hourly_sql(dialect: str) -> str:
     """Hourly pre-aggregate over raw events — the materialized layer of
     the cascade (unrounded partial sums: rounding belongs to the final
     resolution only, or re-aggregation drifts)."""
-    div = "DIV" if dialect == "spark" else "//"
-    ep = (
-        "CAST(unix_timestamp(ts) AS BIGINT)" if dialect == "spark"
-        else "CAST(floor(epoch(ts)) AS BIGINT)"
-    )
+    div = int_div(dialect)
+    ep = epoch(dialect, "ts")
     return f"""
 SELECT ({ep} {div} 3600) * 3600 AS h_epoch, event_type,
        count(*) AS n, sum(value) AS sv

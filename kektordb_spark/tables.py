@@ -7,12 +7,14 @@ we derive those deterministically from the testdata so that every
 operator has BOTH a Spark implementation and a DuckDB oracle over the
 exact same inputs.
 
-Each derived view exists in two dialects (Spark SQL / DuckDB SQL) that
-compute bit-identical results:
-  * epoch seconds:  Spark ``unix_timestamp(ts)`` (UTC session) ==
-    DuckDB ``floor(epoch(ts))`` for naive timestamps.
-  * float math: element-wise left folds over doubles (``aggregate`` /
-    ``list_reduce``) so sums associate in the same order.
+Each derived view is one SQL text, parameterized by dialect, that
+computes bit-identical results in Spark and in the DuckDB oracle. The
+text uses Spark spellings wherever DuckDB accepts them with the same
+meaning; every remaining spelling difference is decided in
+``kektordb_spark/dialect.py`` (e.g. epoch seconds: Spark
+``unix_timestamp(ts)`` in a UTC session == DuckDB ``floor(epoch(ts))``;
+float sums: left folds over doubles, ``aggregate`` / ``list_reduce``,
+so both associate in the same order).
 
 Views:
   * ``mem``   — memory rows (kektordb vectors-table system metadata:
@@ -37,6 +39,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kektordb_spark.dialect import epoch, fold_sum, regex_all, str_arr, transform
+
 BASE_TABLES = [
     "region",
     "nation",
@@ -58,69 +62,9 @@ ENGLISH_STOPWORDS = [
 ]
 
 
-def _stop_list_sql() -> str:
-    return ", ".join(f"'{w}'" for w in ENGLISH_STOPWORDS)
-
-
 # ---------------------------------------------------------------------------
-# Dialect snippets
+# Shared SQL snippets
 # ---------------------------------------------------------------------------
-
-def _epoch(dialect: str, col: str) -> str:
-    if dialect == "spark":
-        return f"CAST(unix_timestamp({col}) AS BIGINT)"
-    return f"CAST(floor(epoch({col})) AS BIGINT)"
-
-
-def _s(dialect: str, expr: str) -> str:
-    """CAST to string."""
-    ty = "STRING" if dialect == "spark" else "VARCHAR"
-    return f"CAST({expr} AS {ty})"
-
-
-def _array_contains(dialect: str, arr: str, item: str) -> str:
-    fn = "array_contains" if dialect == "spark" else "list_contains"
-    return f"{fn}({arr}, {item})"
-
-
-def _transform(dialect: str, arr: str, lam: str) -> str:
-    fn = "transform" if dialect == "spark" else "list_transform"
-    return f"{fn}({arr}, {lam})"
-
-
-def _filter_arr(dialect: str, arr: str, lam: str) -> str:
-    fn = "filter" if dialect == "spark" else "list_filter"
-    return f"{fn}({arr}, {lam})"
-
-
-def fold_sum(dialect: str, arr: str) -> str:
-    """Left-fold sum of a double array — identical association order in
-    both engines (Spark aggregate starts at 0.0; DuckDB list_reduce
-    starts at the first element; 0.0+x == x bitwise for finite x)."""
-    if dialect == "spark":
-        return f"aggregate({arr}, CAST(0.0 AS DOUBLE), (s, x) -> s + x)"
-    return f"list_reduce({arr}, (s, x) -> s + x)"
-
-
-def dot_sql(dialect: str, a: str, b: str) -> str:
-    """Dot product of two double arrays, identical fold order."""
-    if dialect == "spark":
-        return fold_sum(dialect, f"zip_with({a}, {b}, (x, y) -> x * y)")
-    return fold_sum(
-        dialect,
-        f"list_transform(list_zip({a}, {b}), p -> p[1] * p[2])",
-    )
-
-
-def l2sq_sql(dialect: str, a: str, b: str) -> str:
-    """Squared euclidean distance (reference distance_go.go:56-68)."""
-    if dialect == "spark":
-        return fold_sum(dialect, f"zip_with({a}, {b}, (x, y) -> (x - y) * (x - y))")
-    return fold_sum(
-        dialect,
-        f"list_transform(list_zip({a}, {b}), p -> (p[1] - p[2]) * (p[1] - p[2]))",
-    )
-
 
 def f16_sql(x: str) -> str:
     """IEEE-754 binary16 round-trip of a double, in pure DuckDB SQL —
@@ -199,10 +143,10 @@ def ordv_parts(src: str = "emb", key: str = "vec_id",
 
 def mem_view_sql(dialect: str) -> str:
     """Memory table (kektordb system metadata) derived from events."""
-    ep = _epoch(dialect, "ts")
+    ep = epoch(dialect, "ts")
     return f"""
 SELECT
-  concat('ev_', {_s(dialect, 'event_id')})                        AS id,
+  concat('ev_', CAST(event_id AS STRING))                        AS id,
   event_type,
   user_id,
   value,
@@ -234,11 +178,11 @@ def edges_view_sql(dialect: str) -> str:
     plus part -> supplier. 'R'-returnflag lineitems get a soft-delete
     30 days after ship (deleted_at semantics: pkg/core/graph.go:350-362).
     """
-    epship = _epoch(dialect, "l_shipdate")
-    eporder = _epoch(dialect, "o_orderdate")
+    epship = epoch(dialect, "l_shipdate")
+    eporder = epoch(dialect, "o_orderdate")
     return f"""
-SELECT concat('p_', {_s(dialect, 'l_partkey')})  AS src,
-       concat('o_', {_s(dialect, 'l_orderkey')}) AS dst,
+SELECT concat('p_', CAST(l_partkey AS STRING))  AS src,
+       concat('o_', CAST(l_orderkey AS STRING)) AS dst,
        'in_order'                                AS rel,
        CAST(l_quantity AS DOUBLE)                AS weight,
        {epship}                                  AS created_at,
@@ -247,32 +191,32 @@ SELECT concat('p_', {_s(dialect, 'l_partkey')})  AS src,
             ELSE CAST(0 AS BIGINT) END           AS deleted_at
 FROM lineitem
 UNION ALL
-SELECT concat('p_', {_s(dialect, 'l_partkey')}),
-       concat('s_', {_s(dialect, 'l_suppkey')}),
+SELECT concat('p_', CAST(l_partkey AS STRING)),
+       concat('s_', CAST(l_suppkey AS STRING)),
        'supplied_by',
        CAST(1.0 AS DOUBLE),
        {epship},
        CAST(0 AS BIGINT)
 FROM lineitem
 UNION ALL
-SELECT concat('o_', {_s(dialect, 'o_orderkey')}),
-       concat('c_', {_s(dialect, 'o_custkey')}),
+SELECT concat('o_', CAST(o_orderkey AS STRING)),
+       concat('c_', CAST(o_custkey AS STRING)),
        'placed_by',
        CAST(1.0 AS DOUBLE),
        {eporder},
        CAST(0 AS BIGINT)
 FROM orders
 UNION ALL
-SELECT concat('c_', {_s(dialect, 'c_custkey')}),
-       concat('n_', {_s(dialect, 'c_nationkey')}),
+SELECT concat('c_', CAST(c_custkey AS STRING)),
+       concat('n_', CAST(c_nationkey AS STRING)),
        'from_nation',
        CAST(1.0 AS DOUBLE),
        CAST(0 AS BIGINT),
        CAST(0 AS BIGINT)
 FROM customer
 UNION ALL
-SELECT concat('n_', {_s(dialect, 'n_nationkey')}),
-       concat('r_', {_s(dialect, 'n_regionkey')}),
+SELECT concat('n_', CAST(n_nationkey AS STRING)),
+       concat('r_', CAST(n_regionkey AS STRING)),
        'in_region',
        CAST(1.0 AS DOUBLE),
        CAST(0 AS BIGINT),
@@ -285,12 +229,9 @@ def docs_tok_view_sql(dialect: str, source: str = "documents") -> str:
     """Documents + analyzer tokens (reference analyzer.go:17-44: lowercase,
     [\\p{L}0-9_]+ token regex, stopword removal; corpus is ASCII so
     [a-z0-9_]+ is equivalent)."""
-    if dialect == "spark":
-        raw = "regexp_extract_all(lower(text), '[a-z0-9_]+', 0)"
-    else:
-        raw = "regexp_extract_all(lower(text), '[a-z0-9_]+')"
-    stops = f"array({_stop_list_sql()})" if dialect == "spark" else f"[{_stop_list_sql()}]"
-    toks = _filter_arr(dialect, raw, f"t -> NOT {_array_contains(dialect, stops, 't')}")
+    raw = regex_all(dialect, "lower(text)", "[a-z0-9_]+")
+    stops = str_arr(dialect, ENGLISH_STOPWORDS)
+    toks = f"filter({raw}, t -> NOT array_contains({stops}, t))"
     return f"""
 SELECT doc_id, text, lang, source, n_chars,
        {toks} AS toks
@@ -300,11 +241,11 @@ FROM {source}
 
 def emb_view_sql(dialect: str) -> str:
     """Embeddings as double arrays + hoisted L2 norm column."""
-    v = _transform(dialect, "embedding", "x -> CAST(x AS DOUBLE)")
+    v = transform(dialect, "embedding", "x -> CAST(x AS DOUBLE)")
     return f"""
 SELECT vec_id, label,
        {v} AS v,
-       sqrt({fold_sum(dialect, _transform(dialect, v, 'x -> x * x'))}) AS norm
+       sqrt({fold_sum(dialect, transform(dialect, v, 'x -> x * x'))}) AS norm
 FROM embeddings
 """.strip()
 

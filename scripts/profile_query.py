@@ -13,11 +13,20 @@ status tracker's job-id watermark, which includes every job the runner
 submits while building the DataFrame (checkpoints, counts) plus the
 final collect — the per-job floor is the thing the iterative operators
 pay at fixture scale, so the count is the signal.
+
+Saved plans are normalized so that plan directories written by two
+checkouts (or two runs) diff byte-for-byte: expression ids (``#123``),
+the RDD ids behind ``Scan ExistingRDD`` (``MapPartitionsRDD[1262]``)
+and exchange ``plan_id``s count up across the session; codegen-stage
+and AQE query-stage ids follow the order in which sibling stages
+happen to run; the load_tables materialization directory has a random
+name. All of these are blanked.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 import time
 
@@ -25,6 +34,23 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kektordb_spark.plans import registry
 from kektordb_spark.session import get_spark
+
+
+_SESSION_COUNTERS = [
+    (re.compile(r"#\d+L?"), "#"),
+    (re.compile(r"(\w*RDD)\[\d+\]"), r"\1[]"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"kektordb_mat_\w+"), "kektordb_mat_"),
+    (re.compile(r"\[codegen id : \d+\]"), "[codegen id]"),
+    (re.compile(r"(QueryStage\n(?:Output [^\n]*\n)?Arguments: )\d+"), r"\1"),
+]
+
+
+def normalize_plan(plan: str) -> str:
+    """Blank the session-global counters in a formatted plan."""
+    for pat, repl in _SESSION_COUNTERS:
+        plan = pat.sub(repl, plan)
+    return plan
 
 
 def main() -> None:
@@ -88,8 +114,8 @@ def main() -> None:
                 os.makedirs(explain_dir, exist_ok=True)
                 path = os.path.join(explain_dir, f"{name}_{suffix}.txt")
                 with open(path, "w") as fh:
-                    fh.write(df._sc._jvm.PythonSQLUtils.explainString(
-                        df._jdf.queryExecution(), "formatted"))
+                    fh.write(normalize_plan(df._sc._jvm.PythonSQLUtils.explainString(
+                        df._jdf.queryExecution(), "formatted")))
                 print(f"  plan -> {path}")
             spark.catalog.clearCache()
             for jrdd in list(

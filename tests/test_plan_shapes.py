@@ -11,6 +11,8 @@ and fatal at 100 TB.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from kektordb_spark.plans import registry
@@ -753,10 +755,14 @@ def test_triangle_serves_from_persisted_copurchase_graph(spark):
     assert "CartesianProduct" not in pn_plan
     assert "Union" not in pn_plan  # corners explode in one pass
     # r8: counts come from adjacency-set intersection (no 49M-wedge
-    # join output; per-edge work spread round-robin), the adjacency
-    # relation broadcast on both probes
+    # join output). Positive shape at the pinned fixture: the base
+    # edges probe the adjacency relation twice, and both probes are
+    # BroadcastHashJoins whose build side is the adj aggregate.
     assert "array_intersect" in pn_plan
-    assert "SortMergeJoin" not in pn_plan
+    tree = pn_plan.split("\n\n", 1)[0]
+    assert tree.count("BroadcastHashJoin Inner BuildRight") == 2
+    assert len(re.findall(
+        r"BroadcastExchange \(\d+\)\n[ :]*\+- ObjectHashAggregate", tree)) == 2
     # the registered query's final plan starts from the checkpointed
     # per-node counts — lineitem absent there too
     plan = plan_of(spark, "graph_triangle_count")
