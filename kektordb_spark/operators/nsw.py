@@ -75,6 +75,8 @@ never scanned per query.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 
 from kektordb_spark.dialect import dot_sql, materialized
@@ -319,19 +321,32 @@ def nng_descent_build(
         # per-job floor dominates this loop at fixture scale).
         return df.toDF(*df.columns).localCheckpoint(eager=False)
 
-    # Spark 4.1: a checkpointed LogicalRDD retains its source plan's
-    # CONSTRAINTS, which reference pre-checkpoint attribute ids; when
-    # such a relation sits under a Union, constraint rewriting throws
-    # 'key not found: <attr>'. Constraints only infer extra filters —
-    # disabling propagation for the build loop is semantics-free.
-    _CP = "spark.sql.constraintPropagation.enabled"
-    cp_before = spark.conf.get(_CP, "true")
-    spark.conf.set(_CP, "false")
-    try:
+    with constraint_propagation_off(spark):
         return _nng_descent_build_inner(
             spark, _ckpt, m, rounds, sig_source)
+
+
+@contextmanager
+def constraint_propagation_off(spark: SparkSession):
+    """Hold ``spark.sql.constraintPropagation.enabled`` off for the
+    block, then restore the prior value (nests: an inner scope restores
+    "false"). The conf is SESSION-wide, so a caller that runs other
+    plans concurrently with the descent build (tables.load_tables)
+    holds it off around all of them — every plan then sees one value
+    regardless of thread timing.
+
+    Spark 4.1: a checkpointed LogicalRDD retains its source plan's
+    CONSTRAINTS, which reference pre-checkpoint attribute ids; when
+    such a relation sits under a Union, constraint rewriting throws
+    'key not found: <attr>'. Constraints only infer extra filters —
+    disabling propagation is semantics-free."""
+    key = "spark.sql.constraintPropagation.enabled"
+    before = spark.conf.get(key, "true")
+    spark.conf.set(key, "false")
+    try:
+        yield
     finally:
-        spark.conf.set(_CP, cp_before)
+        spark.conf.set(key, before)
 
 
 def _nng_descent_build_inner(spark, _ckpt, m, rounds, sig_source):

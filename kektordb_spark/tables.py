@@ -30,11 +30,23 @@ Views:
     pkg/textanalyzer/analyzer.go:17-44).
   * ``emb`` — embeddings cast to double + L2 norm column (cosine
     normalization hoisting; reference hnsw_index.go:390-398).
+
+Persisted index layer: after those views are registered,
+:func:`load_tables` builds the 25 index layers (IVF, PQ, LSH, GEMM
+blocks, MinHash/PPJoin signatures, sim-pairs, ``edges_cur``, ``pr_w``,
+component labels, the NN-descent graph, the co-purchase graph, and the
+``edges``/``docs_tok_par`` copies) from ONE dependency table,
+:func:`index_layers`: each entry names its layer, the layers it reads,
+and a builder. A layer is submitted to a thread pool once every layer
+it reads is persisted as scratch parquet and its view re-pointed at
+the files, so independent layers' Spark jobs share the cores.
 """
 
 from __future__ import annotations
 
 import os
+import time
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -353,9 +365,238 @@ def data_sized_shuffle_partitions(sf_dir: str) -> int:
     return min(max(n, floor), cap)
 
 
+def _fanout(spark: SparkSession) -> int:
+    """Partition count of the round-robin text views and of the
+    ``copurch_o`` write: the session's parallelism, at least 8."""
+    return max(spark.sparkContext.defaultParallelism, 8)
+
+
+class IndexLayer(NamedTuple):
+    """One persisted index layer: the view it registers, the layers
+    whose views its builder reads, and the builder. ``build`` is a
+    callable, not a DataFrame: ``spark.table(view)`` resolves when it is
+    called, so it may run only after every dependency's view has been
+    re-pointed at that layer's parquet copy."""
+
+    name: str
+    deps: tuple[str, ...]
+    build: Callable[[], DataFrame]
+
+
+def index_layers(spark: SparkSession, base: dict[str, DataFrame]) -> list[IndexLayer]:
+    """The persisted index layer as one dependency table.
+
+    Each layer is a static derivation of the immutable fixture that a
+    vector store maintains at ingest so queries never re-train,
+    re-encode or re-derive it (the reference builds its HNSW graph at
+    add time; BASELINE.md reports index BUILD time separately from
+    QPS — the same build/serve split). On a cluster these ARE tables;
+    deriving them per session only happens in this fixture harness.
+    Every derivation is a deterministic SQL/DataFrame program, and
+    parquet round-trips doubles/longs/strings/binary exactly, so every
+    oracle (which re-derives the same rows in one DuckDB text) still
+    verifies the full pipeline value-for-value.
+
+    ``deps`` names every OTHER layer the builder reads; base tables and
+    the SQL views registered before the build (``emb``, ``mem``,
+    ``documents_par``, ...) are always available. A missing edge would
+    read a dependency's SQL view (or fail to find it) instead of its
+    parquet copy — tests/test_index_build.py checks every edge."""
+    from kektordb_spark.operators import analytics as _AN
+    from kektordb_spark.operators import components as _CC
+    from kektordb_spark.operators import dedup as _DD
+    from kektordb_spark.operators import knn_planner as _KP
+    from kektordb_spark.operators import pq as _PQ
+    from kektordb_spark.operators.blockgemm import GEMM_BLOCKS_VIEW, packed_blocks
+    from kektordb_spark.operators.consolidation import ecur_sql
+    from kektordb_spark.operators.ivf import _assign_cte, _mean_cte, ivf_train_sql
+    from kektordb_spark.operators.kcore import copurch_weighted_sql
+    from kektordb_spark.operators.knn import lsh_signatures
+    from kektordb_spark.operators.nsw import nng_descent_build
+    from kektordb_spark.operators.pagerank import transition_weights
+
+    sql = spark.sql
+
+    def emb() -> DataFrame:
+        return spark.table("emb")
+
+    def cand() -> DataFrame:
+        return emb().where(F.col("vec_id") >= 5)
+
+    return [
+        # Navigable k-NN graph (operators/nsw.py): LSH-seeded NN-descent
+        # — every stage a bucketed equi-join, never an all-pairs sweep;
+        # the beam serve path reads only this adjacency + the vectors.
+        # First: the longest layer (59 jobs), so it never queues.
+        IndexLayer("nng", (), lambda: nng_descent_build(spark)),
+        # The two EXPENSIVE derived views, built from their SQL text:
+        # the edges view re-derives two lineitem scans + string building
+        # per reference (graph queries each paid ~2 s), and docs_tok_par
+        # re-tokenizes per reference. Disk scratch — unlike a
+        # localCheckpoint — survives the inter-query unpersist sweep.
+        # (bucketed edges on a cluster: sources/bucketed.py)
+        IndexLayer("edges", (), lambda: sql(edges_view_sql("spark"))),
+        IndexLayer("docs_tok_par", (), lambda: sql(
+            docs_tok_view_sql("spark", source="documents_par"))),
+        # Packed GEMM tile blocks over the embeddings corpus — the block
+        # layout every blocked-similarity query (consolidation pairs,
+        # knowledge gaps, contradictions, embedding dedup, batch kNN)
+        # derives identically; the persisted block-packed vector table a
+        # brute-force layer keeps next to the row layout (FAISS-style).
+        IndexLayer(GEMM_BLOCKS_VIEW, (), lambda: packed_blocks(
+            base["embeddings"].select("vec_id", F.col("embedding").alias("vec")), 8)),
+        # ANN index: the IVF coarse quantizer (centroids + inverted
+        # assignment) and the PQ codebooks/byte codes.
+        IndexLayer("ivf_cents", (), lambda: sql(ivf_train_sql("spark"))),
+        IndexLayer("ivf_assign", ("ivf_cents",), lambda: sql(
+            "WITH tc AS (SELECT cid, v FROM ivf_cents),\n"
+            + _assign_cte("spark", "tc", "inv")
+            + "\nSELECT vec_id, cid FROM inv")),
+        IndexLayer("pq_cb_full", (), lambda: _PQ.pq_train(emb(), m=8, k=32, iters=0)),
+        IndexLayer("pq_codes_full", ("pq_cb_full",), lambda: _PQ.pq_encode(
+            emb(), spark.table("pq_cb_full"), m=8)),
+        IndexLayer("pq_cb_cand", (), lambda: _PQ.pq_train(cand(), m=8, k=16, iters=0)),
+        IndexLayer("pq_codes_cand", ("pq_cb_cand",), lambda: _PQ.pq_encode(
+            cand(), spark.table("pq_cb_cand"), m=8)),
+        IndexLayer("lsh_sig", (), lambda: lsh_signatures(emb(), id_col="vec_id")),
+        # PageRank transition-weight relation w(u,v) = cnt/outdeg(u),
+        # an adjacency-layout table beside the edge log on a cluster
+        # (operators/pagerank.py transition_weights docstring).
+        IndexLayer("pr_w", ("edges",), lambda: transition_weights(spark.table("edges"))),
+        # Similarity-pair index at the lowest threshold any consumer
+        # asks for (contradictions 0.30 <= consolidation 0.40 <= gaps
+        # 0.42): built through the same planner flag queries use (GEMM
+        # over the packed blocks at fixture scale, LSH beyond), served
+        # by exact post-filter (knn_planner.similar_pairs serving order).
+        IndexLayer(_KP.SIM_PAIRS_VIEW, (GEMM_BLOCKS_VIEW,), lambda: _KP.similar_pairs(
+            spark, _KP.SIM_PAIRS_MIN, use_index=False,
+            corpus_size=base["embeddings"].count())),
+        # Current-edge relation (latest active version per (src, dst,
+        # rel)): the versioned edge log's "current snapshot", the
+        # standard companion table of any SCD-style log.
+        IndexLayer("edges_cur", ("edges",), lambda: sql(ecur_sql("spark"))),
+        # Dedup signature indexes — the ingest-time fingerprint layer
+        # the incremental-dedup query already models ("corpus signatures
+        # are a persisted index"): MinHash shingle arrays / postings /
+        # K-hash signatures, and the PPJoin gram arrays / postings /
+        # prefix relation.
+        IndexLayer("mh_arr", ("docs_tok_par",), lambda: sql(
+            _DD.minhash_arr_sql("spark", source="docs_tok_par"))),
+        IndexLayer("mh_ex", ("mh_arr",), lambda: sql(
+            _DD.minhash_ex_from_arr_sql("spark", source="mh_arr"))),
+        IndexLayer("mh_sig", ("mh_ex",), lambda: sql(
+            _DD.minhash_sig_sql("spark", ex_source="mh_ex"))),
+        IndexLayer("ng_arr", (), lambda: sql(
+            _DD.ngram_arr_sql("spark", source="documents_par"))),
+        IndexLayer("ng_ex", ("ng_arr",), lambda: sql(
+            _DD.ngram_ex_from_arr_sql("spark", source="ng_arr"))),
+        IndexLayer("ng_pref", ("ng_ex", "ng_arr"), lambda: sql(
+            _DD.ngram_pref_sql("spark", ex_source="ng_ex", arr_source="ng_arr"))),
+        # Co-purchase item graph (distinct part pairs sharing an order)
+        # and its degree-oriented edge set — the market-basket graph a
+        # recommender build maintains beside the order log (Suri-
+        # Vassilvitskii orientation bounds wedge fan-out by sqrt(m)).
+        # Pair generation is the triangle census's dominant stage.
+        IndexLayer("copurch_w", (), lambda: sql(copurch_weighted_sql())),
+        IndexLayer("copurch_e", ("copurch_w",), lambda: spark.table(
+            "copurch_w").select("pa", "pb")),
+        # repartition before the write: the deg-join chain coalesces to
+        # ~1 output partition under AQE at fixture size, and a 1-file
+        # copurch_o caps the census's wedge-probe stage (49M probe rows
+        # at sf0.1 — the query's dominant cost) at the file's row-group
+        # count (~2 tasks). Profiled r7: census 7.3 s -> ~4.4 s at sf0.1.
+        IndexLayer("copurch_o", ("copurch_e",), lambda: sql(
+            "WITH deg AS (\n" + _AN.triangle_deg_sql("copurch_e") + "\n)\n"
+            + _AN.triangle_oriented_sql("copurch_e", "deg")
+        ).repartition(_fanout(spark))),
+        # Per-label centroids (#labels rows) — the outlier audit's serve
+        # side (analytics.embedding_outliers_sql), same build/serve
+        # split and 1e-12 re-sync as ivf_cents.
+        IndexLayer("label_cents", (), lambda: sql(
+            "WITH " + _mean_cte("spark", "emb", "lc", cid="label")
+            + "\nSELECT label, v FROM lc")),
+        # Persisted component labels over the OLD similarity graph
+        # (pairs among non-arrival nodes): components_merge_df folds an
+        # arrival wave into THESE labels without re-reading the old
+        # edges (operators/components.py).
+        IndexLayer("comp_labels", (_KP.SIM_PAIRS_VIEW,), lambda: _CC.component_labels(
+            spark, _CC.old_pairs_df(spark))),
+    ]
+
+
+#: ``(start, end)`` of every index layer in the LAST load_tables build,
+#: in seconds since that build began (scripts/scaling_probe.py prints
+#: them and names the critical path).
+LAYER_TIMES: dict[str, tuple[float, float]] = {}
+
+
+def _build_index_layers(spark: SparkSession, layers: list[IndexLayer],
+                        mat_dir: str) -> None:
+    """Persist every layer as ``mat_dir/<name>`` parquet and re-point
+    its view at the files, as a dependency graph of concurrent Spark
+    jobs: a layer is submitted to the pool once all its dependencies
+    are done, so no pool thread ever waits on another layer. Most
+    layers run 1-8 tiny tasks per job: one after another, the per-job
+    overhead would leave most cores idle.
+
+    ``spark.sql.constraintPropagation.enabled`` is session-wide and the
+    NN-descent build turns it off for itself; held off around the whole
+    graph, every layer's plan is the same on every run instead of
+    depending on which layers overlap the descent build. It only infers
+    extra filters, so results are unchanged.
+
+    If a layer raises, no further layer starts; the layers already
+    running finish, then the first error is re-raised."""
+    from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+
+    from kektordb_spark.operators.nsw import constraint_propagation_off
+
+    LAYER_TIMES.clear()
+    t0 = time.perf_counter()
+
+    def persist(layer: IndexLayer) -> None:
+        start = time.perf_counter() - t0
+        df = layer.build()
+        path = f"{mat_dir}/{layer.name}"
+        df.write.mode("overwrite").parquet(path)
+        # read back with the schema just written: spark.read.parquet
+        # would launch a footer-reading job to infer it
+        spark.read.schema(df.schema).parquet(path).createOrReplaceTempView(layer.name)
+        LAYER_TIMES[layer.name] = (start, time.perf_counter() - t0)
+
+    pending = list(layers)
+    done: set[str] = set()
+    running: dict = {}
+    error: BaseException | None = None
+    with constraint_propagation_off(spark), ThreadPoolExecutor(
+            max_workers=spark.sparkContext.defaultParallelism) as pool:
+        while True:
+            if error is None:
+                for layer in [lay for lay in pending if done.issuperset(lay.deps)]:
+                    pending.remove(layer)
+                    running[pool.submit(persist, layer)] = layer.name
+            if not running:
+                break
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in finished:
+                name = running.pop(fut)
+                if fut.exception() is None:
+                    done.add(name)
+                elif error is None:
+                    error = fut.exception()
+    if error is not None:
+        raise error
+    if pending:
+        raise ValueError(
+            "index layers with unknown or cyclic dependencies: "
+            + ", ".join(lay.name for lay in pending))
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Read base parquet tables and register them + derived views as temp
-    views. Returns dict of base DataFrames.
+    views, then build the persisted index layer (:func:`index_layers`,
+    one dependency table built concurrently). Returns dict of base
+    DataFrames.
 
     Also releases localCheckpoint RDDs left by PREVIOUS queries: every
     registry query calls load_tables first and materializes its own
@@ -367,13 +608,18 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     immutable reads over immutable fixtures, and re-registering costs
     ~1.4 s of parse/analyze roundtrips — across a 75-query bench run
     that re-registration was HALF the total wall clock. Switching
-    sf_dir in the same session re-registers everything."""
+    sf_dir in the same session re-registers everything. A build that
+    raises leaves the session unregistered, so the next call rebuilds
+    from scratch."""
     for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
         jrdd.unpersist()
     sid = id(spark)
     prev = _REGISTERED.get(sid)
     if prev is not None and prev[0] == sf_dir:
         return prev[1]
+    # the views below are re-pointed from here on: the previous
+    # registration no longer describes them
+    _REGISTERED.pop(sid, None)
     # Size the initial reduce-partition count to the DATA, not the core
     # count (guide §2.1: partitions track data volume; a core-derived
     # count over-parallelizes small inputs — measured r7: BPE train/
@@ -414,174 +660,14 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # projections would otherwise run in a single task. At corpus scale
     # the file count provides this parallelism for free; here an
     # explicit round-robin repartition stands in for it. Semantically
-    # identical to documents/docs_tok.
-    par = max(spark.sparkContext.defaultParallelism, 8)
-    out["documents"].repartition(par).createOrReplaceTempView("documents_par")
-    spark.sql(
-        docs_tok_view_sql("spark", source="documents_par")
-    ).createOrReplaceTempView("docs_tok_par")
-    # Materialize the two EXPENSIVE derived relations once per
-    # (session, sf_dir) as scratch parquet and re-point their views at
-    # the files: the edges view re-derives two lineitem scans + string
-    # building per reference (graph queries each paid ~2 s), and
-    # docs_tok_par re-tokenizes per reference. Parquet round-trips
-    # doubles/longs/strings exactly, so oracle parity is unaffected
-    # (the DuckDB CTE derives the same rows). Disk scratch — unlike a
-    # localCheckpoint — survives the inter-query unpersist sweep. On a
-    # cluster these ARE tables (bucketed edges: sources/bucketed.py);
-    # deriving them per query only happens in this fixture harness.
+    # identical to documents (docs_tok_par, the tokenized view over it,
+    # is an index layer).
+    out["documents"].repartition(_fanout(spark)).createOrReplaceTempView("documents_par")
     import tempfile
 
     mat_dir = tempfile.mkdtemp(prefix="kektordb_mat_")
     _swap_scratch_dir(sid, mat_dir)
-    for vname in ("edges", "docs_tok_par"):
-        path = f"{mat_dir}/{vname}"
-        spark.table(vname).write.mode("overwrite").parquet(path)
-        spark.read.parquet(path).createOrReplaceTempView(vname)
-    # Packed GEMM tile blocks over the embeddings corpus — the block
-    # layout every blocked-similarity query (consolidation pairs,
-    # knowledge gaps, contradictions, embedding dedup, batch kNN)
-    # derives identically from the immutable fixture. On a cluster this
-    # is the persisted block-packed vector table a brute-force layer
-    # maintains next to the row layout (FAISS-style storage); deriving
-    # it per query only happens in this fixture harness. Binary blobs
-    # round-trip parquet exactly, so kernel results are unchanged.
-    from kektordb_spark.operators.blockgemm import GEMM_BLOCKS_VIEW, packed_blocks
-
-    gpath = f"{mat_dir}/gemm_blocks"
-    packed_blocks(
-        out["embeddings"].select("vec_id", F.col("embedding").alias("vec")), 8
-    ).write.mode("overwrite").parquet(gpath)
-    spark.read.parquet(gpath).createOrReplaceTempView(GEMM_BLOCKS_VIEW)
-    # Persisted ANN index layer: the IVF coarse quantizer (centroids +
-    # inverted assignment) and the PQ codebooks/byte codes — what a
-    # vector store maintains at ingest so queries never re-train/
-    # re-encode (the reference builds its HNSW graph at add time;
-    # BASELINE.md reports index BUILD time separately from QPS, the
-    # same build/serve split this materialization expresses). All
-    # derivations are deterministic SQL/DataFrame programs over the
-    # immutable fixture, and parquet round-trips doubles/ints exactly,
-    # so every oracle still verifies the full pipeline value-for-value.
-    from kektordb_spark.operators import pq as _PQ
-    from kektordb_spark.operators.ivf import _assign_cte, ivf_train_sql
-
-    def _mat(name: str, df: DataFrame) -> None:
-        path = f"{mat_dir}/{name}"
-        df.write.mode("overwrite").parquet(path)
-        spark.read.parquet(path).createOrReplaceTempView(name)
-
-    _mat("ivf_cents", spark.sql(ivf_train_sql("spark")))
-    _mat("ivf_assign", spark.sql(
-        "WITH tc AS (SELECT cid, v FROM ivf_cents),\n"
-        + _assign_cte("spark", "tc", "inv")
-        + "\nSELECT vec_id, cid FROM inv"
-    ))
-    embv = spark.table("emb")
-    _mat("pq_cb_full", _PQ.pq_train(embv, m=8, k=32, iters=0))
-    _mat("pq_codes_full",
-         _PQ.pq_encode(embv, spark.table("pq_cb_full"), m=8))
-    cand = embv.where(F.col("vec_id") >= 5)
-    _mat("pq_cb_cand", _PQ.pq_train(cand, m=8, k=16, iters=0))
-    _mat("pq_codes_cand",
-         _PQ.pq_encode(cand, spark.table("pq_cb_cand"), m=8))
-    from kektordb_spark.operators.knn import lsh_signatures
-
-    _mat("lsh_sig", lsh_signatures(embv, id_col="vec_id"))
-    # PageRank transition-weight relation w(u,v) = cnt/outdeg(u): a
-    # static derivation of the immutable edge snapshot, maintained as
-    # an adjacency-layout table beside the edge log on a cluster
-    # (operators/pagerank.py transition_weights docstring).
-    from kektordb_spark.operators.pagerank import transition_weights
-
-    _mat("pr_w", transition_weights(spark.table("edges")))
-    # Similarity-pair index at the lowest threshold any consumer asks
-    # for (contradictions 0.30 <= consolidation 0.40 <= gaps 0.42):
-    # built through the same planner flag queries use (GEMM at fixture
-    # scale, LSH beyond), served by exact post-filter
-    # (knn_planner.similar_pairs serving order).
-    from kektordb_spark.operators import knn_planner as _KP
-
-    _mat(
-        _KP.SIM_PAIRS_VIEW,
-        _KP.similar_pairs(spark, _KP.SIM_PAIRS_MIN, use_index=False,
-                          corpus_size=out["embeddings"].count()),
-    )
-    # Current-edge relation (latest active version per (src, dst, rel)
-    # — consolidation.ecur_sql): the versioned edge log's "current
-    # snapshot" materialized view, the standard companion table of any
-    # SCD-style log.
-    from kektordb_spark.operators.consolidation import ecur_sql as _ecur_sql
-
-    _mat("edges_cur", spark.sql(_ecur_sql("spark")))
-    # Dedup signature indexes — the ingest-time fingerprint layer the
-    # incremental-dedup query already models ("corpus signatures are a
-    # persisted index"): MinHash shingle arrays / postings / K-hash
-    # signatures, and the PPJoin gram arrays / postings / prefix
-    # relation. Static derivations of the immutable document fixture;
-    # every oracle re-derives them end-to-end in one SQL text.
-    from kektordb_spark.operators import dedup as _DD
-
-    _mat("mh_arr", spark.sql(_DD.minhash_arr_sql("spark", source="docs_tok_par")))
-    _mat("mh_ex", spark.sql(_DD.minhash_ex_from_arr_sql("spark", source="mh_arr")))
-    _mat("mh_sig", spark.sql(_DD.minhash_sig_sql("spark", ex_source="mh_ex")))
-    _mat("ng_arr", spark.sql(_DD.ngram_arr_sql("spark", source="documents_par")))
-    _mat("ng_ex", spark.sql(_DD.ngram_ex_from_arr_sql("spark", source="ng_arr")))
-    _mat("ng_pref", spark.sql(
-        _DD.ngram_pref_sql("spark", ex_source="ng_ex", arr_source="ng_arr")
-    ))
-    # Co-purchase item graph (distinct part pairs sharing an order) and
-    # its degree-oriented edge set — the market-basket graph a
-    # recommender/graph-analytics build maintains beside the order log
-    # (same static-derivation argument as pr_w/edges_cur; Suri-
-    # Vassilvitskii orientation bounds wedge fan-out by sqrt(m)).
-    # Pair generation is the triangle census's dominant stage; building
-    # it once here is the build/serve split the whole index layer
-    # expresses. The oracle still derives everything from lineitem in
-    # one SQL text.
-    from kektordb_spark.operators import analytics as _AN
-    from kektordb_spark.operators.kcore import copurch_weighted_sql
-
-    _mat("copurch_w", spark.sql(copurch_weighted_sql()))
-    _mat("copurch_e", spark.table("copurch_w").select("pa", "pb"))
-    # Per-label centroids (#labels rows) — the outlier audit's serve
-    # side (analytics.embedding_outliers_sql), same build/serve split
-    # and 1e-12 re-sync as ivf_cents.
-    from kektordb_spark.operators.ivf import _mean_cte as _ivf_mean_cte
-
-    _mat("label_cents", spark.sql(
-        "WITH " + _ivf_mean_cte("spark", "emb", "lc", cid="label")
-        + "\nSELECT label, v FROM lc"
-    ))
-    # Persisted component labels over the OLD similarity graph (pairs
-    # among non-arrival nodes) — the graph-state side of the
-    # incremental-maintenance family: components_merge_df folds an
-    # arrival wave into THESE labels without re-reading the old edges
-    # (operators/components.py). Derived from the sim-pair index just
-    # materialized above.
-    from kektordb_spark.operators import components as _CC
-
-    _mat("comp_labels", _CC.component_labels(
-        spark, _CC.old_pairs_df(spark)))
-    # Navigable k-NN graph (V8's batch analog, operators/nsw.py):
-    # LSH-seeded NN-descent at build time — every stage a bucketed
-    # equi-join, never an all-pairs sweep (the GEMM exact build stays
-    # available as blockgemm.knn_all for small corpora / ground truth);
-    # the beam serve path reads only this adjacency + the vector join.
-    from kektordb_spark.operators.nsw import nng_descent_build
-
-    _mat("nng", nng_descent_build(spark))
-    # repartition(par) before the write: the deg-join chain coalesces
-    # to ~1 output partition under AQE at fixture size, and a 1-file
-    # copurch_o caps the census's wedge-probe stage (49M probe rows at
-    # sf0.1 — the query's dominant cost) at the file's row-group count
-    # (~2 tasks). Profiled r7: census 7.3 s -> ~4.4 s at sf0.1 with
-    # the partitioned write; this was the r6 'triangle drift' — the
-    # r5/r6 copurch_w->copurch_e re-layering changed the writing
-    # plan's partitioning, not the census code.
-    _mat("copurch_o", spark.sql(
-        "WITH deg AS (\n" + _AN.triangle_deg_sql("copurch_e") + "\n)\n"
-        + _AN.triangle_oriented_sql("copurch_e", "deg")
-    ).repartition(par))
+    _build_index_layers(spark, index_layers(spark, out), mat_dir)
     _REGISTERED[sid] = (sf_dir, out)
     return out
 

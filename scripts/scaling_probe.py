@@ -164,6 +164,23 @@ TO '{out}/documents.parquet' (FORMAT PARQUET)
     return out
 
 
+def print_layer_times(spark, base, k: int) -> None:
+    """Each index layer's (start, end) in the build just timed,
+    longest first, then the build's critical path: from the layer that
+    finished last, step back to the dependency that finished last."""
+    from kektordb_spark.tables import LAYER_TIMES, index_layers
+
+    times = dict(LAYER_TIMES)
+    for name, (start, end) in sorted(times.items(), key=lambda kv: kv[1][0] - kv[1][1]):
+        print(f"x{k}   {name}: {start:.2f}-{end:.2f}s ({end - start:.2f}s)")
+    deps = {lay.name: lay.deps for lay in index_layers(spark, base)}
+    path = [max(times, key=lambda n: times[n][1])]
+    while deps[path[-1]]:
+        path.append(max(deps[path[-1]], key=lambda n: times[n][1]))
+    print(f"x{k} index_build critical path: {' -> '.join(reversed(path))} "
+          f"(ends at {times[path[0]][1]:.2f}s)", flush=True)
+
+
 def main() -> None:
     # --only REGEX restricts the probed queries (targeted re-probes of
     # a round's changed operators); K args select the scale factors.
@@ -196,9 +213,10 @@ def main() -> None:
         # look artificially flat (the honest-vocabulary version of the
         # build/serve split: both sides get a scaling curve).
         t0 = time.perf_counter()
-        load_tables(spark, sf_dir)
+        base = load_tables(spark, sf_dir)
         results["index_build"][k] = round(time.perf_counter() - t0, 2)
         print(f"x{k} index_build: {results['index_build'][k]}s", flush=True)
+        print_layer_times(spark, base, k)
         # r6: time the NN-descent graph build on its own (it also runs
         # inside load_tables above) — the sub-quadratic replacement for
         # the GEMM all-pairs build deserves an explicit curve.
