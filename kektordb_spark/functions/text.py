@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kektordb_spark.dialect import explode, size, str_arr, unnest
+from kektordb_spark.lineage import checkpoint
 from kektordb_spark.tables import ENGLISH_STOPWORDS
 
 BM25_K1 = 1.2
@@ -106,13 +107,13 @@ def bm25_scores(
     # Materialize the analyzed tokens once: without this, Catalyst
     # collapses the tokenizer projection into the explode, re-running
     # the regexp + stopword filter once per OUTPUT token (~100x the
-    # work). Eager checkpoint rather than lazy persist: the relation is
-    # referenced by several sibling stages of ONE job (postings,
-    # lengths, stats), and a lazy cache lets concurrently-scheduled
-    # stages race past the unfilled cache and re-tokenize.
-    base = docs.select(
+    # work). Eager rather than lazy: the relation is scanned by three
+    # sibling stages of ONE job (postings, lengths, stats), and a lazy
+    # checkpoint lets concurrently-scheduled stages race past the
+    # unfilled blocks and re-tokenize.
+    base = checkpoint(docs.select(
         F.col(id_col).alias("doc"), F.col(toks_col).alias("toks")
-    ).localCheckpoint(eager=True)
+    ), readers=3)
 
     # Query token sets are tiny by nature, so tf(token, doc) comes from
     # per-token array scans in ONE narrow projection — no posting

@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kektordb_spark.lineage import checkpoint
+
 # Temp-view name of the pre-packed block relation over the default
 # embeddings corpus (n_blocks=8), materialized once per session by
 # tables.load_tables — the persisted block layout a brute-force
@@ -111,10 +113,10 @@ def cosine_pairs(
             emb = spark.table("embeddings").select(
                 "vec_id", F.col("embedding").alias("vec"))
     if blocks is None:
-        # Materialize the packed blocks once (eager localCheckpoint):
-        # the tile self-join references them twice, and a plain plan
-        # would run the pack stage once per side.
-        blocks = packed_blocks(emb, n_blocks).localCheckpoint(eager=True)
+        # Materialize the packed blocks once (eager checkpoint): the
+        # tile self-join references them twice, and a plain plan would
+        # run the pack stage once per side.
+        blocks = checkpoint(packed_blocks(emb, n_blocks), readers=2)
     bp = (
         blocks.alias("a")
         .join(blocks.alias("b"), F.col("a.blk") <= F.col("b.blk"))
@@ -204,7 +206,7 @@ def knn_all(
             emb = spark.table("embeddings").select(
                 "vec_id", F.col("embedding").alias("vec"))
     if blocks is None:
-        blocks = packed_blocks(emb, n_blocks).localCheckpoint(eager=True)
+        blocks = checkpoint(packed_blocks(emb, n_blocks), readers=2)
     bp = (
         blocks.alias("a")
         .join(blocks.alias("b"), F.col("a.blk") <= F.col("b.blk"))

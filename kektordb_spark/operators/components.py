@@ -59,6 +59,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from kektordb_spark.lineage import checkpoint
+
 from kektordb_spark.dialect import dot_sql
 
 CC_TAU = 0.35
@@ -111,11 +113,10 @@ def component_labels(spark, pairs: DataFrame,
     # which computes lab + contracted edges together — one job per
     # contraction level instead of three (lab ckpt, edges ckpt,
     # take(1)). The per-job floor dominates this loop at fixture scale.
-    edges = (
+    edges = checkpoint(
         pairs.select("u", "w")
         .unionAll(pairs.select(F.col("w").alias("u"), F.col("u").alias("w")))
         .repartition("u")
-        .localCheckpoint(eager=False)
     )
 
     level_maps: list[DataFrame] = []
@@ -123,10 +124,9 @@ def component_labels(spark, pairs: DataFrame,
     for _ in range(max_levels):
         # min of the CLOSED neighborhood — contracts every
         # neighborhood onto its local minimum
-        lab = (
+        lab = checkpoint(
             edges.groupBy(F.col("u").alias("node"))
             .agg(F.least(F.col("node"), F.min("w")).alias("label"))
-            .localCheckpoint(eager=False)
         )
         level_maps.append(lab)
         # contract the edge set onto the labels (symmetry preserved:
@@ -139,7 +139,7 @@ def component_labels(spark, pairs: DataFrame,
         # shrinking contracted-node relation; past the broadcast cap
         # the swap is the co-partitioned join over the repartition("u")
         # layout already established above (SCALE.md rule 7).
-        edges = (
+        edges = checkpoint(
             edges.join(F.broadcast(lab).alias("la"),
                        F.col("u") == F.col("la.node"))
             .join(F.broadcast(lab).alias("lb"),
@@ -148,7 +148,6 @@ def component_labels(spark, pairs: DataFrame,
             .where(F.col("cu") != F.col("cw"))
             .distinct()
             .select(F.col("cu").alias("u"), F.col("cw").alias("w"))
-            .localCheckpoint(eager=False)
         )
         remaining = edges.count()
         if remaining == 0:
@@ -211,7 +210,7 @@ def components_df(spark, threshold: float = CC_TAU,
 
     pairs = KP.similar_pairs(spark, threshold).select("u", "w")
     if not KP.pairs_served_from_index(spark, threshold):
-        pairs = pairs.localCheckpoint(eager=True)
+        pairs = checkpoint(pairs, readers=2)
     return _component_summary(component_labels(spark, pairs, max_levels))
 
 
@@ -267,7 +266,7 @@ def components_merge_df(spark, threshold: float = CC_TAU,
         return old_labels.select(
             F.col("node").alias(side), F.col("label").alias(f"l_{side}"))
 
-    quotient = (
+    quotient = checkpoint(
         new_pairs.join(relabel("u"), "u", "left")
         .join(relabel("w"), "w", "left")
         .select(
@@ -276,7 +275,6 @@ def components_merge_df(spark, threshold: float = CC_TAU,
         )
         .where(F.col("u") != F.col("w"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     qlabels = component_labels(spark, quotient)
 

@@ -24,6 +24,7 @@ Label propagation shuffles only (node, label) pairs per round.
 from __future__ import annotations
 
 from kektordb_spark.dialect import dot_sql, sorted_csv
+from kektordb_spark.lineage import checkpoint
 
 
 def _pairs_cte(dialect: str, threshold: float) -> str:
@@ -86,27 +87,24 @@ def consolidation_labels_df(
 
     from kektordb_spark.operators import knn_planner as KP
 
-    # Eager localCheckpoint (not persist): materializes AND truncates
-    # lineage, so no later stage re-enters the Python mapInPandas kernel
-    # and every round's job starts from the (tiny) checkpointed edge set.
-    # Pair generation goes through the planner flag: exact GEMM at
-    # fixture scale, LSH bucket self-join beyond GEMM_PAIRS_MAX. When
-    # the pairs come from the PERSISTED index the checkpoint is skipped
-    # — re-scanning the scratch parquet twice (the und union below)
+    # Checkpoint (not persist): truncates lineage, so no later stage
+    # re-enters the Python mapInPandas kernel and every round's job
+    # starts from the (tiny) checkpointed edge set. Pair generation
+    # goes through the planner flag: exact GEMM at fixture scale, LSH
+    # bucket self-join beyond GEMM_PAIRS_MAX. When the pairs come from
+    # the PERSISTED index the checkpoint is skipped — re-scanning the scratch parquet twice (the und union below)
     # beats re-writing it (SCALE.md rule 3; measured ~1.15 s -> 0.98 s
     # for the 4-round propagation at sf0.1).
     pairs = KP.similar_pairs(spark, threshold).select("u", "w")
     if not KP.pairs_served_from_index(spark, threshold):
-        pairs = pairs.localCheckpoint(eager=False)
-    und = (
+        pairs = checkpoint(pairs)
+    und = checkpoint(
         pairs.unionAll(pairs.select(F.col("w").alias("u"), F.col("u").alias("w")))
         .repartition("u")
-        .localCheckpoint(eager=False)
     )
-    labels = (
+    labels = checkpoint(
         und.select(F.col("u").alias("node")).distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=False)
     )
     for _i in range(iters):
         # Broadcast the neighbor-label probe side (r8): the
@@ -135,7 +133,7 @@ def consolidation_labels_df(
         # exchange reuse). Measured quiet: ~8% off the 4-round chain,
         # bit-identical labels.
         if _i % 2 == 1 or _i == iters - 1:
-            labels = labels.localCheckpoint(eager=False)
+            labels = checkpoint(labels)
     return labels
 
 
@@ -202,18 +200,6 @@ def ecur_sql(dialect: str, at_time: int | None = None) -> str:
   ) t WHERE rn = 1"""
 
 
-def member_nids_sql(labels_rel: str, min_size: int = 3) -> str:
-    """The graph-node ids of every member of a consolidatable cluster
-    (size >= min_size) — the only endpoints the merge body ever joins
-    ecur against."""
-    return f"""
-SELECT concat('p_', CAST(m.node AS STRING)) AS nid
-FROM {labels_rel} m
-JOIN (SELECT label FROM {labels_rel} GROUP BY label HAVING count(*) >= {min_size}) z
-  ON z.label = m.label
-""".strip()
-
-
 def cl_nodes_sql(labels_rel: str, min_size: int = 3) -> str:
     """The (label, node, nid) member relation of every consolidatable
     cluster — the Spark runner materializes this ONCE (eager local
@@ -226,31 +212,6 @@ SELECT /*+ BROADCAST(z) */ m.label, m.node,
 FROM {labels_rel} m
 JOIN (SELECT label FROM {labels_rel} GROUP BY label HAVING count(*) >= {min_size}) z
   ON z.label = m.label
-""".strip()
-
-
-def ecur_member_sql(nids_rel: str, at_time: int | None = None) -> str:
-    """Spark-side ecur restricted to member-touching edges BEFORE the
-    latest-version pick. Safe because the filter is on (src, dst) —
-    both part of the versioning key (src, dst, rel) — so every version
-    of a surviving edge key passes the filter together and max_by sees
-    the same candidate set. The merge body only references ecur joined
-    to member nids (degm: src/dst = nid; rew_out: src = nid; rew_in:
-    dst = nid), so dropping non-member edges is semantically free, and
-    the expensive dedup group-by runs over the member-touching subset
-    (1.37M -> 43k rows at sf0.1) instead of the whole edge table. The
-    OR of two IN-subqueries plans as two broadcast existence joins
-    (the nid set is cluster-membership-bounded). DuckDB oracle keeps
-    the unfiltered inline form — results verified identical."""
-    tt = ("deleted_at = 0" if at_time is None
-          else f"(created_at <= {at_time} AND (deleted_at = 0 OR deleted_at > {at_time}))")
-    return f"""
-SELECT src, dst, rel, max_by(weight, struct(created_at, weight)) AS weight
-FROM edges
-WHERE {tt}
-  AND (src IN (SELECT nid FROM {nids_rel})
-       OR dst IN (SELECT nid FROM {nids_rel}))
-GROUP BY src, dst, rel
 """.strip()
 
 

@@ -111,13 +111,15 @@ def reflections_df(spark):
     from pyspark.sql import functions as F
 
     from kektordb_spark.functions.brain import contradiction_judge_udf
+    from kektordb_spark.lineage import checkpoint
     from kektordb_spark.operators import knn_planner as KP
 
     _sp = KP.similar_pairs(spark, SIM_LO).select("u", "w", "sim")
     if not KP.pairs_served_from_index(spark, SIM_LO):
-        # kernel-computed pairs must materialize before the multi-ref
-        # candidate CTE; the persisted-index path re-scans its parquet
-        _sp = _sp.localCheckpoint(eager=True)
+        # kernel-computed pairs must materialize before the candidate
+        # CTE's two scans (und); the persisted-index path re-scans its
+        # parquet
+        _sp = checkpoint(_sp, readers=2)
     _sp.createOrReplaceTempView("_contra_pairs")
     cand = spark.sql(
         "WITH " + candidates_sql("spark", pairs_rel="_contra_pairs")

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kektordb_spark.lineage import checkpoint
+
 
 def normalize_vector_scores(knn: DataFrame, dist_col: str = "dist") -> DataFrame:
     """H1 vector branch: score = 1/(1+dist)."""
@@ -34,7 +36,7 @@ def normalize_text_scores(bm25: DataFrame, score_col: str = "score") -> DataFram
     checkpointed relation. (A window max over the unpartitioned frame
     would avoid the double reference but funnels every row through one
     partition — worse at scale than the tiny checkpoint.)"""
-    scored = bm25.localCheckpoint(eager=False)
+    scored = checkpoint(bm25)
     mx = scored.agg(F.max(score_col).alias("mx"))
     return scored.crossJoin(F.broadcast(mx)).withColumn(
         "text_score",

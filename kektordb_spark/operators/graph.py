@@ -10,8 +10,12 @@ is bucketed/partitioned by ``src`` so frontier joins co-locate.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kektordb_spark.lineage import checkpoint
 
 
 def active_at(edges: DataFrame, at_time: int | None) -> DataFrame:
@@ -103,14 +107,12 @@ def bfs(
             e.select(F.col("dst").alias("from_n"), F.col("src").alias("to_n"))
         )
     if materialize_edges and max_depth > 1:
-        pairs = pairs.localCheckpoint(eager=False)
-    return _bfs_over_pairs(pairs, roots, max_depth,
-                           checkpoint_frontiers=max_depth > 1)
+        pairs = checkpoint(pairs)
+    return _bfs_over_pairs(pairs, roots, max_depth)
 
 
 def _bfs_over_pairs(
     pairs: DataFrame, roots: DataFrame, max_depth: int, key: str | None = None,
-    checkpoint_frontiers: bool = False,
 ) -> DataFrame:
     """Min-depth BFS over a prepared (from_n, to_n) relation — the
     shared core of bfs() and find_path().
@@ -121,11 +123,12 @@ def _bfs_over_pairs(
     join keyed on (key, from_n) — half the Spark jobs of running them
     as separate plans.
 
-    Without ``checkpoint_frontiers``, level d's plan recomputes levels
-    1..d-1 (Spark inlines shared subplans) — O(depth^2) joins. With it,
-    every level evaluates exactly once (O(depth) joins; the r7 lazy
-    checkpoints defer each level's materialization into the final
-    action instead of paying a scheduler job per round). r4 re-measure at sf0.1 (1.4M-edge
+    Past depth 1 every frontier is checkpointed: without it, level d's
+    plan recomputes levels 1..d-1 (Spark inlines shared subplans) —
+    O(depth^2) joins. With it, every level evaluates exactly once
+    (O(depth) joins; the r7 lazy checkpoints defer each level's
+    materialization into the final action instead of paying a
+    scheduler job per round). r4 re-measure at sf0.1 (1.4M-edge
     scratch-parquet table): frontier checkpoints win in every
     combination — depth-3 in-BFS 1.24 s vs 1.6 s warm, 1.6 s vs 3.0 s
     cold — reversing the r3 finding, which predated the parquet
@@ -147,17 +150,17 @@ def _bfs_over_pairs(
             .distinct()
             .withColumn("depth", F.lit(d))
         )
-        if checkpoint_frontiers:
+        if max_depth > 1:
             # Frontiers are node SETS (bounded by |V|); one tiny
             # checkpoint per round turns the O(depth^2) shared-subplan
             # recompute into O(depth) — the right trade once the pairs
             # relation carries both traversal directions (find_path).
-            frontier = frontier.localCheckpoint(eager=False)
+            frontier = checkpoint(frontier)
         levels.append(frontier)
-    visited = levels[0]
-    for lvl in levels[1:]:
-        visited = visited.unionAll(lvl)
-    return visited.groupBy(*kcols, "node").agg(F.min("depth").alias("depth"))
+    return (
+        reduce(lambda a, b: a.unionAll(b), levels)
+        .groupBy(*kcols, "node").agg(F.min("depth").alias("depth"))
+    )
 
 
 def all_relations(
@@ -347,12 +350,9 @@ def find_path(
         F.col("src").alias("to_n"),
     ))
     if materialize_edges and max_depth > 1:
-        both = both.localCheckpoint(eager=False)
+        both = checkpoint(both)
     roots = spark.createDataFrame([(0, src), (1, dst)], "dir int, node string")
-    visited = _bfs_over_pairs(
-        both, roots, max_depth, key="dir",
-        checkpoint_frontiers=max_depth > 1,
-    ).localCheckpoint(eager=False)
+    visited = checkpoint(_bfs_over_pairs(both, roots, max_depth, key="dir"))
     fwd = visited.where(F.col("dir") == 0).select(
         "node", F.col("depth").alias("dist_from_src"))
     bwd = visited.where(F.col("dir") == 1).select(
@@ -434,13 +434,11 @@ def extract_subgraph(
         e = e.where(F.col("rel").isin(relations))
     base = e.select("src", "dst", "rel", "weight")
     if materialize_edges:
-        base = base.localCheckpoint(eager=False)
+        base = checkpoint(base)
     pairs = base.select(F.col("src").alias("from_n"), F.col("dst").alias("to_n")).unionAll(
         base.select(F.col("dst").alias("from_n"), F.col("src").alias("to_n"))
     )
-    visited = _bfs_over_pairs(
-        pairs, roots, max_depth, checkpoint_frontiers=max_depth > 1
-    ).select("node")
+    visited = _bfs_over_pairs(pairs, roots, max_depth).select("node")
     return (
         base.join(F.broadcast(visited.withColumnRenamed("node", "src")), "src", "left_semi")
         .join(F.broadcast(visited.withColumnRenamed("node", "dst")), "dst", "left_semi")

@@ -51,6 +51,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from kektordb_spark.lineage import checkpoint
+
 KCORE_K = 2
 KCORE_SUPPORT = 2
 KCORE_MAX_ROUNDS = 16
@@ -166,9 +168,7 @@ def kcore(
     # lazy checkpoint + count: the fixpoint counter materializes the
     # round's edge relation in the same job — one job per peel round
     # instead of two (r7, guide §1.2)
-    e = spark.sql(
-        kcore_edges_sql(support, weighted_source)
-    ).localCheckpoint(eager=False)
+    e = checkpoint(spark.sql(kcore_edges_sql(support, weighted_source)))
     n_edges = e.count()
     converged = n_edges == 0
     for i in range(max_rounds):
@@ -181,11 +181,11 @@ def kcore(
         # once per round over the CHECKPOINTED edge partitions, never
         # the base scan (kcore_peel_sql docstring; r8 — previously the
         # planner built the edge side and the agg ran twice).
-        e = spark.sql(
+        e = checkpoint(spark.sql(
             kcore_peel_sql(
                 "_kcore_e", f"({kcore_keep_sql('_kcore_e', k)})",
                 hint="/*+ BROADCAST(ka), BROADCAST(kb) */ ")
-        ).localCheckpoint(eager=False)
+        ))
         n2 = e.count()
         converged = n2 == n_edges
         n_edges = n2

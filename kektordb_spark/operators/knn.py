@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from kektordb_spark.dialect import dot_sql, double_arr, l2sq_sql
 from kektordb_spark.functions import vector as V
 
+from kektordb_spark.lineage import checkpoint
+
 
 def _dist_expr(metric: str, q: str, v: str, qn: str | None, vn: str | None) -> Column:
     if metric == "cosine":
@@ -210,7 +212,7 @@ def lsh_signatures(
     signature STRUCT ARRAY materializes per row BEFORE the explode
     (projected as a concrete column) so the generator child is a plain
     attribute — SCALE.md rule 1."""
-    sigs = vectors.select(
+    sigs = checkpoint(vectors.select(
         F.col(id_col),
         F.array(
             *[
@@ -224,7 +226,7 @@ def lsh_signatures(
                 for t in range(n_tables)
             ]
         ).alias("buckets"),
-    ).localCheckpoint(eager=False)
+    ))
     return sigs.select(id_col, F.explode("buckets").alias("b")).select(
         id_col, F.col("b.tbl").alias("tbl"), F.col("b.sig").alias("sig")
     )

@@ -48,6 +48,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kektordb_spark.lineage import checkpoint
+
 EXACT_MAX = 100_000        # per-query scan affordable below this
 GEMM_MIN_QUERIES = 64      # batch big enough to amortize tile setup
 PQ_MIN = 20_000_000        # float scan memory-prohibitive above this
@@ -122,21 +124,20 @@ def ivf_build(
     12 dp each round so assignments stay deterministic across
     partitionings), final inverted file. Returns (cents(cid, cv),
     inv(id, cid, v, norm)); cents is nlist rows — always broadcast."""
-    base = vectors.select(
+    base = checkpoint(vectors.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
         F.col(norm_col).alias("norm"),
-    ).localCheckpoint(eager=False)
+    ))
     # r7: sort+limit FIRST (TakeOrderedAndProject — parallel partial
     # top-k), then number the nlist-row result; the r6 form ran an
     # unpartitioned row_number() window over the whole corpus (the
     # judge's structural 100x-scale finding). Output unchanged: the
     # md5-ordered first nlist rows.
-    cents = (
+    cents = checkpoint(
         base.select(F.md5(F.col("id").cast("string")).alias("mk"), "v")
         .orderBy("mk").limit(nlist)
         .withColumn("rn", F.row_number().over(Window.orderBy("mk")))
         .select((F.col("rn") - 1).alias("cid"), F.col("v").alias("cv"))
-        .localCheckpoint(eager=False)
     )
     l2 = ("aggregate(zip_with(v, cv, (x, y) -> (x - y) * (x - y)), "
           "CAST(0.0 AS DOUBLE), (s, p) -> s + p)")
@@ -154,13 +155,12 @@ def ivf_build(
 
     for _ in range(iters):
         assigned = assign(base, cents)
-        cents = (
+        cents = checkpoint(
             assigned.select("cid", F.posexplode("v").alias("pos", "x"))
             .groupBy("cid", "pos").agg(F.round(F.avg("x"), 12).alias("m"))
             .groupBy("cid")
             .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
             .select("cid", F.expr("transform(pm, s -> s.m)").alias("cv"))
-            .localCheckpoint(eager=False)
         )
     return cents, assign(base, cents)
 
@@ -362,14 +362,15 @@ def lsh_pairs(
         F.struct(F.lit(t).alias("tbl"), sig_expr(t).alias("sig"))
         for t in range(n_tables)
     ])
-    b = (
+    # eager: both sides of the bucket self-join scan it
+    b = checkpoint(
         emb.withColumn("bucket", F.explode(tables))
         .select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
             F.col(norm_col).alias("norm"),
             F.col("bucket.tbl").alias("tbl"), F.col("bucket.sig").alias("sig"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        readers=2,
     )
     cand = (
         b.alias("a")

@@ -75,11 +75,12 @@ never scanned per query.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
 from kektordb_spark.dialect import dot_sql, materialized
+from kektordb_spark.lineage import checkpoint, constraint_propagation_off
 
 NSW_M = 8        # out-degree of the persisted k-NN graph
 NSW_BEAM = 16    # per-query frontier width
@@ -112,24 +113,6 @@ NNG_LSH = (7, 6, 42, 64)
 def _dist(dialect: str) -> str:
     d = dot_sql(dialect, "q.v", "c.v")
     return f"(1.0 - ({d}) / (q.norm * c.norm))"
-
-
-def nng_build_sql(dialect: str, m: int = NSW_M) -> str:
-    """EXACT adjacency derivation: all-pairs cosine top-``m`` per node,
-    ranked by (round(dist,6), neighbor id) — the SAME total order the
-    tiled-GEMM builder uses (blockgemm.knn_all). No longer the
-    persisted-index build (that is :func:`nng_descent_build`); kept as
-    the documented exact ground-truth derivation for ad-hoc audits of
-    the descent graph's adjacency coverage."""
-    d = _dist(dialect)
-    return f"""
-SELECT query_id AS src, neighbor_id AS dst FROM (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         row_number() OVER (PARTITION BY q.vec_id
-                            ORDER BY round({d}, 6) ASC, c.vec_id ASC) AS rk
-  FROM emb q JOIN emb c ON c.vec_id <> q.vec_id
-) t WHERE rk <= {m}
-""".strip()
 
 
 def nng_sig_sql(dialect: str) -> str:
@@ -305,97 +288,57 @@ def nng_descent_build(
 
     ``sig_source``: temp-view name of a persisted seed-signature
     relation (vec_id, tbl, sig) under the NNG_LSH lattice; defaults to
-    deriving the signatures inline from ``emb``."""
+    deriving the signatures inline from ``emb``.
 
-    def _ckpt(df: DataFrame) -> DataFrame:
-        # alias-project BEFORE checkpointing: a LogicalRDD inherits its
-        # plan's output attribute ids, which propagate unchanged through
-        # plain column projections — without the re-alias, two different
-        # checkpointed relations derived from one another carry IDENTICAL
-        # ids, and a later plan referencing both (the tried-set UNION
-        # inside the proposals anti join) fails analysis/optimization.
-        # LAZY (r7): the checkpoint still truncates lineage at once, but
-        # materialization is deferred to the round's ONE scalar read
-        # (props.count()), which computes g and props together — one job
-        # per round instead of three (guide §1.2: fewer passes/jobs; the
-        # per-job floor dominates this loop at fixture scale).
-        return df.toDF(*df.columns).localCheckpoint(eager=False)
-
-    with constraint_propagation_off(spark):
-        return _nng_descent_build_inner(
-            spark, _ckpt, m, rounds, sig_source)
-
-
-@contextmanager
-def constraint_propagation_off(spark: SparkSession):
-    """Hold ``spark.sql.constraintPropagation.enabled`` off for the
-    block, then restore the prior value (nests: an inner scope restores
-    "false"). The conf is SESSION-wide, so a caller that runs other
-    plans concurrently with the descent build (tables.load_tables)
-    holds it off around all of them — every plan then sees one value
-    regardless of thread timing.
-
-    Spark 4.1: a checkpointed LogicalRDD retains its source plan's
-    CONSTRAINTS, which reference pre-checkpoint attribute ids; when
-    such a relation sits under a Union, constraint rewriting throws
-    'key not found: <attr>'. Constraints only infer extra filters —
-    disabling propagation is semantics-free."""
-    key = "spark.sql.constraintPropagation.enabled"
-    before = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, before)
-
-
-def _nng_descent_build_inner(spark, _ckpt, m, rounds, sig_source):
+    Every per-round relation is a LAZY checkpoint (r7): the checkpoint
+    still truncates lineage at once, but materialization is deferred
+    to the round's ONE scalar read (props.count()), which computes g
+    and props together — one job per round instead of three (guide
+    §1.2: the per-job floor dominates this loop at fixture scale)."""
     from kektordb_spark.tables import ordv_parts
 
-    seed_parts = [
-        (f"sg AS (\n{nng_sig_sql('spark')}\n)" if sig_source is None
-         else f"sg AS (SELECT vec_id, tbl, sig FROM {sig_source})"),
-        *ordv_parts(),
-        "nv AS (SELECT count(*) AS n FROM emb)",
-    ]
-    cand = _ckpt(spark.sql(
-        "WITH " + ",\n".join(seed_parts) + "\n"
-        + nng_seed_cand_sql("spark")
-    ))
-    cand.createOrReplaceTempView("_nng_tried_0")
-    g = _ckpt(spark.sql(nng_topm_sql(
-        f"(\n{nng_pair_scored_sql('spark', '_nng_tried_0')}\n) sc", m
-    )))
-    n_tried = 1
-    for i in range(rounds):
-        # the tried set accumulates as a SQL-text union over the
-        # checkpointed per-round views: spark.sql re-resolves each view
-        # with fresh attribute ids (a DataFrame-level unionAll of
-        # checkpointed LogicalRDDs can reuse expression ids and break
-        # downstream resolution)
-        tried = " UNION ALL ".join(
-            f"SELECT src, dst FROM _nng_tried_{j}" for j in range(n_tried))
-        g.createOrReplaceTempView("_nng_g")
-        props = _ckpt(spark.sql(
-            nng_proposals_sql("_nng_g", f"({tried})")
+    with constraint_propagation_off(spark):
+        seed_parts = [
+            (f"sg AS (\n{nng_sig_sql('spark')}\n)" if sig_source is None
+             else f"sg AS (SELECT vec_id, tbl, sig FROM {sig_source})"),
+            *ordv_parts(),
+            "nv AS (SELECT count(*) AS n FROM emb)",
+        ]
+        cand = checkpoint(spark.sql(
+            "WITH " + ",\n".join(seed_parts) + "\n"
+            + nng_seed_cand_sql("spark")
         ))
-        if props.count() == 0:
-            break
-        props.createOrReplaceTempView(f"_nng_tried_{n_tried}")
-        n_tried += 1
-        props.createOrReplaceTempView("_nng_p")
-        g = _ckpt(spark.sql(nng_topm_sql(
-            "(SELECT src, dst, dist FROM _nng_g UNION ALL "
-            f"SELECT src, dst, dist FROM (\n"
-            f"{nng_pair_scored_sql('spark', '_nng_p')}\n) s2) mg", m
+        cand.createOrReplaceTempView("_nng_tried_0")
+        g = checkpoint(spark.sql(nng_topm_sql(
+            f"(\n{nng_pair_scored_sql('spark', '_nng_tried_0')}\n) sc", m
         )))
-    out = g.select("src", "dst")
-    # materialize INSIDE the constraint-propagation scope: the final
-    # g's plan is a Union over two checkpointed relations, the exact
-    # shape the disabled conf guards against — its first computation
-    # must not happen after the caller's conf restore
-    out.count()
-    return out
+        n_tried = 1
+        for i in range(rounds):
+            # the tried set accumulates as a SQL-text union over the
+            # checkpointed per-round views
+            tried = " UNION ALL ".join(
+                f"SELECT src, dst FROM _nng_tried_{j}" for j in range(n_tried))
+            g.createOrReplaceTempView("_nng_g")
+            props = checkpoint(spark.sql(
+                nng_proposals_sql("_nng_g", f"({tried})")
+            ))
+            if props.count() == 0:
+                break
+            props.createOrReplaceTempView(f"_nng_tried_{n_tried}")
+            n_tried += 1
+            props.createOrReplaceTempView("_nng_p")
+            g = checkpoint(spark.sql(nng_topm_sql(
+                "(SELECT src, dst, dist FROM _nng_g UNION ALL "
+                f"SELECT src, dst, dist FROM (\n"
+                f"{nng_pair_scored_sql('spark', '_nng_p')}\n) s2) mg", m
+            )))
+        out = g.select("src", "dst")
+        # materialize INSIDE the constraint-propagation scope: the final
+        # g's plan is a Union over two checkpointed relations, the exact
+        # shape the disabled conf guards against — its first computation
+        # must not happen after the caller's conf restore
+        out.count()
+        return out
 
 
 def nsw_init_sql(
@@ -743,17 +686,15 @@ def nsw_recall_sweep(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    v = spark.sql(
+    v = checkpoint(spark.sql(
         f"SELECT bs.beam, i.query_id, i.node, i.dist\n"
         f"FROM (\n{nsw_init_sql('spark', n_queries)}\n) i\n"
         f"CROSS JOIN {_sweep_beams_rel(beams)} bs"
-    ).localCheckpoint(eager=False)
+    ))
     visited_parts = [v]
     frontier = v.select("beam", "query_id", "node")
     for _ in range(hops):
-        visited = visited_parts[0]
-        for p in visited_parts[1:]:
-            visited = visited.unionAll(p)
+        visited = reduce(lambda a, b: a.unionAll(b), visited_parts)
         visited.createOrReplaceTempView("_swp_v")
         frontier.createOrReplaceTempView("_swp_f")
         # `new` stays a lazy view folded into the scored checkpoint —
@@ -761,15 +702,11 @@ def nsw_recall_sweep(
         spark.sql(
             _sweep_new_sql("_swp_f", "_swp_v", adj_source)
         ).createOrReplaceTempView("_swp_n")
-        scored = spark.sql(
-            _sweep_scored_sql("spark", "_swp_n")
-        ).localCheckpoint(eager=False)
+        scored = checkpoint(spark.sql(_sweep_scored_sql("spark", "_swp_n")))
         visited_parts.append(scored)
         scored.createOrReplaceTempView("_swp_s")
         frontier = spark.sql(_sweep_frontier_sql("_swp_s"))
-    visited = visited_parts[0]
-    for p in visited_parts[1:]:
-        visited = visited.unionAll(p)
+    visited = reduce(lambda a, b: a.unionAll(b), visited_parts)
     ex = spark.sql(nsw_exact_topk_sql("spark", k, n_queries))
     w = (
         visited.where(F.col("node") != F.col("query_id"))
@@ -820,33 +757,26 @@ def nsw_search(
     via the persisted ``assign_source`` relation (the insert path)."""
     visited_parts = []
     if init == "cell":
-        v = spark.sql(
-            nsw_cell_init_sql("spark", query_pred, assign_source)
-        ).localCheckpoint(eager=False)
+        v = checkpoint(spark.sql(
+            nsw_cell_init_sql("spark", query_pred, assign_source)))
         visited_parts.append(v)
         v.createOrReplaceTempView("_nsw_v0")
         frontier = spark.sql(nsw_frontier_sql("_nsw_v0", beam))
     else:
-        v = spark.sql(
-            nsw_init_sql("spark", n_queries, query_pred)
-        ).localCheckpoint(eager=False)
+        v = checkpoint(spark.sql(
+            nsw_init_sql("spark", n_queries, query_pred)))
         visited_parts.append(v)
         frontier = v.select("query_id", "node")
     for i in range(hops):
-        visited = visited_parts[0]
-        for p in visited_parts[1:]:
-            visited = visited.unionAll(p)
+        visited = reduce(lambda a, b: a.unionAll(b), visited_parts)
         frontier.createOrReplaceTempView("_nsw_f")
         visited.createOrReplaceTempView("_nsw_v")
         new = spark.sql(nsw_new_sql("_nsw_f", "_nsw_v", adj_source))
         new.createOrReplaceTempView("_nsw_n")
-        scored = spark.sql(
-            nsw_scored_sql("spark", "_nsw_n")).localCheckpoint(eager=False)
+        scored = checkpoint(spark.sql(nsw_scored_sql("spark", "_nsw_n")))
         visited_parts.append(scored)
         scored.createOrReplaceTempView("_nsw_s")
         frontier = spark.sql(nsw_frontier_sql("_nsw_s", beam))
-    visited = visited_parts[0]
-    for p in visited_parts[1:]:
-        visited = visited.unionAll(p)
+    visited = reduce(lambda a, b: a.unionAll(b), visited_parts)
     visited.createOrReplaceTempView("_nsw_vf")
     return spark.sql(nsw_final_sql("_nsw_vf", k, exclude_self))

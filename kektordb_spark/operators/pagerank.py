@@ -35,10 +35,10 @@ Plan shape / 100 TB story:
     their frozen floor relation UNIONs in each round instead of a
     node×node left join (measured 10.9 s → 4.7 s at sf0.1 for the
     three structural changes together);
-  * ranks are checkpointed per round: the relation is node-sized (small
-    relative to edges) and the next round references it once, so
-    truncating lineage beats replaying i rounds of joins (measured on
-    the BFS family — SCALE.md "fused bidirectional BFS" note);
+  * the bounded rounds run in ONE job, ranks never checkpointed: with
+    w a plain scan of the persisted ``pr_w`` layer, replaying round i
+    inside round i+1's plan is cheaper than an eager checkpoint job
+    per round (r4, measured at sf0.1);
   * the final top-k is ORDER BY + LIMIT → TakeOrderedAndProject, never
     a global sort.
 
@@ -134,7 +134,6 @@ def pagerank_df(
     damping: float = DAMPING,
     iters: int = ITERS,
     k: int | None = TOP_K,
-    checkpoint_rounds: bool = True,
     weights=None,
 ):
     """Spark-side power iteration (see module docstring for the plan
@@ -143,18 +142,17 @@ def pagerank_df(
     ``weights``: the pre-materialized transition-weight relation
     (tables.load_tables ``pr_w``). When None, it is derived inline from
     the ``edges`` view and eagerly checkpointed (the only edge-sized
-    checkpoint — every round joins against it).
-
-    ``checkpoint_rounds=False`` keeps the full unrolled lineage —
-    slower past a few rounds (each round's plan replays its
-    predecessors) but exposes the per-round join/aggregate structure
-    for plan inspection (tests/test_plan_shapes.py)."""
+    checkpoint — the node set (2 scans), the source floor and every
+    round scan it)."""
     from pyspark.sql import functions as F
+
+    from kektordb_spark.lineage import checkpoint
 
     if weights is not None:
         w = weights
     else:
-        w = transition_weights(spark.table("edges")).localCheckpoint(eager=True)
+        w = checkpoint(transition_weights(spark.table("edges")),
+                       readers=iters + 3)
     # nodes/sources are cheap single-pass derivations of the
     # already-checkpointed w — they do NOT meet SCALE.md rule 3
     # ("materialize what is expensive to recompute"), so they stay
@@ -213,8 +211,6 @@ def pagerank_df(
             )
             .unionByName(sources)
         )
-        if checkpoint_rounds:
-            ranks = ranks.localCheckpoint(eager=True)
     nudged = F.round(F.col("pr") + F.lit(1e-9), 4)
     out = ranks.select("node", nudged.alias("pr")).orderBy(
         nudged.desc(), F.col("node").asc()

@@ -23,12 +23,15 @@ Plan shapes (see SCALE.md):
 
 from __future__ import annotations
 
+from functools import reduce
+
 import pandas as pd
 
 from kektordb_spark.dialect import (
     docs_tok, hex_to_int, regex_all, regexp_replace_all, seq, size, str_arr, unnest,
 )
 from kektordb_spark.functions.textquality import BPE_ISH_RE
+from kektordb_spark.lineage import checkpoint
 
 # ---------------------------------------------------------------------------
 # Shared hash helpers
@@ -572,7 +575,7 @@ def bpe_train(spark, rounds: int = BPE_ROUNDS,
         # the first consumer and materializes t's blocks (sequentially,
         # before the merge stage probes them), so the loop body builds
         # plans only; every job runs inside the final action's cascade
-        t = t.localCheckpoint(eager=False)
+        t = checkpoint(t)
         t.createOrReplaceTempView(f"_bpe_t{i}")
         best = spark.sql(
             _bpe_best_sql("spark", f"({_adj_pairs('spark', f'_bpe_t{i}')}) p"))
@@ -581,9 +584,7 @@ def bpe_train(spark, rounds: int = BPE_ROUNDS,
             t.crossJoin(F.broadcast(best))
             .select("doc_id", merge("toks", "w1", "w2").alias("toks"))
         )
-    out = bests[0]
-    for b in bests[1:]:
-        out = out.unionAll(b)
+    out = reduce(lambda a, b: a.unionAll(b), bests)
     return out.where(F.col("w1").isNotNull()).select(
         F.col("step").cast("int").alias("step"), "w1", "w2", "cnt"
     ).orderBy("step")
@@ -1131,7 +1132,7 @@ def bpe_apply(spark, rounds: int = BPE_ROUNDS,
         "doc_id", "toks", "CAST(size(toks) AS INT) AS n_toks_before")
     merge = _bpe_merge_udf()
     for i in range(rounds):
-        t = t.localCheckpoint(eager=False)  # lazy: see bpe_train
+        t = checkpoint(t)  # lazy: see bpe_train
         t.createOrReplaceTempView(f"_bpea_t{i}")
         best = spark.sql(
             _bpe_best_sql("spark", f"({_adj_pairs('spark', f'_bpea_t{i}')}) p"))

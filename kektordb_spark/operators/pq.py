@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kektordb_spark.lineage import checkpoint
+
 
 def _subvectors(df: DataFrame, vec_col: str, id_col: str, m: int, dim: int) -> DataFrame:
     """(id, sub, sv): split each vector into m contiguous subvectors."""
@@ -88,17 +90,16 @@ def pq_train(
     """Train per-subspace codebooks; returns (sub, cid, cv) with K*M
     rows. Init = the K lowest-id vectors' subvectors (deterministic);
     then ``iters`` Lloyd rounds. Each round's centroid relation is tiny
-    and checkpointed eagerly so round i+1's plan does not replay round
+    and checkpointed so round i+1's plan does not replay round
     i (same loop-with-materialization rule as BFS — SCALE.md rule 3)."""
-    sv = _subvectors(vectors, vec_col, id_col, m, dim).localCheckpoint(eager=False)
-    centroids = (
+    sv = checkpoint(_subvectors(vectors, vec_col, id_col, m, dim))
+    centroids = checkpoint(
         sv.withColumn(
             "rn",
             F.row_number().over(Window.partitionBy("sub").orderBy(F.col("id").asc())),
         )
         .where(F.col("rn") <= k)
         .select("sub", (F.col("rn") - 1).alias("cid"), F.col("sv").alias("cv"))
-        .localCheckpoint(eager=False)
     )
     width = dim // m
     mean_cols = [F.avg(F.col("sv")[i]).alias(f"c{i}") for i in range(width)]
@@ -115,10 +116,9 @@ def pq_train(
         # A cluster that loses every member keeps its previous centroid
         # (same rule as the numpy replica in tests/test_pq.py) — the
         # groupBy alone would silently shrink the codebook below K.
-        centroids = (
+        centroids = checkpoint(
             centroids.join(means, ["sub", "cid"], "left")
             .select("sub", "cid", F.coalesce("nv", "cv").alias("cv"))
-            .localCheckpoint(eager=False)
         )
     return centroids
 

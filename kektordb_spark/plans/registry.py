@@ -15,6 +15,7 @@ All timestamps/thresholds are fixed constants (never wall clock).
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +35,7 @@ from kektordb_spark.operators import lifecycle as LC
 from kektordb_spark.dialect import (
     docs_tok, dot_sql, l2sq_sql, posexplode, regex_all, rlike, size, str_arr, transform,
 )
+from kektordb_spark.lineage import checkpoint
 from kektordb_spark.tables import load_tables, with_oracle_ctes
 
 # --------------------------------------------------------------------------
@@ -743,11 +745,9 @@ def knn_f16_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kektordb_spark.functions.vector import quantize_f16
 
     load_tables(spark, sf_dir)
-    emb16 = (
-        spark.table("emb")
-        .select("vec_id", quantize_f16(F.col("v")).alias("v"))
-        # one pandas-UDF pass, then reused by both roles below
-        .localCheckpoint(eager=False)
+    # one pandas-UDF pass, then reused by both roles below
+    emb16 = checkpoint(
+        spark.table("emb").select("vec_id", quantize_f16(F.col("v")).alias("v"))
     )
     queries = emb16.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
@@ -1441,12 +1441,8 @@ def adaptive_retrieval_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted edge set once — both BFS rounds reference it and Spark
     inlines repeated CTEs."""
     load_tables(spark, sf_dir)
-    spark.sql(AD.graph_edges_sql("spark")).localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("_ag_edges")
-    spark.sql(AD.graph_seeds_sql("spark")).localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("_ag_seeds")
+    checkpoint(spark.sql(AD.graph_edges_sql("spark"))).createOrReplaceTempView("_ag_edges")
+    checkpoint(spark.sql(AD.graph_seeds_sql("spark"))).createOrReplaceTempView("_ag_seeds")
     return spark.sql(AD.adaptive_graph_sql(
         "spark", edges_rel="_ag_edges", seeds_rel="_ag_seeds"))
 
@@ -1557,18 +1553,18 @@ def _simhash_fp_view(spark: SparkSession) -> None:
     # docs_tok_par is parquet-materialized by load_tables — concrete
     # token arrays already, so only the fingerprint relation needs a
     # checkpoint here.
-    fp = spark.sql(
+    checkpoint(spark.sql(
         DD.simhash_sql("spark", docs_source="docs_tok_par")
-    ).localCheckpoint(eager=False)
-    fp.createOrReplaceTempView("_sh_fp")
+    )).createOrReplaceTempView("_sh_fp")
 
 
 @register("dedup_simhash", with_oracle_ctes(DD.simhash_sql("duckdb"), ["docs_tok"]))
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D3 SimHash fingerprints (tf-weighted 32-bit bit votes)."""
     load_tables(spark, sf_dir)
-    toks = spark.sql("SELECT doc_id, toks FROM docs_tok_par").localCheckpoint(eager=False)
-    toks.createOrReplaceTempView("_sh_toks")
+    checkpoint(
+        spark.sql("SELECT doc_id, toks FROM docs_tok_par")
+    ).createOrReplaceTempView("_sh_toks")
     return spark.sql(DD.simhash_sql("spark", docs_source="_sh_toks"))
 
 
@@ -1614,8 +1610,7 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected components + canonical-doc pick (longest copy kept,
     rest dropped) — the dedup pipeline's ship step. Reuses the
     dedup_minhash_lsh pipeline's materialized stages for the pairs."""
-    pairs = dedup_minhash_lsh(spark, sf_dir).localCheckpoint(eager=False)
-    pairs.createOrReplaceTempView("_mh_pairs")
+    checkpoint(dedup_minhash_lsh(spark, sf_dir)).createOrReplaceTempView("_mh_pairs")
     return spark.sql(DD.minhash_clusters_sql("spark", pairs_rel="_mh_pairs"))
 
 
@@ -1650,8 +1645,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle re-derives the md5-seeded Lloyd training and the fold-left
     pair join inline. See operators/semdedup.py for the 100 TB story."""
     load_tables(spark, sf_dir)
-    pairs = SD.semantic_pairs(spark).localCheckpoint(eager=False)
-    pairs.createOrReplaceTempView("_sem_pairs")
+    checkpoint(SD.semantic_pairs(spark)).createOrReplaceTempView("_sem_pairs")
     return spark.sql(SD.semantic_dedup_sql(
         "spark", cents_source="ivf_cents", assign_source="ivf_assign",
         pairs_rel="_sem_pairs"))
@@ -1717,16 +1711,14 @@ def gardener_consolidation_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # endpoints the body joins against; filter commutes with the
     # already-applied per-(src,dst,rel) versioning pick) and
     # checkpointed once because the body references it 4x (Spark
-    # inlines repeated CTEs — ecur_sql docstring). r3's
-    # derive-per-query path (ecur_member_sql) remains the cold-start
-    # fallback for callers outside load_tables.
+    # inlines repeated CTEs — ecur_sql docstring).
     # One EAGER checkpoint of the member relation (r8): the body
     # references cl_nodes seven times and the ecur slice probes its
-    # nids twice — deriving it once replaces the old separate
-    # _cons_nids chain plus the body's inline sizes/cl_nodes rebuild.
-    spark.sql(CS.cl_nodes_sql("_cons_labels")).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("_cons_cln")
+    # nids twice (the two sibling readers that first scan it) —
+    # deriving it once replaces the old separate _cons_nids chain plus
+    # the body's inline sizes/cl_nodes rebuild.
+    checkpoint(spark.sql(CS.cl_nodes_sql("_cons_labels")),
+               readers=2).createOrReplaceTempView("_cons_cln")
     # BROADCAST hints inside the IN-subqueries (r8): the checkpointed
     # member RDD reports no stats, so without them both rewritten
     # ExistenceJoins planned as SortMergeJoin — shuffling + sorting the
@@ -1735,15 +1727,13 @@ def gardener_consolidation_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # member-nid sets are cluster-membership-bounded, the same scale
     # argument as the body's member-side hints (merge_body_ctes).
     # EAGER checkpoint: the merge body consumes this slice from FOUR
-    # sibling subtrees (degm 2x, rew_out, rew_in); a lazy checkpoint
-    # materializes inside the first consuming stage and concurrent
-    # siblings each recompute it (the sibling-race hazard documented
-    # at functions/text.py:106).
-    spark.sql(
+    # sibling subtrees (degm 2x, rew_out, rew_in) — the sibling race
+    # (lineage.checkpoint).
+    checkpoint(spark.sql(
         "SELECT src, dst, rel, weight FROM edges_cur "
         "WHERE src IN (SELECT /*+ BROADCAST(_cons_cln) */ nid FROM _cons_cln) "
         "   OR dst IN (SELECT /*+ BROADCAST(_cons_cln) */ nid FROM _cons_cln)"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("_cons_ecur")
+    ), readers=4).createOrReplaceTempView("_cons_ecur")
     return spark.sql(
         "WITH " + CS.merge_body_ctes("spark", "_cons_labels",
                                      ecur_rel="_cons_ecur",
@@ -1779,7 +1769,7 @@ def gardener_knowledge_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not KP.pairs_served_from_index(spark, 0.42):
         # kernel-computed pairs are referenced 3x below — materialize;
         # the persisted-index path is a parquet scan, re-scan instead
-        _sp = _sp.localCheckpoint(eager=True)
+        _sp = checkpoint(_sp, readers=3)
     _sp.createOrReplaceTempView("_sim_pairs")
     # Evidence restriction pushed INTO the co-occurrence self-join:
     # only pairs whose BOTH endpoints appear in the (tiny) similar set
@@ -1899,11 +1889,10 @@ def graph_evolution_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
     ev = spark.table("events").select("user_id", "event_id", "ts")
     w_asc = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    edges = (
+    edges = checkpoint(  # referenced by all 10 rounds
         ev.withColumn("parent", F.lag("event_id").over(w_asc))
         .where(F.col("parent").isNotNull())
         .select("user_id", F.col("event_id").alias("child"), "parent")
-        .localCheckpoint(eager=False)  # referenced by all 10 rounds
     )
     w_desc = Window.partitionBy("user_id").orderBy(
         F.col("ts").desc(), F.col("event_id").desc())
@@ -1929,12 +1918,9 @@ def graph_evolution_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             # at depth 10 the unrolled replay is 55 joins vs 10 joins +
             # 9 checkpoints of a |seeds|-row frontier — checkpoint wins
             # (measured ~5.9 s -> ~2.5 s at sf0.1).
-            frontier = frontier.localCheckpoint(eager=False)
+            frontier = checkpoint(frontier)
         levels.append(frontier.withColumn("depth", F.lit(d)))
-    out = levels[0]
-    for lvl in levels[1:]:
-        out = out.unionAll(lvl)
-    return out.select(
+    return reduce(lambda a, b: a.unionAll(b), levels).select(
         "user_id",
         F.concat(F.lit("ev_"), F.col("seed").cast("string")).alias("seed"),
         F.concat(F.lit("ev_"), F.col("cur").cast("string")).alias("ancestor"),
@@ -2417,9 +2403,7 @@ def events_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     events: at 100 TB that's the difference between scanning the event
     log and scanning a few thousand rollup rows."""
     load_tables(spark, sf_dir)
-    spark.sql(ST.rollup_hourly_sql("spark")).localCheckpoint(
-        eager=False
-    ).createOrReplaceTempView("_hourly")
+    checkpoint(spark.sql(ST.rollup_hourly_sql("spark"))).createOrReplaceTempView("_hourly")
     return spark.sql(ST.rollup_daily_from_hourly_sql("spark"))
 
 
@@ -2639,8 +2623,7 @@ def pipeline_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     once (SCALE.md rule 2); the oracle inlines it — see
     operators/pipeline.py: dsir_select_sql."""
     load_tables(spark, sf_dir)
-    bg = spark.sql(PL.dsir_bg_sql()).localCheckpoint(eager=False)
-    bg.createOrReplaceTempView("_dsir_bg")
+    checkpoint(spark.sql(PL.dsir_bg_sql())).createOrReplaceTempView("_dsir_bg")
     return spark.sql(PL.dsir_select_sql("spark", bg_source="_dsir_bg"))
 
 
@@ -2679,13 +2662,11 @@ def pipeline_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vocab relation `tf` feeds totals AND the heavy-hitter head, and
     `topk` feeds the regression AND the report — Spark inlines CTEs, so
     the r4 single-text registration re-ran the corpus explode+agg ~4x.
-    Each is localCheckpointed once; the oracle keeps the single SQL
+    Each is checkpointed once; the oracle keeps the single SQL
     text (DuckDB materializes WITH-CTEs)."""
     load_tables(spark, sf_dir)
-    spark.sql(PL.corpus_tf_sql("spark")).localCheckpoint(
-        eager=False).createOrReplaceTempView("_cs_tf")
-    spark.sql(PL.corpus_topk_sql("_cs_tf")).localCheckpoint(
-        eager=False).createOrReplaceTempView("_cs_topk")
+    checkpoint(spark.sql(PL.corpus_tf_sql("spark"))).createOrReplaceTempView("_cs_tf")
+    checkpoint(spark.sql(PL.corpus_topk_sql("_cs_tf"))).createOrReplaceTempView("_cs_topk")
     return spark.sql(PL.corpus_stats_final_sql("_cs_tf", "_cs_topk"))
 register_sql("dedup_paragraph", DD.paragraph_dedup_sql, ["docs_tok"])
 register_sql("dedup_substring_windows", DD.substring_windows_sql, ["docs_tok"])
@@ -2779,12 +2760,11 @@ def text_keywords_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """tf-idf keywords with the rule-2 materialization discipline: the
     corpus-sized (doc, token, tf) relation feeds both the
     document-frequency aggregate and the scoring join, so it is
-    localCheckpointed once (Spark inlines CTEs — the r4 single-text
+    checkpointed once (Spark inlines CTEs — the r4 single-text
     registration ran the explode+agg twice). The oracle keeps the
     single SQL text (DuckDB materializes WITH-CTEs)."""
     load_tables(spark, sf_dir)
-    spark.sql(AN.tfidf_tf_sql("spark")).localCheckpoint(
-        eager=False).createOrReplaceTempView("_tfidf_tfr")
+    checkpoint(spark.sql(AN.tfidf_tf_sql("spark"))).createOrReplaceTempView("_tfidf_tfr")
     return spark.sql(AN.tfidf_final_sql("_tfidf_tfr", "docs_tok_par"))
 
 
@@ -2801,7 +2781,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     Serve-side work: ONE equi-join pair closing wedges over the
     persisted oriented edges (each triangle explodes into its 3
     corners in the same pass — analytics.triangle_pn_sql), the tiny
-    per-node relation localCheckpointed for its 2 consumers
+    per-node relation checkpointed for its 2 consumers
     (report + total = sum/3)."""
     load_tables(spark, sf_dir)
     # lazy: the census's two consumers are ordered (the total-sum
@@ -2812,8 +2792,9 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The per-edge array_intersect itself stays in the broadcast-join
     # stage below the repartition (see AN.triangle_pn_sql).
     lanes = max(64, 4 * int(spark.conf.get("spark.sql.shuffle.partitions", "16")))
-    spark.sql(AN.triangle_pn_sql("spark", "copurch_o", lanes=lanes)).localCheckpoint(
-        eager=False).createOrReplaceTempView("_tri_pn")
+    checkpoint(
+        spark.sql(AN.triangle_pn_sql("spark", "copurch_o", lanes=lanes))
+    ).createOrReplaceTempView("_tri_pn")
     return spark.sql(AN.triangle_final_sql("_tri_pn"))
 
 
@@ -2843,13 +2824,13 @@ def pipeline_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join itself is the dialect SQL's gram equi-join."""
     load_tables(spark, sf_dir)
     toks = regex_all("spark", "lower(text)", "[a-z0-9_]+")
-    g = (
+    # eager: the train and eval explodes are sibling scans
+    checkpoint(
         spark.table("documents")
         .selectExpr("doc_id", f"({toks}) AS toks")
-        .selectExpr("doc_id", f"{PL._grams('spark', 'toks')} AS grams")
-        .localCheckpoint(eager=True)
-    )
-    g.createOrReplaceTempView("_decon_grams")
+        .selectExpr("doc_id", f"{PL._grams('spark', 'toks')} AS grams"),
+        readers=2,
+    ).createOrReplaceTempView("_decon_grams")
     return spark.sql(f"""
 WITH tr AS (
   SELECT doc_id, gram FROM _decon_grams
@@ -2876,14 +2857,13 @@ def pipeline_vocab_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays materialize BEFORE the explode (SCALE.md rule 1), then one
     pair-keyed hash aggregate + TakeOrderedAndProject."""
     load_tables(spark, sf_dir)
-    pairs = (
+    pairs = checkpoint(
         spark.table("docs_tok_par")
         .where(F.size("toks") >= 2)
         .selectExpr(
             "transform(sequence(0, size(toks) - 2), "
             "i -> struct(toks[i] AS w1, toks[i + 1] AS w2)) AS prs"
         )
-        .localCheckpoint(eager=False)
     )
     return (
         pairs.select(F.explode("prs").alias("p"))
@@ -2934,15 +2914,12 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the persisted ``pr_w`` index layer (built once at load, like
     IVF/PQ/LSH), one dst-keyed shuffle per round, top-k via
     TakeOrderedAndProject (operators/pagerank.py docstring for the
-    full plan-shape story). The bounded 3 rounds stay in ONE job
-    (checkpoint_rounds=False): with w a plain parquet scan, replaying
-    round i inside round i+1's plan is cheaper than an eager
-    checkpoint job per round (measured at sf0.1; the checkpointed
-    shape remains the scale path for deep iteration counts)."""
+    full plan-shape story). The bounded 3 rounds stay in ONE job:
+    with w a plain parquet scan, replaying round i inside round i+1's
+    plan is cheaper than an eager checkpoint job per round (measured
+    at sf0.1)."""
     load_tables(spark, sf_dir)
-    return PR.pagerank_df(
-        spark, weights=spark.table("pr_w"), checkpoint_rounds=False
-    )
+    return PR.pagerank_df(spark, weights=spark.table("pr_w"))
 
 
 # --------------------------------------------------------------------------

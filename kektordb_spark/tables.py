@@ -549,7 +549,7 @@ def _build_index_layers(spark: SparkSession, layers: list[IndexLayer],
     running finish, then the first error is re-raised."""
     from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
-    from kektordb_spark.operators.nsw import constraint_propagation_off
+    from kektordb_spark.lineage import constraint_propagation_off
 
     LAYER_TIMES.clear()
     t0 = time.perf_counter()

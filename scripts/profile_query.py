@@ -21,14 +21,20 @@ and exchange ``plan_id``s count up across the session; codegen-stage
 and AQE query-stage ids follow the order in which sibling stages
 happen to run; the load_tables materialization directory has a random
 name. All of these are blanked.
+
+Checkpoints are counted by wrapping ``DataFrame.localCheckpoint`` in
+this process only; a call site is the first caller frame outside
+pyspark and ``kektordb_spark/lineage.py``.
 """
 
 from __future__ import annotations
 
+import collections
 import os
 import re
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -53,15 +59,48 @@ def normalize_plan(plan: str) -> str:
     return plan
 
 
+CHECKPOINTS: collections.Counter = collections.Counter()  # (site, eager) -> calls
+
+
+def _count_checkpoints(cls: type) -> None:
+    """Wrap ``cls.localCheckpoint`` to tally calls by site and mode."""
+    inner = cls.localCheckpoint
+
+    def counted(self, eager=True, *args, **kwargs):
+        site = "?"
+        for frame in reversed(traceback.extract_stack()[:-1]):
+            f = frame.filename
+            if "pyspark" not in f and not f.endswith("lineage.py"):
+                site = f"{os.path.relpath(f)}:{frame.lineno}"
+                break
+        CHECKPOINTS[(site, bool(eager))] += 1
+        return inner(self, eager, *args, **kwargs)
+
+    cls.localCheckpoint = counted
+
+
+def _ckpt_mark() -> tuple[int, int]:
+    lazy = sum(n for (_, e), n in CHECKPOINTS.items() if not e)
+    return lazy, sum(CHECKPOINTS.values()) - lazy
+
+
+def _ckpt_since(mark: tuple[int, int]) -> str:
+    lazy, eager = _ckpt_mark()
+    return f"ckpt_lazy={lazy - mark[0]} ckpt_eager={eager - mark[1]}"
+
+
 def main() -> None:
     args = sys.argv[1:]
     explain_dir = None
     suffix = "before"
     reps = 2
     names: list[str] = []
+    run_all = False
     it = iter(args)
     for a in it:
-        if a == "--explain":
+        if a == "--all":
+            run_all = True
+        elif a == "--explain":
             explain_dir = next(it)
         elif a == "--suffix":
             suffix = next(it)
@@ -74,10 +113,22 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("kektordb-profile", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
+    tracker = spark.sparkContext.statusTracker()
+    _count_checkpoints(type(spark.range(0)))
+
+    def job_mark() -> int:
+        jobs = tracker.getJobIdsForGroup(None)
+        return max(jobs) if jobs else -1
 
     from kektordb_spark.tables import load_tables
 
+    hi0, ck0 = job_mark(), _ckpt_mark()
+    t0 = time.perf_counter()
     load_tables(spark, sf_dir)
+    print(
+        f"load_tables: total={time.perf_counter() - t0:.3f}s "
+        f"jobs={job_mark() - hi0} {_ckpt_since(ck0)}"
+    )
     spark.sql("SELECT count(*) FROM lineitem").collect()
     spark.range(8).mapInPandas(lambda it: it, "id long").collect()
     spark.sql("SELECT count(*) FROM docs_tok_par WHERE size(toks) >= 0").collect()
@@ -90,25 +141,23 @@ def main() -> None:
     ).collect()
 
     queries = registry.queries()
-    tracker = spark.sparkContext.statusTracker()
+    if run_all:
+        names = sorted(queries)
 
     for name in names:
         if name not in queries:
             print(f"{name}: NOT REGISTERED")
             continue
         for rep in range(reps):
-            jobs0 = tracker.getJobIdsForGroup(None)
-            hi0 = max(jobs0) if jobs0 else -1
+            hi0, ck0 = job_mark(), _ckpt_mark()
             t0 = time.perf_counter()
             df = queries[name](spark, sf_dir)
             t_build = time.perf_counter() - t0
             df.collect()
             t_total = time.perf_counter() - t0
-            jobs1 = tracker.getJobIdsForGroup(None)
-            hi1 = max(jobs1) if jobs1 else -1
             print(
                 f"{name} rep{rep}: total={t_total:.3f}s build={t_build:.3f}s "
-                f"jobs={hi1 - hi0}"
+                f"jobs={job_mark() - hi0} {_ckpt_since(ck0)}"
             )
             if explain_dir and rep == 0:
                 os.makedirs(explain_dir, exist_ok=True)
@@ -122,6 +171,10 @@ def main() -> None:
                 spark.sparkContext._jsc.getPersistentRDDs().values()
             ):
                 jrdd.unpersist()
+
+    lazy, eager = _ckpt_mark()
+    sites = {site for site, _ in CHECKPOINTS}
+    print(f"checkpoints: {lazy + eager} calls at {len(sites)} sites ({eager} eager)")
 
 
 if __name__ == "__main__":

@@ -523,25 +523,16 @@ def test_knowledge_gaps_cooc_restricted_and_broadcast(spark):
 
 
 def test_pagerank_round_is_one_dst_shuffle(spark):
-    """Each power-iteration round: edges ⨝ ranks ⨝ outdeg (equi-joins)
-    + ONE dst-keyed aggregate exchange. The registered query checkpoints
-    each round (shallow final plan: checkpoint scan + top-k), so the
-    round structure is asserted on the unrolled-lineage variant."""
-    from kektordb_spark.operators.pagerank import pagerank_df
-    from kektordb_spark.tables import load_tables
-
+    """Each power-iteration round: w ⨝ ranks (equi-join) + ONE
+    dst-keyed aggregate exchange. The registered query runs its rounds
+    unrolled in one plan (no per-round checkpoint), so the round
+    structure is asserted on that plan itself."""
     plan = plan_of(spark, "graph_pagerank")
     assert "TakeOrderedAndProject" in plan
-
-    load_tables(spark, SF_SMALL)
-    df = pagerank_df(spark, iters=1, checkpoint_rounds=False)
-    rplan = spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    assert "CartesianProduct" not in rplan
-    assert "BroadcastNestedLoopJoin" not in rplan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
     # map-side combine before the dst-keyed exchange
-    assert "partial_sum" in rplan
+    assert "partial_sum" in plan
 
 
 def test_vocab_pairs_single_agg_shuffle(spark):
