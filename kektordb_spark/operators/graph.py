@@ -75,9 +75,10 @@ def bfs(
 
     Execution shape (the loop-with-checkpoint pattern for iterative
     graph algorithms): each round's frontier is LAZILY checkpointed
-    (r7: lineage truncation is immediate, materialization happens as a
-    dependency of the final action — same O(depth) evaluation without
-    one scheduler job per level, guide §1.2) —
+    (r7: no separate materializing job per level, guide §1.2; under
+    AQE each checkpoint still runs its level's join exchanges at the
+    call, so graph_bfs_depth3 submits 6 of its 8 jobs before bfs
+    returns, sf0.01, local[4]) —
     frontiers are node SETS (per-level distinct) so they are small and
     bounded by |V| — which makes round d cost ONE join instead of
     re-running rounds 1..d-1 (Spark inlines multiply-referenced
@@ -126,12 +127,13 @@ def _bfs_over_pairs(
     Past depth 1 every frontier is checkpointed: without it, level d's
     plan recomputes levels 1..d-1 (Spark inlines shared subplans) —
     O(depth^2) joins. With it, every level evaluates exactly once
-    (O(depth) joins; the r7 lazy checkpoints defer each level's
-    materialization into the final action instead of paying a
-    scheduler job per round). r4 re-measure at sf0.1 (1.4M-edge
-    scratch-parquet table): frontier checkpoints win in every
-    combination — depth-3 in-BFS 1.24 s vs 1.6 s warm, 1.6 s vs 3.0 s
-    cold — reversing the r3 finding, which predated the parquet
+    (O(depth) joins; the r7 lazy checkpoints add no materializing job
+    per round, but each runs its level's exchanges at the call:
+    graph_find_path submits 9 of its 13 jobs, graph_subgraph 4 of 7,
+    before the runner returns, sf0.01, local[4]). r4 re-measure at
+    sf0.1 (1.4M-edge scratch-parquet table): frontier checkpoints win
+    in every combination — depth-3 in-BFS 1.24 s vs 1.6 s warm, 1.6 s
+    vs 3.0 s cold — reversing the r3 finding, which predated the parquet
     materialization of the edges view (each recomputed round then
     re-ran the derivation, making checkpoint jobs look expensive by
     comparison)."""

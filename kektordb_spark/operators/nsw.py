@@ -680,9 +680,11 @@ def nsw_recall_sweep(
 ) -> DataFrame:
     """Spark runner for the beam recall sweep: ONE per-hop
     LAZY-checkpointed loop serving every beam width at once (beam-keyed
-    state — see nsw_recall_sweep_sql). The loop builds plans only and
-    the final action materializes the cascade; post-fixpoint hops
-    collapse under AQE's empty-relation propagation (see nsw_search)."""
+    state — see nsw_recall_sweep_sql). As in nsw_search, each hop's
+    checkpoint runs its plan's exchanges at the call, so most jobs run
+    before the runner returns (50-56 of 60-66 at sf0.01, local[4]);
+    post-fixpoint hops collapse under AQE's empty-relation propagation
+    (see nsw_search)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -746,11 +748,15 @@ def nsw_search(
     assign_source: str = "ivf_assign",
 ) -> DataFrame:
     """Spark runner: per-hop LAZY-checkpointed loop over the persisted
-    adjacency — the loop builds plans only; every hop materializes in
-    the final action's cascade (r7, guide §1.2 — the per-hop
-    early-exit count was the loop's last blocking driver round-trip).
-    Post-fixpoint hops are free under AQE: an empty hop's frontier is
-    an empty broadcast side, and AQE's empty-relation propagation
+    adjacency, with no per-hop early-exit count (r7, guide §1.2 — it
+    was one more blocking driver round-trip per hop). Lazy is not free
+    at the call: under AQE a checkpoint of a plan with an exchange runs
+    its shuffle-map and broadcast stages while building its RDD, so the
+    hops execute as the loop runs (knn_nsw_top10: 50-57 of 52-59 jobs
+    before the runner returns, sf0.01, local[4],
+    ``scripts/profile_query.py`` build_jobs). Post-fixpoint hops are
+    free under AQE: an empty hop's frontier is an empty broadcast
+    side, and AQE's empty-relation propagation
     collapses the expand join without scanning the adjacency, which is
     exactly the identity the unrolled oracle computes past the
     fixpoint. ``init='cell'`` seeds hop-0 from each query's IVF cell

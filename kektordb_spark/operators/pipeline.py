@@ -573,8 +573,11 @@ def bpe_train(spark, rounds: int = BPE_ROUNDS,
         # scale: 11 jobs ~7-10 s vs 6 jobs ~4 s.)
         # r7: LAZY checkpoint — the round's broadcast argmax build is
         # the first consumer and materializes t's blocks (sequentially,
-        # before the merge stage probes them), so the loop body builds
-        # plans only; every job runs inside the final action's cascade
+        # before the merge stage probes them). Under AQE the next
+        # round's checkpoint runs that broadcast's stages at the call,
+        # so rounds execute as the loop runs: pipeline_bpe_train
+        # submits 8 of its 14 jobs before bpe_train returns (sf0.01,
+        # local[4]).
         t = checkpoint(t)
         t.createOrReplaceTempView(f"_bpe_t{i}")
         best = spark.sql(

@@ -25,6 +25,14 @@ def get_spark(app_name: str = "kektordb-spark", cpus: int | None = None) -> Spar
     # The glibc malloc tunables are exported at package import
     # (kektordb_spark/__init__.py), so a JVM launched by any caller
     # after that import inherits them.
+    # The Python daemon runs kektordb_spark.pyworker (conf below), so the
+    # JVM must be able to hand its workers this package whatever the
+    # caller's working directory: put the package's parent directory on
+    # the PYTHONPATH the JVM inherits, ahead of the entries already there.
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if parent not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([parent, *paths])
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -73,6 +81,17 @@ def get_spark(app_name: str = "kektordb-spark", cpus: int | None = None) -> Spar
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", str(1 << 30))
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "-1")
         .config("spark.executorEnv.MALLOC_ARENA_MAX", "4")
+        # Every Python task calls importlib.invalidate_caches(), which
+        # before Python 3.13 makes each cached zip importer re-read its
+        # archive's whole central directory: on 3.11 a worker held 16
+        # (pyspark.zip 1,328 entries, 11 ms each; the spark-core jar
+        # 5,359 entries, 49 ms; py4j), ~230 ms of CPU per task before
+        # any user code. A trivial 36-task mapPartitions at local[4]
+        # (4 reused workers, warm) took 2.5-2.6 s, consecutive tasks on
+        # one worker 250-270 ms apart (median). This daemon module
+        # re-reads an archive only when its stat stamp changed:
+        # 0.66-0.72 s, tasks 64-69 ms apart.
+        .config("spark.python.daemon.module", "kektordb_spark.pyworker")
         .config("spark.ui.enabled", "false")
         # The status listeners track jobs/stages/SQL executions even
         # with the UI off; a 75-query bench session accumulates

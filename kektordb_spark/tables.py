@@ -427,7 +427,7 @@ def index_layers(spark: SparkSession, base: dict[str, DataFrame]) -> list[IndexL
         # Navigable k-NN graph (operators/nsw.py): LSH-seeded NN-descent
         # — every stage a bucketed equi-join, never an all-pairs sweep;
         # the beam serve path reads only this adjacency + the vectors.
-        # First: the longest layer (59 jobs), so it never queues.
+        # First: the longest layer (58 jobs), so it never queues.
         IndexLayer("nng", (), lambda: nng_descent_build(spark)),
         # The two EXPENSIVE derived views, built from their SQL text:
         # the edges view re-derives two lineitem scans + string building

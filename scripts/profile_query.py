@@ -12,7 +12,10 @@ clear caches + persistent RDDs between runs). Jobs are counted via the
 status tracker's job-id watermark, which includes every job the runner
 submits while building the DataFrame (checkpoints, counts) plus the
 final collect — the per-job floor is the thing the iterative operators
-pay at fixture scale, so the count is the signal.
+pay at fixture scale, so the count is the signal. ``build_jobs`` is the
+part of ``jobs`` submitted before the runner returned its DataFrame
+(eager checkpoints, counts, and the shuffle-map stages that a lazy
+checkpoint of a plan with an exchange runs under AQE).
 
 Saved plans are normalized so that plan directories written by two
 checkouts (or two runs) diff byte-for-byte: expression ids (``#123``),
@@ -153,11 +156,13 @@ def main() -> None:
             t0 = time.perf_counter()
             df = queries[name](spark, sf_dir)
             t_build = time.perf_counter() - t0
+            build_jobs = job_mark() - hi0
             df.collect()
             t_total = time.perf_counter() - t0
             print(
                 f"{name} rep{rep}: total={t_total:.3f}s build={t_build:.3f}s "
-                f"jobs={job_mark() - hi0} {_ckpt_since(ck0)}"
+                f"jobs={job_mark() - hi0} build_jobs={build_jobs} "
+                f"{_ckpt_since(ck0)}"
             )
             if explain_dir and rep == 0:
                 os.makedirs(explain_dir, exist_ok=True)
