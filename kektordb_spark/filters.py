@@ -149,11 +149,6 @@ def filter_to_column(filter_str: str, schema: dict[str, str]) -> Column:
     return F.expr(filter_to_sql(filter_str, schema, "spark"))
 
 
-def schema_of(df) -> dict[str, str]:
-    """Extract a name->typeName schema dict from a DataFrame."""
-    return {f.name: f.dataType.simpleString() for f in df.schema.fields}
-
-
 _CONTAINS_RE = re.compile(
     r"\s*(?:AND\s+)?CONTAINS\s*\(\s*([A-Za-z0-9_]+)\s*,\s*'([^']*)'\s*\)\s*(?:AND\s+)?",
     re.IGNORECASE,

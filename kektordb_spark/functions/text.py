@@ -44,25 +44,6 @@ def tokens(col: str, remove_stopwords: bool = True) -> Column:
     return F.expr(f"filter({raw}, t -> NOT array_contains(array({stops}), t))")
 
 
-def info_density(toks: str) -> Column:
-    """T6: unique tokens / total tokens (adaptive_retriever.go:478-499)."""
-    return F.expr(
-        f"CASE WHEN size({toks}) = 0 THEN 0.0 "
-        f"ELSE CAST(size(array_distinct({toks})) AS DOUBLE) / CAST(size({toks}) AS DOUBLE) END"
-    )
-
-
-def sentiment_score(toks: str) -> Column:
-    """T7: (+1 per positive hit, -1 per negative hit), counting
-    occurrences."""
-    pos = ", ".join(f"'{w}'" for w in POSITIVE_WORDS)
-    neg = ", ".join(f"'{w}'" for w in NEGATIVE_WORDS)
-    return F.expr(
-        f"size(filter({toks}, t -> array_contains(array({pos}), t))) - "
-        f"size(filter({toks}, t -> array_contains(array({neg}), t)))"
-    )
-
-
 def build_postings(docs: DataFrame, id_col: str = "doc_id", toks_col: str = "toks") -> DataFrame:
     """Posting lists as a DataFrame: (token, doc, tf). The reference's
     in-RAM inverted text index (core.go:902-930) becomes a derived

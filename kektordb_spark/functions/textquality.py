@@ -26,7 +26,6 @@ LANG_PROFILES: dict[str, list[str]] = {
     "fr": ["le", "la", "les", "et", "des", "est", "une", "dans"],
 }
 
-_WS_SPLIT_RE = r"\s+"
 # BPE-ish pre-tokenizer: word pieces, digit runs, single punctuation —
 # the GPT-2 pre-tokenizer shape without unicode categories.
 BPE_ISH_RE = "[a-z]+|[0-9]+|[^a-z0-9\\s]"

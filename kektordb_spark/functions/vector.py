@@ -1,8 +1,9 @@
-"""Vector distance / normalization expressions (SURVEY.md §2.3 V3-V6).
+"""Vector distance expressions and f16 compression (SURVEY.md §2.3
+V3-V6, S12).
 
-All built from Spark higher-order functions (``zip_with``/``aggregate``)
-so they stay JVM-side inside whole-stage codegen — no Python UDF in the
-hot path. Reference semantics: squared euclidean and cosine = 1 - dot on
+The distances are dialect.dot_sql / l2sq_sql folds (``zip_with`` +
+``aggregate``), so they stay JVM-side inside whole-stage codegen — no
+Python UDF in the hot path. Reference semantics: squared euclidean and cosine = 1 - dot on
 normalized vectors (pkg/core/distance/distance_go.go:35-89); plus the
 ``dot`` metric the reference documents but never shipped
 (DOCUMENTATION.md:870 — SURVEY.md §1.2 discrepancy note).
@@ -16,30 +17,16 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def to_double_array(col: str) -> Column:
-    """Cast array<float> -> array<double> (exact widening)."""
-    return F.expr(f"transform({col}, x -> CAST(x AS DOUBLE))")
+from kektordb_spark.dialect import dot_sql, l2sq_sql
 
 
 def dot(a: str, b: str) -> Column:
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (s, p) -> s + p)"
-    )
-
-
-def l2_norm(a: str) -> Column:
-    return F.expr(
-        f"sqrt(aggregate(transform({a}, x -> x * x), CAST(0.0 AS DOUBLE), (s, p) -> s + p))"
-    )
+    return F.expr(dot_sql("spark", a, b))
 
 
 def euclidean_sq(a: str, b: str) -> Column:
     """Squared L2 (the reference never takes the sqrt — distance_go.go:56-68)."""
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-        f"CAST(0.0 AS DOUBLE), (s, p) -> s + p)"
-    )
+    return F.expr(l2sq_sql("spark", a, b))
 
 
 def cosine_dist(a: str, b: str, a_norm: str, b_norm: str) -> Column:
@@ -47,31 +34,6 @@ def cosine_dist(a: str, b: str, a_norm: str, b_norm: str) -> Column:
     computes 1-dot (hnsw_index.go:390-398); hoisting the norms into
     columns is the same optimization in columnar form."""
     return 1.0 - dot(a, b) / (F.col(a_norm) * F.col(b_norm))
-
-
-def normalize(a: str) -> Column:
-    """Unit-normalize an array<double> column."""
-    return F.expr(
-        f"transform({a}, x -> x / sqrt(aggregate(transform({a}, y -> y * y), "
-        f"CAST(0.0 AS DOUBLE), (s, p) -> s + p)))"
-    )
-
-
-def quantize_int8(a: str, abs_max: str) -> Column:
-    """Symmetric int8 scalar quantization (reference
-    distance/quantizer.go:16-120: scale = 127/absMax, round, clamp)."""
-    return F.expr(
-        f"transform({a}, x -> CAST(greatest(-127.0, least(127.0, "
-        f"round(x * 127.0 / {abs_max}, 0))) AS TINYINT))"
-    )
-
-
-def dot_int8(a: str, b: str) -> Column:
-    """Integer dot product on quantized vectors (hnsw_index.go:301-320)."""
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS INT) * CAST(y AS INT)), "
-        f"0, (s, p) -> s + p)"
-    )
 
 
 def quantize_f16(col: Column) -> Column:

@@ -18,6 +18,18 @@ from pyspark.sql import functions as F
 from kektordb_spark.lineage import checkpoint
 
 
+def literal_rows(spark, rows: list[tuple], cols: list[str]) -> DataFrame:
+    """A literal relation (BFS roots) as a SQL VALUES relation: the rows
+    live in the plan as a local table. ``createDataFrame`` of a Python
+    list is an RDD instead, and every scan of it runs Python tasks."""
+    args = {f"c{i}_{j}": v for i, row in enumerate(rows) for j, v in enumerate(row)}
+    values = ", ".join(
+        "(" + ", ".join(f":c{i}_{j}" for j in range(len(row))) + ")"
+        for i, row in enumerate(rows))
+    return spark.sql(
+        f"SELECT * FROM VALUES {values} AS t({', '.join(cols)})", args=args)
+
+
 def active_at(edges: DataFrame, at_time: int | None) -> DataFrame:
     """G3 time-travel predicate: created_at<=t AND (deleted_at=0 OR
     deleted_at>t) (pkg/core/graph.go:350-362). ``None`` = now = only
@@ -254,7 +266,7 @@ def traverse_tree(
     reference's response dict with the dot-path Connections keys."""
     spark = edges.sparkSession
     path = path[:10]  # reference maxDepth clamp (ops.go:636)
-    roots = spark.createDataFrame([(start_id,)], "node string")
+    roots = literal_rows(spark, [(start_id,)], ["node"])
     chain = traverse(edges, roots, path, at_time=at_time)
     vdata = vectors.select("id", "v", "meta")
     k = len(path)
@@ -353,7 +365,7 @@ def find_path(
     ))
     if materialize_edges and max_depth > 1:
         both = checkpoint(both)
-    roots = spark.createDataFrame([(0, src), (1, dst)], "dir int, node string")
+    roots = literal_rows(spark, [(0, src), (1, dst)], ["dir", "node"])
     visited = checkpoint(_bfs_over_pairs(both, roots, max_depth, key="dir"))
     fwd = visited.where(F.col("dir") == 0).select(
         "node", F.col("depth").alias("dist_from_src"))

@@ -18,6 +18,14 @@ Spark-native design:
     those cells (equi-join on cell id — the inverted file) → exact
     cosine top-k on the pruned set.
 
+This module is the package's one IVF implementation: the texts take
+the corpus and query relations by name (default ``emb``), so the
+registry queries, the persisted ``ivf_cents``/``ivf_assign`` layers,
+the DuckDB oracles, semdedup, nsw and the k-NN planner (which binds
+its DataFrames with ``spark.sql(text, name=df)``) all run the same
+train / assign / probe. :func:`probe_cte` is also the coarse stage of
+IVF-PQ (operators/pq.ivfpq_search).
+
 At 100 TB: the corpus is written partitioned/bucketed BY cell id, so
 probing nprobe cells is partition pruning, not a shuffle; assignment is
 a map-only stage (centroids broadcast); recall tested against the
@@ -43,13 +51,13 @@ def _mean_cte(dialect: str, src: str, out: str, cid: str = "cid") -> str:
 {out} AS (SELECT {cid}, {collect} AS v FROM {out}_m GROUP BY {cid})"""
 
 
-def _assign_cte(dialect: str, cents: str, out: str) -> str:
-    """Assign every emb vector to its nearest centroid (squared L2,
-    ties broken by centroid id) -> ``out(vec_id, v, norm, cid)``."""
+def _assign_cte(dialect: str, cents: str, out: str, corpus: str = "emb") -> str:
+    """Assign every ``corpus`` vector to its nearest centroid (squared
+    L2, ties broken by centroid id) -> ``out(vec_id, v, norm, cid)``."""
     d = l2sq_sql(dialect, "e.v", "c.v")
     return f"""{out}_d AS (
   SELECT e.vec_id, e.v, e.norm, c.cid, {d} AS d2
-  FROM emb e CROSS JOIN {cents} c
+  FROM {corpus} e CROSS JOIN {cents} c
 ),
 {out} AS (
   SELECT vec_id, v, norm, cid FROM (
@@ -59,8 +67,10 @@ def _assign_cte(dialect: str, cents: str, out: str) -> str:
 )"""
 
 
-def _train_parts(dialect: str, nlist: int, iters: int) -> tuple[list[str], str]:
-    """CTE chain for k-means training; returns (parts, final_cents_name)."""
+def _train_parts(dialect: str, nlist: int, iters: int,
+                 corpus: str = "emb") -> tuple[list[str], str]:
+    """CTE chain for k-means training over ``corpus(vec_id, v, norm)``;
+    returns (parts, final_cents_name)."""
     # r7: pick the nlist seed rows FIRST (ORDER BY..LIMIT plans as
     # TakeOrderedAndProject — a parallel partial top-k, never a global
     # sort), then number the nlist-row result. The r6 form ranked the
@@ -69,25 +79,52 @@ def _train_parts(dialect: str, nlist: int, iters: int) -> tuple[list[str], str]:
     # (the r6 judge's one structural 100x-scale finding, ivf.py:75).
     parts = [f"""init AS (
   SELECT row_number() OVER (ORDER BY mk) - 1 AS cid, v
-  FROM (SELECT md5(CAST(vec_id AS STRING)) AS mk, v FROM emb ORDER BY mk LIMIT {nlist}) s
+  FROM (SELECT md5(CAST(vec_id AS STRING)) AS mk, v FROM {corpus} ORDER BY mk LIMIT {nlist}) s
 )"""]
     cents = "init"
     for i in range(iters):
-        parts.append(_assign_cte(dialect, cents, f"a{i}"))
+        parts.append(_assign_cte(dialect, cents, f"a{i}", corpus))
         parts.append(_mean_cte(dialect, f"a{i}", f"c{i}"))
         cents = f"c{i}"
     return parts, cents
 
 
-def ivf_train_sql(dialect: str, nlist: int = 8, iters: int = 2) -> str:
+def ivf_train_sql(dialect: str, nlist: int = 8, iters: int = 2,
+                  corpus: str = "emb") -> str:
     """Training pipeline alone -> final centroid relation (cid, v).
     The Spark runner materializes THIS once (nlist rows — trivially
     broadcast-able): the centroid CTE is referenced by both the final
     assignment and the probe, and Spark inlines multiply-referenced
     CTEs (SCALE.md rule 2), so inlining would run every Lloyd iteration
     twice."""
-    parts, cents = _train_parts(dialect, nlist, iters)
+    parts, cents = _train_parts(dialect, nlist, iters, corpus)
     return "WITH " + ",\n".join(parts) + f"\nSELECT cid, v FROM {cents}"
+
+
+def ivf_assign_sql(dialect: str, cents_source: str, corpus: str = "emb") -> str:
+    """The inverted file: every ``corpus`` vector's nearest centroid of
+    ``cents_source`` -> (vec_id, cid)."""
+    return (f"WITH tc AS (SELECT cid, v FROM {cents_source}),\n"
+            + _assign_cte(dialect, "tc", "inv", corpus)
+            + "\nSELECT vec_id, cid FROM inv")
+
+
+def probe_cte(dialect: str, cents: str, nprobe: int, queries: str = "emb",
+              n_queries: int | None = 5, select_d2: bool = False) -> str:
+    """``probe(query_id, cid)``: the ``nprobe`` nearest centroids of
+    ``cents`` for every ``queries`` row (vec_id < ``n_queries``; every
+    row when None), ties broken by centroid id. ``select_d2`` also
+    projects the (unread) distance, which ivf_knn_sql's text carries."""
+    qd = l2sq_sql(dialect, "q.v", "c.v")
+    d2 = f" {qd} AS d2," if select_d2 else ""
+    where = "" if n_queries is None else f"\n    WHERE q.vec_id < {n_queries}"
+    return f"""probe AS (
+  SELECT query_id, cid FROM (
+    SELECT q.vec_id AS query_id, c.cid,{d2}
+           row_number() OVER (PARTITION BY q.vec_id ORDER BY {qd} ASC, c.cid ASC) AS rk
+    FROM {queries} q CROSS JOIN {cents} c{where}
+  ) t WHERE rk <= {nprobe}
+)"""
 
 
 def ivf_knn_sql(
@@ -95,16 +132,21 @@ def ivf_knn_sql(
     nlist: int = 8,
     iters: int = 2,
     nprobe: int = 2,
-    n_queries: int = 5,
+    n_queries: int | None = 5,
     k: int = 10,
     cents_source: str | None = None,
     assign_source: str | None = None,
+    corpus: str = "emb",
+    queries: str = "emb",
 ) -> str:
     """Full IVF pipeline as one SQL text: train (md5-seeded init +
     ``iters`` unrolled Lloyd iterations) → invert → probe → exact
-    cosine top-k on the probed cells. Queries are emb vec_id <
-    n_queries (searched against the whole corpus including themselves,
-    rank 1 = self — mirrors stress_test_recall.py's setup).
+    cosine top-k on the probed cells. ``corpus`` and ``queries`` are
+    (vec_id, v, norm) relations; the queries are the ``queries`` rows
+    with vec_id < ``n_queries`` (every row when None). By default both
+    are emb: the first n_queries vectors searched against the whole
+    corpus including themselves (rank 1 = self — mirrors
+    stress_test_recall.py's setup).
 
     ``cents_source``: name of a pre-materialized centroid relation
     (see ivf_train_sql); default trains inline (the self-contained
@@ -114,32 +156,25 @@ def ivf_knn_sql(
     nearest-centroid pass over the whole corpus; default assigns
     inline."""
     if cents_source is None:
-        parts, cents = _train_parts(dialect, nlist, iters)
+        parts, cents = _train_parts(dialect, nlist, iters, corpus)
     else:
         parts = [f"tc AS (SELECT cid, v FROM {cents_source})"]
         cents = "tc"
     # final inverted file + probe
     if assign_source is None:
-        parts.append(_assign_cte(dialect, cents, "inv"))
+        parts.append(_assign_cte(dialect, cents, "inv", corpus))
     else:
         parts.append(
             f"inv AS (SELECT e.vec_id, e.v, e.norm, a.cid "
-            f"FROM {assign_source} a JOIN emb e ON e.vec_id = a.vec_id)"
+            f"FROM {assign_source} a JOIN {corpus} e ON e.vec_id = a.vec_id)"
         )
-    qd = l2sq_sql(dialect, "q.v", "c.v")
     dot = dot_sql(dialect, "q.v", "e.v")
     # Spark: the probe relation is n_queries x nprobe rows but
     # stats-less behind the persisted-assign join, so the cand join
     # planned as SortMergeJoin shuffling the inverted file (r8 plan
     # audit) — broadcast the probe side. DuckDB reads it as a comment.
-    parts.append(f"""probe AS (
-  SELECT query_id, cid FROM (
-    SELECT q.vec_id AS query_id, c.cid, {qd} AS d2,
-           row_number() OVER (PARTITION BY q.vec_id ORDER BY {qd} ASC, c.cid ASC) AS rk
-    FROM emb q CROSS JOIN {cents} c
-    WHERE q.vec_id < {n_queries}
-  ) t WHERE rk <= {nprobe}
-),
+    parts.append(probe_cte(dialect, cents, nprobe, queries, n_queries,
+                           select_d2=True) + f""",
 cand AS (
   SELECT /*+ BROADCAST(p) */ p.query_id, i.vec_id, i.v, i.norm
   FROM probe p JOIN inv i ON i.cid = p.cid
@@ -148,7 +183,7 @@ scored AS (
   SELECT e.query_id, e.vec_id AS neighbor_id,
          1.0 - ({dot}) / (q.norm * e.norm) AS dist
   FROM cand e
-  JOIN emb q ON q.vec_id = e.query_id
+  JOIN {queries} q ON q.vec_id = e.query_id
 )""")
     body = ",\n".join(parts)
     return f"""

@@ -170,24 +170,13 @@ def lsh_sig_sql(dialect: str, planes: list[list[float]], vcol: str = "v") -> str
     return " + ".join(bits)
 
 
-def _lsh_sig_expr(planes, vcol: str, table_idx: int) -> Column:
-    bits = []
-    for p_i, plane in enumerate(planes[table_idx]):
-        arr = "array(" + ", ".join(f"CAST({x!r} AS DOUBLE)" for x in plane) + ")"
-        bit = (
-            f"CASE WHEN aggregate(zip_with({vcol}, {arr}, (x, y) -> x * y), "
-            f"CAST(0.0 AS DOUBLE), (s, p) -> s + p) >= 0.0 THEN {1 << p_i} ELSE 0 END"
-        )
-        bits.append(bit)
-    return F.expr(" + ".join(bits))
-
-
 def _lsh_with_buckets(df: DataFrame, vcol: str, planes) -> DataFrame:
+    """``df`` plus (tbl, sig): one row per hyperplane table."""
     tables = F.array(
         *[
             F.struct(
                 F.lit(t).alias("tbl"),
-                _lsh_sig_expr(planes, vcol, t).alias("sig"),
+                F.expr(lsh_sig_sql("spark", planes[t], vcol)).alias("sig"),
             )
             for t in range(len(planes))
         ]
@@ -212,16 +201,14 @@ def lsh_signatures(
     signature STRUCT ARRAY materializes per row BEFORE the explode
     (projected as a concrete column) so the generator child is a plain
     attribute — SCALE.md rule 1."""
+    planes = _lsh_planes(seed, n_planes, n_tables, dim)
     sigs = checkpoint(vectors.select(
         F.col(id_col),
         F.array(
             *[
                 F.struct(
                     F.lit(t).alias("tbl"),
-                    _lsh_sig_expr(
-                        _lsh_planes(seed, n_planes, n_tables, dim),
-                        vec_col, t,
-                    ).alias("sig"),
+                    F.expr(lsh_sig_sql("spark", planes[t], vec_col)).alias("sig"),
                 )
                 for t in range(n_tables)
             ]

@@ -20,18 +20,18 @@ tests/test_knn_planner.py):
     must amortize (n_queries >= GEMM_MIN_QUERIES); threshold/top-k
     applied inside the kernel so N^2 never shuffles.
   * ``ivf``    — centroid prune + candidate equi-join
-    (:func:`ivf_knn_df` below, the DataFrame twin of
-    operators/ivf.ivf_knn_sql). The default large-corpus path: at
-    100 TB the corpus is bucketed by cell id and probing is partition
-    pruning.
+    (operators/ivf.ivf_knn_sql over centroids trained on the corpus
+    with ivf_train_sql). The default large-corpus path: at 100 TB the
+    corpus is bucketed by cell id and probing is partition pruning.
   * ``lsh``    — (table, signature) bucket equi-join
     (operators/knn.lsh_bucketed_knn). Picked over IVF when the
     workload can't afford a training pass (ad-hoc one-shot searches
     over a corpus nothing was trained on).
   * ``ivfpq``  — coarse-cell prune + byte-code ADC scoring
-    (:func:`ivfpq_knn_df`, the FAISS-IVFPQ shape). Picked when even
-    scanning float vectors is memory-prohibitive (corpus > PQ_MIN)
-    and a training pass is affordable.
+    (operators/pq.ivfpq_search over an IVF quantizer and a PQ
+    codebook built on the corpus, the FAISS-IVFPQ shape). Picked when
+    even scanning float vectors is memory-prohibitive (corpus >
+    PQ_MIN) and a training pass is affordable.
   * ``pq``     — flat byte codes + ADC LUT joins over the whole corpus
     (operators/pq). Force with ``strategy='pq'``; the planner prefers
     ``ivfpq`` at that scale (cell prune first is strictly less work).
@@ -45,9 +45,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kektordb_spark.dialect import dot_sql
 from kektordb_spark.lineage import checkpoint
 
 EXACT_MAX = 100_000        # per-query scan affordable below this
@@ -59,7 +60,7 @@ GEMM_PAIRS_MAX = 500_000   # N^2/2 tile work affordable below this
 
 @dataclass(frozen=True)
 class KnnPlan:
-    strategy: str  # 'exact' | 'gemm' | 'ivf' | 'lsh' | 'pq'
+    strategy: str  # 'exact' | 'gemm' | 'ivf' | 'lsh' | 'ivfpq' | 'pq'
     reason: str
 
 
@@ -111,185 +112,6 @@ def choose_strategy(
     return KnnPlan("ivf", f"corpus {effective}: centroid prune + cell probe")
 
 
-def ivf_build(
-    vectors: DataFrame,
-    nlist: int = 8,
-    iters: int = 2,
-    id_col: str = "id",
-    vec_col: str = "v",
-    norm_col: str = "norm",
-) -> tuple[DataFrame, DataFrame]:
-    """Coarse-quantizer build shared by the IVF and IVF-PQ paths:
-    md5-seeded init, ``iters`` Lloyd rounds (centroids rounded to
-    12 dp each round so assignments stay deterministic across
-    partitionings), final inverted file. Returns (cents(cid, cv),
-    inv(id, cid, v, norm)); cents is nlist rows — always broadcast."""
-    base = checkpoint(vectors.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-        F.col(norm_col).alias("norm"),
-    ))
-    # r7: sort+limit FIRST (TakeOrderedAndProject — parallel partial
-    # top-k), then number the nlist-row result; the r6 form ran an
-    # unpartitioned row_number() window over the whole corpus (the
-    # judge's structural 100x-scale finding). Output unchanged: the
-    # md5-ordered first nlist rows.
-    cents = checkpoint(
-        base.select(F.md5(F.col("id").cast("string")).alias("mk"), "v")
-        .orderBy("mk").limit(nlist)
-        .withColumn("rn", F.row_number().over(Window.orderBy("mk")))
-        .select((F.col("rn") - 1).alias("cid"), F.col("v").alias("cv"))
-    )
-    l2 = ("aggregate(zip_with(v, cv, (x, y) -> (x - y) * (x - y)), "
-          "CAST(0.0 AS DOUBLE), (s, p) -> s + p)")
-
-    def assign(df: DataFrame, c: DataFrame) -> DataFrame:
-        return (
-            df.join(F.broadcast(c), how="cross")
-            .withColumn("d2", F.expr(l2))
-            .groupBy("id")
-            .agg(
-                F.min_by("cid", F.struct("d2", "cid")).alias("cid"),
-                F.first("v").alias("v"), F.first("norm").alias("norm"),
-            )
-        )
-
-    for _ in range(iters):
-        assigned = assign(base, cents)
-        cents = checkpoint(
-            assigned.select("cid", F.posexplode("v").alias("pos", "x"))
-            .groupBy("cid", "pos").agg(F.round(F.avg("x"), 12).alias("m"))
-            .groupBy("cid")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("cid", F.expr("transform(pm, s -> s.m)").alias("cv"))
-        )
-    return cents, assign(base, cents)
-
-
-def _probe_cells(
-    queries: DataFrame,
-    cents: DataFrame,
-    nprobe: int,
-    query_id_col: str,
-    query_vec_col: str,
-    query_norm_col: str | None,
-) -> DataFrame:
-    """(query_id[, qv, qnorm], cid) — the ``nprobe`` nearest coarse
-    cells per query (broadcast nested loop over nlist rows)."""
-    qcols = [
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("qv"),
-    ]
-    if query_norm_col is not None:
-        qcols.append(F.col(query_norm_col).alias("qnorm"))
-    q = queries.select(*qcols)
-    ql2 = ("aggregate(zip_with(qv, cv, (x, y) -> (x - y) * (x - y)), "
-           "CAST(0.0 AS DOUBLE), (s, p) -> s + p)")
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("d2").asc(), F.col("cid").asc()
-    )
-    keep = ["query_id", "qv"] + (["qnorm"] if query_norm_col else []) + ["cid"]
-    return (
-        q.join(F.broadcast(cents), how="cross")
-        .withColumn("d2", F.expr(ql2))
-        .withColumn("rk", F.row_number().over(w_probe))
-        .where(F.col("rk") <= nprobe)
-        .select(*keep)
-    )
-
-
-def ivf_knn_df(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    nlist: int = 8,
-    iters: int = 2,
-    nprobe: int = 2,
-    id_col: str = "id",
-    vec_col: str = "v",
-    norm_col: str = "norm",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qv",
-    query_norm_col: str = "qnorm",
-) -> DataFrame:
-    """DataFrame twin of operators/ivf.ivf_knn_sql: coarse build
-    (ivf_build), probe ``nprobe`` cells per query, exact cosine top-k
-    on the probed cells. The candidate step is an equi-join on cell id
-    (partition pruning once the corpus is bucketed by cell)."""
-    cents, inv = ivf_build(
-        vectors, nlist, iters, id_col, vec_col, norm_col)
-    probe = _probe_cells(
-        queries, cents, nprobe, query_id_col, query_vec_col, query_norm_col)
-    dot = ("aggregate(zip_with(qv, v, (x, y) -> x * y), "
-           "CAST(0.0 AS DOUBLE), (s, p) -> s + p)")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        probe.join(inv, "cid")
-        .select(
-            "query_id", F.col("id").alias("neighbor_id"),
-            (1.0 - F.expr(dot) / (F.col("qnorm") * F.col("norm"))).alias("dist"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
-
-
-def ivfpq_knn_df(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    nlist: int = 8,
-    iters: int = 2,
-    nprobe: int = 3,
-    m: int = 8,
-    kcb: int = 32,
-    dim: int = 64,
-    id_col: str = "id",
-    vec_col: str = "v",
-    norm_col: str = "norm",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qv",
-) -> DataFrame:
-    """IVF-PQ composite (the registry query ivfpq_knn's reusable form):
-    coarse cells from ivf_build prune the corpus to nprobe cells per
-    query; candidates are scored by PQ ADC lookups over the
-    deterministic-init codebook — M byte-code LUT hits per candidate,
-    no float vectors scanned past the encode stage. Ranked by the
-    rounded distance + id (SCALE.md rule 7)."""
-    from kektordb_spark.operators import pq as PQ
-
-    cents, inv = ivf_build(vectors, nlist, iters, id_col, vec_col, norm_col)
-    probe = _probe_cells(
-        queries, cents, nprobe, query_id_col, query_vec_col, None)
-    codebook = PQ.pq_train(
-        vectors, m=m, k=kcb, iters=0, vec_col=vec_col, id_col=id_col)
-    codes = PQ.pq_encode(vectors, codebook, m=m, vec_col=vec_col,
-                         id_col=id_col, dim=dim)
-    lut = (
-        PQ._subvectors(
-            queries.select(F.col(query_id_col).alias("query_id"),
-                           F.col(query_vec_col).alias("qv")),
-            "qv", "query_id", m, dim)
-        .join(F.broadcast(codebook), "sub")
-        .select(F.col("id").alias("query_id"), "sub",
-                F.col("cid").alias("code"), F.expr(PQ._SQDIST).alias("pd"))
-    )
-    pairs = probe.select("query_id", "cid").join(inv, "cid").select(
-        "query_id", F.col("id").alias("cand_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("dist", 6).asc(), F.col("id").asc())
-    return (
-        pairs.join(codes, pairs.cand_id == codes.id)
-        .join(F.broadcast(lut), ["query_id", "sub", "code"])
-        .groupBy("query_id", "id")
-        .agg(F.sum("pd").alias("dist"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("id").alias("neighbor_id"), "dist", "rank")
-    )
-
-
 def lsh_band_params(
     threshold: float, target_recall: float = 0.9, max_tables: int = 16,
 ) -> tuple[int, int]:
@@ -334,42 +156,19 @@ def lsh_pairs(
     u < w. Approximate: pairs never sharing a bucket are missed;
     (n_planes, n_tables) default to lsh_band_params' threshold-driven
     sizing (recall gated in tests/test_knn_planner.py)."""
-    import random
+    from kektordb_spark.operators.knn import _lsh_planes, _lsh_with_buckets
 
     if n_planes is None or n_tables is None:
         auto_b, auto_t = lsh_band_params(threshold)
         n_planes = n_planes or auto_b
         n_tables = n_tables or auto_t
-    rng = random.Random(seed)
-    planes = [
-        [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
-        for _ in range(n_tables)
-    ]
-
-    def sig_expr(t: int):
-        bits = []
-        for p_i, plane in enumerate(planes[t]):
-            arr = "array(" + ", ".join(
-                f"CAST({x!r} AS DOUBLE)" for x in plane) + ")"
-            bits.append(
-                f"CASE WHEN aggregate(zip_with({vec_col}, {arr}, "
-                f"(x, y) -> x * y), CAST(0.0 AS DOUBLE), (s, p) -> s + p) "
-                f">= 0.0 THEN {1 << p_i} ELSE 0 END"
-            )
-        return F.expr(" + ".join(bits))
-
-    tables = F.array(*[
-        F.struct(F.lit(t).alias("tbl"), sig_expr(t).alias("sig"))
-        for t in range(n_tables)
-    ])
+    vecs = emb.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
+        F.col(norm_col).alias("norm"),
+    )
     # eager: both sides of the bucket self-join scan it
     b = checkpoint(
-        emb.withColumn("bucket", F.explode(tables))
-        .select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-            F.col(norm_col).alias("norm"),
-            F.col("bucket.tbl").alias("tbl"), F.col("bucket.sig").alias("sig"),
-        ),
+        _lsh_with_buckets(vecs, "v", _lsh_planes(seed, n_planes, n_tables, dim)),
         readers=2,
     )
     cand = (
@@ -383,10 +182,9 @@ def lsh_pairs(
         )
         .dropDuplicates(["u", "w"])
     )
-    dot = ("aggregate(zip_with(va, vb, (x, y) -> x * y), "
-           "CAST(0.0 AS DOUBLE), (s, p) -> s + p)")
     return (
-        cand.withColumn("sim", F.expr(dot) / (F.col("na") * F.col("nb")))
+        cand.withColumn(
+            "sim", F.expr(dot_sql("spark", "va", "vb")) / (F.col("na") * F.col("nb")))
         .where(F.col("sim") >= threshold)
         .select("u", "w", "sim")
     )
@@ -493,8 +291,12 @@ def knn_search(
     rank) for every strategy. ``queries=None`` = all-pairs batch.
     ``corpus_size`` is the catalog row-count hint — pass it at scale;
     the default falls back to a count() job. ``pre_filter`` is applied
-    BEFORE the search (V2 filtered-kNN semantics, knn.py:67)."""
+    BEFORE the search (V2 filtered-kNN semantics, knn.py:67). ``ivf``
+    reports dist rounded to 6 dp (ivf_knn_sql's output); the ``ivf``
+    and ``ivfpq`` paths use the same defaults as the registry's
+    ``ivf_knn`` and ``ivfpq_knn`` queries and return their rows."""
     from kektordb_spark.operators import blockgemm as BG
+    from kektordb_spark.operators import ivf as IVF
     from kektordb_spark.operators import knn as KNN
     from kektordb_spark.operators import pq as PQ
 
@@ -547,14 +349,39 @@ def knn_search(
             F.col(query_id_col).alias("query_id"),
             F.col(id_col).alias("neighbor_id"), "dist", "rank",
         )
-    if plan.strategy == "ivf":
-        return ivf_knn_df(vectors, queries, k=k, **cols)
-    if plan.strategy == "ivfpq":
-        return ivfpq_knn_df(
-            vectors, queries, k=k, id_col=id_col, vec_col=vec_col,
-            norm_col=norm_col, query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
+    if plan.strategy in ("ivf", "ivfpq"):
+        # Train the coarse quantizer on this corpus; both the inverted
+        # file and the probe read the centroids.
+        spark = vectors.sparkSession
+        corpus = vectors.select(
+            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"),
+            F.col(norm_col).alias("norm"),
         )
+        cents = checkpoint(spark.sql(
+            IVF.ivf_train_sql("spark", corpus="{corpus}"), corpus=corpus),
+            readers=2)
+    if plan.strategy == "ivf":
+        q = queries.select(
+            F.col(query_id_col).alias("vec_id"),
+            F.col(query_vec_col).alias("v"),
+            F.col(query_norm_col).alias("norm"),
+        )
+        return spark.sql(
+            IVF.ivf_knn_sql("spark", n_queries=None, k=k, cents_source="{cents}",
+                            corpus="{corpus}", queries="{queries}"),
+            cents=cents, corpus=corpus, queries=q,
+        ).select("query_id", "neighbor_id", "dist", "rank")
+    if plan.strategy == "ivfpq":
+        assign = spark.sql(
+            IVF.ivf_assign_sql("spark", "{cents}", corpus="{corpus}"),
+            cents=cents, corpus=corpus)
+        codebook = PQ.pq_train(corpus, m=8, k=32, iters=0)
+        res = PQ.ivfpq_search(
+            queries.select(F.col(query_id_col).alias("query_id"),
+                           F.col(query_vec_col).alias("qv")),
+            cents, assign, codebook, PQ.pq_encode(corpus, codebook, m=8), k=k)
+        return res.select(
+            "query_id", F.col("id").alias("neighbor_id"), "dist", "rank")
     if plan.strategy == "pq":
         cents = PQ.pq_train(vectors, vec_col=vec_col, id_col=id_col)
         codes = PQ.pq_encode(vectors, cents, vec_col=vec_col, id_col=id_col)

@@ -23,12 +23,17 @@ Spark-first shapes:
     vector, equi-join the broadcast LUT, groupBy(doc) sum — candidate
     work is O(N*M) lookups, never O(N*dim) float math, and the shuffle
     carries one partial sum per doc.
+  * IVF-PQ (:func:`ivfpq_search`) — the same ADC restricted to the
+    candidates of the query's probed coarse cells (operators/ivf.py
+    quantizer and probe): the planner's ``ivfpq`` strategy and the
+    ``ivfpq_knn`` query both run it.
 
 Determinism: centroids init from the K lowest-id vectors per subspace,
 fixed iteration count, ties in argmin broken by centroid id — the
 whole pipeline is reproducible bit-for-bit, and tests/test_pq.py pins
-it against a pure-numpy replica. No DuckDB oracle (iterative k-means
-is not one SQL statement); the driver records the rows-only check.
+it against a pure-numpy replica. Lloyd rounds are not one SQL
+statement, so the DuckDB oracles (registry ``knn_pq_top10``,
+``ivfpq_knn``) check encode + ADC over the iters=0 init codebook.
 """
 
 from __future__ import annotations
@@ -36,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kektordb_spark.dialect import l2sq_sql
 from kektordb_spark.lineage import checkpoint
 
 
@@ -54,10 +60,7 @@ def _subvectors(df: DataFrame, vec_col: str, id_col: str, m: int, dim: int) -> D
     )
 
 
-_SQDIST = (
-    "aggregate(zip_with(sv, cv, (x, y) -> (x - y) * (x - y)), "
-    "CAST(0.0 AS DOUBLE), (s, p) -> s + p)"
-)
+_SQDIST = l2sq_sql("spark", "sv", "cv")
 
 
 def _assign(sv: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -147,10 +150,13 @@ def pq_knn(
     query_vec_col: str = "qv",
     query_id_col: str = "query_id",
     dim: int = 64,
+    candidates: DataFrame | None = None,
 ) -> DataFrame:
     """ADC top-k: LUT = query subvector x centroid distances (K*M rows
     per query, broadcast); distance = sum of M lookups via an equi-join
-    on (sub, code). Returns (query_id, id, dist, rank)."""
+    on (sub, code). ``candidates`` (``query_id_col``, id) restricts each
+    query to those ids; default scores every code. Returns
+    (query_id, id, dist, rank)."""
     lut = (
         _subvectors(queries, query_vec_col, query_id_col, m, dim)
         .join(F.broadcast(centroids), "sub")
@@ -159,6 +165,11 @@ def pq_knn(
             F.col("cid").alias("code"), F.expr(_SQDIST).alias("pd"),
         )
     )
+    if candidates is None:
+        scored = codes.join(F.broadcast(lut), ["sub", "code"])
+    else:
+        scored = candidates.join(codes, "id").join(
+            F.broadcast(lut), [query_id_col, "sub", "code"])
     # SCALE.md rule 7: rank by the rounded score + id so the k-boundary
     # is reproducible across partitionings and engines (ADC sums M
     # doubles whose association order is partition-dependent).
@@ -166,12 +177,44 @@ def pq_knn(
         F.round("dist", 6).asc(), F.col("id").asc()
     )
     return (
-        codes.join(F.broadcast(lut), ["sub", "code"])
-        .groupBy(query_id_col, "id")
+        scored.groupBy(query_id_col, "id")
         # integer-grid sum — exactly associative under any partitioning
-        # (same discipline as the hyde/IVFPQ ADC sums; oracle matches).
+        # (same discipline as the hyde ADC sums; oracle matches).
         .agg((F.sum(F.round(F.col("pd") * 1e12, 0).cast("bigint"))
               .cast("double") / F.lit(1e12)).alias("dist"))
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
     )
+
+
+def ivfpq_search(
+    queries: DataFrame,
+    cents: DataFrame,
+    assign: DataFrame,
+    codebook: DataFrame,
+    codes: DataFrame,
+    k: int = 10,
+    nprobe: int = 3,
+    m: int = 8,
+    dim: int = 64,
+) -> DataFrame:
+    """IVF-PQ top-k (the FAISS IVFPQ shape, minus residual encoding):
+    each query (query_id, qv) probes its ``nprobe`` nearest coarse
+    cells of ``cents`` (cid, v); the candidates are the ``assign``
+    (vec_id, cid) members of those cells, scored by :func:`pq_knn`'s
+    ADC over ``codebook``/``codes``. Returns (query_id, id, dist,
+    rank)."""
+    from kektordb_spark.operators.ivf import probe_cte
+
+    probe = queries.sparkSession.sql(
+        "WITH " + probe_cte("spark", "{cents}", nprobe, queries="{queries}",
+                            n_queries=None)
+        + "\nSELECT query_id, cid FROM probe",
+        cents=cents,
+        queries=queries.select(F.col("query_id").alias("vec_id"),
+                               F.col("qv").alias("v")),
+    )
+    cand = probe.join(assign, "cid").select(
+        "query_id", F.col("vec_id").alias("id"))
+    return pq_knn(codes, codebook, queries, k=k, m=m, dim=dim,
+                  candidates=cand)

@@ -475,24 +475,24 @@ FROM (
 register_sql("knn_int8_top10", _knn_int8_sql, ["emb"])
 
 
-def _knn_pq_oracle(m: int = 8, kcb: int = 16, dim: int = 64,
-                   n_q: int = 5, k: int = 10) -> str:
-    """DuckDB oracle for knn_pq_top10: the encode + ADC stages over the
-    deterministic init codebook (K lowest-id subvectors per subspace —
-    exact copies of data, so centroids are bit-identical across engines
-    and the argmin/LUT distances reproduce exactly). Lloyd-trained
-    codebooks stay pinned against numpy in tests/test_pq.py (iterative
-    means are not one SQL statement)."""
+def _pq_oracle_ctes(m: int, kcb: int, dim: int, n_q: int,
+                    corpus_pred: str = "") -> str:
+    """The PQ encode + LUT CTEs of the DuckDB oracles (subs .. lut):
+    the deterministic init codebook (K lowest-id subvectors per
+    subspace — exact copies of data, so centroids are bit-identical
+    across engines and the argmin/LUT distances reproduce exactly),
+    the corpus codes, and the per-query LUT of the vec_id < ``n_q``
+    queries. ``corpus_pred`` is an optional WHERE on the encoded
+    corpus rows."""
     w = dim // m
     d_enc = l2sq_sql("duckdb", "s.sv", "c.cv")
     d_lut = l2sq_sql("duckdb", "q.sv", "c.cv")
-    return f"""
-WITH subs AS (SELECT unnest(range({m})) AS sub),
+    where = f"\n  WHERE {corpus_pred}" if corpus_pred else ""
+    return f"""subs AS (SELECT unnest(range({m})) AS sub),
 sv AS (
   SELECT e.vec_id AS id, s.sub,
          list_slice(e.v, s.sub * {w} + 1, s.sub * {w} + {w}) AS sv
-  FROM emb e CROSS JOIN subs s
-  WHERE e.vec_id >= {n_q}
+  FROM emb e CROSS JOIN subs s{where}
 ),
 cent AS (
   SELECT sub, rn - 1 AS cid, sv AS cv FROM (
@@ -517,13 +517,13 @@ qsv AS (
 lut AS (
   SELECT q.query_id, q.sub, c.cid AS code, {d_lut} AS pd
   FROM qsv q JOIN cent c ON c.sub = q.sub
-),
-adc AS (
-  SELECT l.query_id, e.id,
-         CAST(sum(CAST(round(l.pd * 1e12, 0) AS BIGINT)) AS DOUBLE) / 1e12 AS dist
-  FROM enc e JOIN lut l ON l.sub = e.sub AND l.code = e.code
-  GROUP BY l.query_id, e.id
-)
+)"""
+
+
+def _adc_topk_oracle(k: int) -> str:
+    """Final select of the PQ oracles: top-k of the ``adc(query_id,
+    id, dist)`` CTE by the rounded distance + id."""
+    return f"""
 SELECT query_id, id AS neighbor_id, CAST(rank AS INT) AS rank,
        round(dist, 6) AS dist
 FROM (
@@ -531,7 +531,23 @@ FROM (
                                ORDER BY round(dist, 6) ASC, id ASC) AS rank
   FROM adc
 ) t WHERE rank <= {k}
-""".strip()
+""".rstrip()
+
+
+def _knn_pq_oracle(m: int = 8, kcb: int = 16, dim: int = 64,
+                   n_q: int = 5, k: int = 10) -> str:
+    """DuckDB oracle for knn_pq_top10: the encode + ADC stages over the
+    deterministic init codebook (_pq_oracle_ctes) of the candidate
+    corpus vec_id >= n_q. Lloyd-trained codebooks stay pinned against
+    numpy in tests/test_pq.py (iterative means are not one SQL
+    statement)."""
+    return f"""WITH {_pq_oracle_ctes(m, kcb, dim, n_q, f"e.vec_id >= {n_q}")},
+adc AS (
+  SELECT l.query_id, e.id,
+         CAST(sum(CAST(round(l.pd * 1e12, 0) AS BIGINT)) AS DOUBLE) / 1e12 AS dist
+  FROM enc e JOIN lut l ON l.sub = e.sub AND l.code = e.code
+  GROUP BY l.query_id, e.id
+){_adc_topk_oracle(k)}"""
 
 
 @register("knn_pq_top10", with_oracle_ctes(_knn_pq_oracle(), ["emb"]))
@@ -568,55 +584,15 @@ def _ivfpq_oracle(nlist: int = 8, iters: int = 2, nprobe: int = 3,
                   m: int = 8, kcb: int = 32, dim: int = 64,
                   n_q: int = 5, k: int = 10) -> str:
     """DuckDB oracle for ivfpq_knn: IVF coarse train/assign/probe CTEs
-    (operators/ivf.py) composed with the PQ encode/LUT/ADC CTEs
-    (deterministic init codebook, as in _knn_pq_oracle) — ADC scoring
-    restricted to the probed cells' candidates."""
+    (operators/ivf.py) composed with the PQ encode/LUT CTEs
+    (_pq_oracle_ctes, as in _knn_pq_oracle) — ADC scoring restricted
+    to the probed cells' candidates."""
     from kektordb_spark.operators import ivf as IVF
-    w = dim // m
     parts, cents = IVF._train_parts("duckdb", nlist, iters)
     parts.append(IVF._assign_cte("duckdb", cents, "inv"))
-    qd = l2sq_sql("duckdb", "q.v", "c.v")
-    d_enc = l2sq_sql("duckdb", "s.sv", "c.cv")
-    d_lut = l2sq_sql("duckdb", "q.sv", "c.cv")
-    parts.append(f"""probe AS (
-  SELECT query_id, cid FROM (
-    SELECT q.vec_id AS query_id, c.cid,
-           row_number() OVER (PARTITION BY q.vec_id ORDER BY {qd} ASC, c.cid ASC) AS rk
-    FROM emb q CROSS JOIN {cents} c
-    WHERE q.vec_id < {n_q}
-  ) t WHERE rk <= {nprobe}
-),
-subs AS (SELECT unnest(range({m})) AS sub),
-sv AS (
-  SELECT e.vec_id AS id, s.sub,
-         list_slice(e.v, s.sub * {w} + 1, s.sub * {w} + {w}) AS sv
-  FROM emb e CROSS JOIN subs s
-),
-cent AS (
-  SELECT sub, rn - 1 AS cid, sv AS cv FROM (
-    SELECT sub, sv, row_number() OVER (PARTITION BY sub ORDER BY id ASC) AS rn
-    FROM sv) t
-  WHERE rn <= {kcb}
-),
-enc AS (
-  SELECT id, sub, cid AS code FROM (
-    SELECT s.id, s.sub, c.cid,
-           row_number() OVER (PARTITION BY s.id, s.sub
-                              ORDER BY {d_enc} ASC, c.cid ASC) AS rn
-    FROM sv s JOIN cent c ON c.sub = s.sub) t
-  WHERE rn = 1
-),
-qsv AS (
-  SELECT e.vec_id AS query_id, s.sub,
-         list_slice(e.v, s.sub * {w} + 1, s.sub * {w} + {w}) AS sv
-  FROM emb e CROSS JOIN subs s
-  WHERE e.vec_id < {n_q}
-),
-lut AS (
-  SELECT q.query_id, q.sub, c.cid AS code, {d_lut} AS pd
-  FROM qsv q JOIN cent c ON c.sub = q.sub
-),
-adc AS (
+    parts.append(IVF.probe_cte("duckdb", cents, nprobe, n_queries=n_q))
+    parts.append(_pq_oracle_ctes(m, kcb, dim, n_q))
+    parts.append("""adc AS (
   SELECT p.query_id, i.vec_id AS id,
          CAST(sum(CAST(round(l.pd * 1e12, 0) AS BIGINT)) AS DOUBLE) / 1e12 AS dist
   FROM probe p
@@ -625,17 +601,7 @@ adc AS (
   JOIN lut l ON l.query_id = p.query_id AND l.sub = e.sub AND l.code = e.code
   GROUP BY p.query_id, i.vec_id
 )""")
-    body = ",\n".join(parts)
-    return f"""
-WITH {body}
-SELECT query_id, id AS neighbor_id, CAST(rank AS INT) AS rank,
-       round(dist, 6) AS dist
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY round(dist, 6) ASC, id ASC) AS rank
-  FROM adc
-) t WHERE rank <= {k}
-""".strip()
+    return "WITH " + ",\n".join(parts) + _adc_topk_oracle(k)
 
 
 @register("ivfpq_knn", with_oracle_ctes(_ivfpq_oracle(), ["emb"]))
@@ -645,65 +611,27 @@ def ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer prunes the corpus to nprobe cells (at scale: partition
     pruning over a cell-bucketed table), then candidates are scored by
     PQ ADC lookups (M byte-code LUT hits per vector, no float vectors
-    scanned). Both stages reuse the existing operators unchanged:
-    ivf_train_sql coarse centroids (materialized once — nlist rows),
-    pq_train/pq_encode deterministic-init codebook. Ranked by the
-    rounded distance + id (SCALE.md rule 7) so the 8-term ADC sum's
-    association order cannot flip the k-boundary across engines.
+    scanned) — operators/pq.ivfpq_search, the search the k-NN
+    planner's ``ivfpq`` strategy runs too.
 
     Serves from the PERSISTED index layer (tables.load_tables:
     ``ivf_cents``/``ivf_assign`` coarse quantizer, ``pq_cb_full``/
-    ``pq_codes_full`` codebook+codes) — the query itself is probe →
-    candidate join → ADC, the build/serve split of every production
-    IVFPQ deployment. The oracle re-derives the whole pipeline
-    (train+assign+encode+ADC) in one SQL text and verifies the result
-    value-for-value."""
-    from pyspark.sql.window import Window
-
+    ``pq_codes_full`` deterministic-init codebook + codes) — the query
+    itself is probe → candidate join → ADC, the build/serve split of
+    every production IVFPQ deployment. The oracle re-derives the whole
+    pipeline (train+assign+encode+ADC) in one SQL text and verifies the
+    result value-for-value."""
     from kektordb_spark.operators import pq as PQ
+
     load_tables(spark, sf_dir)
-    emb = spark.table("emb")
-    inv = spark.table("ivf_assign")
-    probe = spark.sql(f"""
-WITH tc AS (SELECT cid, v FROM ivf_cents)
-SELECT query_id, cid FROM (
-  SELECT q.vec_id AS query_id, c.cid,
-         row_number() OVER (PARTITION BY q.vec_id
-                            ORDER BY {l2sq_sql('spark', 'q.v', 'c.v')} ASC,
-                                     c.cid ASC) AS rk
-  FROM emb q CROSS JOIN tc c WHERE q.vec_id < 5
-) t WHERE rk <= 3
-""")
-    codebook = spark.table("pq_cb_full")
-    codes = spark.table("pq_codes_full")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "v")
-    lut = (
-        PQ._subvectors(queries, "v", "query_id", 8, 64)
-        .join(F.broadcast(codebook), "sub")
-        .select(F.col("id").alias("query_id"), "sub",
-                F.col("cid").alias("code"), F.expr(PQ._SQDIST).alias("pd"))
-    )
-    pairs = probe.join(inv, "cid").select("query_id", "vec_id")
-    scored = (
-        pairs.join(codes, pairs.vec_id == codes.id)
-        .join(F.broadcast(lut), ["query_id", "sub", "code"])
-        .groupBy("query_id", "id")
-        # integer-grid sum: the 8 ADC terms arrive through a shuffled
-        # GROUP BY whose reduction order varies with partitioning —
-        # quantized terms sum exactly associatively (see the hyde
-        # docstring for the full rationale), matching the oracle SQL.
-        .agg((F.sum(F.round(F.col("pd") * 1e12, 0).cast("bigint"))
-              .cast("double") / F.lit(1e12)).alias("dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("dist", 6).asc(), F.col("id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 10)
-        .select("query_id", F.col("id").alias("neighbor_id"),
-                F.col("rank").cast("int"), F.round("dist", 6).alias("dist"))
-    )
+    queries = spark.table("emb").where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
+    res = PQ.ivfpq_search(
+        queries, spark.table("ivf_cents"), spark.table("ivf_assign"),
+        spark.table("pq_cb_full"), spark.table("pq_codes_full"), k=10)
+    return res.select(
+        "query_id", F.col("id").alias("neighbor_id"),
+        F.col("rank").cast("int"), F.round("dist", 6).alias("dist"))
 
 
 def _knn_f16_oracle(k: int = 10, n_q: int = 5) -> str:
@@ -925,7 +853,7 @@ def knn_graph_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F8 graph-topology pre-filter + V2 filtered k-NN, composed from
     the bfs and knn_exact operators (allowlist semi-join between)."""
     load_tables(spark, sf_dir)
-    roots = spark.createDataFrame([(_GRAPH_KNN_ROOT,)], "node string")
+    roots = G.literal_rows(spark, [(_GRAPH_KNN_ROOT,)], ["node"])
     # materialize_edges=False: with per-frontier checkpoints (bfs()
     # default since r4) each level joins once, so depth-3 re-scans the
     # scratch-parquet edges table 3x — measured cheaper than one eager
@@ -1457,7 +1385,7 @@ def graph_bfs_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G8 bounded BFS with time travel: min-depth reachability from two
     part nodes through the FK DAG at t=1998-06-01."""
     load_tables(spark, sf_dir)
-    roots = spark.createDataFrame([(r,) for r in BFS_ROOTS], "node string")
+    roots = G.literal_rows(spark, [(r,) for r in BFS_ROOTS], ["node"])
     return G.bfs(spark.table("edges"), roots, max_depth=3, at_time=T_MID,
                  ).select(
         "node", F.col("depth").cast("int").alias("depth")
@@ -1505,7 +1433,7 @@ def graph_traverse_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G5 VTraverse dot-path: part -in_order-> order -placed_by->
     customer chains (ops.go:594-692)."""
     load_tables(spark, sf_dir)
-    roots = spark.createDataFrame([(r,) for r in _TRAVERSE_ROOTS], "node string")
+    roots = G.literal_rows(spark, [(r,) for r in _TRAVERSE_ROOTS], ["node"])
     return G.traverse(spark.table("edges"), roots, _TRAVERSE_PATH, at_time=T_MID)
 
 
@@ -1530,7 +1458,7 @@ def graph_subgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G8 VExtractSubgraph: undirected BFS depth 2 from one customer
     over two relations, induced active edge set (graph.go:296-386)."""
     load_tables(spark, sf_dir)
-    roots = spark.createDataFrame([("c_1",)], "node string")
+    roots = G.literal_rows(spark, [("c_1",)], ["node"])
     return G.extract_subgraph(
         spark.table("edges"), roots, max_depth=2,
         relations=_SUBGRAPH_RELS, at_time=T_MID,

@@ -46,10 +46,6 @@ import xml.etree.ElementTree as ET
 import zipfile
 from dataclasses import dataclass, field
 
-TEXT_EXTENSIONS = {
-    ".txt", ".md", ".markdown", ".json", ".yaml", ".yml", ".go", ".py",
-    ".js", ".ts", ".html", ".css", ".csv",
-}
 SKIPPED_EXTENSIONS = {".aof", ".kdb", ".tmp"}
 DEFAULT_CLI_TIMEOUT = 30.0
 

@@ -42,10 +42,6 @@ FEATURE_SCHEMA = (
 FEATURE_DIM = 16
 
 
-class MediaDecodeNotAvailable(NotImplementedError):
-    """Raised by real decoders when the codec library is absent."""
-
-
 def _fake_decode(content: bytes, kind: str) -> list[float]:
     """STUB decode/feature-extract: deterministic pseudo-features from
     the content digest. A real deployment replaces this with

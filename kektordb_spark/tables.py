@@ -409,7 +409,7 @@ def index_layers(spark: SparkSession, base: dict[str, DataFrame]) -> list[IndexL
     from kektordb_spark.operators import pq as _PQ
     from kektordb_spark.operators.blockgemm import GEMM_BLOCKS_VIEW, packed_blocks
     from kektordb_spark.operators.consolidation import ecur_sql
-    from kektordb_spark.operators.ivf import _assign_cte, _mean_cte, ivf_train_sql
+    from kektordb_spark.operators.ivf import _mean_cte, ivf_assign_sql, ivf_train_sql
     from kektordb_spark.operators.kcore import copurch_weighted_sql
     from kektordb_spark.operators.knn import lsh_signatures
     from kektordb_spark.operators.nsw import nng_descent_build
@@ -449,9 +449,7 @@ def index_layers(spark: SparkSession, base: dict[str, DataFrame]) -> list[IndexL
         # assignment) and the PQ codebooks/byte codes.
         IndexLayer("ivf_cents", (), lambda: sql(ivf_train_sql("spark"))),
         IndexLayer("ivf_assign", ("ivf_cents",), lambda: sql(
-            "WITH tc AS (SELECT cid, v FROM ivf_cents),\n"
-            + _assign_cte("spark", "tc", "inv")
-            + "\nSELECT vec_id, cid FROM inv")),
+            ivf_assign_sql("spark", "ivf_cents"))),
         IndexLayer("pq_cb_full", (), lambda: _PQ.pq_train(emb(), m=8, k=32, iters=0)),
         IndexLayer("pq_codes_full", ("pq_cb_full",), lambda: _PQ.pq_encode(
             emb(), spark.table("pq_cb_full"), m=8)),

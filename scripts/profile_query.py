@@ -6,6 +6,7 @@ bench.py), printing per-run wall seconds, the number of Spark jobs the
 query submitted, and optionally the formatted plan. Usage:
 
     python scripts/profile_query.py [--explain DIR] [--reps N] q1 q2 ...
+    python scripts/profile_query.py --layers [q1 ...]
 
 Timing methodology matches bench.py (collect() the query's DataFrame,
 clear caches + persistent RDDs between runs). Jobs are counted via the
@@ -24,6 +25,11 @@ and exchange ``plan_id``s count up across the session; codegen-stage
 and AQE query-stage ids follow the order in which sibling stages
 happen to run; the load_tables materialization directory has a random
 name. All of these are blanked.
+
+``--layers`` prints one line per persisted index layer after
+load_tables: row count, md5 over the sorted per-row md5s of the rows'
+JSON, and the schema. Two checkouts whose layers hold the same rows
+print the same lines.
 
 Checkpoints are counted by wrapping ``DataFrame.localCheckpoint`` in
 this process only; a call site is the first caller frame outside
@@ -65,6 +71,26 @@ def normalize_plan(plan: str) -> str:
 CHECKPOINTS: collections.Counter = collections.Counter()  # (site, eager) -> calls
 
 
+def layer_lines(spark) -> list[str]:
+    """``name rows=N md5=... schema=...`` for every index layer of the
+    last load_tables build, by name."""
+    from pyspark.sql import functions as F
+
+    from kektordb_spark.tables import LAYER_TIMES
+
+    lines = []
+    for name in sorted(LAYER_TIMES):
+        df = spark.table(name)
+        row_md5 = F.md5(F.to_json(F.struct(*df.columns)))
+        n, digest = df.select(row_md5.alias("h")).agg(
+            F.count("*"),
+            F.md5(F.array_join(F.array_sort(F.collect_list("h")), "")),
+        ).first()
+        lines.append(f"{name} rows={n} md5={digest} "
+                     f"schema={df.schema.simpleString()}")
+    return lines
+
+
 def _count_checkpoints(cls: type) -> None:
     """Wrap ``cls.localCheckpoint`` to tally calls by site and mode."""
     inner = cls.localCheckpoint
@@ -99,10 +125,13 @@ def main() -> None:
     reps = 2
     names: list[str] = []
     run_all = False
+    layers = False
     it = iter(args)
     for a in it:
         if a == "--all":
             run_all = True
+        elif a == "--layers":
+            layers = True
         elif a == "--explain":
             explain_dir = next(it)
         elif a == "--suffix":
@@ -132,6 +161,8 @@ def main() -> None:
         f"load_tables: total={time.perf_counter() - t0:.3f}s "
         f"jobs={job_mark() - hi0} {_ckpt_since(ck0)}"
     )
+    if layers:
+        print("\n".join(layer_lines(spark)))
     spark.sql("SELECT count(*) FROM lineitem").collect()
     spark.range(8).mapInPandas(lambda it: it, "id long").collect()
     spark.sql("SELECT count(*) FROM docs_tok_par WHERE size(toks) >= 0").collect()

@@ -134,3 +134,56 @@ def test_ivfpq_path_schema_and_recall(spark):
         got.setdefault(r.query_id, set()).add(r.neighbor_id)
     hits = sum(len(want[q] & got.get(q, set())) for q in want)
     assert hits >= len(want) * 2, f"IVF-PQ recall too low: {hits}/{len(want) * 10}"
+
+
+def _forced(spark, strategy):
+    emb, queries, _ = _emb(spark)
+    return KP.knn_search(
+        emb, queries, k=10, strategy=strategy,
+        id_col="vec_id", vec_col="v", norm_col="norm")
+
+
+def test_forced_ivf_returns_the_registry_rows(spark):
+    """The forced ivf strategy trains its quantizer on the corpus it is
+    given; over emb with the vec_id < 5 queries that is exactly the
+    ivf_knn query, served from the persisted layers."""
+    from kektordb_spark.plans.registry import queries
+
+    got = sorted(map(tuple, _forced(spark, "ivf")
+                     .select("query_id", "neighbor_id", "rank", "dist").collect()))
+    want = sorted(map(tuple, queries()["ivf_knn"](spark, SF_MED)
+                      .select("query_id", "neighbor_id", "rank", "dist").collect()))
+    assert len(got) == 5 * 10
+    assert got == want
+
+
+def _ivfpq_rows(df):
+    return sorted(
+        (r.query_id, r.neighbor_id, r.rank, round(r.dist, 6)) for r in df.collect())
+
+
+def test_forced_ivfpq_returns_the_registry_rows(spark):
+    from kektordb_spark.plans.registry import queries
+
+    got = _ivfpq_rows(_forced(spark, "ivfpq"))
+    want = _ivfpq_rows(queries()["ivfpq_knn"](spark, SF_MED))
+    assert len(got) == 5 * 10
+    assert got == want
+
+
+def test_forced_ivfpq_invariant_under_partitioning(spark):
+    """Same settings as tests/test_float_stability.py: the ADC sums on
+    the integer grid, so the k-boundary cannot move with the shuffle
+    partitioning."""
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    outs = []
+    try:
+        for parts, aqe in (("2", "true"), ("7", "false"), ("64", "true")):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+            outs.append(sorted(map(tuple, _forced(spark, "ivfpq").collect())))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    assert outs[0] == outs[1] == outs[2]

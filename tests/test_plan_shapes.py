@@ -871,3 +871,40 @@ def test_r8_sweep_no_sort_merge_joins(spark, name, max_smj):
     join path (plans/r08/<query>_{before,after}.txt for the shapes)."""
     plan = plan_of(spark, name)
     assert plan.count("- SortMergeJoin") <= max_smj
+
+
+def _python_rdd_scans(plan: str) -> list[str]:
+    """Arguments of every RDD scan in ``plan`` that is not a
+    checkpoint: a ``createDataFrame`` of a Python list, whose every
+    read runs Python tasks."""
+    return [ln for ln in plan.splitlines()
+            if "ExistingRDD, " in ln and " at localCheckpoint " not in ln]
+
+
+@pytest.mark.parametrize("name", [
+    "knn_graph_filtered", "graph_bfs_depth3", "graph_traverse_2hop",
+    "graph_find_path", "graph_subgraph",
+])
+def test_literal_roots_are_values_relations(spark, monkeypatch, name):
+    """The BFS roots are a SQL VALUES relation (a local table in the
+    plan), not an RDD built from a Python list. Checked on the final
+    plan and on every relation the runner checkpoints on the way (the
+    roots of find_path only reach the plan of its visited set)."""
+    from kektordb_spark.tables import load_tables
+
+    load_tables(spark, SF_SMALL)
+    cls = type(spark.range(0))
+    inner = cls.localCheckpoint
+    plans = []
+
+    def explain(df) -> str:
+        return spark._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted")
+
+    def recording(self, eager=True, *args, **kwargs):
+        plans.append(explain(self))
+        return inner(self, eager, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+    plans.append(explain(registry._registry[name][0](spark, SF_SMALL)))
+    assert [s for p in plans for s in _python_rdd_scans(p)] == []
