@@ -643,9 +643,7 @@ def vsearch(
     # 3. graph allowlist intersection (resolveGraphFilter)
     if graph_query and graph_query.get("root_id"):
         depth = graph_query.get("max_depth", 1)
-        roots = index.spark.createDataFrame(
-            [(graph_query["root_id"],)], "node string"
-        )
+        roots = G.literal_rows(index.spark, [(graph_query["root_id"],)], ["node"])
         reach = G.bfs(
             index.edges, roots,
             max_depth=max(1, min(depth if depth > 0 else 1, 5)),
@@ -697,10 +695,9 @@ def vsearch(
         import math as _math
 
         qnorm = _math.sqrt(sum(x * x for x in query)) or 1.0
-        queries = index.spark.createDataFrame(
-            [(0, [float(x) for x in query], float(qnorm))],
-            "query_id int, qv array<double>, qnorm double",
-        )
+        queries = G.literal_rows(
+            index.spark, [(0, [float(x) for x in query], float(qnorm))],
+            ["query_id", "qv", "qnorm"])
         knn = KNN.knn_exact(
             allowed.where(F.col("v").isNotNull()), queries,
             k=k, metric=index.metric,

@@ -45,7 +45,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kektordb_spark.dialect import dot_sql
@@ -284,11 +284,11 @@ def knn_search(
     query_id_col: str = "query_id",
     query_vec_col: str = "qv",
     query_norm_col: str = "qnorm",
-    exclude_self: bool = False,
     lsh_sig: DataFrame | None = None,
 ) -> DataFrame:
     """One search entry point; output (query_id, neighbor_id, dist,
-    rank) for every strategy. ``queries=None`` = all-pairs batch.
+    rank) for every strategy. ``queries=None`` = all-pairs batch over
+    ``vectors``, without each vector's own row.
     ``corpus_size`` is the catalog row-count hint — pass it at scale;
     the default falls back to a count() job. ``pre_filter`` is applied
     BEFORE the search (V2 filtered-kNN semantics, knn.py:67). ``ivf``
@@ -320,13 +320,18 @@ def knn_search(
             res = res.join(F.broadcast(qids), "query_id", "left_semi")
         return res.select("query_id", "neighbor_id", "dist", "rank")
 
-    if queries is None:
+    # All-pairs over the corpus: every vector is also a query and would
+    # be its own nearest neighbour. Search k+1, drop the self row and
+    # re-rank: the k best non-self rows are always among the k+1 best,
+    # whatever the strategy.
+    all_pairs = queries is None
+    k_search = k + 1 if all_pairs else k
+    if all_pairs:
         queries = vectors.select(
             F.col(id_col).alias(query_id_col),
             F.col(vec_col).alias(query_vec_col),
             F.col(norm_col).alias(query_norm_col),
         )
-        exclude_self = True
 
     cols = dict(
         id_col=id_col, vec_col=vec_col, norm_col=norm_col,
@@ -334,22 +339,19 @@ def knn_search(
         query_norm_col=query_norm_col,
     )
     if plan.strategy == "exact":
-        res = KNN.knn_exact(
-            vectors, queries, k=k, metric=metric,
-            exclude_self=exclude_self, **cols,
-        )
-        return res.select(
+        res = KNN.knn_exact(vectors, queries, k=k_search, metric=metric, **cols)
+        res = res.select(
             F.col(query_id_col).alias("query_id"),
             F.col(id_col).alias("neighbor_id"), "dist", "rank",
         )
-    if plan.strategy == "lsh":
+    elif plan.strategy == "lsh":
         res = KNN.lsh_bucketed_knn(
-            vectors, queries, k=k, sig_source=lsh_sig, **cols)
-        return res.select(
+            vectors, queries, k=k_search, sig_source=lsh_sig, **cols)
+        res = res.select(
             F.col(query_id_col).alias("query_id"),
             F.col(id_col).alias("neighbor_id"), "dist", "rank",
         )
-    if plan.strategy in ("ivf", "ivfpq"):
+    elif plan.strategy in ("ivf", "ivfpq"):
         # Train the coarse quantizer on this corpus; both the inverted
         # file and the probe read the centroids.
         spark = vectors.sparkSession
@@ -360,37 +362,46 @@ def knn_search(
         cents = checkpoint(spark.sql(
             IVF.ivf_train_sql("spark", corpus="{corpus}"), corpus=corpus),
             readers=2)
-    if plan.strategy == "ivf":
-        q = queries.select(
-            F.col(query_id_col).alias("vec_id"),
-            F.col(query_vec_col).alias("v"),
-            F.col(query_norm_col).alias("norm"),
-        )
-        return spark.sql(
-            IVF.ivf_knn_sql("spark", n_queries=None, k=k, cents_source="{cents}",
-                            corpus="{corpus}", queries="{queries}"),
-            cents=cents, corpus=corpus, queries=q,
-        ).select("query_id", "neighbor_id", "dist", "rank")
-    if plan.strategy == "ivfpq":
-        assign = spark.sql(
-            IVF.ivf_assign_sql("spark", "{cents}", corpus="{corpus}"),
-            cents=cents, corpus=corpus)
-        codebook = PQ.pq_train(corpus, m=8, k=32, iters=0)
-        res = PQ.ivfpq_search(
-            queries.select(F.col(query_id_col).alias("query_id"),
-                           F.col(query_vec_col).alias("qv")),
-            cents, assign, codebook, PQ.pq_encode(corpus, codebook, m=8), k=k)
-        return res.select(
-            "query_id", F.col("id").alias("neighbor_id"), "dist", "rank")
-    if plan.strategy == "pq":
+        if plan.strategy == "ivf":
+            q = queries.select(
+                F.col(query_id_col).alias("vec_id"),
+                F.col(query_vec_col).alias("v"),
+                F.col(query_norm_col).alias("norm"),
+            )
+            res = spark.sql(
+                IVF.ivf_knn_sql("spark", n_queries=None, k=k_search, cents_source="{cents}",
+                                corpus="{corpus}", queries="{queries}"),
+                cents=cents, corpus=corpus, queries=q,
+            ).select("query_id", "neighbor_id", "dist", "rank")
+        else:
+            assign = spark.sql(
+                IVF.ivf_assign_sql("spark", "{cents}", corpus="{corpus}"),
+                cents=cents, corpus=corpus)
+            codebook = PQ.pq_train(corpus, m=8, k=32, iters=0)
+            res = PQ.ivfpq_search(
+                queries.select(F.col(query_id_col).alias("query_id"),
+                               F.col(query_vec_col).alias("qv")),
+                cents, assign, codebook, PQ.pq_encode(corpus, codebook, m=8), k=k_search)
+            res = res.select(
+                "query_id", F.col("id").alias("neighbor_id"), "dist", "rank")
+    elif plan.strategy == "pq":
         cents = PQ.pq_train(vectors, vec_col=vec_col, id_col=id_col)
         codes = PQ.pq_encode(vectors, cents, vec_col=vec_col, id_col=id_col)
         res = PQ.pq_knn(
-            codes, cents, queries, k=k,
+            codes, cents, queries, k=k_search,
             query_vec_col=query_vec_col, query_id_col=query_id_col,
         )
-        return res.select(
+        res = res.select(
             F.col(query_id_col).alias("query_id"),
             F.col("id").alias("neighbor_id"), "dist", "rank",
         )
-    raise ValueError(f"unknown strategy {plan.strategy}")
+    else:
+        raise ValueError(f"unknown strategy {plan.strategy}")
+    if not all_pairs:
+        return res
+    return (
+        res.where(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("rank", F.row_number().over(
+            Window.partitionBy("query_id").orderBy("rank")))
+        .where(F.col("rank") <= k)
+    )

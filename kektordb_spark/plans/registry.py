@@ -920,7 +920,7 @@ register_sql("knn_with_decay", _knn_decay_sql, ["emb", "mem"])
 # --------------------------------------------------------------------------
 
 @register("bm25_top10",
-          with_oracle_ctes(TX.bm25_oracle_sql("duckdb", BM25_QUERY, 10), ["docs_tok"]))
+          with_oracle_ctes(TX.bm25_sql("duckdb", BM25_QUERY, 10), ["docs_tok"]))
 def bm25_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2 BM25 ranked retrieval (core.go:1965-2068 semantics)."""
     load_tables(spark, sf_dir)
@@ -985,7 +985,7 @@ def _bm25_italian_oracle(k: int = 10) -> str:
         (it, stem_word_it(it)) for it in set(_IT_MAP.values()) if it not in stops
     )
     vals = ", ".join(f"('{w}', '{s}')" for w, s in stems)
-    body = TX.bm25_oracle_sql("duckdb", _it_query_tokens(), k, source="it_tok")
+    body = TX.bm25_sql("duckdb", _it_query_tokens(), k, source="it_tok")
     body = body.lstrip()
     assert body.upper().startswith("WITH ")
     return f"""WITH stem_map(w, stem) AS (VALUES {vals}),
@@ -1085,7 +1085,7 @@ def _hybrid_oracle(dialect: str) -> str:
 """.rstrip()
     # k=None: the Spark twin (hybrid_fusion_top15) normalizes over the
     # corpus-wide BM25 scored set, so this oracle branch must too.
-    bm25_scored = TX.bm25_oracle_sql(dialect, BM25_QUERY, None, scored_only=True)
+    bm25_scored = TX.bm25_sql(dialect, BM25_QUERY, None, scored_only=True)
     return f"""
 WITH vecs AS (
 {knn_part}
@@ -1110,7 +1110,7 @@ LIMIT 15
 
 
 #: per-branch candidate cap for RRF — the "top-N retrieved list" each
-#: branch contributes (matches the BM25 candidate cap already in use)
+#: branch contributes
 RRF_CAND_CAP = 500
 
 
@@ -1138,8 +1138,7 @@ def _rrf_sql(dialect: str, k0: int = 60, k: int = 15) -> str:
          round(1.0 - ({dot_sql(dialect, 'q.v', 'c.v')}) / (q.norm * c.norm), 6) AS dist
   FROM emb q CROSS JOIN emb c
   WHERE q.vec_id = 0 AND c.vec_id <> 0"""
-    bm25_scored = TX.bm25_oracle_sql(
-        dialect, BM25_QUERY, 500, source=src, scored_only=True)
+    bm25_scored = TX.bm25_sql(dialect, BM25_QUERY, None, source=src, scored_only=True)
     return f"""
 WITH vec_d AS ({knn}),
 vec_rk AS (
@@ -1239,7 +1238,7 @@ def hybrid_contains_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 _registry["hybrid_contains_filter"] = (
     hybrid_contains_filter,
     with_oracle_ctes(
-        TX.bm25_oracle_sql(
+        TX.bm25_sql(
             "duckdb", ["merge", "sort", "window"], 10,
             allow_pred=FL.filter_to_sql("lang = 'en'", _DOCS_SCHEMA, "duckdb"),
         ),
@@ -1264,7 +1263,7 @@ def _vsearch_facade_oracle() -> str:
     dot = dot_sql("duckdb", "q.v", "c.v")
     # k=None: api.vsearch's text branch scores corpus-wide then
     # post-filters (ops.go:997-1026); this DuckDB twin must match.
-    bm25_raw = TX.bm25_oracle_sql(
+    bm25_raw = TX.bm25_sql(
         "duckdb", BM25_QUERY, None,
         allow_pred="lang = 'en'", scored_only=True)
     return f"""

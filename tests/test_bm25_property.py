@@ -8,8 +8,13 @@ b=0.75 length normalization).
 
 Corpus-stat convention: N and avgdl cover every document in the
 corpus (the engine's documented semantics — docs_tok is the
-per-field index). The SQL text is shared by both dialects, so this
-DuckDB-side pin covers the Spark side modulo the dialect parity suite.
+per-field index). ``bm25_sql`` is the only BM25 text: every Spark
+text-search query runs it (``bm25_scores`` binds a DataFrame to it) and
+every oracle runs it on DuckDB. The hypothesis property checks the
+DuckDB side; the fixed cases run the same text on both engines and
+check both against the reference, and the raw scores against each
+other (they may differ by the few ulp that separate DuckDB's ``ln``
+from Java's).
 """
 
 from __future__ import annotations
@@ -20,7 +25,7 @@ import duckdb
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from kektordb_spark.functions.text import BM25_B, BM25_K1, bm25_oracle_sql
+from kektordb_spark.functions.text import BM25_B, BM25_K1, bm25_sql
 
 
 def ref_bm25(
@@ -63,21 +68,54 @@ def ref_bm25(
 _doc = st.lists(st.sampled_from(["alpha", "beta", "gamma", "delta"]), max_size=10)
 _query = st.lists(
     st.sampled_from(["alpha", "beta", "gamma", "delta", "missing"]),
-    min_size=1, max_size=5,
+    max_size=5,
 )
 
 
-@settings(max_examples=80, deadline=None)
-@given(docs=st.lists(_doc, min_size=1, max_size=8), query=_query)
-def test_bm25_oracle_matches_go_reference(docs, query) -> None:
+def _duck(docs: list[list[str]]):
     con = duckdb.connect()
     con.execute("CREATE TABLE docs_tok (doc_id BIGINT, toks VARCHAR[])")
     con.executemany(
         "INSERT INTO docs_tok VALUES (?, ?)", [(i, t) for i, t in enumerate(docs)]
     )
-    rows = con.execute(bm25_oracle_sql("duckdb", query, k=10**6)).fetchall()
-    got = {d: s for d, s in rows}
-    want = ref_bm25(docs, query)
+    return con
+
+
+def _check(got: dict[int, float], want: dict[int, float]) -> None:
     assert set(got) == set(want)
     for d in want:
         assert got[d] == pytest.approx(want[d], abs=2e-6)
+
+
+@settings(max_examples=80, deadline=None)
+@given(docs=st.lists(_doc, min_size=1, max_size=8), query=_query)
+def test_bm25_oracle_matches_go_reference(docs, query) -> None:
+    rows = _duck(docs).execute(bm25_sql("duckdb", query, k=10**6)).fetchall()
+    _check(dict(rows), ref_bm25(docs, query))
+
+
+_CORPUS = [["alpha", "beta", "alpha"], [], ["beta", "gamma"], ["alpha"],
+           ["delta", "delta", "beta", "alpha", "gamma"]]
+
+
+@pytest.mark.parametrize("query", [
+    [],                                   # empty query: nothing scored
+    ["gamma"],                            # one token
+    ["alpha", "beta", "alpha", "gamma"],  # a repeated token
+    ["missing", "beta"],                  # a token in no doc
+], ids=["empty", "one", "repeated", "absent"])
+def test_bm25_text_on_both_engines(spark, query) -> None:
+    """The same bm25_sql text on Spark and DuckDB over a corpus with a
+    doc that has no tokens: both match the reference, and so do their
+    raw scores."""
+    want = ref_bm25(_CORPUS, query)
+    docs = spark.createDataFrame(list(enumerate(_CORPUS)), "doc_id bigint, toks array<string>")
+    duck = _duck(_CORPUS)
+    for scored_only in (False, True):
+        spark_rows = dict(spark.sql(bm25_sql(
+            "spark", query, 10**6, source="{docs}", scored_only=scored_only),
+            docs=docs).collect())
+        duck_rows = dict(duck.execute(bm25_sql(
+            "duckdb", query, 10**6, scored_only=scored_only)).fetchall())
+        _check(spark_rows, want)
+        assert spark_rows == pytest.approx(duck_rows, rel=1e-14, abs=0)

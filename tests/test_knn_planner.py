@@ -4,11 +4,12 @@ output schema with correct values (exact parity / recall gates)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kektordb_spark.operators import knn as KNN
 from kektordb_spark.operators import knn_planner as KP
-from tests.conftest import SF_MED
+from tests.conftest import SF_MED, SF_SMALL
 
 OUT_COLS = ["query_id", "neighbor_id", "dist", "rank"]
 
@@ -92,6 +93,26 @@ def test_gemm_allpairs_schema(spark):
     rows = res.where(F.col("query_id") == 0).collect()
     assert len(rows) == 3
     assert all(r.neighbor_id != 0 for r in rows)  # self excluded
+
+
+@pytest.mark.parametrize("strategy", ["exact", "gemm", "lsh", "ivf", "ivfpq", "pq"])
+def test_all_pairs_excludes_self(spark, strategy):
+    """queries=None searches the corpus against itself: no strategy
+    may return a vector as its own neighbour, and each query keeps at
+    most k rows ranked 1..n."""
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").select(
+        "vec_id", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"))
+    emb = emb.withColumn(
+        "norm", F.expr("sqrt(aggregate(v, 0D, (s, x) -> s + x * x))"))
+    rows = KP.knn_search(emb, queries=None, k=3, strategy=strategy,
+                         id_col="vec_id", vec_col="v", norm_col="norm").collect()
+    assert rows
+    assert [r for r in rows if r.query_id == r.neighbor_id] == []
+    ranks = {}
+    for r in rows:
+        ranks.setdefault(r.query_id, []).append(r.rank)
+    for q, rs in ranks.items():
+        assert sorted(rs) == list(range(1, len(rs) + 1)) and len(rs) <= 3, (q, rs)
 
 
 def test_similar_pairs_planner_and_lsh_recall(spark):

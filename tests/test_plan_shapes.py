@@ -358,10 +358,28 @@ def test_knn_broadcasts_queries_over_scan(spark):
     assert "row_number" in plan and "query_id" in plan
 
 
+def _broadcasts_bm25_stats(plan: str) -> bool:
+    """The one-row BM25 stats relation is broadcast: a keyless
+    aggregate yields n_docs, and a BroadcastExchange ships it."""
+    blocks = plan.split("\n\n")
+    keyless = any(re.match(r"\(\d+\) HashAggregate", b) and "Keys: []" in b
+                  and " AS n_docs#" in b for b in blocks)
+    shipped = any(re.match(r"\(\d+\) BroadcastExchange\nInput \[\d+\]: \[[^\]]*\bn_docs#", b)
+                  for b in blocks)
+    return keyless and shipped
+
+
 def test_bm25_no_cartesian_and_bounded_exchanges(spark):
-    plan = plan_of(spark, "bm25_top10")
-    assert "CartesianProduct" not in plan
-    assert "TakeOrderedAndProject" in plan
+    """Both BM25 plans — the DataFrame binding (bm25_top10) and the SQL
+    text run as is (hybrid_rrf_top15) — take the array-scan shape: tf
+    from per-doc token scans with no posting explode, the stats row
+    broadcast, the top-k a TakeOrderedAndProject."""
+    for name in ("bm25_top10", "hybrid_rrf_top15"):
+        plan = plan_of(spark, name)
+        assert "CartesianProduct" not in plan, name
+        assert "Generate" not in plan, name
+        assert _broadcasts_bm25_stats(plan), name
+        assert "TakeOrderedAndProject" in plan, name
 
 
 def test_filter_dsl_pushes_to_scan(spark):
@@ -883,11 +901,12 @@ def _python_rdd_scans(plan: str) -> list[str]:
 
 @pytest.mark.parametrize("name", [
     "knn_graph_filtered", "graph_bfs_depth3", "graph_traverse_2hop",
-    "graph_find_path", "graph_subgraph",
+    "graph_find_path", "graph_subgraph", "vsearch_hybrid_facade",
 ])
 def test_literal_roots_are_values_relations(spark, monkeypatch, name):
-    """The BFS roots are a SQL VALUES relation (a local table in the
-    plan), not an RDD built from a Python list. Checked on the final
+    """Literal rows — the BFS roots, the facade's query vector — are a
+    SQL VALUES relation (a local table in the plan), not an RDD built
+    from a Python list. Checked on the final
     plan and on every relation the runner checkpoints on the way (the
     roots of find_path only reach the plan of its visited set)."""
     from kektordb_spark.tables import load_tables
