@@ -67,6 +67,32 @@ CC_TAU = 0.35
 CC_MAX_LEVELS = 12
 
 
+def min_label_ctes(edges: str, iters: int) -> tuple[list[str], str]:
+    """Bounded min-label propagation as a CTE chain over the undirected
+    (u, w) edge relation ``edges``: ``l0`` labels every node with
+    itself, round ``l{i}`` keeps the least of a node's own and its
+    neighbors' labels. Returns (cte_list, final_relation_name). One
+    graph hop per round, so ``iters`` bounds the cluster diameter it
+    resolves (see the module docstring for the exact alternative).
+
+    Spark (r8): the edge list (e) and the neighbor-label probe side (p)
+    of each round are broadcast — both are node-grained or
+    duplicate-rate-bounded but stats-less, so the un-hinted rounds
+    planned as LeftOuter SortMergeJoins (dedup_minhash_clusters:
+    26 -> 21 jobs, identical rows). DuckDB reads the hints as
+    comments."""
+    parts = [f"l0 AS (SELECT DISTINCT u AS node, u AS label FROM {edges})"]
+    for i in range(1, iters + 1):
+        parts.append(f"""l{i} AS (
+  SELECT /*+ BROADCAST(e), BROADCAST(p) */ n.node, least(n.label, coalesce(min(p.label), n.label)) AS label
+  FROM l{i - 1} n
+  LEFT JOIN {edges} e ON e.u = n.node
+  LEFT JOIN l{i - 1} p ON p.node = e.w
+  GROUP BY n.node, n.label
+)""")
+    return parts, f"l{iters}"
+
+
 def components_oracle_sql(threshold: float = CC_TAU) -> str:
     """DuckDB oracle: recursive reachability closure (id, origin) over
     the undirected similarity edges; component = min reachable origin.

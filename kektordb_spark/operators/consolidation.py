@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from kektordb_spark.dialect import dot_sql, sorted_csv
 from kektordb_spark.lineage import checkpoint
+from kektordb_spark.operators.components import min_label_ctes
 
 
 def _pairs_cte(dialect: str, threshold: float) -> str:
@@ -44,19 +45,8 @@ def _label_ctes(
 ) -> tuple[list[str], str]:
     """Shared CTE chain: similarity pairs -> undirected edges -> bounded
     min-label propagation. Returns (cte_list, final_relation_name)."""
-    parts = [_pairs_cte(dialect, threshold)]
-    parts.append("l0 AS (SELECT DISTINCT u AS node, u AS label FROM und)")
-    prev = "l0"
-    for i in range(1, iters + 1):
-        parts.append(f"""l{i} AS (
-  SELECT n.node, least(n.label, coalesce(min(p.label), n.label)) AS label
-  FROM {prev} n
-  LEFT JOIN und e ON e.u = n.node
-  LEFT JOIN {prev} p ON p.node = e.w
-  GROUP BY n.node, n.label
-)""")
-        prev = f"l{i}"
-    return parts, prev
+    labels, prev = min_label_ctes("und", iters)
+    return [_pairs_cte(dialect, threshold), *labels], prev
 
 
 def consolidation_sql(

@@ -34,6 +34,7 @@ from kektordb_spark.dialect import (
     concat_arr, docs_tok, dot_sql, elem, empty_str_arr, hex_to_int, int_div,
     seq1, size, sorted_csv, transform, unnest, xor,
 )
+from kektordb_spark.operators.components import min_label_ctes
 
 
 def word_shingles(dialect: str, toks: str, n: int = 3) -> str:
@@ -570,23 +571,9 @@ def minhash_clusters_sql(
     parts = [pairs, """und AS (
   SELECT id_a AS u, id_b AS w FROM pairs0
   UNION ALL SELECT id_b AS u, id_a AS w FROM pairs0
-)""", "l0 AS (SELECT DISTINCT u AS node, u AS label FROM und)"]
-    prev = "l0"
-    # Spark (r8): broadcast the dup-pair edge list (e) and the
-    # neighbor-label probe side (p) of each propagation round — both
-    # are duplicate-rate-bounded (e = verified dup pairs x2, p =
-    # node-grained labels) but stats-less, so the un-hinted rounds
-    # planned as LeftOuter SortMergeJoins (26 -> 21 jobs, SMJ -> 0,
-    # identical rows). DuckDB reads the hints as comments.
-    for i in range(1, iters + 1):
-        parts.append(f"""l{i} AS (
-  SELECT /*+ BROADCAST(e), BROADCAST(p) */ n.node, least(n.label, coalesce(min(p.label), n.label)) AS label
-  FROM {prev} n
-  LEFT JOIN und e ON e.u = n.node
-  LEFT JOIN {prev} p ON p.node = e.w
-  GROUP BY n.node, n.label
-)""")
-        prev = f"l{i}"
+)"""]
+    labels, prev = min_label_ctes("und", iters)
+    parts += labels
     members = sorted_csv(dialect, "node")
     parts.append(f"""grp AS (
   SELECT label, CAST(count(*) AS INT) AS size, {members} AS members

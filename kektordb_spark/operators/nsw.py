@@ -35,15 +35,21 @@ tests/test_ann_recall.py (beam recall@10 >= NSW_RECALL_FLOOR vs exact)
 
 The result is persisted as the adjacency relation ``nng(src, dst)`` —
 the flat navigable-small-world layer-0 the hierarchy approximates. The
-SERVE is synchronous beam search:
+SERVE is synchronous beam search, written once as a BEAM-KEYED hop
+chain: every relation carries a ``beam`` column, so one chain runs any
+set of beam widths side by side (the recall sweep) and a one-beam
+search is the chain over a one-row beam relation (the serve and insert
+paths):
 
-  frontier_0 = {entry = min vec_id}          (one-row relation)
-  per hop:  expand   = frontier JOIN nng (equi-join on src)
+  visited_0 = init x beams    (entry = min vec_id, or the query's IVF
+                               cell sample for the insert path)
+  per hop:  frontier = per-(beam, query) top-beam of the last hop's
+                       scored rows (rank window, rk <= beam)
+            expand   = frontier JOIN nng (equi-join on src)
             new      = expand EXCEPT visited (never re-score a node)
             scored   = new JOIN emb (one index-order distance fold)
             visited += scored
-            frontier = per-query top-BEAM of scored (rank window)
-  answer = per-query top-k of visited (self excluded)
+  answer = per-(beam, query) top-k of visited (self excluded)
 
 Greedy best-first (the paper's searchLayer, hnsw_index.go:390-430)
 expands ONE node per step — inherently sequential, latency-optimal for
@@ -62,12 +68,17 @@ with vec_id tie-break; EXCEPT is set-exact on integer ids. The DuckDB
 oracle unrolls the hop chain with MATERIALIZED CTEs (visited and
 scored each have 2 consumers per hop — naive inlining compounds
 per-level like the kcore oracle); the Spark runner checkpoints each
-hop's scored relation, accumulates visited as a union of checkpointed
-pieces, and early-exits when a hop discovers nothing new.
+hop's scored relation and accumulates visited as a union of
+checkpointed pieces. It runs every hop: no per-hop count, so no
+early exit. A hop past the graph's reach discovers nothing and leaves
+visited unchanged (idempotence past exhaustion); its frontier is
+empty, and AQE's empty-relation propagation collapses the expand join
+without scanning the adjacency — the identity the oracle's fixed
+unroll computes.
 
 At scale: the adjacency index shuffles once at build; per hop the
-frontier is <= BEAM x n_queries rows (broadcast side of the expand
-join), scored is <= BEAM x M x n_queries rows, and the distance folds
+frontier is <= sum(beams) x queries rows (broadcast side of the expand
+join), scored is <= sum(beams) x M x queries rows, and the distance folds
 run inside whole-stage codegen over the vector join — the corpus is
 touched only through the (vec_id -> v) hash join on discovered ids,
 never scanned per query.
@@ -79,11 +90,12 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kektordb_spark.dialect import dot_sql, materialized
+from kektordb_spark.dialect import arr_lit, dot_sql, materialized, unnest
 from kektordb_spark.lineage import checkpoint, constraint_propagation_off
 
-NSW_M = 8        # out-degree of the persisted k-NN graph
-NSW_BEAM = 16    # per-query frontier width
+NSW_M = 8        # out-edges an inserted node links (ann_graph_merge's k)
+NSW_BEAM = 16    # per-query frontier width of the serve and insert paths
+NSW_SWEEP_BEAMS = (8, 16)  # widths the recall sweep runs side by side
 NSW_HOPS = 8     # synchronous expansion rounds
 NSW_K = 10
 NSW_NQ = 5       # query batch: vec_id < NSW_NQ (the ivf_knn convention)
@@ -174,8 +186,8 @@ JOIN emb c ON c.vec_id = p.dst
 """.strip()
 
 
-def nng_topm_sql(rel: str, m: int = NSW_M) -> str:
-    """Per-src top-``m`` of a scored (src, dst, dist) relation, ranked
+def nng_topm_sql(rel: str) -> str:
+    """Per-src top-NNG_M of a scored (src, dst, dist) relation, ranked
     on the RAW fold value with dst tie-break (the repo's float
     discipline: rank on bit-identical raw values, never on a rounded
     display form)."""
@@ -185,7 +197,7 @@ SELECT src, dst, dist FROM (
          row_number() OVER (PARTITION BY src
                             ORDER BY dist ASC, dst ASC) AS rk
   FROM {rel}
-) t WHERE rk <= {m}
+) t WHERE rk <= {NNG_M}
 """.strip()
 
 
@@ -211,25 +223,16 @@ WHERE NOT EXISTS (
 """.strip()
 
 
-def nng_descent_parts(
-    dialect: str,
-    m: int = NNG_M,
-    rounds: int = NNG_ROUNDS,
-    sig_source: str | None = None,
-) -> tuple[list[str], str]:
-    """Unrolled CTE chain deriving the NN-descent adjacency; returns
-    (parts, final relation name). ``sig_source`` lets the Spark side
-    read the persisted seed-signature view while the oracle derives the
-    signatures inline. Multi-consumer CTEs are MATERIALIZED on DuckDB
+def nng_descent_parts(dialect: str) -> tuple[list[str], str]:
+    """Unrolled CTE chain deriving the NN-descent adjacency (seed
+    signatures inline, NNG_ROUNDS rounds); returns (parts, final
+    relation name). Multi-consumer CTEs are MATERIALIZED on DuckDB
     (naive inlining compounds per round — the kcore/NSW oracle rule)."""
     mat = materialized(dialect)
-    sig = (f"sg AS{mat} (\n{nng_sig_sql(dialect)}\n)"
-           if sig_source is None
-           else f"sg AS (SELECT vec_id, tbl, sig FROM {sig_source})")
     from kektordb_spark.tables import ordv_parts
 
     parts = [
-        sig,
+        f"sg AS{mat} (\n{nng_sig_sql(dialect)}\n)",
         # two-level dense rank (tables.ordv_parts): no corpus-wide
         # single-partition row_number() — the r6 judge's structural
         # scale finding (nsw.py:259 pre-r7)
@@ -238,12 +241,12 @@ def nng_descent_parts(
         f"cand0 AS{mat} (\n{nng_seed_cand_sql(dialect)}\n)",
         # CTE names carry an nd_ prefix where they could collide with
         # the beam-search unroll's per-hop names (s0..sH) when both
-        # chains share one oracle text (nsw_oracle_sql)
+        # chains share one oracle text (_beam_unroll_parts)
         f"nd_s0 AS{mat} (\n{nng_pair_scored_sql(dialect, 'cand0')}\n)",
-        f"nd_g0 AS{mat} (\n{nng_topm_sql('nd_s0', m)}\n)",
+        f"nd_g0 AS{mat} (\n{nng_topm_sql('nd_s0')}\n)",
         "tried0 AS (SELECT src, dst FROM cand0)",
     ]
-    for i in range(rounds):
+    for i in range(NNG_ROUNDS):
         parts.append(
             f"nd_p{i} AS{mat} "
             f"(\n{nng_proposals_sql(f'nd_g{i}', f'tried{i}')}\n)")
@@ -253,42 +256,28 @@ def nng_descent_parts(
             f"nd_g{i + 1} AS{mat} (\n"
             + nng_topm_sql(
                 f"(SELECT src, dst, dist FROM nd_g{i} "
-                f"UNION ALL SELECT src, dst, dist FROM nd_t{i}) mg{i}", m)
+                f"UNION ALL SELECT src, dst, dist FROM nd_t{i}) mg{i}")
             + "\n)")
         parts.append(
             f"tried{i + 1} AS{mat} (SELECT src, dst FROM tried{i} "
             f"UNION ALL SELECT src, dst FROM nd_p{i})")
-    return parts, f"nd_g{rounds}"
+    return parts, f"nd_g{NNG_ROUNDS}"
 
 
-def nng_descent_oracle_sql(
-    dialect: str,
-    m: int = NNG_M,
-    rounds: int = NNG_ROUNDS,
-    sig_source: str | None = None,
-) -> str:
+def nng_descent_oracle_sql(dialect: str) -> str:
     """Single-text adjacency build (the ann_graph_build query/oracle):
     returns the final (src, dst) edge set."""
-    parts, fin = nng_descent_parts(dialect, m, rounds, sig_source)
+    parts, fin = nng_descent_parts(dialect)
     return ("WITH " + ",\n".join(parts)
             + f"\nSELECT src, dst FROM {fin}")
 
 
-def nng_descent_build(
-    spark: SparkSession,
-    m: int = NNG_M,
-    rounds: int = NNG_ROUNDS,
-    sig_source: str | None = None,
-) -> DataFrame:
+def nng_descent_build(spark: SparkSession, rounds: int = NNG_ROUNDS) -> DataFrame:
     """Spark runner for the descent build: seed once, then per-round
     checkpointed proposals/score/merge with the iterative-runner
     discipline (flat lineage, ONE scalar read per round, early-exit
     when a round proposes nothing — identity past that point, so the
     unrolled oracle always matches). Returns the (src, dst) adjacency.
-
-    ``sig_source``: temp-view name of a persisted seed-signature
-    relation (vec_id, tbl, sig) under the NNG_LSH lattice; defaults to
-    deriving the signatures inline from ``emb``.
 
     Every per-round relation is a LAZY checkpoint (r7): the checkpoint
     still truncates lineage at once, but materialization is deferred
@@ -299,8 +288,7 @@ def nng_descent_build(
 
     with constraint_propagation_off(spark):
         seed_parts = [
-            (f"sg AS (\n{nng_sig_sql('spark')}\n)" if sig_source is None
-             else f"sg AS (SELECT vec_id, tbl, sig FROM {sig_source})"),
+            f"sg AS (\n{nng_sig_sql('spark')}\n)",
             *ordv_parts(),
             "nv AS (SELECT count(*) AS n FROM emb)",
         ]
@@ -310,7 +298,7 @@ def nng_descent_build(
         ))
         cand.createOrReplaceTempView("_nng_tried_0")
         g = checkpoint(spark.sql(nng_topm_sql(
-            f"(\n{nng_pair_scored_sql('spark', '_nng_tried_0')}\n) sc", m
+            f"(\n{nng_pair_scored_sql('spark', '_nng_tried_0')}\n) sc"
         )))
         n_tried = 1
         for i in range(rounds):
@@ -330,7 +318,7 @@ def nng_descent_build(
             g = checkpoint(spark.sql(nng_topm_sql(
                 "(SELECT src, dst, dist FROM _nng_g UNION ALL "
                 f"SELECT src, dst, dist FROM (\n"
-                f"{nng_pair_scored_sql('spark', '_nng_p')}\n) s2) mg", m
+                f"{nng_pair_scored_sql('spark', '_nng_p')}\n) s2) mg"
             )))
         out = g.select("src", "dst")
         # materialize INSIDE the constraint-propagation scope: the final
@@ -341,17 +329,12 @@ def nng_descent_build(
         return out
 
 
-def nsw_init_sql(
-    dialect: str,
-    n_queries: int = NSW_NQ,
-    query_pred: str | None = None,
-) -> str:
-    """Hop-0 visited relation: every query scored against the entry
-    node (global min vec_id — a one-row broadcast subquery).
-    ``query_pred`` overrides the default id-prefix batch (used by the
-    ann_graph_merge insert path)."""
+def nsw_init_sql(dialect: str, query_pred: str | None = None) -> str:
+    """Entry init: every query scored against the entry node (global
+    min vec_id — a one-row broadcast subquery). ``query_pred``
+    overrides the default id-prefix batch (vec_id < NSW_NQ)."""
     d = _dist(dialect)
-    pred = query_pred if query_pred is not None else f"q.vec_id < {n_queries}"
+    pred = query_pred if query_pred is not None else f"q.vec_id < {NSW_NQ}"
     return f"""
 SELECT q.vec_id AS query_id, c.vec_id AS node, {d} AS dist
 FROM emb q JOIN emb c ON c.vec_id = (SELECT min(vec_id) FROM emb)
@@ -378,18 +361,14 @@ NSW_MERGE_HOPS = 3
 NSW_SEED_CAP = 64
 
 
-def nsw_cell_init_sql(
-    dialect: str,
-    query_pred: str,
-    assign_source: str = "ivf_assign",
-    seed_cap: int = NSW_SEED_CAP,
-) -> str:
-    """Hop-0 visited relation for the INSERT path: each arriving vector
-    scored against a bounded, deterministic sample of its IVF cell —
-    the cell comes from ONE equi-join on the persisted assignment (a
-    true new arrival pays the nlist-row broadcast argmin instead, same
-    cost class), cell members from one equi-join on the cell id, capped
-    at ``seed_cap`` per cell by md5 rank (see NSW_SEED_CAP). The
+def nsw_cell_init_sql(dialect: str, query_pred: str) -> str:
+    """Cell init for the INSERT path: each arriving vector scored
+    against a bounded, deterministic sample of its IVF cell — the cell
+    comes from ONE equi-join on the ``ivf_assign`` relation (the
+    persisted layer on Spark, the inline train+assign chain in the
+    oracle; a true new arrival pays the nlist-row broadcast argmin
+    instead, same cost class), cell members from one equi-join on the
+    cell id, capped at NSW_SEED_CAP per cell by md5 rank. The
     reference's insert likewise descends to the right neighborhood
     before linking (hnsw_index.go:456-520); here the coarse quantizer
     plays the upper layers' role and the beam hops refine from the
@@ -406,174 +385,71 @@ def nsw_cell_init_sql(
     return f"""
 SELECT q.vec_id AS query_id, c.vec_id AS node, {d} AS dist
 FROM emb q
-JOIN {assign_source} aq ON aq.vec_id = q.vec_id
+JOIN ivf_assign aq ON aq.vec_id = q.vec_id
 JOIN (
   SELECT vec_id, cid FROM (
     SELECT vec_id, cid,
            row_number() OVER (PARTITION BY cid ORDER BY md5(CAST(vec_id AS STRING))) AS crk
-    FROM {assign_source} x
-  ) r WHERE crk <= {seed_cap}
+    FROM ivf_assign x
+  ) r WHERE crk <= {NSW_SEED_CAP}
 ) ac ON ac.cid = aq.cid
 JOIN emb c ON c.vec_id = ac.vec_id
 WHERE {query_pred}
 """.strip()
 
 
-def nsw_new_sql(frontier: str, visited: str, adj: str) -> str:
-    """Nodes discovered this hop and never scored before. No inner
-    DISTINCT: EXCEPT is a set operation in both engines (its output is
-    already duplicate-free), and the redundant pre-aggregate cost one
-    Exchange + HashAggregate per hop (r7 plan audit)."""
+def nsw_hop0_sql(
+    dialect: str,
+    beams: tuple[int, ...],
+    init: str = "entry",
+    query_pred: str | None = None,
+) -> str:
+    """Hop-0 visited relation (beam, query_id, node, dist): the entry
+    init (nsw_init_sql) or, for ``init='cell'``, the cell init
+    (nsw_cell_init_sql), one copy per beam width. A one-beam search is
+    the chain over one width. The copies come from a generator over the
+    widths' array literal, not a join with a beams relation: on Spark a
+    cross join with a literal relation is one more broadcast job."""
+    i = (nsw_cell_init_sql(dialect, query_pred) if init == "cell"
+         else nsw_init_sql(dialect, query_pred))
+    widths = arr_lit(dialect, ", ".join(map(str, beams)))
+    return (f"SELECT bs.beam, i.query_id, i.node, i.dist\n"
+            f"FROM (\n{i}\n) i\n{unnest(dialect, widths, 'beam', 'bs')}")
+
+
+def nsw_frontier_sql(scored: str, beams: tuple[int, ...]) -> str:
+    """Next frontier: per-(beam, query) top-``beam`` of the previous
+    hop's new nodes. Beam is a GROUPING column, so one rank window
+    serves every width (`rk <= beam` compares each row against its own
+    group's width). The literal bound max(beams) changes no row; it
+    lets Spark rank a per-partition top-n before the window's shuffle
+    (WindowGroupLimit), which a column bound alone does not."""
     return f"""
-SELECT f.query_id, g.dst AS node
-FROM {frontier} f JOIN {adj} g ON g.src = f.node
-EXCEPT
-SELECT query_id, node FROM {visited}
-""".strip()
-
-
-def nsw_scored_sql(dialect: str, new: str) -> str:
-    """Distance fold for the hop's new (query, node) pairs."""
-    d = _dist(dialect)
-    return f"""
-SELECT n.query_id, n.node, {d} AS dist
-FROM {new} n
-JOIN emb q ON q.vec_id = n.query_id
-JOIN emb c ON c.vec_id = n.node
-""".strip()
-
-
-def nsw_frontier_sql(scored: str, beam: int = NSW_BEAM) -> str:
-    """Next frontier: per-query top-``beam`` of the hop's new nodes."""
-    return f"""
-SELECT query_id, node FROM (
-  SELECT query_id, node,
-         row_number() OVER (PARTITION BY query_id
+SELECT beam, query_id, node FROM (
+  SELECT beam, query_id, node,
+         row_number() OVER (PARTITION BY beam, query_id
                             ORDER BY dist ASC, node ASC) AS rk
   FROM {scored}
-) t WHERE rk <= {beam}
+) t WHERE rk <= {max(beams)} AND rk <= beam
 """.strip()
 
 
-def nsw_final_sql(
-    visited: str, k: int = NSW_K, exclude_self: bool = True,
-) -> str:
-    """Answer: per-query top-``k`` of everything scored, self excluded
-    (display distance on round-6, ranking on the raw fold)."""
-    where = "WHERE node <> query_id" if exclude_self else ""
-    return f"""
-SELECT query_id, node AS neighbor_id, CAST(rk AS INT) AS rank,
-       round(dist, 6) + 0.0 AS dist
-FROM (
-  SELECT query_id, node, dist,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY dist ASC, node ASC) AS rk
-  FROM {visited} {where}
-) t WHERE rk <= {k}
-""".strip()
-
-
-def nsw_oracle_sql(
-    dialect: str,
-    m: int = NNG_M,
-    beam: int = NSW_BEAM,
-    hops: int = NSW_HOPS,
-    k: int = NSW_K,
-    n_queries: int = NSW_NQ,
-    adj_source: str | None = None,
-    query_pred: str | None = None,
-    exclude_self: bool = True,
-    init: str = "entry",
-) -> str:
-    """Single-text unrolled form: descent graph build + ``hops`` beam
-    rounds + final top-k. MATERIALIZED CTEs for the multi-consumer
-    relations (see module docstring); ``adj_source`` lets the Spark
-    side serve the adjacency from the persisted index while the oracle
-    derives it end-to-end (LSH-seeded NN-descent, nng_descent_parts —
-    the same pipeline tables.load_tables persists). ``init='cell'``
-    seeds hop-0 from each query's IVF cell (nsw_cell_init_sql — the
-    insert path); the oracle then derives the IVF train+assign chain
-    inline too, and hop-0's frontier is the per-query top-``beam`` of
-    the cell scores instead of the single entry row."""
-    mat = materialized(dialect)
-    if adj_source is None:
-        dparts, fin = nng_descent_parts(dialect, m)
-        adj = dparts + [f"nng AS{mat} (SELECT src, dst FROM {fin})"]
-    else:
-        adj = [f"nng AS (SELECT src, dst FROM {adj_source})"]
-    if init == "cell":
-        from kektordb_spark.operators.ivf import _assign_cte, _train_parts
-
-        tparts, cents = _train_parts(dialect, nlist=8, iters=2)
-        init_parts = [
-            *tparts,
-            _assign_cte(dialect, cents, "cellinv"),
-            f"v0 AS{mat} (\n"
-            + nsw_cell_init_sql(
-                dialect, query_pred,
-                assign_source="(SELECT vec_id, cid FROM cellinv)")
-            + "\n)",
-            f"f0 AS{mat} (\n{nsw_frontier_sql('v0', beam)}\n)",
-        ]
-    else:
-        init_parts = [
-            f"v0 AS{mat} "
-            f"(\n{nsw_init_sql(dialect, n_queries, query_pred)}\n)",
-            "f0 AS (SELECT query_id, node FROM v0)",
-        ]
-    parts = [*adj, *init_parts]
-    for i in range(hops):
-        parts.append(
-            f"n{i} AS{mat} (\n{nsw_new_sql(f'f{i}', f'v{i}', 'nng')}\n)")
-        parts.append(
-            f"s{i} AS{mat} (\n{nsw_scored_sql(dialect, f'n{i}')}\n)")
-        parts.append(
-            f"v{i + 1} AS{mat} (SELECT * FROM v{i} "
-            f"UNION ALL SELECT * FROM s{i})")
-        parts.append(
-            f"f{i + 1} AS{mat} (\n{nsw_frontier_sql(f's{i}', beam)}\n)")
-    return ("WITH " + ",\n".join(parts) + "\n"
-            + nsw_final_sql(f"v{hops}", k, exclude_self))
-
-
-def nsw_exact_topk_sql(
-    dialect: str, k: int = NSW_K, n_queries: int = NSW_NQ,
-) -> str:
-    """Ground-truth branch for the recall sweep: exact cosine top-k
-    per query, self excluded, same raw-fold ranking as the beam path.
-    Queries bounded (vec_id < n_queries) so the per-query rank windows
-    partition into n_queries groups."""
-    d = _dist(dialect)
-    return f"""
-SELECT query_id, node FROM (
-  SELECT q.vec_id AS query_id, c.vec_id AS node,
-         row_number() OVER (PARTITION BY q.vec_id
-                            ORDER BY {d} ASC, c.vec_id ASC) AS rk
-  FROM emb q JOIN emb c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < {n_queries}
-) t WHERE rk <= {k}
-""".strip()
-
-
-def _sweep_beams_rel(beams: tuple[int, ...]) -> str:
-    """Inline |beams|-row relation, portable in both dialects."""
-    return ("(" + " UNION ALL ".join(f"SELECT {b} AS beam" for b in beams)
-            + ")")
-
-
-def _sweep_new_sql(frontier: str, visited: str, adj: str) -> str:
-    """Beam-keyed variant of nsw_new_sql: nodes a (beam, query) pair
-    discovers this hop and never scored before. No inner DISTINCT —
-    EXCEPT already dedups (see nsw_new_sql)."""
+def nsw_new_sql(frontier: str, visited: str) -> str:
+    """Nodes a (beam, query) pair discovers this hop over the ``nng``
+    adjacency and never scored before. No inner DISTINCT: EXCEPT is a
+    set operation in both engines (its output is already
+    duplicate-free), and the redundant pre-aggregate cost one
+    Exchange + HashAggregate per hop (r7 plan audit)."""
     return f"""
 SELECT f.beam, f.query_id, g.dst AS node
-FROM {frontier} f JOIN {adj} g ON g.src = f.node
+FROM {frontier} f JOIN nng g ON g.src = f.node
 EXCEPT
 SELECT beam, query_id, node FROM {visited}
 """.strip()
 
 
-def _sweep_scored_sql(dialect: str, new: str) -> str:
+def nsw_scored_sql(dialect: str, new: str) -> str:
+    """Distance fold for the hop's new (beam, query, node) rows."""
     d = _dist(dialect)
     return f"""
 SELECT n.beam, n.query_id, n.node, {d} AS dist
@@ -583,36 +459,133 @@ JOIN emb c ON c.vec_id = n.node
 """.strip()
 
 
-def _sweep_frontier_sql(scored: str) -> str:
-    """Per-(beam, query) top-``beam`` — beam is a GROUPING column, so
-    one rank window serves every width (`rk <= beam` compares each row
-    against its own group's width)."""
+def nsw_final_sql(visited: str, k: int = NSW_K) -> str:
+    """Answer of a one-beam search: per-query top-``k`` of everything
+    scored, self excluded (display distance on round-6, ranking on the
+    raw fold)."""
     return f"""
-SELECT beam, query_id, node FROM (
-  SELECT beam, query_id, node,
-         row_number() OVER (PARTITION BY beam, query_id
+SELECT query_id, node AS neighbor_id, CAST(rk AS INT) AS rank,
+       round(dist, 6) + 0.0 AS dist
+FROM (
+  SELECT query_id, node, dist,
+         row_number() OVER (PARTITION BY query_id
                             ORDER BY dist ASC, node ASC) AS rk
-  FROM {scored}
-) t WHERE rk <= beam
+  FROM {visited} WHERE node <> query_id
+) t WHERE rk <= {k}
 """.strip()
 
 
-def nsw_recall_sweep_sql(
+def _beam_unroll_parts(
     dialect: str,
-    beams: tuple[int, ...] = (8, 16),
-    m: int = NNG_M,
+    beams: tuple[int, ...],
+    hops: int,
+    init: str = "entry",
+    query_pred: str | None = None,
+) -> list[str]:
+    """The oracle's unrolled search: descent graph build (``nng``),
+    the IVF train+assign chain for ``init='cell'``, then hop-0
+    (``v0``) and ``hops`` rounds of frontier ``f``, new ``n``, scored
+    ``s`` and visited ``v``; the last visited relation is
+    ``v{hops}``. MATERIALIZED CTEs for the multi-consumer relations
+    (see module docstring)."""
+    mat = materialized(dialect)
+    dparts, fin = nng_descent_parts(dialect)
+    parts = [*dparts, f"nng AS{mat} (SELECT src, dst FROM {fin})"]
+    if init == "cell":
+        from kektordb_spark.operators.ivf import _assign_cte, _train_parts
+
+        tparts, cents = _train_parts(dialect, nlist=8, iters=2)
+        parts += [*tparts, _assign_cte(dialect, cents, "ivf_assign")]
+    parts.append(
+        f"v0 AS{mat} (\n{nsw_hop0_sql(dialect, beams, init, query_pred)}\n)")
+    prev = "v0"
+    for i in range(hops):
+        parts.append(f"f{i} AS{mat} (\n{nsw_frontier_sql(prev, beams)}\n)")
+        parts.append(f"n{i} AS{mat} (\n{nsw_new_sql(f'f{i}', f'v{i}')}\n)")
+        parts.append(f"s{i} AS{mat} (\n{nsw_scored_sql(dialect, f'n{i}')}\n)")
+        parts.append(f"v{i + 1} AS{mat} (SELECT * FROM v{i} "
+                     f"UNION ALL SELECT * FROM s{i})")
+        prev = f"s{i}"
+    return parts
+
+
+def nsw_oracle_sql(
+    dialect: str,
     hops: int = NSW_HOPS,
     k: int = NSW_K,
-    n_queries: int = NSW_NQ,
-    adj_source: str | None = None,
+    query_pred: str | None = None,
+    init: str = "entry",
 ) -> str:
-    """Recall@k sweep of the beam-search serve path at several beam
-    widths against the exact oracle — the reference's GloVe benchmark
-    loop (clients/python/benchmark_glove.py:83-117: index, then per
-    query compare vsearch(ef_search) against the numpy ground truth
-    and average the recall) promoted to ONE in-engine query, the same
-    audit-promotion discipline as ann_recall_audit. One row per beam:
-    (beam, hits, recall_pct), integers on the floor grid.
+    """Single-text unrolled form of nsw_search: the oracle derives the
+    adjacency end-to-end (LSH-seeded NN-descent, the same pipeline
+    tables.load_tables persists as ``nng``), runs ``hops`` one-beam
+    rounds and the final top-k. ``init='cell'`` seeds hop-0 from each
+    query's IVF cell (the insert path); the oracle then derives the
+    IVF train+assign chain inline too."""
+    parts = _beam_unroll_parts(dialect, (NSW_BEAM,), hops, init, query_pred)
+    return ("WITH " + ",\n".join(parts) + "\n"
+            + nsw_final_sql(f"v{hops}", k))
+
+
+def nsw_exact_topk_sql(dialect: str) -> str:
+    """Ground-truth branch for the recall sweep: exact cosine top-k
+    per query, self excluded, same raw-fold ranking as the beam path.
+    Queries bounded (vec_id < NSW_NQ) so the per-query rank windows
+    partition into NSW_NQ groups."""
+    d = _dist(dialect)
+    return f"""
+SELECT query_id, node FROM (
+  SELECT q.vec_id AS query_id, c.vec_id AS node,
+         row_number() OVER (PARTITION BY q.vec_id
+                            ORDER BY {d} ASC, c.vec_id ASC) AS rk
+  FROM emb q JOIN emb c ON c.vec_id <> q.vec_id
+  WHERE q.vec_id < {NSW_NQ}
+) t WHERE rk <= {NSW_K}
+""".strip()
+
+
+def _recall_sql(dialect: str, visited: str, parts: list[str]) -> str:
+    """Recall tail of the sweep over the beam-keyed ``visited``
+    relation, appended to the CTE list ``parts``: per-(beam, query)
+    top-k (self excluded), hits against the exact top-k, one row per
+    beam. Spark runs it with ``parts`` empty over the hop loop's
+    views; the oracle appends it to its unroll."""
+    mat = materialized(dialect)
+    beams = " UNION ALL ".join(f"SELECT {b} AS beam" for b in NSW_SWEEP_BEAMS)
+    parts = [
+        *parts,
+        f"ex AS{mat} (\n{nsw_exact_topk_sql(dialect)}\n)",
+        f"""swp_top AS (
+  SELECT beam, query_id, node FROM (
+    SELECT beam, query_id, node,
+           row_number() OVER (PARTITION BY beam, query_id
+                              ORDER BY dist ASC, node ASC) AS rk
+    FROM {visited} WHERE node <> query_id
+  ) t WHERE rk <= {NSW_K}
+)""",
+        "swp_hit AS (SELECT t.beam, count(*) AS hits FROM swp_top t "
+        "JOIN ex e ON e.query_id = t.query_id AND e.node = t.node "
+        "GROUP BY t.beam)",
+    ]
+    return ("WITH " + ",\n".join(parts) + f"""
+SELECT CAST(bs.beam AS INT) AS beam,
+       CAST(coalesce(h.hits, 0) AS INT) AS hits,
+       CAST(floor(coalesce(h.hits, 0) * 100e0 / {NSW_K * NSW_NQ}) AS INT)
+         AS recall_pct
+FROM ({beams}) bs LEFT JOIN swp_hit h ON h.beam = bs.beam
+ORDER BY bs.beam
+""")
+
+
+def nsw_recall_sweep_sql(dialect: str) -> str:
+    """Recall@k sweep of the beam-search serve path at the
+    NSW_SWEEP_BEAMS widths against the exact oracle — the reference's
+    GloVe benchmark loop (clients/python/benchmark_glove.py:83-117:
+    index, then per query compare vsearch(ef_search) against the numpy
+    ground truth and average the recall) promoted to ONE in-engine
+    query, the same audit-promotion discipline as ann_recall_audit.
+    One row per beam: (beam, hits, recall_pct), integers on the floor
+    grid.
 
     ALL beams run in ONE hop chain: every relation carries a ``beam``
     key (the search state of different widths never interacts), so the
@@ -624,165 +597,69 @@ def nsw_recall_sweep_sql(
     is one exact scan + one multi-width serve pass over the persisted
     graph — the measurement a pipeline runs before picking its
     serve-time beam."""
-    mat = materialized(dialect)
-    if adj_source is None:
-        dparts, fin = nng_descent_parts(dialect, m)
-        parts = dparts + [f"nngx AS{mat} (SELECT src, dst FROM {fin})"]
-    else:
-        parts = [f"nngx AS (SELECT src, dst FROM {adj_source})"]
-    parts.append(
-        f"ex AS{mat} (\n{nsw_exact_topk_sql(dialect, k, n_queries)}\n)")
-    # hop-0: the beam-independent entry scores fanned out to one copy
-    # per width (|beams| x n_queries rows)
-    parts.append(
-        f"swp_v0 AS{mat} (SELECT bs.beam, i.query_id, i.node, i.dist\n"
-        f"FROM (\n{nsw_init_sql(dialect, n_queries)}\n) i\n"
-        f"CROSS JOIN {_sweep_beams_rel(beams)} bs)")
-    parts.append("swp_f0 AS (SELECT beam, query_id, node FROM swp_v0)")
-    for i in range(hops):
-        parts.append(f"swp_n{i} AS{mat} "
-                     f"(\n{_sweep_new_sql(f'swp_f{i}', f'swp_v{i}', 'nngx')}\n)")
-        parts.append(f"swp_s{i} AS{mat} "
-                     f"(\n{_sweep_scored_sql(dialect, f'swp_n{i}')}\n)")
-        parts.append(f"swp_v{i + 1} AS{mat} (SELECT * FROM swp_v{i} "
-                     f"UNION ALL SELECT * FROM swp_s{i})")
-        parts.append(f"swp_f{i + 1} AS{mat} "
-                     f"(\n{_sweep_frontier_sql(f'swp_s{i}')}\n)")
-    parts.append(f"""swp_top AS (
-  SELECT beam, query_id, node FROM (
-    SELECT beam, query_id, node,
-           row_number() OVER (PARTITION BY beam, query_id
-                              ORDER BY dist ASC, node ASC) AS rk
-    FROM swp_v{hops} WHERE node <> query_id
-  ) t WHERE rk <= {k}
-)""")
-    parts.append(
-        "swp_hit AS (SELECT t.beam, count(*) AS hits FROM swp_top t "
-        "JOIN ex e ON e.query_id = t.query_id AND e.node = t.node "
-        "GROUP BY t.beam)")
-    return ("WITH " + ",\n".join(parts) + f"""
-SELECT CAST(bs.beam AS INT) AS beam,
-       CAST(coalesce(h.hits, 0) AS INT) AS hits,
-       CAST(floor(coalesce(h.hits, 0) * 100e0 / {k * n_queries}) AS INT)
-         AS recall_pct
-FROM {_sweep_beams_rel(beams)} bs LEFT JOIN swp_hit h ON h.beam = bs.beam
-ORDER BY bs.beam
-""")
+    parts = _beam_unroll_parts(dialect, NSW_SWEEP_BEAMS, NSW_HOPS)
+    return _recall_sql(dialect, f"v{NSW_HOPS}", parts)
 
 
-def nsw_recall_sweep(
+def _beam_search(
     spark: SparkSession,
-    beams: tuple[int, ...] = (8, 16),
-    hops: int = NSW_HOPS,
-    k: int = NSW_K,
-    n_queries: int = NSW_NQ,
-    adj_source: str = "nng",
-) -> DataFrame:
-    """Spark runner for the beam recall sweep: ONE per-hop
-    LAZY-checkpointed loop serving every beam width at once (beam-keyed
-    state — see nsw_recall_sweep_sql). As in nsw_search, each hop's
-    checkpoint runs its plan's exchanges at the call, so most jobs run
-    before the runner returns (50-56 of 60-66 at sf0.01, local[4]);
-    post-fixpoint hops collapse under AQE's empty-relation propagation
-    (see nsw_search)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+    beams: tuple[int, ...],
+    hops: int,
+    init: str = "entry",
+    query_pred: str | None = None,
+) -> str:
+    """The Spark hop loop over the persisted ``nng`` adjacency, from
+    the hop-0 relation (nsw_hop0_sql): per hop, one LAZY-checkpointed
+    scored relation; visited is the union of the checkpointed pieces.
+    Returns the temp-view name of the final visited relation.
 
-    v = checkpoint(spark.sql(
-        f"SELECT bs.beam, i.query_id, i.node, i.dist\n"
-        f"FROM (\n{nsw_init_sql('spark', n_queries)}\n) i\n"
-        f"CROSS JOIN {_sweep_beams_rel(beams)} bs"
-    ))
-    visited_parts = [v]
-    frontier = v.select("beam", "query_id", "node")
+    There is no per-hop early-exit count (r7, guide §1.2 — it was one
+    more blocking driver round-trip per hop). Lazy is not free at the
+    call: under AQE a checkpoint of a plan with an exchange runs its
+    shuffle-map and broadcast stages while building its RDD, so the
+    hops execute as the loop runs (most of a query's jobs run before
+    the runner returns; ``scripts/profile_query.py`` build_jobs). A hop
+    past the graph's reach is idempotent and nearly free: its frontier
+    is an empty broadcast side, and AQE's empty-relation propagation
+    collapses the expand join without scanning the adjacency — the
+    same identity the unrolled oracle computes past the fixpoint."""
+    scored = checkpoint(spark.sql(
+        nsw_hop0_sql("spark", beams, init, query_pred)))
+    visited_parts = [scored]
     for _ in range(hops):
-        visited = reduce(lambda a, b: a.unionAll(b), visited_parts)
-        visited.createOrReplaceTempView("_swp_v")
-        frontier.createOrReplaceTempView("_swp_f")
+        scored.createOrReplaceTempView("_nsw_s")
+        spark.sql(nsw_frontier_sql("_nsw_s", beams)) \
+            .createOrReplaceTempView("_nsw_f")
+        reduce(DataFrame.unionAll, visited_parts) \
+            .createOrReplaceTempView("_nsw_v")
         # `new` stays a lazy view folded into the scored checkpoint —
-        # one consumer, same shape as nsw_search's loop
-        spark.sql(
-            _sweep_new_sql("_swp_f", "_swp_v", adj_source)
-        ).createOrReplaceTempView("_swp_n")
-        scored = checkpoint(spark.sql(_sweep_scored_sql("spark", "_swp_n")))
+        # its one consumer
+        spark.sql(nsw_new_sql("_nsw_f", "_nsw_v")) \
+            .createOrReplaceTempView("_nsw_n")
+        scored = checkpoint(spark.sql(nsw_scored_sql("spark", "_nsw_n")))
         visited_parts.append(scored)
-        scored.createOrReplaceTempView("_swp_s")
-        frontier = spark.sql(_sweep_frontier_sql("_swp_s"))
-    visited = reduce(lambda a, b: a.unionAll(b), visited_parts)
-    ex = spark.sql(nsw_exact_topk_sql("spark", k, n_queries))
-    w = (
-        visited.where(F.col("node") != F.col("query_id"))
-        .withColumn("rk", F.row_number().over(
-            Window.partitionBy("beam", "query_id")
-            .orderBy(F.col("dist").asc(), F.col("node").asc())))
-        .where(F.col("rk") <= k)
-    )
-    hits = (
-        w.join(ex, (w.query_id == ex.query_id) & (w.node == ex.node))
-        .groupBy("beam").agg(F.count("*").alias("hits"))
-    )
-    beams_df = spark.sql(
-        f"SELECT beam FROM {_sweep_beams_rel(beams)} b2")
-    return (
-        beams_df.join(hits, "beam", "left")
-        .select(
-            F.col("beam").cast("int").alias("beam"),
-            F.coalesce("hits", F.lit(0)).cast("int").alias("hits"),
-            F.floor(F.coalesce("hits", F.lit(0)) * 100.0 / (k * n_queries))
-            .cast("int").alias("recall_pct"),
-        )
-        .orderBy("beam")
-    )
+    reduce(DataFrame.unionAll, visited_parts).createOrReplaceTempView("_nsw_vf")
+    return "_nsw_vf"
+
+
+def nsw_recall_sweep(spark: SparkSession) -> DataFrame:
+    """Spark runner for the beam recall sweep: the hop loop serving
+    every NSW_SWEEP_BEAMS width at once (beam-keyed state — see
+    nsw_recall_sweep_sql), then the oracle's recall tail over it."""
+    visited = _beam_search(spark, NSW_SWEEP_BEAMS, NSW_HOPS)
+    return spark.sql(_recall_sql("spark", visited, []))
 
 
 def nsw_search(
     spark: SparkSession,
-    adj_source: str = "nng",
-    beam: int = NSW_BEAM,
     hops: int = NSW_HOPS,
     k: int = NSW_K,
-    n_queries: int = NSW_NQ,
     query_pred: str | None = None,
-    exclude_self: bool = True,
     init: str = "entry",
-    assign_source: str = "ivf_assign",
 ) -> DataFrame:
-    """Spark runner: per-hop LAZY-checkpointed loop over the persisted
-    adjacency, with no per-hop early-exit count (r7, guide §1.2 — it
-    was one more blocking driver round-trip per hop). Lazy is not free
-    at the call: under AQE a checkpoint of a plan with an exchange runs
-    its shuffle-map and broadcast stages while building its RDD, so the
-    hops execute as the loop runs (knn_nsw_top10: 50-57 of 52-59 jobs
-    before the runner returns, sf0.01, local[4],
-    ``scripts/profile_query.py`` build_jobs). Post-fixpoint hops are
-    free under AQE: an empty hop's frontier is an empty broadcast
-    side, and AQE's empty-relation propagation
-    collapses the expand join without scanning the adjacency, which is
-    exactly the identity the unrolled oracle computes past the
-    fixpoint. ``init='cell'`` seeds hop-0 from each query's IVF cell
-    via the persisted ``assign_source`` relation (the insert path)."""
-    visited_parts = []
-    if init == "cell":
-        v = checkpoint(spark.sql(
-            nsw_cell_init_sql("spark", query_pred, assign_source)))
-        visited_parts.append(v)
-        v.createOrReplaceTempView("_nsw_v0")
-        frontier = spark.sql(nsw_frontier_sql("_nsw_v0", beam))
-    else:
-        v = checkpoint(spark.sql(
-            nsw_init_sql("spark", n_queries, query_pred)))
-        visited_parts.append(v)
-        frontier = v.select("query_id", "node")
-    for i in range(hops):
-        visited = reduce(lambda a, b: a.unionAll(b), visited_parts)
-        frontier.createOrReplaceTempView("_nsw_f")
-        visited.createOrReplaceTempView("_nsw_v")
-        new = spark.sql(nsw_new_sql("_nsw_f", "_nsw_v", adj_source))
-        new.createOrReplaceTempView("_nsw_n")
-        scored = checkpoint(spark.sql(nsw_scored_sql("spark", "_nsw_n")))
-        visited_parts.append(scored)
-        scored.createOrReplaceTempView("_nsw_s")
-        frontier = spark.sql(nsw_frontier_sql("_nsw_s", beam))
-    visited = reduce(lambda a, b: a.unionAll(b), visited_parts)
-    visited.createOrReplaceTempView("_nsw_vf")
-    return spark.sql(nsw_final_sql("_nsw_vf", k, exclude_self))
+    """Spark runner: one-beam (NSW_BEAM) search over the persisted
+    adjacency, then the per-query top-``k``. ``init='cell'`` seeds
+    hop-0 from each query's IVF cell via the persisted ``ivf_assign``
+    relation (the insert path)."""
+    visited = _beam_search(spark, (NSW_BEAM,), hops, init, query_pred)
+    return spark.sql(nsw_final_sql(visited, k))

@@ -49,6 +49,7 @@ from __future__ import annotations
 
 from kektordb_spark.operators.ivf import _assign_cte, _train_parts
 from kektordb_spark.dialect import dot_sql, sorted_csv
+from kektordb_spark.operators.components import min_label_ctes
 
 # Cosine-similarity floor for "semantic duplicate". The driver's
 # synthetic embeddings are near-orthogonal random points (max pairwise
@@ -117,22 +118,8 @@ def semantic_dedup_sql(
   SELECT id_a AS u, id_b AS w FROM pairs
   UNION ALL SELECT id_b AS u, id_a AS w FROM pairs
 )""")
-    parts.append("l0 AS (SELECT DISTINCT u AS node, u AS label FROM und)")
-    prev = "l0"
-    # Spark (r8): broadcast the dup-pair edge list (e) and the
-    # neighbor-label probe side (p) of each propagation round (the
-    # minhash_clusters_sql hints — both duplicate-rate-bounded;
-    # un-hinted rounds planned as LeftOuter SortMergeJoins). DuckDB
-    # reads the hints as comments.
-    for i in range(1, iters + 1):
-        parts.append(f"""l{i} AS (
-  SELECT /*+ BROADCAST(e), BROADCAST(p) */ n.node, least(n.label, coalesce(min(p.label), n.label)) AS label
-  FROM {prev} n
-  LEFT JOIN und e ON e.u = n.node
-  LEFT JOIN {prev} p ON p.node = e.w
-  GROUP BY n.node, n.label
-)""")
-        prev = f"l{i}"
+    labels, prev = min_label_ctes("und", iters)
+    parts += labels
     cdot = dot_sql(dialect, "e.v", "c.v")
     cnorm = dot_sql(dialect, "c.v", "c.v")
     # Distance to own centroid; centroid norm computed inline (centroid

@@ -305,7 +305,7 @@ def knn_nsw_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle unrolls build + beam rounds in one MATERIALIZED-CTE text;
     recall vs exact is gated in tests/test_ann_recall.py."""
     load_tables(spark, sf_dir)
-    return NSW.nsw_search(spark, adj_source="nng")
+    return NSW.nsw_search(spark)
 
 
 _GRAPH_MERGE_PRED = "q.vec_id % 10 = 7"  # the repo's standard derived batch
@@ -329,8 +329,7 @@ def ann_graph_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rebuild stays a scheduled decision informed by the
     recall/balance audits."""
     load_tables(spark, sf_dir)
-    return NSW.nsw_search(spark, adj_source="nng", k=NSW.NSW_M,
-                          query_pred=_GRAPH_MERGE_PRED,
+    return NSW.nsw_search(spark, k=NSW.NSW_M, query_pred=_GRAPH_MERGE_PRED,
                           init="cell", hops=NSW.NSW_MERGE_HOPS)
 
 
@@ -343,10 +342,11 @@ def ann_beam_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/nsw.py nsw_recall_sweep): per beam in {8, 16}, beam
     search vs the exact top-10 oracle, reported as (beam, hits,
     recall_pct) on the integer floor grid. Spark serves the adjacency
-    from the persisted index; the oracle re-derives build + both beam
-    unrolls in one MATERIALIZED-CTE text."""
+    from the persisted index; the oracle re-derives the build and
+    unrolls the same beam-keyed hop chain (both widths at once) and
+    recall tail in one MATERIALIZED-CTE text."""
     load_tables(spark, sf_dir)
-    return NSW.nsw_recall_sweep(spark, adj_source="nng")
+    return NSW.nsw_recall_sweep(spark)
 
 
 @register("ann_graph_build",

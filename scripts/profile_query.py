@@ -16,7 +16,10 @@ final collect — the per-job floor is the thing the iterative operators
 pay at fixture scale, so the count is the signal. ``build_jobs`` is the
 part of ``jobs`` submitted before the runner returned its DataFrame
 (eager checkpoints, counts, and the shuffle-map stages that a lazy
-checkpoint of a plan with an exchange runs under AQE).
+checkpoint of a plan with an exchange runs under AQE). Each query ends
+with a summary line: the min-max job count over the reps (it can vary
+from rep to rep; compare two checkouts by these ranges) and the median
+total time of the warm reps (every rep after the first).
 
 Saved plans are normalized so that plan directories written by two
 checkouts (or two runs) diff byte-for-byte: expression ids (``#123``),
@@ -41,6 +44,7 @@ from __future__ import annotations
 import collections
 import os
 import re
+import statistics
 import sys
 import time
 import traceback
@@ -182,6 +186,7 @@ def main() -> None:
         if name not in queries:
             print(f"{name}: NOT REGISTERED")
             continue
+        totals, jobs = [], []
         for rep in range(reps):
             hi0, ck0 = job_mark(), _ckpt_mark()
             t0 = time.perf_counter()
@@ -190,9 +195,11 @@ def main() -> None:
             build_jobs = job_mark() - hi0
             df.collect()
             t_total = time.perf_counter() - t0
+            totals.append(t_total)
+            jobs.append(job_mark() - hi0)
             print(
                 f"{name} rep{rep}: total={t_total:.3f}s build={t_build:.3f}s "
-                f"jobs={job_mark() - hi0} build_jobs={build_jobs} "
+                f"jobs={jobs[-1]} build_jobs={build_jobs} "
                 f"{_ckpt_since(ck0)}"
             )
             if explain_dir and rep == 0:
@@ -207,6 +214,10 @@ def main() -> None:
                 spark.sparkContext._jsc.getPersistentRDDs().values()
             ):
                 jrdd.unpersist()
+        warm = (f"{statistics.median(totals[1:]):.3f}s" if reps > 1
+                else "n/a")
+        print(f"{name} summary: jobs={min(jobs)}-{max(jobs)} "
+              f"warm_median={warm} reps={reps}")
 
     lazy, eager = _ckpt_mark()
     sites = {site for site, _ in CHECKPOINTS}

@@ -177,10 +177,13 @@ def test_nng_descent_early_exit_is_identity_past_exhaustion(spark):
     assert a == b and len(a) > 0
 
 
-def test_nsw_early_exit_on_exhausted_graph(spark):
-    """A hop that discovers nothing new must end the loop, not run the
-    remaining rounds: with hops far above the graph's reach the result
-    equals the full-unroll oracle (idempotence past exhaustion)."""
+def test_nsw_idempotent_past_exhaustion(spark):
+    """The Spark hop loop runs every hop (no per-hop count, so no early
+    exit). Hops past the point where the beam discovers nothing new
+    must leave the answer unchanged: with hops far above the graph's
+    reach the result equals the NSW_HOPS result, the identity the
+    oracle's fixed unroll relies on (AQE's empty-relation propagation
+    makes those hops nearly free)."""
     from kektordb_spark.operators import nsw as NSW
 
     load_tables(spark, SF_SMALL)
@@ -209,6 +212,23 @@ def test_nsw_beam_recall_sweep_floor_and_monotonicity(spark):
         assert 0 <= r.hits <= NSW.NSW_K * NSW.NSW_NQ
 
 
+def test_nsw_sweep_beam16_hits_match_one_beam_search(spark):
+    """The sweep and the serve path run one beam-keyed hop chain: the
+    sweep's beam-16 hits equal the one-beam (NSW_BEAM=16) search's
+    rows joined to the exact top-k."""
+    from kektordb_spark.operators import nsw as NSW
+
+    load_tables(spark, SF_SMALL)
+    assert NSW.NSW_BEAM == 16
+    rows = {r.beam: r.hits for r in NSW.nsw_recall_sweep(spark).collect()}
+    got = {(r.query_id, r.neighbor_id)
+           for r in NSW.nsw_search(spark).collect()}
+    exact = {(r.query_id, r.node)
+             for r in spark.sql(NSW.nsw_exact_topk_sql("spark")).collect()}
+    assert len(got & exact) > 0
+    assert rows[16] == len(got & exact)
+
+
 def test_nsw_cell_init_requires_query_pred():
     """r6 ADVICE: init='cell' with query_pred=None used to interpolate
     `WHERE None` into the SQL text; must raise instead."""
@@ -230,8 +250,7 @@ def test_graph_merge_links_near_exact_adjacency(spark):
     load_tables(spark, SF_SMALL)
     got = {}
     for r in NSW.nsw_search(
-            spark, adj_source="nng", k=NSW.NSW_M,
-            query_pred=_GRAPH_MERGE_PRED).collect():
+            spark, k=NSW.NSW_M, query_pred=_GRAPH_MERGE_PRED).collect():
         got.setdefault(r.query_id, set()).add(r.neighbor_id)
     emb = spark.table("emb")
     q = emb.where("vec_id % 10 = 7").select(

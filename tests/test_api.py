@@ -132,6 +132,24 @@ def test_vcompress_int8(idx):
     assert abs(127 * scale - 1.0) < 0.02  # dequantized ~ original
 
 
+
+def test_vcompress_f16(idx):
+    """vcompress_f16 returns one row per non-deleted vector, and v16 is
+    numpy's IEEE binary16 round-trip of the stored v."""
+    import numpy as np
+
+    # d's components are not binary16 values, so the round-trip rounds
+    idx = api.vadd_batch(idx, [{"id": "d", "vector": [0.1, 1 / 3]}], now=T1)
+    idx = api.vdelete(idx, ["b"], now=T1)
+    live = {r["id"]: r["v"]
+            for r in idx.vectors.where(~F.col("deleted")).collect()}
+    got = {r["id"]: r["v16"] for r in api.vcompress_f16(idx).collect()}
+    assert set(got) == set(live) == {"a", "c", "d"}
+    for i, v in live.items():
+        want = np.asarray(v, dtype=np.float64).astype(np.float16)
+        assert got[i] == want.astype(np.float64).tolist()
+    assert got["d"] != list(live["d"])
+
 def test_kv_roundtrip(spark):
     kv = spark.createDataFrame([], api.KV_SCHEMA)
     kv = api.kv_set(spark, kv, "k1", b"hello")

@@ -204,24 +204,27 @@ def test_nsw_hop_equi_joins_over_persisted_graph(spark):
     """r5: one beam-search hop is equi-joins + one rank window over the
     persisted adjacency — no cartesian, no all-pairs GEMM re-run
     (mapInPandas absent: the graph BUILD owns that), and the vector
-    join touches the corpus only through the discovered-id hash join."""
+    join touches the corpus only through the discovered-id hash join.
+    Built from the beam-keyed builders the serve, insert and sweep
+    paths share, over a two-width beam relation."""
     from kektordb_spark.operators import nsw as NSW
     from kektordb_spark.tables import load_tables
 
     load_tables(spark, SF_SMALL)
-    v0 = spark.sql(NSW.nsw_init_sql("spark"))
-    v0.createOrReplaceTempView("_nswp_v")
-    spark.sql("SELECT query_id, node FROM _nswp_v") \
+    spark.sql(NSW.nsw_hop0_sql("spark", NSW.NSW_SWEEP_BEAMS)) \
+        .createOrReplaceTempView("_nswp_v")
+    spark.sql(NSW.nsw_frontier_sql("_nswp_v", NSW.NSW_SWEEP_BEAMS)) \
         .createOrReplaceTempView("_nswp_f")
-    spark.sql(NSW.nsw_new_sql("_nswp_f", "_nswp_v", "nng")) \
+    spark.sql(NSW.nsw_new_sql("_nswp_f", "_nswp_v")) \
         .createOrReplaceTempView("_nswp_n")
-    df = spark.sql(NSW.nsw_frontier_sql(
-        f"({NSW.nsw_scored_sql('spark', '_nswp_n')})"))
+    df = spark.sql(NSW.nsw_scored_sql("spark", "_nswp_n"))
     plan = spark._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted")
     assert "CartesianProduct" not in plan
     assert "mapinpandas" not in plan.lower()
-    assert "row_number" in plan
+    # one rank window; Spark may add WindowGroupLimit pre-filters of it
+    assert len(re.findall(r"^\(\d+\) Window$", plan, re.M)) == 1
+    assert "row_number()" in plan
 
 
 def test_interval_join_api_plans_as_equi_join(spark):
