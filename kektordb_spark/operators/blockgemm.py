@@ -86,6 +86,49 @@ def packed_blocks(emb: DataFrame, n_blocks: int) -> DataFrame:
     )
 
 
+def _block_pairs(
+    spark: SparkSession, n_blocks: int, emb: DataFrame | None,
+) -> DataFrame:
+    """The B x (B+1)/2 unordered block pairs (blk_a <= blk_b), one row
+    per GEMM tile, spread over one partition per tile. ``emb`` None
+    means the default embeddings corpus, whose pre-packed blocks are
+    read when the session has them."""
+    blocks = None
+    if emb is None:
+        blocks = _default_blocks(spark, n_blocks)
+        if blocks is None:
+            emb = spark.table("embeddings").select(
+                "vec_id", F.col("embedding").alias("vec"))
+    if blocks is None:
+        # Materialize the packed blocks once (eager checkpoint): the
+        # tile self-join references them twice, and a plain plan would
+        # run the pack stage once per side.
+        blocks = checkpoint(packed_blocks(emb, n_blocks), readers=2)
+    return (
+        blocks.alias("a")
+        .join(blocks.alias("b"), F.col("a.blk") <= F.col("b.blk"))
+        .select(
+            F.col("a.blk").alias("blk_a"), F.col("b.blk").alias("blk_b"),
+            F.col("a.ids").alias("ids_a"), F.col("a.norms").alias("norms_a"),
+            F.col("a.mat").alias("mat_a"),
+            F.col("b.ids").alias("ids_b"), F.col("b.norms").alias("norms_b"),
+            F.col("b.mat").alias("mat_b"),
+        )
+        .repartition(n_blocks * (n_blocks + 1) // 2)
+    )
+
+
+def _tile_cosines(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode one block-pair row: (ids_a, ids_b, cosine matrix a x b)."""
+    ida = np.frombuffer(row.ids_a, dtype=np.int64)
+    idb = np.frombuffer(row.ids_b, dtype=np.int64)
+    na = np.frombuffer(row.norms_a, dtype=np.float64)
+    nb = np.frombuffer(row.norms_b, dtype=np.float64)
+    a = np.frombuffer(row.mat_a, dtype=np.float64).reshape(len(ida), -1)
+    b = np.frombuffer(row.mat_b, dtype=np.float64).reshape(len(idb), -1)
+    return ida, idb, (a @ b.T) / np.outer(na, nb)
+
+
 def cosine_pairs(
     spark: SparkSession,
     threshold: float | None = None,
@@ -106,41 +149,13 @@ def cosine_pairs(
     Catalyst higher-order functions (interpreted, and the dominant cost
     when concentrated into few pack tasks).
     """
-    blocks = None
-    if emb is None:
-        blocks = _default_blocks(spark, n_blocks)
-        if blocks is None:
-            emb = spark.table("embeddings").select(
-                "vec_id", F.col("embedding").alias("vec"))
-    if blocks is None:
-        # Materialize the packed blocks once (eager checkpoint): the
-        # tile self-join references them twice, and a plain plan would
-        # run the pack stage once per side.
-        blocks = checkpoint(packed_blocks(emb, n_blocks), readers=2)
-    bp = (
-        blocks.alias("a")
-        .join(blocks.alias("b"), F.col("a.blk") <= F.col("b.blk"))
-        .select(
-            F.col("a.blk").alias("blk_a"), F.col("b.blk").alias("blk_b"),
-            F.col("a.ids").alias("ids_a"), F.col("a.norms").alias("norms_a"),
-            F.col("a.mat").alias("mat_a"),
-            F.col("b.ids").alias("ids_b"), F.col("b.norms").alias("norms_b"),
-            F.col("b.mat").alias("mat_b"),
-        )
-        .repartition(n_blocks * (n_blocks + 1) // 2)
-    )
+    bp = _block_pairs(spark, n_blocks, emb)
     thr, k = threshold, topk_per_tile
 
     def gemm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for row in pdf.itertuples(index=False):
-                ida = np.frombuffer(row.ids_a, dtype=np.int64)
-                idb = np.frombuffer(row.ids_b, dtype=np.int64)
-                na = np.frombuffer(row.norms_a, dtype=np.float64)
-                nb = np.frombuffer(row.norms_b, dtype=np.float64)
-                a = np.frombuffer(row.mat_a, dtype=np.float64).reshape(len(ida), -1)
-                b = np.frombuffer(row.mat_b, dtype=np.float64).reshape(len(idb), -1)
-                sim = (a @ b.T) / np.outer(na, nb)
+                ida, idb, sim = _tile_cosines(row)
                 if row.blk_a == row.blk_b:
                     # same tile sees each pair twice — keep upper triangle
                     mask = ida[:, None] < idb[None, :]
@@ -199,26 +214,7 @@ def knn_all(
     Returns (query_id, neighbor_id, dist, rank<=k)."""
     from pyspark.sql import Window
 
-    blocks = None
-    if emb is None:
-        blocks = _default_blocks(spark, n_blocks)
-        if blocks is None:
-            emb = spark.table("embeddings").select(
-                "vec_id", F.col("embedding").alias("vec"))
-    if blocks is None:
-        blocks = checkpoint(packed_blocks(emb, n_blocks), readers=2)
-    bp = (
-        blocks.alias("a")
-        .join(blocks.alias("b"), F.col("a.blk") <= F.col("b.blk"))
-        .select(
-            F.col("a.blk").alias("blk_a"), F.col("b.blk").alias("blk_b"),
-            F.col("a.ids").alias("ids_a"), F.col("a.norms").alias("norms_a"),
-            F.col("a.mat").alias("mat_a"),
-            F.col("b.ids").alias("ids_b"), F.col("b.norms").alias("norms_b"),
-            F.col("b.mat").alias("mat_b"),
-        )
-        .repartition(n_blocks * (n_blocks + 1) // 2)
-    )
+    bp = _block_pairs(spark, n_blocks, emb)
 
     def _rows_topk(q_ids, c_ids, dist):
         """Per-row candidate SUPERSET of the top-k under
@@ -243,13 +239,8 @@ def knn_all(
     def gemm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for row in pdf.itertuples(index=False):
-                ida = np.frombuffer(row.ids_a, dtype=np.int64)
-                idb = np.frombuffer(row.ids_b, dtype=np.int64)
-                na = np.frombuffer(row.norms_a, dtype=np.float64)
-                nb = np.frombuffer(row.norms_b, dtype=np.float64)
-                a = np.frombuffer(row.mat_a, dtype=np.float64).reshape(len(ida), -1)
-                b = np.frombuffer(row.mat_b, dtype=np.float64).reshape(len(idb), -1)
-                dist = 1.0 - (a @ b.T) / np.outer(na, nb)
+                ida, idb, cos = _tile_cosines(row)
+                dist = 1.0 - cos
                 parts = [_rows_topk(ida, idb, dist)]
                 if row.blk_a != row.blk_b:
                     parts.append(_rows_topk(idb, ida, dist.T))

@@ -16,17 +16,26 @@ so the final per-cell report equals the batch derivation for ANY
 arrival order / chunking — the registered query's oracle is literally
 the (cid, n_batch) projection of the batch ivf_merge report, and a
 test runs the stream under a different chunking to pin
-order-independence. foreachBatch redelivery is absorbed by a
-processed-batch-id guard (same idempotence contract as the MERGE
-ingest sink, streaming/events.ingest_upsert_run).
+order-independence.
+
+The counters never leave the JVM: each micro-batch writes its per-cell
+counts under its own batch-id directory, and the report sums them. A
+redelivered batch (foreachBatch's at-least-once contract) overwrites its
+own directory with the same rows, so redelivery cannot double-count and
+no driver-side record of processed batches is kept. The landing zone
+and the drain are the streaming family's (streaming/events.py
+``land_chunks``, ``drain``).
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kektordb_spark.dialect import l2sq_sql
+from kektordb_spark.streaming.events import drain, land_chunks
 
 #: arrival wave: vec_id % 10 = 7 (the repo's standard derived batch,
 #: same predicate as ann_index_merge / ann_graph_merge)
@@ -56,6 +65,20 @@ SELECT cid, count(*) AS n FROM a GROUP BY cid
 """.strip()
 
 
+_COUNTS_SCHEMA = "cid int, n bigint"
+
+
+def _fold_assign_batch(counts_dir: str, batch_df: DataFrame, batch_id: int) -> None:
+    """foreachBatch body: assign one micro-batch to the persisted
+    quantizer and write its per-cell counts to
+    ``counts_dir``/batch=<batch_id>, replacing what a first delivery of
+    the same batch wrote."""
+    batch_df.createOrReplaceTempView("_st_ann_batch")
+    counts = batch_df.sparkSession.sql(_assign_counts_sql("_st_ann_batch"))
+    counts.coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(counts_dir, f"batch={batch_id}"))
+
+
 def ann_assign_stream_run(
     spark: SparkSession, emb_path: str, n_chunks: int = 4,
 ) -> DataFrame:
@@ -63,63 +86,26 @@ def ann_assign_stream_run(
     per-cell arrival report (cid, n_batch) over ALL cells (cells with
     no arrivals report 0 — the drift dashboard wants the full row
     set). See module docstring for the contract."""
-    import os
+    import functools
     import shutil
     import tempfile
 
     root = tempfile.mkdtemp(prefix="kekt_annstream_")
-    land = os.path.join(root, "landing")
-    os.makedirs(land)
+    counts = os.path.join(root, "counts")
+    os.makedirs(counts)
     try:
         arrivals = (
             spark.read.parquet(emb_path)
             .where(F.col("vec_id") % ANN_ARRIVAL_MOD == ANN_ARRIVAL_REM)
         )
-        schema = arrivals.schema
-        split_dir = os.path.join(root, "split")
-        # interleave arrivals across chunk files (arrival order is
-        # deliberately NOT vec_id order)
-        arrivals.withColumn(
-            "chunk", F.pmod("vec_id", F.lit(n_chunks))
-        ).repartition("chunk").write.partitionBy("chunk").mode(
-            "overwrite"
-        ).parquet(split_dir)
-        for i in range(n_chunks):
-            chunk_dir = os.path.join(split_dir, f"chunk={i}")
-            if not os.path.isdir(chunk_dir):
-                continue
-            for j, part in enumerate(sorted(
-                    f for f in os.listdir(chunk_dir)
-                    if f.endswith(".parquet"))):
-                os.rename(os.path.join(chunk_dir, part),
-                          os.path.join(land, f"chunk_{i}_{j}.parquet"))
-
-        counts: dict[int, int] = {}
-        seen_batches: set[int] = set()
-
-        def fold(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_id in seen_batches:
-                return  # foreachBatch redelivery: already folded
-            seen_batches.add(batch_id)
-            batch_df.createOrReplaceTempView("_st_ann_batch")
-            for r in batch_df.sparkSession.sql(
-                    _assign_counts_sql("_st_ann_batch")).collect():
-                counts[r["cid"]] = counts.get(r["cid"], 0) + r["n"]
-
-        (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(land)
-            .writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        cents = spark.table("ivf_cents").select("cid")
-        rows = [(int(c), int(n)) for c, n in counts.items()]
-        got = spark.createDataFrame(rows or [], "cid int, n long")
+        land = land_chunks(arrivals, "vec_id", n_chunks, root)
+        drain(spark, spark.readStream.schema(arrivals.schema)
+              .option("maxFilesPerTrigger", 1).parquet(land)
+              .writeStream.foreachBatch(functools.partial(_fold_assign_batch, counts)))
+        got = spark.read.schema(_COUNTS_SCHEMA).parquet(counts).groupBy("cid").agg(
+            F.sum("n").alias("n"))
         return (
-            cents.join(got, "cid", "left")
+            spark.table("ivf_cents").select("cid").join(got, "cid", "left")
             .select(
                 F.col("cid").cast("int").alias("cid"),
                 F.coalesce("n", F.lit(0)).cast("long").alias("n_batch"),

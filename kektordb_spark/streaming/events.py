@@ -20,12 +20,24 @@ sliding / session windows + watermarks) because an idiomatic Spark
 engine should: these run identically as batch expressions (tested
 against DuckDB-style groupings) and as streaming queries with
 ``availableNow`` (tested in tests/test_streaming.py).
+
+One way to run a stream: every streaming query in the package, the
+registry's, ``bench.py``'s warm-up and the tests' alike, is a configured
+``DataStreamWriter`` (a memory sink through ``run_to_memory``, or a
+``foreachBatch`` function) handed to ``drain``, which owns the trigger,
+the state-partition count and the timeout. Arrivals that must reach a
+stream as several files (the ingest sink, streaming/ann.py) land through
+``land_chunks``. Each window length is one constant in seconds, read by
+both the stream builder and its batch oracle.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from kektordb_spark.dialect import epoch, epoch_us, hex_to_int, int_div
 
@@ -33,6 +45,40 @@ EVENTS_SCHEMA = (
     "event_id bigint, ts bigint, user_id bigint, event_type string, "
     "value double, props string"
 )
+
+#: Shuffle partitions of every streaming query. Each stateful operator
+#: keeps one state-store instance per shuffle partition, each with a
+#: per-trigger setup and commit cost, so a fixture-sized stream at the
+#: batch setting pays for many near-empty stores (measured ~2-3 s of
+#: pure overhead per streaming query at sf0.1 with cpus*4 partitions).
+#: A query's count is fixed at its first checkpoint, unlike batch AQE:
+#: size it to the key cardinality in production.
+STATE_PARTITIONS = 8
+#: Longest wait for an ``availableNow`` stream to drain.
+DRAIN_TIMEOUT_S = 300
+
+# Event-time windows, in seconds; each stream builder and its batch
+# oracle read the same constant.
+WATERMARK_S = 3600  # late-data bound of every windowed stream
+TUMBLE_S = 21600  # windowed counts and dedup (and the sliding step)
+SLIDE_WINDOW_S = 43200  # sliding event rate
+SESSION_GAP_S = 1800  # session windows
+MENTION_WINDOW_S = 259200  # entity mentions behind the spike detector
+# Spike rule: n(w) > SPIKE_MIN_RECENT and n(w) > SPIKE_RATIO * n(w-1).
+SPIKE_MIN_RECENT, SPIKE_RATIO = 5, 2.0
+
+
+def _dur(seconds: int) -> str:
+    """A window or watermark length as a Spark interval string."""
+    return f"{seconds} seconds"
+
+
+def _watermarked(events: DataFrame) -> DataFrame:
+    """The watermark every windowed stream carries (a batch frame has
+    no late data: returned as is)."""
+    if events.isStreaming:
+        return events.withWatermark("ts", _dur(WATERMARK_S))
+    return events
 
 
 def read_event_stream(spark: SparkSession, events_dir: str) -> DataFrame:
@@ -43,8 +89,6 @@ def read_event_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     int64 in the file's physical unit) and rebuilt via the SAME helper
     the batch path uses (tables.ts_from_long), so stream ≡ batch for
     any parquet encoding of ts."""
-    import os
-
     from kektordb_spark.tables import event_ts_unit, ts_from_long
 
     reader = (
@@ -61,19 +105,14 @@ def read_event_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     return raw.withColumn("ts", ts_from_long(F.col("ts"), unit))
 
 
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "6 hours",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Tumbling event-time window counts with late-data watermark.
-    Works on both a stream (incremental state) and a batch DataFrame
-    (plain groupBy) — the batch run is the oracle for the stream run."""
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark("ts", watermark)
+def windowed_event_counts(events: DataFrame) -> DataFrame:
+    """Tumbling event-time window counts (TUMBLE_S) with late-data
+    watermark. Works on both a stream (incremental state) and a batch
+    DataFrame (plain groupBy) — the batch run is the oracle for the
+    stream run."""
     return (
-        df.groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
+        _watermarked(events)
+        .groupBy(F.window("ts", _dur(TUMBLE_S)).alias("w"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("value"), 2).alias("total_value"),
@@ -85,32 +124,26 @@ def windowed_event_counts(
     )
 
 
-def sliding_event_rate(
-    events: DataFrame, window: str = "12 hours", slide: str = "6 hours",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Sliding-window event rate per type."""
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark("ts", watermark)
+def sliding_event_rate(events: DataFrame) -> DataFrame:
+    """Sliding-window event rate per type: SLIDE_WINDOW_S windows
+    every TUMBLE_S."""
     return (
-        df.groupBy(F.window("ts", window, slide).alias("w"), F.col("event_type"))
+        _watermarked(events)
+        .groupBy(F.window("ts", _dur(SLIDE_WINDOW_S), _dur(TUMBLE_S)).alias("w"),
+                 F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("w_start"), "event_type", "n")
     )
 
 
-def session_windows(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour",
-) -> DataFrame:
-    """Per-user session windows (gap-based) — the reference's session
-    summary input (A14, gardener.go:1563-1680) computed properly with
-    event-time sessionization instead of metadata convention."""
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark("ts", watermark)
+def session_windows(events: DataFrame) -> DataFrame:
+    """Per-user session windows (gap SESSION_GAP_S) — the reference's
+    session summary input (A14, gardener.go:1563-1680) computed properly
+    with event-time sessionization instead of metadata convention."""
     return (
-        df.groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
+        _watermarked(events)
+        .groupBy(F.session_window("ts", _dur(SESSION_GAP_S)).alias("w"),
+                 F.col("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 2).alias("total_value"),
@@ -123,24 +156,20 @@ def session_windows(
     )
 
 
-def dedup_first_per_window(
-    events: DataFrame, window: str = "6 hours", watermark: str = "1 hour",
-) -> DataFrame:
+def dedup_first_per_window(events: DataFrame) -> DataFrame:
     """Streaming exact-dedup with bounded state: first event per
-    (user, type) within each event-time window, plus the duplicate
-    count. The survivor is min(struct(ts, event_id)) — an
+    (user, type) within each TUMBLE_S event-time window, plus the
+    duplicate count. The survivor is min(struct(ts, event_id)) — an
     order-independent AGGREGATE, deliberately not dropDuplicates()
     (whose "first seen" depends on arrival/partition order and so can
     never match a batch oracle deterministically). Watermark bounds the
     dedup state exactly like the reference's TTL'd caches; windows emit
     on close (append mode). Works on both a stream and a batch frame —
     the batch run is the oracle."""
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark("ts", watermark)
     return (
-        df.groupBy(F.window("ts", window).alias("w"),
-                   F.col("user_id"), F.col("event_type"))
+        _watermarked(events)
+        .groupBy(F.window("ts", _dur(TUMBLE_S)).alias("w"),
+                 F.col("user_id"), F.col("event_type"))
         .agg(
             F.min(F.struct("ts", "event_id")).alias("first"),
             F.count(F.lit(1)).alias("n_events"),
@@ -272,12 +301,10 @@ def heavy_hitters_stream(
     )
 
 
-def heavy_hitters_oracle_sql(
-    dialect: str, top_k: int = MG_TOP_K, source: str = "events",
-) -> str:
+def heavy_hitters_oracle_sql(dialect: str, source: str = "events") -> str:
     """Batch ground truth for the streaming heavy hitters: exact
-    per-type top-k users (count desc, user asc) — equals the stream's
-    final emission whenever the MG summary never evicted."""
+    per-type top-MG_TOP_K users (count desc, user asc) — equals the
+    stream's final emission whenever the MG summary never evicted."""
     return f"""
 SELECT event_type, user_id, cnt, CAST(rk AS INT) AS rank
 FROM (
@@ -286,7 +313,7 @@ FROM (
                             ORDER BY count(*) DESC, user_id ASC) AS rk
   FROM {source}
   GROUP BY event_type, user_id
-) t WHERE rk <= {top_k}
+) t WHERE rk <= {MG_TOP_K}
 """.strip()
 
 
@@ -348,35 +375,30 @@ def distinct_sketch_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def windowed_entity_mentions(
-    events: DataFrame, window: str = "3 days", watermark: str = "1 hour",
-) -> DataFrame:
+def windowed_entity_mentions(events: DataFrame) -> DataFrame:
     """A7-as-a-stream: per-entity mention counts in tumbling event-time
-    windows — the streaming half of the Gardener's importance-shift
-    detector (gardener.go:1471-1537). The spike comparison joins
+    windows (MENTION_WINDOW_S) — the streaming half of the Gardener's
+    importance-shift detector (gardener.go:1471-1537). The spike comparison joins
     consecutive windows AFTER emission (importance_spikes below): state
     in the stream stays one count per (window, entity), bounded by the
     watermark; the cross-window comparison needs completed windows by
     definition, so it belongs downstream of the sink."""
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark("ts", watermark)
     return (
-        df.groupBy(F.window("ts", window).alias("w"), F.col("user_id").alias("entity"))
+        _watermarked(events)
+        .groupBy(F.window("ts", _dur(MENTION_WINDOW_S)).alias("w"),
+                 F.col("user_id").alias("entity"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("w_start"), "entity", "n")
     )
 
 
-def importance_spikes(
-    windowed: DataFrame, window_s: int = 259200,
-    min_recent: int = 5, ratio: float = 2.0,
-) -> DataFrame:
+def importance_spikes(windowed: DataFrame) -> DataFrame:
     """Spike rule on emitted windows (gardener.go:1511-1528): entity
-    spikes in window w when n(w) > min_recent AND n(w) > ratio *
-    n(w-1). Missing previous window counts as 0 mentions -> any
-    window above min_recent spikes (the reference's recent>2*older
-    with older=0). One self-equi-join on (entity, previous window)."""
+    spikes in window w when n(w) > SPIKE_MIN_RECENT AND n(w) >
+    SPIKE_RATIO * n(w-1). Missing previous window counts as 0 mentions
+    -> any window above SPIKE_MIN_RECENT spikes (the reference's
+    recent>2*older with older=0). One self-equi-join on (entity,
+    previous window)."""
     spark = windowed.sparkSession
     # SQL self-join over a registered view: DataFrame-API self-joins of
     # a memory-sink table fail attribute dedup (both sides share the
@@ -390,37 +412,28 @@ WITH wc AS (
 )
 SELECT c.w_epoch, c.entity, c.n, coalesce(p.n, 0) AS n_prev
 FROM wc c LEFT JOIN wc p
-  ON p.entity = c.entity AND p.w_epoch = c.w_epoch - {window_s}
-WHERE c.n > {min_recent} AND c.n > {ratio} * coalesce(p.n, 0)
+  ON p.entity = c.entity AND p.w_epoch = c.w_epoch - {MENTION_WINDOW_S}
+WHERE c.n > {SPIKE_MIN_RECENT} AND c.n > {SPIKE_RATIO} * coalesce(p.n, 0)
 """.strip())
 
 
-def importance_spikes_oracle_sql(dialect: str, window_s: int = 259200,
-                                 min_recent: int = 5, ratio: float = 2.0) -> str:
+def importance_spikes_oracle_sql(dialect: str) -> str:
     div = int_div(dialect)
     ep = epoch(dialect, "ts")
     return f"""
 WITH wc AS (
-  SELECT ({ep} {div} {window_s}) * {window_s} AS w_epoch,
+  SELECT ({ep} {div} {MENTION_WINDOW_S}) * {MENTION_WINDOW_S} AS w_epoch,
          user_id AS entity, count(*) AS n
   FROM events GROUP BY 1, 2
 ),
 j AS (
   SELECT c.w_epoch, c.entity, c.n, coalesce(p.n, 0) AS n_prev
   FROM wc c LEFT JOIN wc p
-    ON p.entity = c.entity AND p.w_epoch = c.w_epoch - {window_s}
+    ON p.entity = c.entity AND p.w_epoch = c.w_epoch - {MENTION_WINDOW_S}
 )
 SELECT w_epoch, entity, n, n_prev FROM j
-WHERE n > {min_recent} AND n > {ratio} * n_prev
+WHERE n > {SPIKE_MIN_RECENT} AND n > {SPIKE_RATIO} * n_prev
 """.strip()
-
-
-def user_totals_batch(events: DataFrame) -> DataFrame:
-    """Batch oracle for stateful_user_totals' final per-key emissions."""
-    return events.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
 
 
 class GardenerTrigger:
@@ -446,55 +459,75 @@ class GardenerTrigger:
 
 
 # ---------------------------------------------------------------------------
-# Driver-contract surface: the streaming paths as oracle-checkable queries.
-# The STREAM run (file source -> watermark -> stateful agg -> memory sink,
-# availableNow trigger) must equal the batch/SQL answer — that equality is
-# the point: the same declarative window spec serves both modes.
+# Running a stream: one drain, one landing zone
 # ---------------------------------------------------------------------------
+
+def drain(spark: SparkSession, writer: DataStreamWriter) -> None:
+    """Run a configured stream writer (a memory sink, a foreachBatch
+    function) to completion: start it with ``availableNow`` under
+    STATE_PARTITIONS shuffle partitions and wait at most
+    DRAIN_TIMEOUT_S. A stream that has not drained by then is stopped
+    and raises: its sink would hold a partial result. The session's own
+    setting is restored once the query has started (a streaming query
+    runs on a clone of the session's conf taken at start), so batch
+    plans never see the state-partition count."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    try:
+        q = writer.trigger(availableNow=True).start()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"stream {q.name or q.id} did not drain within {DRAIN_TIMEOUT_S} s")
+
 
 _SINK_SEQ = [0]
 
 
 def run_to_memory(
-    spark: SparkSession,
-    df: DataFrame,
-    prefix: str,
-    output_mode: str = "complete",
-    state_partitions: int | None = 8,
+    spark: SparkSession, df: DataFrame, prefix: str, output_mode: str = "complete",
 ) -> DataFrame:
-    """Run a streaming DataFrame to completion (availableNow) into a
-    memory sink and return the result table.
-
-    ``state_partitions`` bounds the streaming shuffle partitions for
-    THIS query: every stateful operator keeps one state-store instance
-    per shuffle partition, each with per-trigger setup/commit cost, so
-    a fixture-sized stream with the batch default (cpus*4) pays ~128
-    state commits per trigger for a handful of keys (measured ~2-3 s of
-    pure overhead per streaming query at sf0.1). Size it to key
-    cardinality in production — streaming partition count is fixed at
-    the first checkpoint, unlike batch AQE. The batch-session setting
-    is restored after start so concurrent batch plans are unaffected
-    (the streaming query captures its conf at start)."""
+    """Drain a streaming DataFrame into a fresh memory sink and return
+    the sink's table."""
     _SINK_SEQ[0] += 1
     name = f"{prefix}_{_SINK_SEQ[0]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            df.writeStream.format("memory").queryName(name)
-            .outputMode(output_mode).trigger(availableNow=True).start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            f"streaming sink {name} did not drain within 300s — "
-            "reading the memory table now would observe a partial result"
-        )
+    drain(spark, df.writeStream.format("memory").queryName(name)
+          .outputMode(output_mode))
     return spark.table(name)
 
+
+def land_chunks(df: DataFrame, key: str, n_chunks: int, root: str) -> str:
+    """Land ``df`` as a file stream's input: the directory
+    ``root``/landing of chunk files ``chunk_<i>_<j>.parquet``, chunk i
+    holding the rows with ``key % n_chunks = i``, so arrival order
+    deliberately interleaves key order. One partitioned write lands
+    every chunk (not n_chunks filtered re-scans); the partition column
+    is dropped from the files, which are then renamed into one flat
+    directory. Returns that directory (empty when ``df`` is)."""
+    split = os.path.join(root, "split")
+    land = os.path.join(root, "landing")
+    os.makedirs(land)
+    df.withColumn("chunk", F.pmod(key, F.lit(n_chunks))).repartition(
+        "chunk").write.partitionBy("chunk").mode("overwrite").parquet(split)
+    for i in range(n_chunks):
+        chunk_dir = os.path.join(split, f"chunk={i}")
+        if not os.path.isdir(chunk_dir):
+            continue  # no row hashed to this chunk
+        parts = sorted(f for f in os.listdir(chunk_dir) if f.endswith(".parquet"))
+        for j, part in enumerate(parts):
+            os.rename(os.path.join(chunk_dir, part),
+                      os.path.join(land, f"chunk_{i}_{j}.parquet"))
+    return land
+
+
+# ---------------------------------------------------------------------------
+# Driver-contract surface: the streaming paths as oracle-checkable queries.
+# The STREAM run (file source -> watermark -> stateful agg -> memory sink,
+# availableNow trigger) must equal the batch/SQL answer — that equality is
+# the point: the same declarative window spec serves both modes.
+# ---------------------------------------------------------------------------
 
 def user_totals_oracle_sql(dialect: str) -> str:
     """Batch-SQL oracle for stateful_user_totals' final emissions."""
@@ -504,21 +537,21 @@ FROM events GROUP BY user_id
 """.strip()
 
 
-def windowed_counts_oracle_sql(dialect: str, window_s: int = 21600) -> str:
+def windowed_counts_oracle_sql(dialect: str) -> str:
     """Tumbling-window oracle: epoch-aligned bucket arithmetic."""
     div = int_div(dialect)
     ep = epoch(dialect, "ts")
     return f"""
-SELECT ({ep} {div} {window_s}) * {window_s} AS w_start_epoch,
+SELECT ({ep} {div} {TUMBLE_S}) * {TUMBLE_S} AS w_start_epoch,
        event_type,
        count(*) AS n,
        round(sum(value), 2) AS total_value
 FROM events
-GROUP BY ({ep} {div} {window_s}) * {window_s}, event_type
+GROUP BY ({ep} {div} {TUMBLE_S}) * {TUMBLE_S}, event_type
 """.strip()
 
 
-def dedup_first_oracle_sql(dialect: str, window_s: int = 21600) -> str:
+def dedup_first_oracle_sql(dialect: str) -> str:
     """Batch oracle for the windowed streaming dedup: epoch-bucket
     grouping + lexicographic-min survivor pick (min_by over the
     (ts, event_id) pair — order-independent on both engines)."""
@@ -531,18 +564,19 @@ def dedup_first_oracle_sql(dialect: str, window_s: int = 21600) -> str:
     key = (f"concat(lpad(CAST({us} AS STRING), 20, '0'), "
            "lpad(CAST(event_id AS STRING), 12, '0'))")
     return f"""
-SELECT ({ep} {div} {window_s}) * {window_s} AS w_start_epoch,
+SELECT ({ep} {div} {TUMBLE_S}) * {TUMBLE_S} AS w_start_epoch,
        user_id, event_type,
        min_by(event_id, {key}) AS first_event_id,
        count(*) - 1 AS n_dups
 FROM events
-GROUP BY ({ep} {div} {window_s}) * {window_s}, user_id, event_type
+GROUP BY ({ep} {div} {TUMBLE_S}) * {TUMBLE_S}, user_id, event_type
 """.strip()
 
 
-def session_windows_oracle_sql(dialect: str, gap_us: int = 1800000000) -> str:
+def session_windows_oracle_sql(dialect: str) -> str:
     """Session-window oracle: gaps-and-islands (lag + cumulative sum of
     session breaks) — the classic SQL equivalent of session_window()."""
+    gap_us = SESSION_GAP_S * 1_000_000
     # CAST(ts AS TIMESTAMP): the base parquet loads as TIMESTAMP_NTZ,
     # which unix_micros rejects; under the UTC session the cast is an
     # exact reinterpretation (and the identity on TIMESTAMP inputs).
@@ -573,6 +607,66 @@ FROM g GROUP BY user_id, sid
 # Streaming ingest sink: foreachBatch MERGE (the write side of ST1)
 # ---------------------------------------------------------------------------
 
+_SNAPSHOT_SCHEMA = (
+    "user_id bigint, event_type string, last_value double, "
+    "last_ts_us bigint, last_event_id bigint, n_versions bigint"
+)
+
+
+def _applied_batch(target: str) -> int:
+    """Id of the last micro-batch the ingest sink applied to ``target``
+    (its ``_last_batch`` marker); -1 before the first, whose snapshot
+    ``v-1`` is the empty directory."""
+    marker = os.path.join(target, "_last_batch")
+    if not os.path.exists(marker):
+        return -1
+    with open(marker) as fh:
+        return int(fh.read().strip())
+
+
+def _merge_ingest_batch(target: str, batch_df: DataFrame, batch_id: int) -> None:
+    """The ingest sink's foreachBatch body: MERGE one micro-batch into
+    the snapshot ``v<last>`` and write the result as ``v<batch_id>``,
+    then move the marker. The batch pre-aggregates to one row per
+    (user_id, event_type) (map-side, shrinking the merge input to key
+    cardinality), then unions with the snapshot and re-aggregates,
+    last-writer-wins by (ts, event_id). A redelivered batch (id at or
+    below the marker) is skipped; a crash between the write and the
+    marker replays onto the same snapshot and rewrites the same
+    content, never compounding."""
+    last = _applied_batch(target)
+    if batch_id <= last:
+        return  # redelivered batch: already applied
+    delta = batch_df.groupBy("user_id", "event_type").agg(
+        F.max_by(
+            F.struct(
+                F.col("value").alias("last_value"),
+                F.unix_micros("ts").alias("last_ts_us"),
+                F.col("event_id").alias("last_event_id"),
+            ),
+            F.struct(F.col("ts"), F.col("event_id")),
+        ).alias("s"),
+        F.count(F.lit(1)).alias("n_versions"),
+    ).select("user_id", "event_type", "s.*", "n_versions")
+    cur = batch_df.sparkSession.read.schema(_SNAPSHOT_SCHEMA).parquet(
+        os.path.join(target, f"v{last}"))
+    (
+        cur.unionByName(delta)
+        .groupBy("user_id", "event_type")
+        .agg(
+            F.max_by(
+                F.struct("last_value", "last_ts_us", "last_event_id"),
+                F.struct("last_ts_us", "last_event_id"),
+            ).alias("s"),
+            F.sum("n_versions").alias("n_versions"),
+        )
+        .select("user_id", "event_type", "s.*", "n_versions")
+        .write.mode("overwrite").parquet(os.path.join(target, f"v{batch_id}"))
+    )
+    with open(os.path.join(target, "_last_batch"), "w") as fh:
+        fh.write(str(batch_id))
+
+
 def ingest_upsert_run(
     spark: SparkSession, events_path: str, n_chunks: int = 4,
 ) -> DataFrame:
@@ -581,23 +675,17 @@ def ingest_upsert_run(
     sink is readStream → foreachBatch MERGE into a versioned parquet
     target.  This runner exercises the full loop end-to-end:
 
-      1. the fixture events land as ``n_chunks`` files in a scratch
-         landing zone, split by ``event_id % n_chunks`` so event-time
-         interleaves across files — arrival order is deliberately NOT
-         event-time order;
-      2. the landing zone streams with ``maxFilesPerTrigger=1`` → one
-         micro-batch per file; each batch MERGEs into the target:
-         batch rows pre-aggregate to one row per (user_id, event_type)
-         key (map-side, shrinking the merge input to key cardinality),
-         then union + re-aggregate with the current snapshot and write
-         a NEW version directory — last-writer-wins by the total order
-         (ts, event_id), so the final state is identical under ANY
-         arrival order / chunking (the property the test asserts);
+      1. the fixture events land as ``n_chunks`` files (``land_chunks``
+         on ``event_id``), so event-time interleaves across files —
+         arrival order is deliberately NOT event-time order;
+      2. the landing zone streams through ``read_event_stream`` (one
+         micro-batch per file) and ``drain``; each batch MERGEs into the
+         target (``_merge_ingest_batch``) and writes a NEW version
+         directory — last-writer-wins by the total order (ts, event_id),
+         so the final state is identical under ANY arrival order /
+         chunking (the property the test asserts);
       3. versioned dirs + a last-applied batch-id marker make the sink
-         idempotent under foreachBatch's redelivery contract: a
-         replayed batch id is skipped, a crash between write and
-         marker replays onto the PREVIOUS version (rewriting the same
-         content), never compounding.
+         idempotent under foreachBatch's redelivery contract.
 
     At 100 TB the target is a Delta/Iceberg MERGE with the same keyed
     pre-aggregation; the versioned-parquet scheme here is the same
@@ -610,123 +698,27 @@ def ingest_upsert_run(
     be reclaimed) — equal to the batch last-writer-wins oracle
     (ingest_upsert_oracle_sql).
     """
-    import os
+    import functools
     import shutil
     import tempfile
 
     from kektordb_spark.tables import event_ts_unit, ts_from_long
 
     root = tempfile.mkdtemp(prefix="kekt_ingest_")
-    land = os.path.join(root, "landing")
     target = os.path.join(root, "target")
-    os.makedirs(land)
-    os.makedirs(target)
+    os.makedirs(os.path.join(target, "v-1"))
     try:
-        unit = event_ts_unit(events_path)
-        raw = spark.read.schema(EVENTS_SCHEMA).parquet(events_path)
-        # ONE partitioned write lands every chunk (vs n_chunks filtered
-        # re-scans of the event log); the partition column is dropped
-        # from the written files, so each chunk is re-read under the
-        # plain EVENTS_SCHEMA with its chunk id restored from event_id.
-        split_dir = os.path.join(root, "split")
-        raw.withColumn(
-            "chunk", F.pmod("event_id", F.lit(n_chunks))
-        ).repartition("chunk").write.partitionBy("chunk").mode(
-            "overwrite"
-        ).parquet(split_dir)
-        for i in range(n_chunks):
-            chunk_dir = os.path.join(split_dir, f"chunk={i}")
-            if not os.path.isdir(chunk_dir):
-                continue  # empty corpus: no rows hashed to this chunk
-            parts = sorted(
-                f for f in os.listdir(chunk_dir) if f.endswith(".parquet")
-            )
-            for j, part in enumerate(parts):
-                os.rename(
-                    os.path.join(chunk_dir, part),
-                    os.path.join(land, f"chunk_{i}_{j}.parquet"),
-                )
-
-        _FINAL_SCHEMA = (
-            "user_id bigint, event_type string, last_value double, "
-            "last_ts_us bigint, last_event_id bigint, n_versions bigint"
-        )
-        if not os.listdir(land):
-            # Nothing arrived: the snapshot is empty (no v1 was written).
-            return spark.createDataFrame([], _FINAL_SCHEMA)
-
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(land)
-            .withColumn("ts", ts_from_long(F.col("ts"), unit))
-        )
-
-        state = {"version": 0}
-        marker = os.path.join(target, "_last_batch")
-
-        def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-            if os.path.exists(marker):
-                with open(marker) as fh:
-                    if batch_id <= int(fh.read().strip()):
-                        return  # redelivered batch: already applied
-            delta = batch_df.groupBy("user_id", "event_type").agg(
-                F.max_by(
-                    F.struct(
-                        F.col("value").alias("last_value"),
-                        F.unix_micros("ts").alias("last_ts_us"),
-                        F.col("event_id").alias("last_event_id"),
-                    ),
-                    F.struct(F.col("ts"), F.col("event_id")),
-                ).alias("s"),
-                F.count(F.lit(1)).alias("n_versions"),
-            ).select("user_id", "event_type", "s.*", "n_versions")
-            cur_dir = os.path.join(target, f"v{state['version']}")
-            if state["version"] > 0:
-                cur = batch_df.sparkSession.read.parquet(cur_dir)
-                delta = (
-                    cur.unionByName(delta)
-                    .groupBy("user_id", "event_type")
-                    .agg(
-                        F.max_by(
-                            F.struct("last_value", "last_ts_us", "last_event_id"),
-                            F.struct("last_ts_us", "last_event_id"),
-                        ).alias("s"),
-                        F.sum("n_versions").alias("n_versions"),
-                    )
-                    .select("user_id", "event_type", "s.*", "n_versions")
-                )
-            nxt = os.path.join(target, f"v{state['version'] + 1}")
-            delta.write.mode("overwrite").parquet(nxt)
-            state["version"] += 1
-            with open(marker, "w") as fh:
-                fh.write(str(batch_id))
-
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                stream.writeStream.foreachBatch(merge_batch)
-                .option("checkpointLocation", os.path.join(root, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            # Restore the conf only after the stream has drained: the
-            # micro-batches themselves must run under the 8-partition
-            # setting, and a False return (timeout) means the final
-            # snapshot would be read mid-write — fail loudly instead.
-            if not q.awaitTermination(300):
-                q.stop()
-                raise RuntimeError(
-                    "ingest_upsert_run: stream did not drain within 300 s"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-        final = spark.read.parquet(
-            os.path.join(target, f"v{state['version']}")
+        # ts lands as int64 micros whatever the input's unit: a footer
+        # without a unit is what read_event_stream decodes as micros.
+        events = spark.read.schema(EVENTS_SCHEMA).parquet(events_path).withColumn(
+            "ts", F.unix_micros(ts_from_long(F.col("ts"), event_ts_unit(events_path))))
+        land = land_chunks(events, "event_id", n_chunks, root)
+        drain(spark, read_event_stream(spark, land).writeStream
+              .foreachBatch(functools.partial(_merge_ingest_batch, target))
+              .option("checkpointLocation", os.path.join(root, "ckpt")))
+        return spark.read.schema(_SNAPSHOT_SCHEMA).parquet(
+            os.path.join(target, f"v{_applied_batch(target)}")
         ).localCheckpoint(eager=True)
-        return final
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -752,14 +744,14 @@ WHERE rn = 1
 # Multi-resolution rollup cascade (hypertable continuous-aggregate shape)
 # ---------------------------------------------------------------------------
 
-def rollup_daily_from_hourly_sql(dialect: str, rel: str = "_hourly") -> str:
-    """Daily rollup computed FROM the hourly rollup (counts and sums
-    re-aggregate losslessly; only the FINAL emission rounds)."""
+def rollup_daily_from_hourly_sql(dialect: str) -> str:
+    """Daily rollup computed FROM the hourly rollup ``_hourly`` (counts
+    and sums re-aggregate losslessly; only the FINAL emission rounds)."""
     div = int_div(dialect)
     return f"""
 SELECT (h_epoch {div} 86400) * 86400 AS day_epoch, event_type,
        CAST(sum(n) AS BIGINT) AS n, round(sum(sv), 2) AS total_value
-FROM {rel}
+FROM _hourly
 GROUP BY (h_epoch {div} 86400) * 86400, event_type
 """.strip()
 

@@ -37,6 +37,13 @@ print the same lines.
 Checkpoints are counted by wrapping ``DataFrame.localCheckpoint`` in
 this process only; a call site is the first caller frame outside
 pyspark and ``kektordb_spark/lineage.py``.
+
+Every rep line also carries ``micro_batches=`` and
+``stream_input_rows=``: the progress events and input rows of the
+streaming queries the rep ran, counted by perfbench's
+StreamingQueryListener (``probes.StreamCounter``; 0 for a batch
+query), so two checkouts can compare every streaming query's
+micro-batching.
 """
 
 from __future__ import annotations
@@ -49,7 +56,11 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+
+from probes import StreamCounter
 
 from kektordb_spark.plans import registry
 from kektordb_spark.session import get_spark
@@ -151,6 +162,14 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     tracker = spark.sparkContext.statusTracker()
     _count_checkpoints(type(spark.range(0)))
+    progress = StreamCounter()
+    spark.streams.addListener(progress)
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def stream_mark() -> tuple[int, int]:
+        bus.waitUntilEmpty()  # progress events arrive on the bus thread
+        t = progress.totals()
+        return t["micro_batches"], t["input_rows"]
 
     def job_mark() -> int:
         jobs = tracker.getJobIdsForGroup(None)
@@ -188,7 +207,7 @@ def main() -> None:
             continue
         totals, jobs = [], []
         for rep in range(reps):
-            hi0, ck0 = job_mark(), _ckpt_mark()
+            hi0, ck0, st0 = job_mark(), _ckpt_mark(), stream_mark()
             t0 = time.perf_counter()
             df = queries[name](spark, sf_dir)
             t_build = time.perf_counter() - t0
@@ -197,10 +216,12 @@ def main() -> None:
             t_total = time.perf_counter() - t0
             totals.append(t_total)
             jobs.append(job_mark() - hi0)
+            st1 = stream_mark()
             print(
                 f"{name} rep{rep}: total={t_total:.3f}s build={t_build:.3f}s "
                 f"jobs={jobs[-1]} build_jobs={build_jobs} "
-                f"{_ckpt_since(ck0)}"
+                f"{_ckpt_since(ck0)} micro_batches={st1[0] - st0[0]} "
+                f"stream_input_rows={st1[1] - st0[1]}"
             )
             if explain_dir and rep == 0:
                 os.makedirs(explain_dir, exist_ok=True)

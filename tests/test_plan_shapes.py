@@ -905,13 +905,15 @@ def _python_rdd_scans(plan: str) -> list[str]:
 @pytest.mark.parametrize("name", [
     "knn_graph_filtered", "graph_bfs_depth3", "graph_traverse_2hop",
     "graph_find_path", "graph_subgraph", "vsearch_hybrid_facade",
+    "streaming_ann_assign",
 ])
 def test_literal_roots_are_values_relations(spark, monkeypatch, name):
     """Literal rows — the BFS roots, the facade's query vector — are a
     SQL VALUES relation (a local table in the plan), not an RDD built
-    from a Python list. Checked on the final
-    plan and on every relation the runner checkpoints on the way (the
-    roots of find_path only reach the plan of its visited set)."""
+    from a Python list; the streaming ANN report's per-cell counts stay
+    in the JVM. Checked on the final plan and on every relation the
+    runner checkpoints on the way (the roots of find_path only reach
+    the plan of its visited set)."""
     from kektordb_spark.tables import load_tables
 
     load_tables(spark, SF_SMALL)

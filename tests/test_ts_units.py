@@ -31,7 +31,7 @@ def _reencode(tmpdir: str, unit: str) -> str:
 
 @pytest.mark.parametrize("unit", ["ns", "us", "ms"])
 def test_batch_stream_ts_parity_across_units(spark, tmp_path, unit):
-    from kektordb_spark.streaming.events import read_event_stream
+    from kektordb_spark.streaming.events import read_event_stream, run_to_memory
     from kektordb_spark.tables import event_ts_unit
 
     path = _reencode(str(tmp_path), unit)
@@ -56,19 +56,10 @@ def test_batch_stream_ts_parity_across_units(spark, tmp_path, unit):
     batch = {r.event_id: r.ts for r in df.select("event_id", "ts").collect()}
 
     # Stream path, drained to a memory sink.
-    q = (
-        read_event_stream(spark, path)
-        .select("event_id", "ts")
-        .writeStream.format("memory")
-        .queryName(f"ts_parity_{unit}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    stream = {
-        r.event_id: r.ts
-        for r in spark.sql(f"SELECT * FROM ts_parity_{unit}").collect()
-    }
+    sink = run_to_memory(
+        spark, read_event_stream(spark, path).select("event_id", "ts"),
+        f"ts_parity_{unit}", output_mode="append")
+    stream = {r.event_id: r.ts for r in sink.collect()}
 
     if unit == "ms":
         # ms loses sub-millisecond precision by construction; compare
@@ -80,3 +71,17 @@ def test_batch_stream_ts_parity_across_units(spark, tmp_path, unit):
     else:
         assert batch == expected
         assert stream == expected
+
+
+def test_ingest_sink_snapshot_is_unit_independent(spark, tmp_path):
+    """The ingest sink lands ts as int64 micros and streams its landing
+    zone through read_event_stream: a nanos-encoded input gives the
+    same final snapshot, last_ts_us included, as the micros fixture."""
+    from kektordb_spark.streaming.events import ingest_upsert_run
+
+    def snapshot(path: str) -> list[tuple]:
+        return sorted(tuple(r) for r in
+                      ingest_upsert_run(spark, path, n_chunks=2).collect())
+
+    assert snapshot(_reencode(str(tmp_path), "ns")) == snapshot(
+        f"{SF_SMALL}/events.parquet")
